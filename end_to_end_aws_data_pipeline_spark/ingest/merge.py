@@ -8,8 +8,10 @@ Two forms:
   the key columns. This is what Delta's MERGE INTO compiles to for
   insert-or-replace, without needing lake-format jars.
 - ``merge_into_parquet``: applies ``upsert`` against a parquet table on
-  disk (read-modify-write). At lake scale you would partition the
-  target and rewrite only affected partitions — noted inline.
+  disk: a whole-table read-modify-write swapped into place by
+  ``replace_dir``, or, given a partition column, a rewrite of only the
+  partitions the delivery touches. The returned row count comes from
+  the parquet footers, not from a Spark job.
 
 The reference never declares a primary key (SURVEY.md §1.2), so its
 "upsert" silently degrades to append. We make the key explicit and
@@ -19,9 +21,12 @@ required — the honest version of the same contract.
 from __future__ import annotations
 
 import os
+import shutil
+from typing import Callable
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window as W
-from pyspark.sql import functions as F  # noqa: F401 (used across merge paths)
+from pyspark.sql import functions as F
 
 
 def upsert(base: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
@@ -64,46 +69,88 @@ def merge_into_parquet(
     partition_by: str | None = None,
 ) -> int:
     """Upsert ``updates`` into the parquet table at ``target_dir``;
-    creates it if absent. Returns the resulting row count.
+    creates it if absent. Returns the resulting row count, read from the
+    parquet footers (no Spark job).
 
     With ``partition_by`` set (which must be one of ``keys``' hash
     inputs — every key lives in exactly one partition), the merge is
     partition-scoped: only partitions present in ``updates`` are read
     and rewritten via dynamic partition overwrite, so IO is
     proportional to the delta, not the table — the shape that holds at
-    100 TB. Without it: whole-table read-modify-write (fine for small
-    state tables like the watermarks).
+    100 TB. Without it: whole-table read-modify-write.
     """
+    recover_dir(target_dir)
     if partition_by is not None and os.path.exists(target_dir):
-        return _merge_partition_scoped(spark, target_dir, updates, keys, partition_by)
-    if os.path.exists(target_dir):
-        base = spark.read.parquet(target_dir)
-        merged = upsert(base, updates, keys)
+        _merge_partition_scoped(spark, target_dir, updates, keys, partition_by)
+    elif partition_by is not None:
+        updates.write.mode("overwrite").partitionBy(partition_by).parquet(target_dir)
     else:
-        merged = updates
-        if partition_by is not None:
-            merged.write.mode("overwrite").partitionBy(partition_by).parquet(target_dir)
-            return spark.read.parquet(target_dir).count()
-    # write-to-temp, rename old aside, promote, then delete old: never
-    # overwrite the directory still being scanned by the merge plan, and
-    # a valid table directory exists at target_dir at every instant —
-    # a crash between the two renames leaves the .__merge_old dir to
-    # clean up, never a missing table
-    tmp_dir = target_dir.rstrip("/") + ".__merge_tmp"
-    old_dir = target_dir.rstrip("/") + ".__merge_old"
-    merged.write.mode("overwrite").parquet(tmp_dir)
-    n = spark.read.parquet(tmp_dir).count()
-    import shutil
+        # never overwrite the directory still being scanned by the merge
+        # plan: write the merged table aside and swap it in
+        merged = (
+            upsert(spark.read.parquet(target_dir), updates, keys)
+            if os.path.exists(target_dir)
+            else updates
+        )
+        replace_dir(target_dir, lambda tmp: merged.write.mode("overwrite").parquet(tmp))
+    return footer_row_count(target_dir)
 
-    if os.path.exists(old_dir):  # leftover from an interrupted merge
-        shutil.rmtree(old_dir)
+
+def _swap_dirs(target_dir: str) -> tuple[str, str]:
+    base = target_dir.rstrip("/")
+    return base + ".__merge_tmp", base + ".__merge_old"
+
+
+def recover_dir(target_dir: str) -> None:
+    """Undo a crash between :func:`replace_dir`'s two renames: the
+    target is missing and its last committed version is parked at
+    ``.__merge_old``, so that version goes back in place. (Nothing was
+    recorded as done after that version, so a replay onto it is safe.)"""
+    _, old_dir = _swap_dirs(target_dir)
+    if not os.path.exists(target_dir) and os.path.exists(old_dir):
+        os.replace(old_dir, target_dir)
+
+
+def replace_dir(target_dir: str, write: Callable[[str], None]) -> None:
+    """Crash-safe replace of a table directory: ``write(tmp_dir)`` fills
+    a staging directory, the current table is renamed aside, the staging
+    directory is promoted, then the old one is deleted.
+
+    A complete table directory exists at ``target_dir`` at every instant
+    but the one between the two renames, and a crash there is undone by
+    :func:`recover_dir`. Leftover staging directories from an
+    interrupted run are removed first."""
+    tmp_dir, old_dir = _swap_dirs(target_dir)
+    recover_dir(target_dir)
+    for leftover in (tmp_dir, old_dir):
+        if os.path.exists(leftover):
+            shutil.rmtree(leftover)
+    write(tmp_dir)
     had_target = os.path.exists(target_dir)
     if had_target:
         os.replace(target_dir, old_dir)
     os.replace(tmp_dir, target_dir)
     if had_target:
         shutil.rmtree(old_dir)
-    return n
+
+
+def _listed(name: str) -> bool:
+    # Spark's file-index rule: names starting with "." or "_" are hidden
+    # (_SUCCESS, .crc checksums, _temporary, .spark-staging-*) unless
+    # they are partition directories ("_col=v")
+    return not name.startswith(".") and (not name.startswith("_") or "=" in name)
+
+
+def footer_row_count(table_dir: str) -> int:
+    """Exact row count of the parquet table at ``table_dir`` from its
+    file footers (metadata only, no data pages, no Spark job). Lists the
+    same files ``spark.read.parquet(table_dir)`` reads, partition
+    directories included, so it equals that DataFrame's ``count()``."""
+    files = []
+    for root, dirs, names in os.walk(table_dir):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        files += [os.path.join(root, n) for n in names if _listed(n)]
+    return ds.dataset(files, format="parquet").count_rows() if files else 0
 
 
 def _merge_partition_scoped(
@@ -112,7 +159,7 @@ def _merge_partition_scoped(
     updates: DataFrame,
     keys: list[str],
     partition_by: str,
-) -> int:
+) -> None:
     """Merge touching only the partitions ``updates`` lands in.
 
     1. collect the (small) set of affected partition values;
@@ -140,4 +187,3 @@ def _merge_partition_scoped(
         .partitionBy(partition_by)
         .parquet(target_dir)
     )
-    return spark.read.parquet(target_dir).count()

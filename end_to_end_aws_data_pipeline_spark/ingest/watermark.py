@@ -11,18 +11,29 @@ Semantics preserved exactly:
   keyed upsert downstream makes the replay idempotent (exactly-once
   effect end-to-end).
 
-The state table is tiny (one row per table name) — reading it is a
-broadcast; the gate on arriving work is a broadcast left join + filter.
+The state table is tiny (one row per table name) and, like the
+reference's DynamoDB item, is a key-value lookup: ``get`` and
+``advance`` read and write it on the driver with pyarrow and launch no
+Spark job. The directory keeps the layout Spark writes (parquet part
+files, ``table_name string, folder_ts bigint``), so a state directory
+Spark wrote stays readable and ``read()`` hands Spark the same rows for
+the relational gate (a broadcast left join + filter on arriving work).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from end_to_end_aws_data_pipeline_spark.ingest.merge import recover_dir, replace_dir
+
 SCHEMA = "table_name string, folder_ts long"
+_ARROW_SCHEMA = pa.schema([("table_name", pa.string()), ("folder_ts", pa.int64())])
 
 
 class WatermarkStore:
@@ -32,26 +43,38 @@ class WatermarkStore:
         self.spark = spark
         self.state_dir = state_dir
 
+    def _state(self) -> dict[str, int]:
+        recover_dir(self.state_dir)
+        if not os.path.exists(self.state_dir):
+            return {}
+        # the dataset's default ignore-prefixes skip Spark's _SUCCESS
+        # marker and .crc checksums, as Spark's own listing does
+        t = ds.dataset(self.state_dir, format="parquet", schema=_ARROW_SCHEMA).to_table()
+        return dict(zip(t["table_name"].to_pylist(), t["folder_ts"].to_pylist()))
+
     def read(self) -> DataFrame:
-        if os.path.exists(self.state_dir):
-            return self.spark.read.parquet(self.state_dir)
-        return self.spark.createDataFrame([], schema=SCHEMA)
+        return self.spark.createDataFrame(list(self._state().items()), schema=SCHEMA)
 
     def get(self, table_name: str) -> int | None:
-        row = (
-            self.read().filter(F.col("table_name") == table_name).select("folder_ts").first()
-        )
-        return row.folder_ts if row else None
+        return self._state().get(table_name)
 
     def advance(self, table_name: str, folder_ts: int) -> None:
         """Monotonic upsert of one table's watermark (never moves backward)."""
-        current = self.get(table_name)
+        state = self._state()
+        current = state.get(table_name)
         if current is not None and current >= folder_ts:
             return
-        from end_to_end_aws_data_pipeline_spark.ingest.merge import merge_into_parquet
+        state[table_name] = folder_ts
+        table = pa.table(
+            {"table_name": list(state), "folder_ts": list(state.values())},
+            schema=_ARROW_SCHEMA,
+        )
 
-        upd = self.spark.createDataFrame([(table_name, folder_ts)], schema=SCHEMA)
-        merge_into_parquet(self.spark, self.state_dir, upd, keys=["table_name"])
+        def write(tmp_dir: str) -> None:
+            os.makedirs(tmp_dir)
+            pq.write_table(table, os.path.join(tmp_dir, "part-00000.parquet"))
+
+        replace_dir(self.state_dir, write)
 
 
 def gate_strictly_newer(

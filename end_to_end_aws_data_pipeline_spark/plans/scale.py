@@ -272,11 +272,13 @@ def bucketed_write(
     existed = spark.catalog.tableExists(table_name)
     spark.sql(f"DROP TABLE IF EXISTS `{table_name}`")
     if not existed:
-        # resolve the default database location via the catalog (not by
-        # string-stripping spark.sql.warehouse.dir, which breaks for
-        # file://host URIs); non-local warehouses are left alone — the
-        # orphan-reap is a local-FS convenience only
-        u = urlparse(spark.catalog.getDatabase("default").locationUri)
+        # the unqualified name lands in the current database: resolve its
+        # location via the catalog (not by string-stripping
+        # spark.sql.warehouse.dir, which breaks for file://host URIs);
+        # non-local warehouses are left alone — the orphan-reap is a
+        # local-FS convenience only
+        db = spark.catalog.getDatabase(spark.catalog.currentDatabase())
+        u = urlparse(db.locationUri)
         if u.scheme in ("", "file") and u.netloc in ("", "localhost"):
             loc = os.path.join(u.path, table_name.lower())
             if os.path.isdir(loc):
