@@ -24,7 +24,11 @@ from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import spread, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
-from end_to_end_aws_data_pipeline_spark.operators.iterate import fused_ckpt
+from end_to_end_aws_data_pipeline_spark.operators.iterate import (
+    fixpoint,
+    fused_ckpt,
+    min_label_step,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -1114,36 +1118,16 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    changed = -1
-    for _ in range(max_iterations):
-        nbr = (
-            fwd.join(labels, fwd.dst == labels.node)
-            .select(F.col("src").alias("node"), F.col("label"))
-        )
-        # fused_ckpt: the checkpoint materializes inside the changed
-        # count's job — 1 job/round instead of 2 (operators/iterate.py)
-        new_labels = fused_ckpt(
-            labels.unionByName(nbr)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
+    labels, _, converged = fixpoint(
+        labels, min_label_step(fwd), max_iterations
+    )
+    if not converged:
         # returning silently here would hand back SPLIT components —
         # wrong cluster_ids with no signal. A graph whose diameter
         # exceeds the round budget needs the O(log n)-round variant.
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
-            f"rounds ({changed} labels still changing): component "
-            "diameter exceeds the round budget — use "
+            "rounds: component diameter exceeds the round budget — use "
             "connected_components_star (large-star/small-star, "
             "O(log n) rounds) or raise max_iterations"
         )
@@ -1202,8 +1186,10 @@ def connected_components_star(
             .select("src", F.least(F.col("src"), F.col("_mn")).alias("m"))
         )
 
-    converged = False
-    for _ in range(max_iterations):
+    def step(
+        state: tuple[DataFrame, int], _round: int
+    ) -> tuple[tuple[DataFrame, int], bool]:
+        e, e_cnt = state
         # large-star: every neighbor v > u links to m(u)
         mins = star_mins(e)
         large = (
@@ -1231,14 +1217,13 @@ def connected_components_star(
         new_e = fused_ckpt(sym(small))
         # fixpoint = identical edge set (both sides are distinct sets,
         # so equal counts + empty difference ⇒ equality); the previous
-        # round's count is remembered, and the subtract job only runs
-        # on a count tie — most rounds cost ONE count job here
+        # round's count is carried in the state, and the subtract job
+        # only runs on a count tie — most rounds cost ONE count action
         new_cnt = new_e.count()
-        if new_cnt == e_cnt and new_e.subtract(e).limit(1).count() == 0:
-            e = new_e
-            converged = True
-            break
-        e, e_cnt = new_e, new_cnt
+        done = new_cnt == e_cnt and new_e.subtract(e).limit(1).count() == 0
+        return (new_e, new_cnt), done
+
+    (e, _), _, converged = fixpoint((e, e_cnt), step, max_iterations)
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not converge in "

@@ -24,13 +24,18 @@ checkpoint-placement invariance is property-tested.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.cache import persisted
 from end_to_end_aws_data_pipeline_spark.catalog import table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
-from end_to_end_aws_data_pipeline_spark.operators.iterate import fused_ckpt
+from end_to_end_aws_data_pipeline_spark.operators.iterate import (
+    fixpoint,
+    fused_ckpt,
+    min_label_step,
+    run_until_periodic,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 _PR_ITERS = 3
@@ -123,6 +128,52 @@ def _purchase_fwd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _purchase_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The purchase graph made undirected: every ``_purchase_fwd`` edge
+    plus its reverse. Unpersisted — each caller picks its own
+    persist/partitioning for the way its rounds join."""
+    fwd = _purchase_fwd(spark, sf_dir)
+    return fwd.unionAll(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def _pr_graph(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(edges_d, nodes) for PageRank over the undirected purchase graph.
+    ``edges_d`` is the contribution-ready edge list (src, dst, d) built
+    and persisted ONCE — each round then needs a single equi-join
+    instead of re-joining (and re-aggregating) the degree table;
+    ``nodes`` is the one-column (node) vector the initial ranks are
+    built on."""
+    edges = _purchase_sym(spark, sf_dir)
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    edges_d = persisted(edges.join(deg, "src").select("src", "dst", "d"))
+    return edges_d, deg.select(F.col("src").alias("node"))
+
+
+def _pr_round(
+    edges_d: DataFrame, ranks: DataFrame, teleport: Column
+) -> DataFrame:
+    """One integer PageRank round: contribution join (rank floor-div
+    out-degree), sum by target, damp by (85·x)//100 and add
+    ``teleport`` — a Column over the target's ``node`` (a constant for
+    global PageRank, seed-gated for the personalized variant)."""
+    return (
+        edges_d.join(ranks, edges_d["src"] == ranks["node"])
+        .select("dst", F.expr("rank div d").alias("c"))
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.sum("c").alias("contrib"))
+        .select(
+            "node",
+            (teleport + F.expr("(85 * contrib) div 100"))
+            .cast("long")
+            .alias("rank"),
+        )
+    )
+
+
 def pagerank_ranks(
     spark: SparkSession,
     sf_dir: str,
@@ -145,34 +196,10 @@ def pagerank_ranks(
     arithmetic — equality with the uncheckpointed run is
     property-tested, and the depth-10 wall/plan-size measurements live
     in SCALING.md."""
-    fwd = _purchase_fwd(spark, sf_dir)
-    edges = fwd.unionAll(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    # contribution-ready edge list (src, dst, d) built ONCE: the
-    # per-round loop then needs a single equi-join instead of re-joining
-    # (and re-aggregating) the degree table every iteration
-    edges_d = persisted(
-        edges.join(deg, "src").select("src", "dst", "d")
-    )
-    ranks = deg.select("src", F.lit(_PR_R0).cast("long").alias("rank")).select(
-        F.col("src").alias("node"), "rank"
-    )
+    edges_d, nodes = _pr_graph(spark, sf_dir)
+    ranks = nodes.select("node", F.lit(_PR_R0).cast("long").alias("rank"))
     for i in range(1, iters + 1):
-        contrib = (
-            edges_d.join(ranks, edges_d["src"] == ranks["node"])
-            .select("dst", F.expr("rank div d").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = contrib.select(
-            F.col("dst").alias("node"),
-            (
-                F.lit(_PR_TELEPORT)
-                + F.expr("(85 * contrib) div 100")
-            ).cast("long").alias("rank"),
-        )
+        ranks = _pr_round(edges_d, ranks, F.lit(_PR_TELEPORT))
         if checkpoint_every and i % checkpoint_every == 0 and i < iters:
             ranks = ranks.localCheckpoint(eager=True)
         else:
@@ -231,35 +258,10 @@ def pagerank_ranks_deep(
     vector and the same detected stop round. rounds_per_step must
     divide both ``period`` and ``check_every`` so detection semantics
     cannot drift; returned rounds are real rank updates, not steps."""
-    from end_to_end_aws_data_pipeline_spark.operators.iterate import (
-        run_until_periodic,
-    )
-
-    teleport = (15 * r0) // 100
-    fwd = _purchase_fwd(spark, sf_dir)
-    edges = fwd.unionAll(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    edges_d = persisted(edges.join(deg, "src").select("src", "dst", "d"))
-    ranks0 = deg.select(
-        F.col("src").alias("node"), F.lit(r0).cast("long").alias("rank")
-    )
+    teleport = F.lit((15 * r0) // 100)
+    edges_d, nodes = _pr_graph(spark, sf_dir)
+    ranks0 = nodes.select("node", F.lit(r0).cast("long").alias("rank"))
     rounds = {"i": 0}
-
-    def one_round(ranks: DataFrame) -> DataFrame:
-        contrib = (
-            edges_d.join(ranks, edges_d["src"] == ranks["node"])
-            .select("dst", F.expr("rank div d").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        return contrib.select(
-            F.col("dst").alias("node"),
-            (F.lit(teleport) + F.expr("(85 * contrib) div 100"))
-            .cast("long")
-            .alias("rank"),
-        )
 
     def step(ranks: DataFrame) -> DataFrame:
         rounds["i"] += 1
@@ -269,7 +271,7 @@ def pagerank_ranks_deep(
         # checkpoint actions per round of real work; the probe cadence
         # below is rescaled so detection parity is unchanged
         for _ in range(rounds_per_step):
-            nxt = one_round(nxt)
+            nxt = _pr_round(edges_d, nxt, teleport)
         # checkpoint cadence is denominated in STEPS: with the default
         # rounds_per_step=2 the effective truncation interval is
         # checkpoint_every x rounds_per_step = 6 ROUNDS of 2-deep
@@ -622,12 +624,7 @@ def q_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint-every-k above). Per-hop key checksums pin WHICH nodes
     are first reached at each depth, not just how many.
     """
-    fwd = _purchase_fwd(spark, sf_dir)
-    edges = persisted(
-        fwd.unionAll(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    )
+    edges = persisted(_purchase_sym(spark, sf_dir))
     frontier = (
         edges.select("src")
         .filter(
@@ -717,6 +714,21 @@ SELECT {i} AS round,
     return "".join(parts) + "\nUNION ALL".join(rows)
 
 
+def _kcore_peel(g: DataFrame, rm: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """One synchronous peel: drop the removal set ``rm`` (the persisted
+    sub-k nodes; both anti-joins read it, and Spark broadcasts it once
+    it fits) from the edge list ``g``, then re-degree the induced
+    subgraph. Returns the (edges, degree vector) pair; both are
+    ``fused_ckpt``-ed, so they materialize inside the caller's next
+    action (the fixed-R query's stats collect, the deep runner's probe)
+    instead of costing actions of their own."""
+    g = fused_ckpt(
+        g.join(rm, "src", "left_anti")
+        .join(rm.select(F.col("src").alias("dst")), "dst", "left_anti")
+    )
+    return g, fused_ckpt(g.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
+
+
 @register("q_graph_kcore", oracle=_kcore_oracle())
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-round k-core peel (k=30, 4 synchronous rounds) of the
@@ -740,12 +752,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark broadcasts it once it fits; nothing quadratic, no windows.
     Each round's induced edge list persists (MEMORY_AND_DISK) so the
     next round reads a materialized graph, not a re-derivation."""
-    half = _purchase_fwd(spark, sf_dir)
-    g = persisted(
-        half.unionAll(
-            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    )
+    g = persisted(_purchase_sym(spark, sf_dir))
     # The NODE-sized degree table carries everything each round needs:
     # the peel set (d < k) and the round's published stats (n_nodes =
     # rows, n_edges = sum(d)/2, checksum = sum(src); src is unique per
@@ -803,15 +810,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             continue
         rm = persisted(deg.filter(F.col("d") < _KCORE_K).select("src"))
-        # fused_ckpt: both per-round checkpoints materialize inside the
-        # stats collect's job — 1 job/round instead of 3 (iterate.py)
-        g = fused_ckpt(
-            g.join(rm, "src", "left_anti")
-            .join(rm.select(F.col("src").alias("dst")), "dst", "left_anti")
-        )
-        deg = fused_ckpt(
-            g.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        )
+        g, deg = _kcore_peel(g, rm)
         cur = _stats(deg)
         rows.append(
             (i, n_removed, cur["n_nodes"], cur["n_edges"], cur["node_checksum"])
@@ -843,32 +842,15 @@ def kcore_peel_deep(
     Returns (degree_vector_of_core, rounds_run, converged). Lineage:
     localCheckpoint per round, exactly as the fixed-R q_graph_kcore
     documents (lazy nesting escalated 1.2 s -> 12.5 s by round 4)."""
-    from end_to_end_aws_data_pipeline_spark.operators.iterate import (
-        run_until_periodic,
-    )
-
-    half = _purchase_fwd(spark, sf_dir)
-    g0 = persisted(
-        half.unionAll(
-            half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    )
+    g0 = persisted(_purchase_sym(spark, sf_dir))
     graph = {"g": g0}
 
     def step(deg: DataFrame) -> DataFrame:
         rm = persisted(deg.filter(F.col("d") < k).select("src"))
         if rm.isEmpty():
             return deg  # fixpoint detected in-step: identity stop
-        g = fused_ckpt(
-            graph["g"]
-            .join(rm, "src", "left_anti")
-            .join(rm.select(F.col("src").alias("dst")), "dst", "left_anti")
-        )
-        graph["g"] = g
-        # fused_ckpt: materializes inside the runner's next probe job
-        return fused_ckpt(
-            g.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-        )
+        graph["g"], deg = _kcore_peel(graph["g"], rm)
+        return deg
 
     deg0 = g0.groupBy("src").agg(F.count(F.lit(1)).alias("d")).localCheckpoint()
     return run_until_periodic(
@@ -1018,6 +1000,23 @@ LIMIT {_LPA_TOP}"""
     return "".join(parts)
 
 
+def _lpa_setup(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(edges, labels0) for label propagation over the undirected
+    purchase graph: every node starts as its own label. The (big,
+    static) edge list is co-partitioned by the join key ONCE, so each
+    round's labels join reuses the cached partitioning and only the
+    node-sized label vector shuffles per round."""
+    edges = persisted(_purchase_sym(spark, sf_dir).repartition("dst"))
+    labels = persisted(
+        edges.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("lbl")
+        )
+    )
+    return edges, labels
+
+
 def _lpa_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """One synchronous retention-LPA round: neighbor votes PLUS each
     node's own current label (weight 1) — pure synchronous LPA
@@ -1066,21 +1065,7 @@ def lpa_labels_deep(
     fires at round 8 (33 s wall, 11 communities — SCALING.md); the
     probe is one node-sized co-partitioned join every 2 rounds,
     amortized across the edge-sized propagation joins it gates."""
-    from end_to_end_aws_data_pipeline_spark.operators.iterate import (
-        run_until_periodic,
-    )
-
-    e0 = _purchase_fwd(spark, sf_dir)
-    edges = persisted(
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).repartition("dst")
-    )
-    labels0 = persisted(
-        edges.select(F.col("src").alias("node")).distinct().select(
-            "node", F.col("node").alias("lbl")
-        )
-    )
+    edges, labels0 = _lpa_setup(spark, sf_dir)
     return run_until_periodic(
         labels0,
         lambda lbls: _lpa_round(edges, lbls),
@@ -1110,20 +1095,7 @@ def q_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_LPA_ROUNDS}."""
     from pyspark.sql import Window as W
 
-    e0 = _purchase_fwd(spark, sf_dir)
-    # co-partition the (big, static) edge list by the join key ONCE:
-    # each round's labels join reuses the cached partitioning and only
-    # the (node-sized) label vector shuffles per round
-    edges = persisted(
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).repartition("dst")
-    )
-    labels = persisted(
-        edges.select(F.col("src").alias("node")).distinct().select(
-            "node", F.col("node").alias("lbl")
-        )
-    )
+    edges, labels = _lpa_setup(spark, sf_dir)
     assert labels.agg(F.max("node")).first()[0] < _LPA_B, (
         "LPA argmax encoding needs node ids < 2^32; re-key or widen B"
     )
@@ -1330,16 +1302,11 @@ def _ha_graph(
     ``small`` picks the per-round join strategy (see _HA_BCAST_NODES);
     in the large regime edges come back pre-partitioned by src so the
     per-round join only ever shuffles the sketch side."""
-    fwd = _purchase_fwd(spark, sf_dir)
     # the symmetrized edge list is persisted in its own right: the
     # nodes-distinct count and the self-loop union below both consume
     # it, and without the cache each ran the purchase join + distinct
     # from scratch (one full extra pass, measured at sf0.1)
-    edges0 = persisted(
-        fwd.unionAll(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    )
+    edges0 = persisted(_purchase_sym(spark, sf_dir))
     nodes = persisted(edges0.select(F.col("src").alias("node")).distinct())
     small = nodes.count() <= _HA_BCAST_NODES
     edges_all = edges0.unionAll(
@@ -1475,10 +1442,6 @@ def hyperanf_deep(
     every ball has saturated its connected component; the stop round
     is the graph's (register-resolution) radius. Deep-R stop rules per
     operators/iterate.py. Returns (final sketches, rounds, converged)."""
-    from end_to_end_aws_data_pipeline_spark.operators.iterate import (
-        run_until_periodic,
-    )
-
     edges, sk0, small = _ha_graph(spark, sf_dir)
 
     def step(sk: DataFrame) -> DataFrame:
@@ -1783,50 +1746,20 @@ def q_graph_pagerank_personalized(
     exact zeros (integer arithmetic, no epsilon noise), and the
     top-20 cut is unique via the (rank desc, node) tiebreak.
     """
-    fwd = _purchase_fwd(spark, sf_dir)
-    edges = fwd.unionAll(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    edges_d = persisted(edges.join(deg, "src").select("src", "dst", "d"))
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        F.when(
-            (F.col("src") % 2 == 0)
-            & (F.expr("(src div 2)") % _PPR_SEED_MOD == 0),
-            F.lit(_PR_R0),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank"),
-    )
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges_d.join(ranks, edges_d["src"] == ranks["node"])
-            .select("dst", F.expr("rank div d").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = persisted(
-            contrib.select(
-                F.col("dst").alias("node"),
-                (
-                    F.when(
-                        (F.col("dst") % 2 == 0)
-                        & (F.expr("(dst div 2)") % _PPR_SEED_MOD == 0),
-                        F.lit(_PR_TELEPORT),
-                    ).otherwise(F.lit(0))
-                    + F.expr("(85 * contrib) div 100")
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-        )
-    node_type = F.when(F.col("node") % 2 == 0, "customer").otherwise(
-        "supplier"
-    )
     is_seed = (F.col("node") % 2 == 0) & (
         F.expr("(node div 2)") % _PPR_SEED_MOD == 0
+    )
+    edges_d, nodes = _pr_graph(spark, sf_dir)
+    ranks = nodes.select(
+        "node",
+        F.when(is_seed, F.lit(_PR_R0)).otherwise(F.lit(0)).cast("long")
+        .alias("rank"),
+    )
+    teleport = F.when(is_seed, F.lit(_PR_TELEPORT)).otherwise(F.lit(0))
+    for _ in range(_PR_ITERS):
+        ranks = persisted(_pr_round(edges_d, ranks, teleport))
+    node_type = F.when(F.col("node") % 2 == 0, "customer").otherwise(
+        "supplier"
     )
     return (
         ranks.select(
@@ -2387,29 +2320,6 @@ def scc_labels(
     distributed rounds. Round counts are graph-depth-bounded: loud
     RuntimeErrors, not silent truncation, past max_outer/max_inner
     (the iterate.py deep-R contract)."""
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_SCC_DEBUG"))
-    _t0 = _time.perf_counter()
-    # Per-round action fusion (r13): a localCheckpoint(eager) followed
-    # by a fixpoint count() is TWO jobs per round; a LAZY checkpoint
-    # truncates the plan identically (the DataFrame is LogicalRDD-backed
-    # either way) but materializes inside the count's job — one job per
-    # round instead of 2-3, across ~90 inner rounds at sf10.
-    # SPARK_GRAFT_SCC_EAGER=1 restores eager checkpoints (A/B lever).
-    _eager = bool(_os.environ.get("SPARK_GRAFT_SCC_EAGER"))
-
-    def _mark(phase: str, rounds: int = -1) -> None:
-        if _dbg:
-            print(
-                f"scc: {phase} +{_time.perf_counter() - _t0:.1f}s"
-                + (f" rounds={rounds}" if rounds >= 0 else ""),
-                file=_sys.stderr,
-                flush=True,
-            )
-
     if local_max_edges > 0:
         n_edges = edges.limit(local_max_edges + 1).count()
         if n_edges <= local_max_edges:
@@ -2421,6 +2331,12 @@ def scc_labels(
         .localCheckpoint(eager=True)
     )
     done: list[DataFrame] = []
+
+    def dead_of(deg: DataFrame) -> DataFrame:
+        return fused_ckpt(
+            deg.filter((F.col("od") <= 0) | (F.col("id_") <= 0)).select("node")
+        )
+
     for _outer in range(max_outer):
         if local_max_edges > 0:
             n_edges = edges.limit(local_max_edges + 1).count()
@@ -2436,25 +2352,20 @@ def scc_labels(
         ind = edges.groupBy(F.col("dst").alias("node")).agg(
             F.count(F.lit(1)).alias("id_")
         )
-        deg = (
-            outd.join(ind, "node", "full_outer")
-            .select(
+        deg = fused_ckpt(
+            outd.join(ind, "node", "full_outer").select(
                 "node",
                 F.coalesce("od", F.lit(0)).alias("od"),
                 F.coalesce("id_", F.lit(0)).alias("id_"),
             )
-            .localCheckpoint(eager=_eager)
         )
-        dead = (
-            deg.filter((F.col("od") <= 0) | (F.col("id_") <= 0))
-            .select("node")
-            .localCheckpoint(eager=_eager)
-        )
-        _mark("degrees built")
-        for _t in range(max_inner):
+
+        def trim(
+            state: tuple[DataFrame, DataFrame], _round: int
+        ) -> tuple[tuple[DataFrame, DataFrame], bool]:
+            deg, dead = state
             if dead.count() == 0:
-                _mark("trim fixpoint", _t)
-                break
+                return state, True
             done.append(dead.select("node", F.col("node").alias("scc")))
             dec_out = (
                 edges.join(
@@ -2472,7 +2383,7 @@ def scc_labels(
                 .groupBy(F.col("dst").alias("node"))
                 .agg(F.count(F.lit(1)).alias("d_id"))
             )
-            deg = (
+            deg = fused_ckpt(
                 deg.join(dead, "node", "left_anti")
                 .join(dec_out, "node", "left")
                 .join(dec_in, "node", "left")
@@ -2481,14 +2392,11 @@ def scc_labels(
                     (F.col("od") - F.coalesce("d_od", F.lit(0))).alias("od"),
                     (F.col("id_") - F.coalesce("d_id", F.lit(0))).alias("id_"),
                 )
-                .localCheckpoint(eager=_eager)
             )
-            dead = (
-                deg.filter((F.col("od") <= 0) | (F.col("id_") <= 0))
-                .select("node")
-                .localCheckpoint(eager=_eager)
-            )
-        else:
+            return (deg, dead_of(deg)), False
+
+        (deg, _), _, converged = fixpoint((deg, dead_of(deg)), trim, max_inner)
+        if not converged:
             raise RuntimeError(
                 f"scc trim did not converge in {max_inner} rounds"
             )
@@ -2506,85 +2414,57 @@ def scc_labels(
         )
         e_src = persisted(edges_live.repartition("src"))
         e_dst = persisted(edges_live.repartition("dst"))
-        _mark("edges_live partitioned")
         # --- color: forward min-label propagation to fixpoint
-        colors = live.select("node", F.col("node").alias("color"))
-        colors = colors.localCheckpoint(eager=True)
-        for _c in range(max_inner):
-            msgs = (
-                e_src.join(
-                    colors.select(
-                        F.col("node").alias("src"),
-                        F.col("color").alias("c_src"),
-                    ),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("c_src").alias("c_in"))
-            )
-            upd = (
-                colors.join(msgs, "node", "left")
-                .select(
-                    "node",
-                    F.least(
-                        "color", F.coalesce("c_in", "color")
-                    ).alias("color"),
-                    (
-                        F.coalesce("c_in", "color") < F.col("color")
-                    ).alias("chg"),
-                )
-                .localCheckpoint(eager=_eager)
-            )
-            changed = upd.filter("chg").count()
-            colors = upd.drop("chg")
-            if changed == 0:
-                _mark("color fixpoint", _c)
-                break
-        else:
+        colors = live.select(
+            "node", F.col("node").alias("label")
+        ).localCheckpoint(eager=True)
+        colors, _, converged = fixpoint(
+            colors, min_label_step(e_src), max_inner
+        )
+        if not converged:
             raise RuntimeError(
                 f"scc coloring did not converge in {max_inner} rounds"
             )
         # --- backward sweep within color classes from the roots
         member = (
-            colors.filter(F.col("node") == F.col("color"))
-            .select("node", F.col("color").alias("scc"))
+            colors.filter(F.col("node") == F.col("label"))
+            .select("node", F.col("label").alias("scc"))
             .localCheckpoint(eager=True)
         )
-        frontier = member
-        for _b in range(max_inner):
+
+        def backward(
+            state: tuple[DataFrame, DataFrame], _round: int
+        ) -> tuple[tuple[DataFrame, DataFrame], bool]:
+            member, frontier = state
             cand = (
                 e_dst.join(
-                    frontier.select(
-                        F.col("node").alias("dst"), "scc"
-                    ),
+                    frontier.select(F.col("node").alias("dst"), "scc"),
                     "dst",
                 )
                 .select(F.col("src").alias("node"), "scc")
                 .distinct()
+                .join(
+                    colors.withColumnRenamed("label", "scc"),
+                    ["node", "scc"],
+                    "left_semi",
+                )
             )
-            cand = cand.join(
-                colors.withColumnRenamed("color", "scc"),
-                ["node", "scc"],
-                "left_semi",
-            )
-            new = cand.join(member, "node", "left_anti").localCheckpoint(
-                eager=_eager
-            )
+            new = fused_ckpt(cand.join(member, "node", "left_anti"))
             if new.count() == 0:
-                _mark("backward fixpoint", _b)
-                break
-            member = member.unionAll(new).localCheckpoint(eager=_eager)
-            frontier = new
-        else:
+                return state, True
+            return (fused_ckpt(member.unionAll(new)), new), False
+
+        (member, _), _, converged = fixpoint(
+            (member, member), backward, max_inner
+        )
+        if not converged:
             raise RuntimeError(
                 f"scc backward sweep did not converge in {max_inner} rounds"
             )
         done.append(member)
         # remainder re-enters the loop (and the adaptive cap) with
         # peeled members' edges removed
-        remaining = live.join(member, "node", "left_anti").localCheckpoint(
-            eager=_eager
-        )
+        remaining = fused_ckpt(live.join(member, "node", "left_anti"))
         if remaining.count() == 0:
             break
         edges = edges_live.join(
@@ -2740,12 +2620,7 @@ def mis_rounds(
     after k rounds is the published geometric envelope) — the oracle
     unrolls exactly those rounds; no convergence claim is made and
     the remainder is REPORTED, not hidden."""
-    fwd = _purchase_fwd(spark, sf_dir)
-    edges = persisted(
-        fwd.unionAll(
-            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).repartition("src")
-    )
+    edges = persisted(_purchase_sym(spark, sf_dir).repartition("src"))
     und = (
         edges.select(F.col("src").alias("node"))
         .distinct()

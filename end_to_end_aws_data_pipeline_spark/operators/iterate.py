@@ -1,11 +1,26 @@
-"""Iteration-stop helpers for driver-loop algorithms over KEYED state
-vectors — LPA (graph.lpa_labels_deep, period=2), PageRank
-(graph.pagerank_ranks_deep, period=1) and k-core peeling
-(graph.kcore_peel_deep, period=1 with ``keys_shrink``). Star
-contraction is the one iterative algorithm NOT served here: its state
-is an edge MULTISET, not a keyed vector, so
-``dedup.connected_components_star`` keeps its native edge-set fixpoint
-(count tie + ``subtract`` probe, most rounds cost one count job).
+"""One convergence loop for every driver-loop algorithm that runs to a
+fixpoint, plus the steps and probes its users share.
+
+``fixpoint(state, step, max_rounds)`` is the single superstep loop (the
+Pregel shape, Malewicz et al., SIGMOD 2010): ``step(state, round)``
+returns ``(state, done)`` and the loop owns round counting and the
+``max_rounds`` bound. Each caller decides what non-convergence means
+and raises its own error. Users:
+
+- ``run_until_periodic`` (below) — keyed state vectors compared at a
+  period: LPA (graph.lpa_labels_deep, period=2), PageRank
+  (graph.pagerank_ranks_deep, period=2), k-core peeling
+  (graph.kcore_peel_deep, period=1 with ``keys_shrink``) and HyperANF
+  (graph.hyperanf_deep, period=1);
+- ``min_label_step`` (below) — min-label propagation, used by
+  dedup.connected_components and the color phase of graph.scc_labels;
+- graph.scc_labels' trim and backward sweeps;
+- dedup.connected_components_star — its state is an edge MULTISET, not
+  a keyed vector, so its step carries its own probe (count tie +
+  ``subtract``; most rounds cost one count action).
+
+Fixed-round loops (MIS, HITS, random walks, k-hop, harmonic centrality,
+the fixed-R PageRank/k-core/LPA queries) stay plain ``for`` loops.
 
 The measured LPA depth study (tools/lpa_depth.py, SCALING.md) proved
 that a plain ``changed == 0`` fixpoint check NEVER fires on bipartite
@@ -16,8 +31,7 @@ round forever. The correct deep-R stop criterion is therefore
 equal parity by construction), it detects the orbit itself as the
 fixpoint. Monotone algorithms (k-core: degrees only fall, nodes only
 leave) cannot oscillate, so ``period=1`` degrades to the classic
-changed==0 stop. These helpers make both criteria executable instead of
-comments.
+changed==0 stop.
 
 Scale shape: one equality probe is a single co-partitioned equi-join of
 two key-sized (not edge-sized) vectors with an ``isEmpty`` short-circuit
@@ -26,11 +40,15 @@ probe cost is amortized by ``check_every`` (default = period). A step
 that detects its own fixpoint (k-core's empty peel set) can return its
 input DataFrame unchanged — the runner recognizes object identity and
 stops without any probe job.
+
+Checkpoints: a step whose result is consumed by a probe action uses
+``fused_ckpt`` (lazy; ``SPARK_GRAFT_EAGER_CKPT=1`` makes it eager); a
+step whose result feeds a broadcast build checkpoints eagerly (HITS).
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -82,6 +100,61 @@ def vectors_differ(
     )
 
 
+def fixpoint(
+    state: Any,
+    step: Callable[[Any, int], tuple[Any, bool]],
+    max_rounds: int,
+) -> tuple[Any, int, bool]:
+    """Run ``state, done = step(state, round)`` for round = 1, 2, ...
+    until ``done`` or ``max_rounds`` rounds have run.
+
+    Returns ``(state, rounds_run, converged)``: ``rounds_run`` is the
+    round whose step reported ``done`` (``max_rounds`` when none did,
+    with ``converged=False``). The state is opaque to the loop — a
+    DataFrame, or a tuple of them when a phase carries more than one."""
+    for r in range(1, max_rounds + 1):
+        state, done = step(state, r)
+        if done:
+            return state, r, True
+    return state, max_rounds, False
+
+
+def min_label_step(
+    edges: DataFrame,
+) -> Callable[[DataFrame, int], tuple[DataFrame, bool]]:
+    """A ``fixpoint`` step for min-label propagation along directed
+    ``(src, dst)`` edges over a ``(node, label)`` vector: each node
+    takes the min of its own label and its in-neighbors' labels. Pass
+    a symmetrized edge list for connected components; a digraph gives
+    the SCC coloring (label = min over the node and its ancestors).
+
+    The ``chg`` flag is computed in the same plan as the new labels and
+    counted: the count is the round's one action, and it materializes
+    the lazily checkpointed labels. ``done`` when no label fell."""
+
+    def step(labels: DataFrame, _round: int) -> tuple[DataFrame, bool]:
+        msgs = (
+            edges.join(
+                labels.select(
+                    F.col("node").alias("src"), F.col("label").alias("l_src")
+                ),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("l_src").alias("l_in"))
+        )
+        upd = fused_ckpt(
+            labels.join(msgs, "node", "left").select(
+                "node",
+                F.least("label", F.coalesce("l_in", "label")).alias("label"),
+                (F.coalesce("l_in", "label") < F.col("label")).alias("chg"),
+            )
+        )
+        return upd.drop("chg"), upd.filter("chg").count() == 0
+
+    return step
+
+
 def run_until_periodic(
     state: DataFrame,
     step: Callable[[DataFrame], DataFrame],
@@ -113,20 +186,20 @@ def run_until_periodic(
     if check_every is None:
         check_every = period
     history: list[DataFrame] = [state]
-    for r in range(1, max_rounds + 1):
-        prev = state
-        state = step(state)
-        if state is prev:
-            return state, r, True
-        history.append(state)
+
+    def probed(prev: DataFrame, r: int) -> tuple[DataFrame, bool]:
+        nxt = step(prev)
+        if nxt is prev:
+            return nxt, True
+        history.append(nxt)
         if len(history) > period + 1:
             history.pop(0)
-        if (
+        return nxt, (
             r >= period
             and r % check_every == 0
             and not vectors_differ(
-                state, history[0], key, val, keys_shrink=keys_shrink
+                nxt, history[0], key, val, keys_shrink=keys_shrink
             )
-        ):
-            return state, r, True
-    return state, max_rounds, False
+        )
+
+    return fixpoint(state, probed, max_rounds)

@@ -226,9 +226,12 @@ def binned_exact_percentiles_multi(
     # endpoints come from the DATA (per-bucket min/max), never from
     # bucket boundaries, so exactness is untouched. Driver rows are
     # occupied buckets only: value magnitudes span b binades →
-    # ≤ 16·b + 2 rows per (column, group) — bounded by the same
+    # ≤ 16·b + 3 rows per (column, group) — bounded by the same
     # low-cardinality-grouping contract as the rest of the driver
-    # state (max_groups).
+    # state (max_groups). NaN gets its own bucket above every finite
+    # key (and ±inf): Spark and DuckDB sort NaN last, and the binade
+    # arithmetic would otherwise hand it a finite key and break the
+    # monotone order the rank location relies on.
     import os as _os
 
     if _os.environ.get("SPARK_GRAFT_PCT_NO_FUSE"):
@@ -251,7 +254,9 @@ def binned_exact_percentiles_multi(
         )
         _mag = (_e + F.lit(64.0)) * 16 + _sub
         _b0 = (
-            F.when(F.col("v") == 0, F.lit(0.0))
+            # finite keys stop at _mag's max 127·16 + 15, plus 1
+            F.when(F.isnan("v"), F.lit(128 * 16 + 1.0))
+            .when(F.col("v") == 0, F.lit(0.0))
             .when(F.col("v") > 0, _mag + 1)
             .otherwise(-_mag - 1)
             .cast("long")
@@ -273,11 +278,10 @@ def binned_exact_percentiles_multi(
     all_stats = {}
     for key, bs in buckets.items():
         bs.sort()
-        all_stats[key] = (
-            sum(b[1] for b in bs),
-            min(b[2] for b in bs),
-            max(b[3] for b in bs),
-        )
+        # buckets are in value order, so the extremes are the first
+        # bucket's min and the last one's max (NaN when present, as in
+        # Spark's max)
+        all_stats[key] = (sum(b[1] for b in bs), bs[0][2], bs[-1][3])
     n_groups = len({g for (_, g) in all_stats})
     if n_groups > max_groups:
         raise ValueError(
@@ -320,7 +324,8 @@ def binned_exact_percentiles_multi(
                     if k < cum + bc:
                         st[3], st[4] = blo, bhi
                         st[5], st[6] = k - cum, bc
-                        if blo == bhi:
+                        # one distinct value (NaN's bucket holds only NaN)
+                        if blo == bhi or math.isnan(blo):
                             st[7] = blo
                         break
                     cum += bc

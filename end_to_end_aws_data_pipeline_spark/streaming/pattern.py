@@ -451,16 +451,8 @@ def run_pattern_stream_rle(
         .parquet(staged)
     )
     seen = {"n": 0}
-    # SPARK_GRAFT_STREAM_AUDIT=1: print per-batch fold wall time to
-    # stderr so drain time decomposes into fold cost vs engine fixed
-    # cost (trigger planning, source listing, WAL commits)
-    _audit = bool(os.environ.get("SPARK_GRAFT_STREAM_AUDIT"))
 
     def upd(bdf: DataFrame, bid: int) -> None:
-        import sys
-        import time as _time
-
-        _t0 = _time.time() if _audit else 0.0
         runs = _batch_runs(bdf)
         prev_path = os.path.join(store, f"b{bid - 1}")
         if bid > 0:
@@ -651,12 +643,6 @@ def run_pattern_stream_rle(
             ):
                 shutil.rmtree(os.path.join(store, d), ignore_errors=True)
         seen["n"] += 1
-        if _audit:
-            print(
-                f"[stream-audit] rle batch {bid}: "
-                f"{_time.time() - _t0:.3f}s",
-                file=sys.stderr,
-            )
         if stop_after_batches and seen["n"] >= stop_after_batches:
             request_stop(seen)
 
@@ -670,17 +656,7 @@ def run_pattern_stream_rle(
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        import sys
-        import time as _time
-
-        _d0 = _time.time() if _audit else 0.0
         await_or_stop(w.start(), seen)
-        if _audit:
-            print(
-                f"[stream-audit] rle drain total: "
-                f"{_time.time() - _d0:.3f}s over {seen['n']} batches",
-                file=sys.stderr,
-            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
 

@@ -69,6 +69,39 @@ def test_binned_exact_matches_builtin_percentile(spark):
             assert got[r["l_returnflag"]][p] == w, (r["l_returnflag"], p)
 
 
+def test_binned_exact_nan_sorts_last(spark):
+    """NaN sorts above every double (+inf and 1e300 included) in
+    Spark's ordering; the fused pass-1 bucketing must keep it there,
+    so every percentile — those landing on NaN too — equals Spark's
+    exact ``percentile``. Tiny bins/cap force refinement rounds."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from end_to_end_aws_data_pipeline_spark.operators.percentiles import (
+        binned_exact_percentiles,
+    )
+
+    nan = float("nan")
+    rows = (
+        [("a", float(i)) for i in range(200)]
+        + [("a", nan)] * 30
+        + [("a", 1e300)] * 5
+        + [("b", float(i)) for i in range(50)]
+        + [("b", nan)] * 3
+        + [("b", float("inf"))]
+    )
+    df = spark.createDataFrame(rows, "g: string, v: double")
+    ps = [0.0, 0.1, 0.5, 0.85, 0.86, 0.9, 0.95, 1.0]
+    got = binned_exact_percentiles(df, "g", "v", ps, bins=8, collect_cap=16)
+    want = df.groupBy("g").agg(F.percentile("v", ps).alias("p")).collect()
+    for r in want:
+        for p, w in zip(ps, r["p"]):
+            g = got[r["g"]][p]
+            assert g == w or (math.isnan(g) and math.isnan(w)), (r["g"], p)
+    assert got["a"][0.5] == 117.0 and math.isnan(got["a"][0.9])
+
+
 def test_binned_exact_constant_and_duplicate_heavy(spark):
     """Stall fallback: intervals that cannot subdivide (constant values,
     two adjacent values) resolve by value-level counting."""

@@ -1,0 +1,180 @@
+"""Spark jobs per round of the run-to-fixpoint operators.
+
+Each round runs a fixed set of driver actions: the count that also
+materializes the round's lazy checkpoints, plus the loop's probe where
+it has one. Spark counts every adaptive-execution shuffle-map stage and
+broadcast build inside an action as its own job, so a round reads as
+several jobs, not one. These tests pin what matters for a job budget:
+the job count is exactly ``setup + J * rounds`` — a fixed setup cost
+plus the same J jobs every round, never growing with depth — and J
+stays within the per-operator ceiling below. Jobs are counted per call
+through a Spark job group."""
+
+from __future__ import annotations
+
+import itertools
+
+import pytest
+
+from end_to_end_aws_data_pipeline_spark.operators.dedup import (
+    connected_components,
+    connected_components_star,
+)
+from end_to_end_aws_data_pipeline_spark.operators.graph import (
+    kcore_peel_deep,
+    scc_labels,
+)
+from tests.conftest import SF_SMOKE
+
+# ceilings on J: measured jobs per round (4 local cores, 4 shuffle
+# partitions)
+_BUDGET = {"cc": 9, "star": 14, "kcore_deep": 8, "scc_color": 6}
+
+_GROUPS = itertools.count()
+
+
+@pytest.fixture(autouse=True)
+def _lazy_checkpoints(monkeypatch):
+    # eager checkpoints add one job per checkpointed round state
+    monkeypatch.delenv("SPARK_GRAFT_EAGER_CKPT", raising=False)
+
+
+def _jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"round-jobs-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_per_round(samples: list[tuple[int, int]]) -> int:
+    """J from ``[(rounds, jobs), ...]``, asserting jobs = setup + J·rounds
+    holds exactly for every sample."""
+    (r0, j0), (r1, j1) = samples[:2]
+    per, rem = divmod(j1 - j0, r1 - r0)
+    assert rem == 0 and per > 0, samples
+    for r, j in samples:
+        assert j == j0 + per * (r - r0), samples
+    return per
+
+
+def _path(spark, n: int):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "src long, dst long"
+    )
+
+
+def _star_rounds(pairs) -> tuple[int, int]:
+    """Python replay of connected_components_star's contraction:
+    (rounds, rounds whose edge count tied the previous one) — a tie
+    costs the round one more action, the ``subtract`` check."""
+
+    def sym(es):
+        return {(a, b) for a, b in es if a != b} | {
+            (b, a) for a, b in es if a != b
+        }
+
+    def mins(es):
+        m = {}
+        for u, v in es:
+            m[u] = min(m.get(u, u), v)
+        return m
+
+    e = sym(pairs)
+    rounds = ties = 0
+    while True:
+        rounds += 1
+        m = mins(e)
+        mid = sym({(v, m[u]) for u, v in e if v > u})
+        m2 = mins(mid)
+        new = sym({(v, m2[u]) for u, v in mid if v < u} | set(m2.items()))
+        if len(new) == len(e):
+            ties += 1
+            if new == e:
+                return rounds, ties
+        e = new
+
+
+def test_connected_components_jobs_per_round(spark):
+    # a path of n edges has diameter n: n label-changing rounds plus
+    # the round that finds no change
+    samples = [
+        (
+            n + 1,
+            _jobs(
+                spark,
+                lambda n=n: connected_components(
+                    _path(spark, n), local_max_edges=0
+                ).collect(),
+            ),
+        )
+        for n in (4, 8, 12)
+    ]
+    assert _jobs_per_round(samples) <= _BUDGET["cc"]
+
+
+def test_connected_components_star_jobs_per_round(spark):
+    samples = []
+    for n in (8, 16, 32):
+        rounds, ties = _star_rounds([(i, i + 1) for i in range(n)])
+        assert ties == rounds  # every round on a path ties: J covers both
+        jobs = _jobs(
+            spark,
+            lambda n=n: connected_components_star(
+                _path(spark, n), local_max_edges=0
+            ).collect(),
+        )
+        samples.append((rounds, jobs))
+    assert _jobs_per_round(samples) <= _BUDGET["star"]
+
+
+def test_kcore_peel_deep_jobs_per_round(spark):
+    from end_to_end_aws_data_pipeline_spark.cache import release_all
+
+    # k=2: nothing peels, the first round stops; k=4: one peel round,
+    # then that stop — so J is the cost of one peel round
+    kcore_peel_deep(spark, SF_SMOKE, k=2)  # fills the table-schema cache
+    samples = []
+    for k in (2, 4):
+        release_all()  # same cache state, so the same setup jobs
+        out = {}
+        jobs = _jobs(
+            spark,
+            lambda k=k: out.update(
+                res=kcore_peel_deep(spark, SF_SMOKE, k=k)
+            ),
+        )
+        _, rounds, converged = out["res"]
+        assert converged
+        samples.append((rounds, jobs))
+    assert [r for r, _ in samples] == [1, 2]
+    assert _jobs_per_round(samples) <= _BUDGET["kcore_deep"]
+
+
+def test_scc_color_phase_jobs_per_round(spark):
+    """Path 0→1→…→n plus k→0 for every k: one SCC whose color phase
+    needs n+1 rounds (label 0 walks the path one hop a round), while
+    trim (1 round: nothing to trim) and the backward sweep (2 rounds:
+    every node reaches 0 in one hop) do not depend on n — so the job
+    count grows by exactly the color phase's cost per round."""
+    samples = []
+    for n in (4, 8, 12):
+        pairs = [(i, i + 1) for i in range(n)] + [
+            (k, 0) for k in range(1, n + 1)
+        ]
+        e = spark.createDataFrame(pairs, "src long, dst long")
+        got = {}
+        jobs = _jobs(
+            spark,
+            lambda e=e: got.update(
+                rows=scc_labels(spark, e, local_max_edges=0).collect()
+            ),
+        )
+        assert {(r.node, r.scc) for r in got["rows"]} == {
+            (v, 0) for v in range(n + 1)
+        }
+        samples.append((n + 1, jobs))
+    assert _jobs_per_round(samples) <= _BUDGET["scc_color"]
