@@ -83,12 +83,7 @@ def _load() -> None:
     if _loaded:
         return
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # tolerate not-yet-built modules during incremental bring-up
-            if mod.rsplit(".", 1)[0] not in str(e) and mod not in str(e):
-                raise
+        importlib.import_module(mod)
     _loaded = True
 
 

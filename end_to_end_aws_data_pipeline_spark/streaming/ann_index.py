@@ -19,9 +19,10 @@ structure must hash-equal a from-scratch batch construction — the
 sketch stream's merged≡direct tie (streaming/sketch.py) applied to an
 index instead of a summary.
 
-Store discipline shared with streaming/pattern.py: bucketed snapshot
-write (no single-task coalesce), last-K retention, missing-predecessor
-refusal, flag-based deliberate-stop.
+Store discipline from streaming/store.py (shared with the pattern
+RLE fold): staging, the drain and its flag-based deliberate stop,
+bucketed snapshot write (no single-task coalesce), last-RETAIN
+retention and the missing-predecessor refusal.
 
 Scale shape: per batch ONE lazy JVM plan — quantize, one B×C Arrow
 matmul for assignment, one window + one aggregate on cent_id, one
@@ -32,7 +33,6 @@ centroid), never corpus-sized.
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Iterator
 
 import pandas as pd
@@ -42,19 +42,18 @@ from pyspark.sql import Window as W
 
 from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema
 from end_to_end_aws_data_pipeline_spark.registry import register
-from end_to_end_aws_data_pipeline_spark.streaming.stopping import (
-    await_or_stop,
-    request_stop,
+from end_to_end_aws_data_pipeline_spark.streaming.store import (
+    drain,
+    fresh_run_dir,
+    newest,
+    read_prev,
+    stage,
+    write_slices,
+    write_snapshot,
 )
 
 _AI_CHUNKS = 4   # staged arrival chunks = micro-batches
 _AI_TOPK = 3     # per-bucket shortlist depth (matches _IVF_K's regime)
-_AI_STATE_BUCKETS = max(
-    1, int(os.environ.get("SPARK_GRAFT_ANN_STATE_BUCKETS", "8"))
-)
-_AI_STATE_RETAIN = max(
-    2, int(os.environ.get("SPARK_GRAFT_ANN_STATE_RETAIN", "3"))
-)
 
 # snapshot schema: nd = NEGATED dot-to-centroid so ascending struct
 # order is (dot desc, member_id asc) — sort_array needs no comparator
@@ -69,55 +68,15 @@ def staged_vec_dir(path: str) -> str:
     strictly increasing mtimes (vec_id-ordered slices for
     reproducibility of the STAGING, though the fold is split-invariant
     by construction).  Idempotent, keyed by (path, mtime)."""
-    import hashlib
-
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = os.path.abspath(path)
-    mt = int(os.path.getmtime(path))
-    d = os.path.join(
-        "/tmp",
-        "stream_annidx_"
-        + hashlib.sha1(f"{path}:{mt}".encode()).hexdigest()[:12],
-    )
-    done = os.path.join(d, "_STAGED")
-    if os.path.exists(done):
-        return d
-    # stage into a private temp dir and rename it into place atomically:
-    # two processes keyed to the same (path, mtime) can both miss the
-    # marker, and an in-place build would let one rmtree the dir while
-    # the other is mid-write (partial chunks under a present marker).
-    # With rename, each builds a COMPLETE dir privately; the loser's
-    # rename fails on the existing target and it adopts the winner's.
-    tmp = f"{d}.tmp.{os.getpid()}"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    t = pq.read_table(path, columns=["vec_id", "embedding"])
-    t = t.take(pc.sort_indices(t, sort_keys=[("vec_id", "ascending")]))
-    n = t.num_rows
-    for g in range(_AI_CHUNKS):
-        lo = g * n // _AI_CHUNKS
-        hi = (g + 1) * n // _AI_CHUNKS
-        f = os.path.join(tmp, f"chunk_{g}.parquet")
-        pq.write_table(t.slice(lo, hi - lo), f)
-        os.utime(f, (mt + 10 * g, mt + 10 * g))
-    open(os.path.join(tmp, "_STAGED"), "w").close()
-    if os.path.isdir(d):
-        # crashed partial build (no marker — a marked dir returned
-        # above); clear it so the rename can land.  A concurrent
-        # stager that completes between this rmtree and the rename
-        # just makes our rename fail, handled below.
-        shutil.rmtree(d, ignore_errors=True)
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        # another process renamed its complete dir in first
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(done):
-            raise
-    return d
+    def write_chunks(src: str, out: str) -> list[str]:
+        t = pq.read_table(src, columns=["vec_id", "embedding"])
+        t = t.take(pc.sort_indices(t, sort_keys=[("vec_id", "ascending")]))
+        return write_slices(t, _AI_CHUNKS, out)
+
+    return stage(path, "annidx", write_chunks)
 
 
 def _frozen_quantizer(spark: SparkSession, sf_dir: str):
@@ -279,7 +238,6 @@ def run_ann_index_stream(
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    seen = {"n": 0}
 
     def upd(bdf: DataFrame, bid: int) -> None:
         if twolevel:
@@ -305,21 +263,7 @@ def run_ann_index_stream(
                 )
             ).alias("topk"),
         )
-        prev_path = os.path.join(store, f"b{bid - 1}")
-        if bid > 0:
-            if not os.path.isdir(prev_path):
-                raise RuntimeError(
-                    f"ANN index store {store} is missing snapshot "
-                    f"b{bid - 1} while the checkpoint resumes at batch "
-                    f"{bid}: refusing to rebuild from empty state — "
-                    "pair the checkpoint with its store dir, or raise "
-                    "SPARK_GRAFT_ANN_STATE_RETAIN"
-                )
-            st = spark.read.schema(_AI_STATE_SCHEMA + ", bucket int").parquet(
-                prev_path
-            ).drop("bucket")
-        else:
-            st = spark.createDataFrame([], _AI_STATE_SCHEMA)
+        st = read_prev(spark, store, bid, _AI_STATE_SCHEMA)
         stc = st.select(
             "cent_id", *(F.col(c).alias(f"s_{c}") for c in st.columns[1:])
         )
@@ -345,61 +289,15 @@ def run_ann_index_stream(
                 _AI_TOPK,
             ).alias("topk"),
         )
-        nb = _AI_STATE_BUCKETS
-        (
-            merged.withColumn(
-                "bucket", F.pmod(F.hash("cent_id"), F.lit(nb))
-            )
-            .repartition(nb, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(store, f"b{bid}"))
-        )
-        for d in os.listdir(store):
-            if (
-                d.startswith("b")
-                and d[1:].isdigit()
-                and int(d[1:]) <= bid - _AI_STATE_RETAIN
-            ):
-                shutil.rmtree(os.path.join(store, d), ignore_errors=True)
-        seen["n"] += 1
-        if stop_after_batches and seen["n"] >= stop_after_batches:
-            request_stop(seen)
+        write_snapshot(merged, store, bid, "cent_id")
 
-    w = (
-        src.writeStream.foreachBatch(upd)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if ckpt:
-        w = w.option("checkpointLocation", ckpt)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        await_or_stop(w.start(), seen)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    drain(spark, src, upd, ckpt, stop_after_batches)
 
 
 def final_index(spark: SparkSession, store: str) -> DataFrame:
     """Project the newest snapshot into the oracle's shape: one row
     per (bucket, shortlist rank)."""
-    snaps = (
-        [
-            d
-            for d in os.listdir(store)
-            if d.startswith("b") and d[1:].isdigit()
-        ]
-        if os.path.isdir(store)
-        else []
-    )
-    if not snaps:
-        raise RuntimeError(
-            f"ANN index store has no snapshots: {store} — the drain "
-            "never ran, or this is not the store dir the stream wrote to"
-        )
-    last = max(snaps, key=lambda d: int(d[1:]))
-    st = spark.read.parquet(os.path.join(store, last)).drop("bucket")
+    st = newest(spark, store)
     ex = st.select(
         "cent_id",
         "n_members",
@@ -472,13 +370,10 @@ def q_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     and sketch streams.
     """
     from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
-    from end_to_end_aws_data_pipeline_spark.streaming.pattern import (
-        _fresh_run_dir,
-    )
 
     ensure_runtime_confs(spark)
     staged = staged_vec_dir(os.path.join(sf_dir, "embeddings.parquet"))
-    store = _fresh_run_dir(os.path.dirname(staged), "annidx")
+    store = fresh_run_dir(os.path.dirname(staged), "annidx")
     run_ann_index_stream(spark, sf_dir, staged, store)
     return final_index(spark, store)
 
@@ -548,15 +443,12 @@ def q_stream_ann_index_twolevel(
 
     Result lifetime: execute the returned DataFrame before re-invoking
     this query in the same process — the next invocation reaps this
-    one's store dir (_fresh_run_dir contract).
+    one's store dir (fresh_run_dir contract).
     """
     from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
-    from end_to_end_aws_data_pipeline_spark.streaming.pattern import (
-        _fresh_run_dir,
-    )
 
     ensure_runtime_confs(spark)
     staged = staged_vec_dir(os.path.join(sf_dir, "embeddings.parquet"))
-    store = _fresh_run_dir(os.path.dirname(staged), "annidx2")
+    store = fresh_run_dir(os.path.dirname(staged), "annidx2")
     run_ann_index_stream(spark, sf_dir, staged, store, twolevel=True)
     return final_index(spark, store)

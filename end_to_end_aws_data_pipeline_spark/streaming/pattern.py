@@ -30,11 +30,7 @@ in-order-arrival contract this operator states for events.
 
 from __future__ import annotations
 
-import hashlib
-import itertools
 import os
-import re
-import shutil
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,63 +38,17 @@ from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema
 from end_to_end_aws_data_pipeline_spark.registry import register
-from end_to_end_aws_data_pipeline_spark.streaming.stopping import (
-    await_or_stop,
-    request_stop,
+from end_to_end_aws_data_pipeline_spark.streaming.store import (
+    drain,
+    fresh_run_dir,
+    newest,
+    read_prev,
+    stage,
+    write_slices,
+    write_snapshot,
 )
-
-_counter = itertools.count()
 
 _PM_BUCKETS = 4  # staged time-ordered chunks = micro-batches
-
-# state-store sharding: the carried per-user snapshot is written as
-# N_BUCKETS bucket-pure files (hash(user_id) % N), partitionBy'd on the
-# bucket — the sharded-Bloom store layout (dedup.py digest_bloom_sharded)
-# applied to streaming state.  A coalesce(1) snapshot was a single-task
-# write that serializes at 100x users; bucketed, the write is N parallel
-# tasks and a production MERGE can address one bucket at a time.
-_RLE_STATE_BUCKETS = max(
-    1, int(os.environ.get("SPARK_GRAFT_PATTERN_STATE_BUCKETS", "8"))
-)
-# snapshots older than (newest - RETAIN) are retired after each batch
-# commit: availableNow replay redelivers at most the last uncommitted
-# batch, which re-reads only its immediate predecessor, so RETAIN=2 is
-# strictly sufficient — 3 leaves a margin.  Without retirement the
-# store grows O(batches x users).
-_RLE_STATE_RETAIN = max(
-    2, int(os.environ.get("SPARK_GRAFT_PATTERN_STATE_RETAIN", "3"))
-)
-
-def _fresh_run_dir(base: str, prefix: str) -> str:
-    """Allocate a per-invocation output dir under ``base`` and reap
-    stale siblings: dirs left by DEAD processes, plus this process's
-    own previous dir for the same prefix (by the time a query is
-    invoked again, its previous invocation's result DataFrame has been
-    executed — the gate/bench/pytest contract).  Live other-process
-    dirs are left alone.  Without reaping, every gate/bench run leaked
-    one sink dir and one state store into /tmp forever."""
-    pat = re.compile(rf"^{re.escape(prefix)}_(\d+)_\d+$")
-    me = os.getpid()
-    try:
-        names = os.listdir(base)
-    except OSError:
-        names = []
-    for name in names:
-        m = pat.match(name)
-        if not m:
-            continue
-        pid = int(m.group(1))
-        stale = pid == me
-        if not stale:
-            try:
-                os.kill(pid, 0)
-            except ProcessLookupError:
-                stale = True
-            except OSError:
-                pass  # alive but not ours (EPERM) — leave it
-        if stale:
-            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-    return os.path.join(base, f"{prefix}_{me}_{next(_counter)}")
 
 # state: the previous run's type, the open run (type, length, start),
 # and the accumulated match stats. first_us is -1 until the first
@@ -129,35 +79,18 @@ def staged_time_dir(path: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = os.path.abspath(path)
-    mt = int(os.path.getmtime(path))
-    d = os.path.join(
-        "/tmp",
-        "stream_pattern_"
-        + hashlib.sha1(f"{path}:{mt}".encode()).hexdigest()[:12],
-    )
-    done = os.path.join(d, "_STAGED")
-    if os.path.exists(done):
-        return d
-    if os.path.isdir(d):
-        shutil.rmtree(d)
-    os.makedirs(d)
-    t = pq.read_table(path, columns=["user_id", "ts", "event_id", "event_type"])
-    ts_us = pc.divide(pc.cast(t.column("ts"), pa.int64()), 1000)
-    idx = pc.sort_indices(
-        pa.table({"us": ts_us, "eid": t.column("event_id")}),
-        sort_keys=[("us", "ascending"), ("eid", "ascending")],
-    )
-    t = t.take(idx)
-    n = t.num_rows
-    for g in range(_PM_BUCKETS):
-        lo = g * n // _PM_BUCKETS
-        hi = (g + 1) * n // _PM_BUCKETS
-        f = os.path.join(d, f"chunk_{g}.parquet")
-        pq.write_table(t.slice(lo, hi - lo), f)
-        os.utime(f, (mt + 10 * g, mt + 10 * g))
-    open(done, "w").close()
-    return d
+    def write_chunks(src: str, out: str) -> list[str]:
+        t = pq.read_table(
+            src, columns=["user_id", "ts", "event_id", "event_type"]
+        )
+        ts_us = pc.divide(pc.cast(t.column("ts"), pa.int64()), 1000)
+        idx = pc.sort_indices(
+            pa.table({"us": ts_us, "eid": t.column("event_id")}),
+            sort_keys=[("us", "ascending"), ("eid", "ascending")],
+        )
+        return write_slices(t.take(idx), _PM_BUCKETS, out)
+
+    return stage(path, "pattern", write_chunks)
 
 
 def _track_pattern(key, pdfs: Iterable, state) -> Iterable:
@@ -253,21 +186,7 @@ def run_pattern_stream(
             os.path.join(sink_dir, f"b{batch_id}")
         )
 
-    w = (
-        tracked.writeStream.foreachBatch(emit)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if ckpt:
-        w = w.option("checkpointLocation", ckpt)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    # state-store right-sizing (the stream family's measured lesson):
-    # shuffle.partitions at first start = state-store count forever
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        w.start().awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    drain(spark, tracked, emit, ckpt)
 
 
 def final_matches(spark: SparkSession, sink_dirs: list[str]) -> DataFrame:
@@ -322,7 +241,7 @@ def q_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Result lifetime: the returned DataFrame reads this invocation's
     run dir, which the NEXT invocation of this query in the same
-    process reaps (_fresh_run_dir) — execute or materialize the result
+    process reaps (fresh_run_dir) — execute or materialize the result
     before re-invoking; holding two successive lazy results is not
     supported.
     """
@@ -330,7 +249,7 @@ def q_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     staged = staged_time_dir(os.path.join(sf_dir, "events.parquet"))
-    sink_dir = _fresh_run_dir(os.path.dirname(staged), "pattern_out")
+    sink_dir = fresh_run_dir(os.path.dirname(staged), "pattern_out")
     run_pattern_stream(spark, staged, sink_dir)
     return final_matches(spark, [sink_dir])
 
@@ -435,11 +354,10 @@ def run_pattern_stream_rle(
     partition-scoped upsert discipline applied to carried state).
 
     State per user is one row; the snapshot is user-sized, never
-    event-sized — and it is written BUCKETED (hash(user_id) %
-    _RLE_STATE_BUCKETS, partitionBy'd) so the write is N parallel
-    tasks, not one, and only the last _RLE_STATE_RETAIN snapshots are
-    kept (availableNow replay needs exactly the predecessor; storage
-    stays O(users), not O(batches x users)). A production deployment
+    event-sized — and it is written BUCKETED and retained by the
+    streaming store (streaming/store.py: store.BUCKETS parallel write
+    tasks, the last store.RETAIN snapshots kept; storage stays
+    O(users), not O(batches x users)). A production deployment
     MERGEs into a keyed store per bucket instead of rewriting the
     snapshot; the per-batch read-modify-write here is the
     local-parquet stand-in, exactly like ingest/watermark.py's state
@@ -450,36 +368,10 @@ def run_pattern_stream_rle(
         .option("maxFilesPerTrigger", 1)
         .parquet(staged)
     )
-    seen = {"n": 0}
 
     def upd(bdf: DataFrame, bid: int) -> None:
         runs = _batch_runs(bdf)
-        prev_path = os.path.join(store, f"b{bid - 1}")
-        if bid > 0:
-            if not os.path.isdir(prev_path):
-                # the checkpoint proves batch bid-1 committed, so its
-                # snapshot MUST exist — falling back to empty state
-                # here would silently drop every carried run and
-                # under-count matches (a checkpoint paired with the
-                # wrong or cleaned store dir)
-                raise RuntimeError(
-                    f"pattern-RLE state store {store} is missing "
-                    f"snapshot b{bid - 1} while the checkpoint resumes "
-                    f"at batch {bid}: refusing to continue from empty "
-                    "state — pair the checkpoint with its store dir, "
-                    "or restart from a fresh checkpoint + store pair "
-                    "(once the snapshot is retired it cannot be "
-                    "recovered; SPARK_GRAFT_PATTERN_STATE_RETAIN only "
-                    "helps preventively, raised before the drain)"
-                )
-            # explicit schema: an inferred read costs one extra
-            # footer-sampling job per micro-batch (bucket is the
-            # partition directory column; dropped after read)
-            st = spark.read.schema(_RLE_STATE_SCHEMA + ", bucket int").parquet(
-                prev_path
-            ).drop("bucket")
-        else:
-            st = spark.createDataFrame([], _RLE_STATE_SCHEMA)
+        st = read_prev(spark, store, bid, _RLE_STATE_SCHEMA)
         j = runs.join(st, "user_id", "left")
         cont = (F.col("idx") == 1) & F.col("open_t").eqNullSafe(
             F.col("etype")
@@ -616,72 +508,14 @@ def run_pattern_stream_rle(
                 for c in new_rows.columns[1:]
             ),
         )
-        # bucketed snapshot: hash(user_id) buckets, one task per bucket
-        # (parallel write; a production store MERGEs per bucket) — the
-        # coalesce(1) form was the one single-task serialization point
-        # left at 100x users
-        nb = _RLE_STATE_BUCKETS
-        (
-            merged.withColumn(
-                "bucket", F.pmod(F.hash("user_id"), F.lit(nb))
-            )
-            .repartition(nb, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(store, f"b{bid}"))
-        )
-        # retire snapshots older than the replay horizon: keep the last
-        # RETAIN batch snapshots, delete the rest (storage would
-        # otherwise grow O(batches x users)); deletion happens only
-        # after this batch's snapshot is fully written, so a replayed
-        # batch always finds its predecessor
-        for d in os.listdir(store):
-            if (
-                d.startswith("b")
-                and d[1:].isdigit()
-                and int(d[1:]) <= bid - _RLE_STATE_RETAIN
-            ):
-                shutil.rmtree(os.path.join(store, d), ignore_errors=True)
-        seen["n"] += 1
-        if stop_after_batches and seen["n"] >= stop_after_batches:
-            request_stop(seen)
+        write_snapshot(merged, store, bid, "user_id")
 
-    w = (
-        src.writeStream.foreachBatch(upd)
-        .outputMode("update")
-        .trigger(availableNow=True)
-    )
-    if ckpt:
-        w = w.option("checkpointLocation", ckpt)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        await_or_stop(w.start(), seen)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    drain(spark, src, upd, ckpt, stop_after_batches)
 
 
 def rle_final_matches(spark: SparkSession, store: str) -> DataFrame:
     """Project the newest state snapshot into the oracle's shape."""
-    snaps = (
-        [
-            d
-            for d in os.listdir(store)
-            if d.startswith("b") and d[1:].isdigit()
-        ]
-        if os.path.isdir(store)
-        else []
-    )
-    if not snaps:
-        raise RuntimeError(
-            f"pattern-RLE state store has no snapshots: {store} — the "
-            "drain never ran, or this is not the store dir the stream "
-            "wrote to"
-        )
-    last = max(snaps, key=lambda d: int(d[1:]))
-    # inferred read is fine here (once per query, not per micro-batch);
-    # drop the bucket partition column before projecting
-    st = spark.read.parquet(os.path.join(store, last)).drop("bucket")
+    st = newest(spark, store)
     return st.filter(F.col("n_matches") > 0).select(
         "user_id",
         "n_matches",
@@ -712,14 +546,14 @@ def q_stream_pattern_match_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Result lifetime: the returned DataFrame reads this invocation's
     store dir, which the NEXT invocation of this query in the same
-    process reaps (_fresh_run_dir) — execute the result before
+    process reaps (fresh_run_dir) — execute the result before
     re-invoking; holding two successive lazy results is not supported.
     """
     from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)
     staged = staged_time_dir(os.path.join(sf_dir, "events.parquet"))
-    store = _fresh_run_dir(os.path.dirname(staged), "pattern_rle")
+    store = fresh_run_dir(os.path.dirname(staged), "pattern_rle")
     run_pattern_stream_rle(spark, staged, store)
     return rle_final_matches(spark, store)
 
@@ -756,7 +590,7 @@ def q_stream_pattern_quantified(
 
     Result lifetime: execute the returned DataFrame before re-invoking
     this query in the same process — the next invocation reaps this
-    one's store dir (_fresh_run_dir contract).
+    one's store dir (fresh_run_dir contract).
     """
     from end_to_end_aws_data_pipeline_spark.operators.sweep import (
         _PQ_HI,
@@ -766,7 +600,7 @@ def q_stream_pattern_quantified(
 
     ensure_runtime_confs(spark)
     staged = staged_time_dir(os.path.join(sf_dir, "events.parquet"))
-    store = _fresh_run_dir(os.path.dirname(staged), "pattern_q_rle")
+    store = fresh_run_dir(os.path.dirname(staged), "pattern_q_rle")
     run_pattern_stream_rle(
         spark, staged, store, len_lo=_PQ_LO, len_hi=_PQ_HI
     )
@@ -807,7 +641,7 @@ def q_stream_pattern_alternation(
 
     Result lifetime: execute the returned DataFrame before re-invoking
     this query in the same process — the next invocation reaps this
-    one's store dir (_fresh_run_dir contract).
+    one's store dir (fresh_run_dir contract).
     """
     from end_to_end_aws_data_pipeline_spark.operators.sweep import (
         _PA_ALTS,
@@ -818,7 +652,7 @@ def q_stream_pattern_alternation(
 
     ensure_runtime_confs(spark)
     staged = staged_time_dir(os.path.join(sf_dir, "events.parquet"))
-    store = _fresh_run_dir(os.path.dirname(staged), "pattern_a_rle")
+    store = fresh_run_dir(os.path.dirname(staged), "pattern_a_rle")
     run_pattern_stream_rle(
         spark,
         staged,

@@ -22,6 +22,7 @@ from end_to_end_aws_data_pipeline_spark.functions.aggs import (
     stable_round,
 )
 from end_to_end_aws_data_pipeline_spark.registry import register
+from end_to_end_aws_data_pipeline_spark.streaming.store import shuffle_partitions
 from end_to_end_aws_data_pipeline_spark.streaming.windows import (
     session_counts,
     sliding_counts,
@@ -372,27 +373,25 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conformance run over sf-scale data needs 4 stores, not 32 —
     # measured 16.0 -> ~6 s at sf0.1. A production deployment sizes
     # this to its real key cardinality instead.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        q = (
-            joined.filter(F.col("click_id") >= 0)
-            .select(
-                "click_id",
-                "purchase_id",
-                F.col("click_user").alias("user_id"),
-                "click_ts",
-                "purchase_ts",
+        with shuffle_partitions(spark, 4):
+            (
+                joined.filter(F.col("click_id") >= 0)
+                .select(
+                    "click_id",
+                    "purchase_id",
+                    F.col("click_user").alias("user_id"),
+                    "click_ts",
+                    "purchase_ts",
+                )
+                .writeStream.format("memory")
+                .queryName(name)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
             )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         if old_pol is None:
             spark.conf.unset(pol_key)
         else:
@@ -773,22 +772,20 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overhead (measured: 9.5 s → 4.5 s at 4).  The count is fixed into
     # the checkpoint at query start, so right-size it to the STATE
     # cardinality, then restore the session's batch width.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        with shuffle_partitions(spark, 4):
+            q = (
+                agg.writeStream.outputMode("complete")
+                .format("memory")
+                .queryName(name)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
         # the memory-sink table holds the result; the offset/commit log
         # has served its purpose — don't leak one tmpdir per invocation
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -881,20 +878,16 @@ def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # maintenance — 8 stores measured 2.3 s -> 1.4 s at sf0.1.  A
     # production deployment sizes this to watermark-span x arrival rate
     # instead; the count is fixed into the checkpoint at query start.
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
+    with shuffle_partitions(spark, 4):
+        (
             deduped.select("event_id", "event_type")
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
     return (
         spark.table(name)
         .groupBy("event_type")

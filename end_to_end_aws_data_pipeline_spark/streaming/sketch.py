@@ -26,22 +26,18 @@ instead of a table copy.
 
 from __future__ import annotations
 
-import hashlib
-import itertools
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema
 from end_to_end_aws_data_pipeline_spark.registry import register
-from end_to_end_aws_data_pipeline_spark.streaming.stopping import (
-    await_or_stop,
-    request_stop,
+from end_to_end_aws_data_pipeline_spark.streaming.store import (
+    drain,
+    fresh_run_dir,
+    stage,
 )
-
-_counter = itertools.count()
 
 _SK_K = 256       # per-sketch capacity (matches q_agg_kll_quantiles)
 _SK_BUCKETS = 4   # staged arrival files = micro-batches = sketch groups
@@ -155,31 +151,19 @@ def staged_bucket_dir(path: str) -> str:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    path = os.path.abspath(path)
-    mt = int(os.path.getmtime(path))
-    d = os.path.join(
-        "/tmp",
-        "stream_sketch_"
-        + hashlib.sha1(f"{path}:{mt}".encode()).hexdigest()[:12],
-    )
-    done = os.path.join(d, "_STAGED")
-    if os.path.exists(done):
-        return d
-    if os.path.isdir(d):
-        shutil.rmtree(d)
-    os.makedirs(d)
-    t = pq.read_table(path)
-    # no pc.mod in this pyarrow; B is a power of two, so id % B is a
-    # mask (event ids are non-negative)
-    assert _SK_BUCKETS & (_SK_BUCKETS - 1) == 0
-    bucket = pc.bit_wise_and(t.column("event_id"), _SK_BUCKETS - 1)
-    for g in range(_SK_BUCKETS):
-        pq.write_table(
-            t.filter(pc.equal(bucket, g)),
-            os.path.join(d, f"bucket_{g}.parquet"),
-        )
-    open(done, "w").close()
-    return d
+    def write_chunks(src: str, out: str) -> list[str]:
+        t = pq.read_table(src)
+        # no pc.mod in this pyarrow; B is a power of two, so id % B is
+        # a mask (event ids are non-negative)
+        assert _SK_BUCKETS & (_SK_BUCKETS - 1) == 0
+        bucket = pc.bit_wise_and(t.column("event_id"), _SK_BUCKETS - 1)
+        files = []
+        for g in range(_SK_BUCKETS):
+            files.append(os.path.join(out, f"bucket_{g}.parquet"))
+            pq.write_table(t.filter(pc.equal(bucket, g)), files[-1])
+        return files
+
+    return stage(path, "sketch", write_chunks)
 
 
 def run_sketch_stream(
@@ -220,7 +204,6 @@ def run_sketch_stream(
             F.col("event_id").cast("long").alias("uniq"),
         )
     )
-    seen = {"n": 0}
 
     def upd(bdf: DataFrame, _batch_id: int) -> None:
         # bounded probe: the bucket id, its size and value span (one
@@ -272,33 +255,8 @@ def run_sketch_stream(
         l1.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(acc, f"g{g}")
         )
-        seen["n"] += 1
-        if stop_after_batches and seen["n"] >= stop_after_batches:
-            # deliberate mid-stream kill for the restart test: flags
-            # driver state before raising so await_or_stop recognizes
-            # it even if Py4J wraps/truncates the message
-            request_stop(seen)
 
-    # right-size the per-batch shuffles: each micro-batch is
-    # bucket-sized, and foreachBatch jobs inherit the session's 32
-    # shuffle partitions of pure overhead otherwise (the state-store
-    # right-sizing lesson, applied to stateless batch jobs)
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            src.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        # only the flagged deliberate kill is swallowed; a real stream
-        # failure during a capped run still surfaces.  The killed
-        # batch's write either completed (overwrite makes the
-        # redelivery identical) or didn't (it re-runs).
-        await_or_stop(q, seen)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    drain(spark, src, upd, ckpt, stop_after_batches)
 
 
 def merge_sketches(spark: SparkSession, acc: str, n_rows: int) -> DataFrame:
@@ -386,13 +344,9 @@ def q_stream_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     work, never a history rescan. Restart/exactly-once is tested by
     killing the stream mid-run and resuming from the checkpoint
     (tests/test_streaming.py)."""
-    run_id = next(_counter)
     staged = staged_bucket_dir(os.path.join(sf_dir, "events.parquet"))
-    acc = f"/tmp/sketch_acc_{os.getpid()}_{run_id}"
-    ckpt = f"/tmp/sketch_ckpt_{os.getpid()}_{run_id}"
-    for d in (acc, ckpt):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    acc = fresh_run_dir(os.path.dirname(staged), "sketch_acc")
+    ckpt = fresh_run_dir(os.path.dirname(staged), "sketch_ckpt")
     run_sketch_stream(spark, staged, acc, ckpt)
     n_rows = (
         spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
@@ -525,7 +479,6 @@ def run_hh_stream(
             F.col("user_id").cast("long").alias("k"),
         )
     )
-    seen = {"n": 0}
 
     def upd(bdf: DataFrame, _batch_id: int) -> None:
         from pyspark.sql import Window as W
@@ -564,22 +517,8 @@ def run_hh_stream(
         out.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(acc, f"g{g}")
         )
-        seen["n"] += 1
-        if stop_after_batches and seen["n"] >= stop_after_batches:
-            request_stop(seen)
 
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            src.writeStream.foreachBatch(upd)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_or_stop(q, seen)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    drain(spark, src, upd, ckpt, stop_after_batches)
 
 
 @register("q_stream_heavy_hitters", oracle=_HH_STREAM_ORACLE)
@@ -607,13 +546,9 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheduler overhead); the only corpus pass is the audit semi-join on
     the 20 published keys. Restart/exactly-once is tested by killing
     the stream mid-run and resuming from the checkpoint."""
-    run_id = next(_counter)
     staged = staged_bucket_dir(os.path.join(sf_dir, "events.parquet"))
-    acc = f"/tmp/hh_acc_{os.getpid()}_{run_id}"
-    ckpt = f"/tmp/hh_ckpt_{os.getpid()}_{run_id}"
-    for d in (acc, ckpt):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
+    acc = fresh_run_dir(os.path.dirname(staged), "hh_acc")
+    ckpt = fresh_run_dir(os.path.dirname(staged), "hh_ckpt")
     run_hh_stream(spark, staged, acc, ckpt)
     rows = (
         spark.read.option("recursiveFileLookup", "true")

@@ -135,3 +135,15 @@ def test_legacy_bare_fingerprint_entries_parse_as_round_zero():
     assert all(
         isinstance(fp, str) and isinstance(r, int) for fp, r in parsed.values()
     )
+
+
+def test_load_fails_loudly_on_missing_module(monkeypatch):
+    """A query module that fails to import must fail the load: a
+    swallowed import error would silently drop its queries."""
+    import pytest
+
+    missing = "end_to_end_aws_data_pipeline_spark.streaming.no_such_module"
+    monkeypatch.setattr(reg, "_QUERY_MODULES", reg._QUERY_MODULES + (missing,))
+    monkeypatch.setattr(reg, "_loaded", False)
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        reg._load()

@@ -603,14 +603,14 @@ def test_pattern_rle_restart_and_equivalence(spark, tmp_path):
     assert got_clean == want
 
     # bucketed + retained store layout: after the 4-batch drain only the
-    # last _RLE_STATE_RETAIN snapshots survive, each sharded into
+    # last store.RETAIN snapshots survive, each sharded into
     # bucket=K partition dirs (parallel write, no coalesce(1) task)
-    from end_to_end_aws_data_pipeline_spark.streaming import pattern as pat
+    from end_to_end_aws_data_pipeline_spark.streaming import store
 
     snaps = sorted(
         int(d[1:]) for d in os.listdir(clean_store) if d.startswith("b")
     )
-    assert snaps == list(range(4 - pat._RLE_STATE_RETAIN, 4))
+    assert snaps == list(range(4 - store.RETAIN, 4))
     newest = os.path.join(clean_store, f"b{snaps[-1]}")
     assert any(n.startswith("bucket=") for n in os.listdir(newest))
 
@@ -653,10 +653,10 @@ def test_rle_store_guards(spark, tmp_path):
 
 
 def test_fresh_run_dir_reaps_stale(tmp_path):
-    """_fresh_run_dir removes dead-pid and own-pid leftovers for its
+    """fresh_run_dir removes dead-pid and own-pid leftovers for its
     prefix, leaves live other-process dirs and other prefixes alone."""
-    from end_to_end_aws_data_pipeline_spark.streaming.pattern import (
-        _fresh_run_dir,
+    from end_to_end_aws_data_pipeline_spark.streaming.store import (
+        fresh_run_dir,
     )
 
     base = str(tmp_path)
@@ -665,7 +665,7 @@ def test_fresh_run_dir_reaps_stale(tmp_path):
     other_prefix = os.path.join(base, "pattern_out_999999999_0")
     for d in (dead, mine, other_prefix):
         os.makedirs(d)
-    fresh = _fresh_run_dir(base, "pattern_rle")
+    fresh = fresh_run_dir(base, "pattern_rle")
     assert not os.path.exists(dead)
     assert not os.path.exists(mine)
     assert os.path.exists(other_prefix)  # different prefix untouched
@@ -814,7 +814,7 @@ def test_ann_index_twolevel_mass_conservation_and_distinct_routing(spark):
 
     one = q_stream_ann_index(spark, SF_SMOKE).collect()
     # materialize fully before re-invoking into the same staged base
-    # (_fresh_run_dir result-lifetime contract)
+    # (fresh_run_dir result-lifetime contract)
     two = q_stream_ann_index_twolevel(spark, SF_SMOKE).collect()
 
     import duckdb
