@@ -13,6 +13,7 @@ pruned scans without bespoke code.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,6 +32,12 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def scratch_root() -> str:
+    """Where derived and staged files go: the temp dir (``TMPDIR``)."""
+    return tempfile.gettempdir()
+
 
 # Parquet schema cache, keyed by (realpath, mtime). Schema inference
 # reads footers on the DRIVER on every `spark.read.parquet` call —

@@ -24,7 +24,7 @@ checkpoint-placement invariance is property-tested.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.cache import persisted
@@ -228,7 +228,7 @@ def pagerank_ranks_deep(
     r0=1e9; driver-exact replay measures the orbit entered at t=113
     on sf0.001) — the truncation error alternates sides of the
     bipartition forever, a period-2 rank orbit. This is the LPA
-    label-orbit phenomenon (tools/lpa_depth.py) re-appearing at the
+    label-orbit phenomenon (SCALING.md, LPA convergence study) at the
     rank level: ranks(t) == ranks(t-1) provably never fires, while
     ranks(t) == ranks(t-2) detects the orbit as the fixpoint. The
     returned vector is one member of the final orbit (amplitude: the
@@ -614,18 +614,20 @@ def q_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     set of customers, over the undirected purchase graph — the shape
     behind blast-radius, fraud-ring and recommendation expansions.
 
-    Per round: frontier ⋈ edges (equi-join on the node key, shuffle
-    spread by node cardinality) → distinct → LEFT ANTI against the
-    visited set, i.e. delta-BFS: only the *new* frontier joins edges
-    next round, and `visited` grows by union — never rescanned as a
-    whole, only anti-joined, which AQE keeps as a broadcast while the
-    frontier is small. Depth is a constant (3); each round persists its
-    frontier so lineage stays flat (same policy as PageRank's
-    checkpoint-every-k above). Per-hop key checksums pin WHICH nodes
-    are first reached at each depth, not just how many.
+    The state is ``visited(node, hop)``, one row per reached node
+    carrying the hop that first reached it. Per hop: the frontier
+    (last hop's rows) ⋈ edges (equi-join on the node key, shuffle
+    spread by node cardinality) → distinct → LEFT ANTI against
+    visited, i.e. delta-BFS: only the *new* frontier joins edges, and
+    visited grows by union under one eager checkpoint per hop, so
+    lineage stays flat; the checkpoint's own action counts the new
+    hop, and an empty one ends the loop. The result is one aggregate
+    over the final state; an empty hop has no rows, so it drops out as
+    the oracle's ``n > 0`` drops it. Per-hop key checksums pin WHICH
+    nodes are first reached at each depth, not just how many.
     """
     edges = persisted(_purchase_sym(spark, sf_dir))
-    frontier = (
+    visited = (
         edges.select("src")
         .filter(
             (F.col("src") % 2 == 0)
@@ -633,38 +635,29 @@ def q_graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint()
+        .withColumn("hop", F.lit(0).cast("long"))
+        .localCheckpoint(eager=True)
     )
-    visited = frontier
-    # per-hop stats are a bounded driver fetch (3 int64 per hop — the
-    # audited iterative-collect pattern): lazily unioning all hops into
-    # one plan re-embeds every prior hop's lineage under each stats
-    # leaf (the k-core lesson); localCheckpoint keeps the growing
-    # visited union's plan flat.
-    r0 = frontier.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("node").cast("long").alias("ck"),
-    ).collect()[0]
-    rows = [(0, r0["n"], r0["ck"])]
     for hop in range(1, _KHOP_DEPTH + 1):
+        frontier = visited.filter(F.col("hop") == hop - 1)
         nxt = (
             edges.join(frontier, edges["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .localCheckpoint()
+            .withColumn("hop", F.lit(hop).cast("long"))
         )
-        r = nxt.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("node").cast("long").alias("ck"),
-        ).collect()[0]
-        if r["n"] == 0:
+        obs = Observation()
+        visited = (
+            visited.unionAll(nxt)
+            .observe(obs, F.count(F.when(F.col("hop") == hop, 1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        if not obs.get["n"]:
             break  # empty frontier: every deeper hop is empty too
-        rows.append((hop, r["n"], r["ck"]))
-        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
-        frontier = nxt
-    return spark.createDataFrame(
-        rows, "hop long, n_reached long, key_checksum long"
+    return visited.groupBy("hop").agg(
+        F.count(F.lit(1)).cast("long").alias("n_reached"),
+        F.sum("node").cast("long").alias("key_checksum"),
     )
 
 
@@ -1100,7 +1093,7 @@ def q_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         "LPA argmax encoding needs node ids < 2^32; re-key or widen B"
     )
     # NO fixpoint short-circuit at fixed R, deliberately: the measured
-    # depth study (tools/lpa_depth.py, SCALING.md) shows ~10% of this
+    # depth study (SCALING.md, LPA convergence study) shows ~10% of this
     # bipartite graph's nodes sit in a period-2 label orbit even with
     # the self-vote, so changed==0 never fires — the check would cost
     # one round-sized job per round and save nothing at fixed R. Deep-R
@@ -1857,11 +1850,11 @@ def hits_scores(
     run twice in alternation — authority(v) = Σ hub(u) over in-edges,
     hub(u) = Σ authority(v) over out-edges — with an integer
     renormalization between: divide every score by the scalar
-    q = max(S div {_HITS_MASS}, 1) where S is the vector's sum.  The
-    scalar enters the plan as a 1-row aggregate broadcast-cross-joined
-    against the node-sized vector (never collected), so the oracle can
-    replay it as a subquery and the whole operator stays
-    hash-checkable despite being iterative and normalized.
+    q = max(S div {_HITS_MASS}, 1) where S is the vector's sum.  S is
+    observed by the half-step's one action (its eager checkpoint) and
+    q enters the next plan as a literal, so the oracle can replay it as
+    a subquery and the whole operator stays hash-checkable despite
+    being iterative and normalized.
 
     Scale: the join strategy is size-aware, the HyperANF regime pick
     (_HA_BCAST_NODES) applied to two coupled vectors — below the
@@ -1875,11 +1868,9 @@ def hits_scores(
     lesson).  Divide-by-scalar normalization keeps every intermediate
     ≤ maxdeg·MASS ≈ 1e14 — structurally inside int64 with no decimal
     widening on the hot path.  Each half-step's raw aggregate is
-    eagerly localCheckpoint'ed: six stacked crossJoin+broadcast plans
-    made ANALYSIS the dominant cost (20 s warm on a 600-row fixture,
-    all driver time — 22.7 → 10.5 s one-shot at sf0.1 after
-    truncation), and the checkpointed leaf also feeds the scalar's
-    BroadcastExchange job without re-running the contribution join.
+    eagerly localCheckpoint'ed: six stacked half-step plans made
+    ANALYSIS the dominant cost (20 s warm on a 600-row fixture, all
+    driver time — 22.7 → 10.5 s one-shot at sf0.1 after truncation).
     """
     edges = persisted(_purchase_fwd(spark, sf_dir))
     n_nodes = edges.agg(
@@ -1905,29 +1896,17 @@ def hits_scores(
         msg = e.join(rhs, e[key] == vec["node"]).select(out_key, vcol)
         if not small:
             msg = msg.repartition(out_key)
-        # eager localCheckpoint, not persist: each half-step stacks a
-        # crossJoin + broadcast on the previous one's plan, and SIX of
-        # those nested made ANALYSIS the cost (20 s warm at sf0.001 —
-        # 600 rows — all driver time).  Checkpointing the node-sized
-        # raw aggregate truncates the lineage to a leaf per half-step,
-        # the q_graph_pagerank deep-runner lesson applied at depth 6.
-        # r13 note: a fused_ckpt (lazy) variant A/B-measured a WASH at
-        # sf0.1 (2/5 pairs, min 4.58 vs 4.70) and was reverted — the
-        # lazy chain would materialize inside the NEXT half-step's
-        # BroadcastExchange build, putting upstream compute under
-        # spark.sql.broadcastTimeout at scale.
+        obs = Observation()
         raw = (
             msg.groupBy(out_key)
             .agg(F.sum(vcol).alias(out))
             .withColumnRenamed(out_key, "node")
+            .observe(obs, F.sum(out).alias("s"))
             .localCheckpoint(eager=True)
         )
-        s = raw.agg(F.sum(out).alias("s"))
-        return raw.crossJoin(F.broadcast(s)).select(
-            "node",
-            F.expr(f"{out} div greatest(s div {_HITS_MASS}, 1L)")
-            .cast("long")
-            .alias(out),
+        q = max((obs.get["s"] or 0) // _HITS_MASS, 1)
+        return raw.select(
+            "node", F.expr(f"{out} div {q}L").cast("long").alias(out)
         )
 
     for _ in range(iters):
@@ -1951,30 +1930,24 @@ def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative + normalized, yet fully hash-checked.  The top-k cuts
     tiebreak on node id, so the result set is order-unique."""
     hub, auth = hits_scores(spark, sf_dir)
-    top_auth = (
-        auth.select(
-            F.lit("authority").alias("role"),
-            F.expr("node div 2").cast("long").alias("entity_key"),
-            F.col("a").alias("score_q"),
-            "node",
+
+    def top(vec: DataFrame, role: str, score: str) -> DataFrame:
+        return (
+            vec.select(
+                F.lit(role).alias("role"),
+                F.expr("node div 2").cast("long").alias("entity_key"),
+                F.col(score).alias("score_q"),
+                "node",
+            )
+            .orderBy(F.col("score_q").desc(), "node")
+            .limit(_HITS_TOP)
+            .drop("node")
         )
-        .orderBy(F.col("score_q").desc(), "node")
-        .limit(_HITS_TOP)
-        .drop("node")
-    )
-    top_hub = (
-        hub.select(
-            F.lit("hub").alias("role"),
-            F.expr("node div 2").cast("long").alias("entity_key"),
-            F.col("h").alias("score_q"),
-            "node",
-        )
-        .orderBy(F.col("score_q").desc(), "node")
-        .limit(_HITS_TOP)
-        .drop("node")
-    )
-    return top_auth.unionAll(top_hub).orderBy(
-        "role", F.col("score_q").desc(), "entity_key"
+
+    return (
+        top(auth, "authority", "a")
+        .unionAll(top(hub, "hub", "h"))
+        .orderBy("role", F.col("score_q").desc(), "entity_key")
     )
 
 
@@ -2594,48 +2567,61 @@ ORDER BY status, round"""
 
 def mis_rounds(
     spark: SparkSession, sf_dir: str, rounds: int = _MIS_ROUNDS
-) -> tuple[list[DataFrame], list[DataFrame], DataFrame]:
-    """([winners per round], [excluded per round], undecided) for
+) -> DataFrame:
+    """The ``(node, status, round)`` state after ``rounds`` rounds of
     Luby's maximal-independent-set algorithm over the symmetrized
-    purchase graph: per round every undecided node draws the hash
-    priority md5_60bit('mis-<v>-<r>') and joins the MIS iff its
-    priority is STRICTLY below every undecided neighbor's (a tie —
-    cosmically unlikely and engine-consistent, since both engines
-    replay the same md5 — just defers both nodes to the next round);
-    winners' neighbors leave as 'out'.  A node whose undecided
-    neighborhood empties wins vacuously (min over nothing = +inf), so
-    every undecided survivor always retains an undecided neighbor —
-    the pytest-pinned invariant.
+    purchase graph: 'mis' and 'out' rows carry the round that decided
+    them, 'undecided' rows round 0.  Per round every undecided node
+    draws the hash priority md5_60bit('mis-<v>-<r>') and joins the MIS
+    iff its priority is STRICTLY below every undecided neighbor's (a
+    tie — cosmically unlikely and engine-consistent, since both
+    engines replay the same md5 — just defers both nodes to the next
+    round); winners' undecided neighbors leave as 'out'.  A node whose
+    undecided neighborhood empties wins vacuously (min over nothing =
+    +inf), so every undecided survivor always retains an undecided
+    neighbor — the pytest-pinned invariant.
 
-    Scale shape: one round = one edge-sized join against the
-    undecided-priority table + a node-sized min-aggregate + two
-    set-difference anti-joins — the LPA/PageRank round plan with a
-    priority draw instead of a label. BOTH per-round edge joins key
-    on src, so the symmetrized edges persist pre-partitioned by src
-    ONCE and per round only the node-sized priority table moves (the
-    HITS regime; the unpartitioned first cut shuffled the full edge
-    set twice per round — 185.6 s at sf10). Rounds localCheckpoint
-    (flat plans), and the round count is FIXED at {_MIS_ROUNDS}
-    (Luby decides a constant fraction per round w.h.p., so coverage
-    after k rounds is the published geometric envelope) — the oracle
-    unrolls exactly those rounds; no convergence claim is made and
-    the remainder is REPORTED, not hidden."""
+    Scale shape: the Pregel vertex-state superstep — one state row per
+    node, one eager checkpoint per round, whose action also counts the
+    undecided rows; the loop stops when none are left.  A round is
+    one edge-sized join against the undecided priorities (computed
+    inside the plan, never materialized) + a node-sized min-aggregate,
+    one edge-sized semi-join for the winners' neighbors, and the state
+    update.  BOTH edge joins key on src, so the symmetrized edges
+    persist pre-partitioned by src ONCE and per round only node-sized
+    tables move (the unpartitioned first cut shuffled the full edge
+    set twice per round — 185.6 s at sf10).  The round count is FIXED at
+    {_MIS_ROUNDS} (Luby decides a constant fraction per round w.h.p.,
+    so coverage after k rounds is the published geometric envelope) —
+    the oracle unrolls exactly those rounds; no convergence claim is
+    made and the remainder is REPORTED, not hidden."""
+    und = F.col("status") == "undecided"
+
+    def checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+        obs = Observation()
+        df = df.observe(obs, F.count(F.when(und, 1)).alias("n"))
+        return df.localCheckpoint(eager=True), obs.get["n"]
+
     edges = persisted(_purchase_sym(spark, sf_dir).repartition("src"))
-    und = (
+    state, n_und = checkpoint(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .select(
+            "node",
+            F.lit("undecided").alias("status"),
+            F.lit(0).alias("round"),
+        )
     )
-    mis_parts: list[DataFrame] = []
-    out_parts: list[DataFrame] = []
     for r in range(1, rounds + 1):
-        pr = und.select(
+        if not n_und:
+            break  # all decided: a later round would change nothing
+        pr = state.filter(und).select(
             "node",
             F.expr(
                 f"cast(conv(substring(md5(concat_ws('-', 'mis', node, {r})),"
                 " 1, 15), 16, 10) as bigint)"
             ).alias("p"),
-        ).localCheckpoint(eager=True)
+        )
         nbr = (
             edges.join(
                 pr.select(F.col("node").alias("src"), F.col("p").alias("p_src")),
@@ -2644,33 +2630,36 @@ def mis_rounds(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("p_src").alias("p_nbr"))
         )
-        winners = (
+        won = (
             pr.join(nbr, "node", "left")
             .filter(
                 F.col("p")
                 < F.coalesce("p_nbr", F.lit(_MIS_INF).cast("long"))
             )
-            .select("node")
-            .localCheckpoint(eager=True)
+            .select("node", F.lit("mis").alias("won"))
         )
-        excl = (
+        hit = (
             edges.join(
-                winners.select(F.col("node").alias("src")), "src", "left_semi"
+                won.select(F.col("node").alias("src")), "src", "left_semi"
             )
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(pr, "node", "left_semi")
-            .join(winners, "node", "left_anti")
-            .localCheckpoint(eager=True)
+            .withColumn("hit", F.lit("out"))
         )
-        mis_parts.append(winners)
-        out_parts.append(excl)
-        und = (
-            und.join(winners, "node", "left_anti")
-            .join(excl, "node", "left_anti")
-            .localCheckpoint(eager=True)
+        # winners are never adjacent, so a winner is never also hit;
+        # a hit node that is already decided keeps its status
+        dec = F.coalesce("won", "hit")
+        new = und & dec.isNotNull()
+        state, n_und = checkpoint(
+            state.join(won, "node", "left")
+            .join(hit, "node", "left")
+            .select(
+                "node",
+                F.when(new, dec).otherwise(F.col("status")).alias("status"),
+                F.when(new, F.lit(r)).otherwise(F.col("round")).alias("round"),
+            )
         )
-    return mis_parts, out_parts, und
+    return state
 
 
 @register("q_graph_mis", oracle=_mis_oracle())
@@ -2681,25 +2670,16 @@ def q_graph_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-priority rounds with per-round accounting: one row per
     (status, round) with node count + id sum ('mis' = joined the
     independent set that round, 'out' = excluded as a winner's
-    neighbor, 'undecided' = the reported remainder).  RNG replaced by
-    the md5 priority draw, so the oracle replays every round exactly
-    (the q_graph_random_walks recipe applied to Luby)."""
-    mis_parts, out_parts, und = mis_rounds(spark, sf_dir)
-
-    def _leg(df: DataFrame, status: str, r: int) -> DataFrame:
-        return df.agg(
-            F.lit(status).alias("status"),
-            F.lit(r).cast("int").alias("round"),
+    neighbor, 'undecided' = the reported remainder), one aggregate
+    over the final state.  RNG replaced by the md5 priority draw, so
+    the oracle replays every round exactly (the q_graph_random_walks
+    recipe applied to Luby)."""
+    return (
+        mis_rounds(spark, sf_dir)
+        .groupBy("status", "round")
+        .agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.coalesce(F.sum("node"), F.lit(0)).cast("long").alias("node_sum"),
+            F.sum("node").cast("long").alias("node_sum"),
         )
-
-    legs = [
-        _leg(df, "mis", r + 1) for r, df in enumerate(mis_parts)
-    ] + [
-        _leg(df, "out", r + 1) for r, df in enumerate(out_parts)
-    ] + [_leg(und, "undecided", 0)]
-    out = legs[0]
-    for df in legs[1:]:
-        out = out.unionAll(df)
-    return out.filter(F.col("n_nodes") > 0).orderBy("status", "round")
+        .orderBy("status", "round")
+    )

@@ -19,10 +19,13 @@ and raises its own error. Users:
   a keyed vector, so its step carries its own probe (count tie +
   ``subtract``; most rounds cost one count action).
 
-Fixed-round loops (MIS, HITS, random walks, k-hop, harmonic centrality,
-the fixed-R PageRank/k-core/LPA queries) stay plain ``for`` loops.
+Fixed-round loops (MIS, HITS, k-hop) carry one node-keyed state and
+take one eager checkpoint per round; a per-round number comes from one
+aggregate over the final state or from the checkpoint's own action
+(``DataFrame.observe``). Random walks, harmonic centrality and the
+fixed-R PageRank/k-core/LPA queries stay plain ``for`` loops.
 
-The measured LPA depth study (tools/lpa_depth.py, SCALING.md) proved
+The measured LPA depth study (SCALING.md, LPA convergence study) proved
 that a plain ``changed == 0`` fixpoint check NEVER fires on bipartite
 graphs: even with the retention self-vote, ~10% of the purchase graph's
 nodes sit in a period-2 label orbit, swapping between two labels every

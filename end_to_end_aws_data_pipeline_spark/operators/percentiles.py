@@ -17,7 +17,7 @@ percentile's per-group sorted materialization.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import table
@@ -135,6 +135,56 @@ def binned_exact_percentiles(
     return pcts[value_col]
 
 
+# distinct _bucket_key values: ±(1 … 128·16), zero and NaN
+_BUCKET_KEYS = 2 * 128 * 16 + 2
+
+
+def _bucket_key() -> Column:
+    """The fused pass-1 bucket of the stacked value column ``v``.
+
+    Pass 1 groups by a data-independent bucketing that is strictly
+    MONOTONE in v — sign × (clamped binade × 16 mantissa sub-buckets),
+    zero in its own bucket — so ONE scan yields both the per-(column,
+    group) (n, lo, hi) (summed/min'd/max'd over buckets on the driver)
+    and, per rank, the exact bucket containing its order statistic
+    with exact local rank and exact [bucket-min, bucket-max] interval:
+    the narrowing round 1 used to buy costs no extra scan.
+    Monotonicity is FP-robust: within a binade av/2^e and (frac−1)·16
+    are exact (power-of-two divisor), and floor∘log2 is monotone even
+    if a binade boundary misrounds by an ulp (the misplaced value is
+    still ordered against both neighbor buckets), so cumulative bucket
+    counts in key order locate every rank correctly; interval
+    endpoints come from the DATA (per-bucket min/max), never from
+    bucket boundaries, so exactness is untouched. Driver rows are
+    occupied buckets only: value magnitudes span b binades → ≤ 16·b +
+    3 rows per (column, group) — bounded by the same
+    low-cardinality-grouping contract as the rest of the driver state
+    (max_groups). NaN gets its own bucket above every finite key (and
+    ±inf): Spark and DuckDB sort NaN last, and the binade arithmetic
+    would otherwise hand it a finite key and break the monotone order
+    the rank location relies on. A constant key degenerates the fused
+    pass to the plain (n, lo, hi) pass 1, with round 1 as its own
+    scan."""
+    av = F.abs(F.col("v"))
+    e = F.greatest(F.lit(-64.0), F.least(F.lit(63.0), F.floor(F.log2(av))))
+    sub = F.greatest(
+        F.lit(0.0),
+        F.least(
+            F.lit(15.0),
+            F.floor((av / F.pow(F.lit(2.0), e) - F.lit(1.0)) * 16),
+        ),
+    )
+    mag = (e + F.lit(64.0)) * 16 + sub
+    return (
+        # finite keys stop at mag's max 127·16 + 15, plus 1
+        F.when(F.isnan("v"), F.lit(128 * 16 + 1.0))
+        .when(F.col("v") == 0, F.lit(0.0))
+        .when(F.col("v") > 0, mag + 1)
+        .otherwise(-mag - 1)
+        .cast("long")
+    )
+
+
 def binned_exact_percentiles_multi(
     df: DataFrame,
     group_col: str,
@@ -210,64 +260,18 @@ def binned_exact_percentiles_multi(
     # corpus-sized cache materialization — the "don't persist a
     # corpus-sized relation to save cheap scans" rule (SCALING.md).
     #
-    # FUSED pass 1 + round 1 (r13): pass 1 additionally groups by a
-    # data-independent bucketing that is strictly MONOTONE in v — sign
-    # × (clamped binade × 16 mantissa sub-buckets), zero in its own
-    # bucket — so ONE scan yields both the per-(column, group)
-    # (n, lo, hi) (summed/min'd/max'd over buckets on the driver) and,
-    # per rank, the exact bucket containing its order statistic with
-    # exact local rank and exact [bucket-min, bucket-max] interval:
-    # the narrowing round 1 used to buy costs no extra scan.
-    # Monotonicity is FP-robust: within a binade av/2^e and (frac−1)·16
-    # are exact (power-of-two divisor), and floor∘log2 is monotone even
-    # if a binade boundary misrounds by an ulp (the misplaced value is
-    # still ordered against both neighbor buckets), so cumulative
-    # bucket counts in key order locate every rank correctly; interval
-    # endpoints come from the DATA (per-bucket min/max), never from
-    # bucket boundaries, so exactness is untouched. Driver rows are
-    # occupied buckets only: value magnitudes span b binades →
-    # ≤ 16·b + 3 rows per (column, group) — bounded by the same
-    # low-cardinality-grouping contract as the rest of the driver
-    # state (max_groups). NaN gets its own bucket above every finite
-    # key (and ±inf): Spark and DuckDB sort NaN last, and the binade
-    # arithmetic would otherwise hand it a finite key and break the
-    # monotone order the rank location relies on.
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_PCT_NO_FUSE"):
-        # A/B lever: a constant bucket key degenerates the fused pass
-        # to the pre-r13 plain (n, lo, hi) pass 1 — one bucket per
-        # (column, group), so state init falls back to the full
-        # [lo, hi] interval and round 1 runs as a separate scan
-        _b0 = F.lit(0).cast("long")
-    else:
-        _av = F.abs(F.col("v"))
-        _e = F.greatest(
-            F.lit(-64.0), F.least(F.lit(63.0), F.floor(F.log2(_av)))
-        )
-        _sub = F.greatest(
-            F.lit(0.0),
-            F.least(
-                F.lit(15.0),
-                F.floor((_av / F.pow(F.lit(2.0), _e) - F.lit(1.0)) * 16),
-            ),
-        )
-        _mag = (_e + F.lit(64.0)) * 16 + _sub
-        _b0 = (
-            # finite keys stop at _mag's max 127·16 + 15, plus 1
-            F.when(F.isnan("v"), F.lit(128 * 16 + 1.0))
-            .when(F.col("v") == 0, F.lit(0.0))
-            .when(F.col("v") > 0, _mag + 1)
-            .otherwise(-_mag - 1)
-            .cast("long")
-        )
+    # FUSED pass 1 + round 1: see _bucket_key. A (column, group) fills
+    # at most _BUCKET_KEYS rows, so more than that many per allowed
+    # (column, group) prove more than max_groups groups: the fetch
+    # stops there and the guard below raises on what it holds
     fused_rows = (
-        base.groupBy("cidx", "g", _b0.alias("b0"))
+        base.groupBy("cidx", "g", _bucket_key().alias("b0"))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.min("v").alias("lo"),
             F.max("v").alias("hi"),
         )
+        .limit(max_groups * len(cols) * _BUCKET_KEYS + 1)
         .collect()
     )
     buckets: dict[tuple, list] = {}
@@ -285,7 +289,7 @@ def binned_exact_percentiles_multi(
     n_groups = len({g for (_, g) in all_stats})
     if n_groups > max_groups:
         raise ValueError(
-            f"{n_groups} groups (> {max_groups}): binned refinement "
+            f"at least {n_groups} groups (> {max_groups}): binned refinement "
             "keeps per-GROUP search state on the driver, so it targets "
             "low-cardinality groupings (where per-group volume is the "
             "hazard). High-cardinality groupings fit the plain "

@@ -18,14 +18,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import scratch_root, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import dsum, dsum_sql
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 
 def _derived_dir(sf_dir: str, fmt: str) -> str:
     tag = hashlib.sha1(f"{os.path.abspath(sf_dir)}:{fmt}".encode()).hexdigest()[:12]
-    return os.path.join("/tmp", f"derived_src_{tag}")
+    return os.path.join(scratch_root(), f"derived_src_{tag}")
 
 
 def _ensure_nation_csv(spark: SparkSession, sf_dir: str) -> str:

@@ -16,7 +16,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema, normalize_event_ts, table
+from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema, normalize_event_ts, scratch_root, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import (
     dsum_sql,
     stable_round,
@@ -119,7 +119,8 @@ def stream_dir_for(path: str) -> str:
     # os.symlink() still raises FileExistsError on the next run
     path = os.path.abspath(path)
     d = os.path.join(
-        "/tmp", f"stream_src_{hashlib.sha1(path.encode()).hexdigest()[:12]}"
+        scratch_root(),
+        f"stream_src_{hashlib.sha1(path.encode()).hexdigest()[:12]}",
     )
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, os.path.basename(path))
@@ -281,7 +282,7 @@ def _louter_staged_dir(spark: SparkSession, path: str) -> str:
 
     path = os.path.abspath(path)
     d = os.path.join(
-        "/tmp",
+        scratch_root(),
         f"stream_louter_{hashlib.sha1(path.encode()).hexdigest()[:12]}",
     )
     if os.path.isdir(d):

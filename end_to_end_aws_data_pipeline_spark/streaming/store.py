@@ -6,10 +6,11 @@ reference's watermark gate + upsert contract (delta_load.py) carried
 into streaming state:
 
 - **stage**: the input table, staged once per (path, mtime) as
-  ordered chunk files under ``/tmp/stream_<tag>_<sha>``. Each build is
-  private (``.tmp.<pid>``), marked complete (``_STAGED``), then renamed
-  into place, so two processes staging the same source never see a
-  partial dir; the rename's loser adopts the winner's dir.
+  ordered chunk files under ``scratch_root()/stream_<tag>_<sha>``.
+  Each build is private (``.tmp.<pid>``), marked complete
+  (``_STAGED``), then renamed into place, so two processes staging the
+  same source never see a partial dir; the rename's loser adopts the
+  winner's dir.
 - **drain**: foreachBatch under ``availableNow`` with a checkpoint, one
   micro-batch per chunk, and a flagged deliberate stop for restart
   tests.
@@ -32,6 +33,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from end_to_end_aws_data_pipeline_spark.catalog import scratch_root
 
 # snapshot shards: hash(key) % BUCKETS, partitionBy'd on the bucket
 BUCKETS = 8
@@ -91,7 +94,7 @@ def stage(
     path = os.path.abspath(path)
     mt = int(os.path.getmtime(path))
     d = os.path.join(
-        "/tmp",
+        scratch_root(),
         f"stream_{tag}_"
         + hashlib.sha1(f"{path}:{mt}".encode()).hexdigest()[:12],
     )

@@ -144,6 +144,35 @@ def test_binned_exact_group_cardinality_guard(spark):
         binned_exact_percentiles(df, "g", "v", [0.5], max_groups=10)
 
 
+def test_binned_exact_pass1_fetch_capped(spark):
+    """The pass-1 fetch stops at max_groups · 4098 rows per column (a
+    (column, group) fills at most 4098 buckets); one value per group
+    makes each fetched row its own group, so the guard sees exactly
+    the capped count. A grouping at the limit still matches Spark."""
+    from pyspark.sql import functions as F
+
+    from end_to_end_aws_data_pipeline_spark.operators.percentiles import (
+        binned_exact_percentiles,
+    )
+
+    many = spark.range(0, 20_000).selectExpr(
+        "id as g", "cast(id as double) as v"
+    )
+    with pytest.raises(ValueError, match=r"^at least 8197 groups \(> 2\)"):
+        binned_exact_percentiles(many, "g", "v", [0.5], max_groups=2)
+
+    two = spark.range(0, 4000).selectExpr(
+        "id % 2 as g", "(id - 1500) * exp(id % 60) as v"
+    )
+    ps = [0.0, 0.1, 0.5, 0.9, 1.0]
+    got = binned_exact_percentiles(
+        two, "g", "v", ps, bins=8, collect_cap=16, max_groups=2
+    )
+    for r in two.groupBy("g").agg(F.percentile("v", ps).alias("p")).collect():
+        for p, w in zip(ps, r["p"]):
+            assert got[r["g"]][p] == w, (r["g"], p)
+
+
 def test_hll_replayable_accuracy(spark):
     """The md5-register HLL (oracle-verifiable twin of the native
     HLL++): estimates land within the expected 1.04/sqrt(256) ~ 6.5%

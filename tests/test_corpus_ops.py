@@ -627,7 +627,7 @@ def test_lpa_deep_stop_period2(spark):
     """The deep-R stop criterion is EXECUTABLE and correct: on the real
     bipartite purchase graph (a) the period-2 probe fires, (b) a plain
     changed==0 fixpoint NEVER fires before it (the measured orbit the
-    depth study documents — tools/lpa_depth.py), and (c) the runner's
+    depth study documents — SCALING.md), and (c) the runner's
     final vector equals a manual replay of the same rounds."""
     from pyspark.sql import functions as F
 

@@ -212,10 +212,10 @@ def test_mis_independence_and_domination(spark):
         q_graph_mis,
     )
 
-    mis_parts, out_parts, und = mis_rounds(spark, SF)
-    mis = {r["node"] for df in mis_parts for r in df.collect()}
-    out = {r["node"] for df in out_parts for r in df.collect()}
-    undec = {r["node"] for r in und.collect()}
+    state = mis_rounds(spark, SF).collect()
+    mis = {r["node"] for r in state if r["status"] == "mis"}
+    out = {r["node"] for r in state if r["status"] == "out"}
+    undec = {r["node"] for r in state if r["status"] == "undecided"}
     assert mis, "no MIS winners at sf0.001"
     assert not (mis & out) and not (mis & undec) and not (out & undec)
 

@@ -87,6 +87,7 @@ class TestFusedPercentileBucketing:
         """Fused round-0 init and the plain pass-1 path must produce
         bit-identical percentiles (the fusion is a search-strategy
         change only)."""
+        from end_to_end_aws_data_pipeline_spark.operators import percentiles
         from end_to_end_aws_data_pipeline_spark.operators.percentiles import (
             binned_exact_percentiles_multi,
         )
@@ -97,11 +98,13 @@ class TestFusedPercentileBucketing:
         ] + [("b", 2.0**-40, -1e18)] * 50 + [("b", 0.0, 3.5)] * 50
         df = spark.createDataFrame(rows, "g string, x double, y double")
         specs = {"x": [0.25, 0.5, 0.9], "y": [0.5]}
-        monkeypatch.delenv("SPARK_GRAFT_PCT_NO_FUSE", raising=False)
         fused, fstats = binned_exact_percentiles_multi(
             df, "g", specs, collect_cap=16
         )
-        monkeypatch.setenv("SPARK_GRAFT_PCT_NO_FUSE", "1")
+        # a constant bucket key is the plain pass 1
+        monkeypatch.setattr(
+            percentiles, "_bucket_key", lambda: F.lit(0).cast("long")
+        )
         plain, pstats = binned_exact_percentiles_multi(
             df, "g", specs, collect_cap=16
         )

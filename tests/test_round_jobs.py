@@ -1,34 +1,58 @@
-"""Spark jobs per round of the run-to-fixpoint operators.
+"""Spark jobs per round of the iterative graph operators.
 
-Each round runs a fixed set of driver actions: the count that also
-materializes the round's lazy checkpoints, plus the loop's probe where
-it has one. Spark counts every adaptive-execution shuffle-map stage and
-broadcast build inside an action as its own job, so a round reads as
-several jobs, not one. These tests pin what matters for a job budget:
-the job count is exactly ``setup + J * rounds`` — a fixed setup cost
-plus the same J jobs every round, never growing with depth — and J
-stays within the per-operator ceiling below. Jobs are counted per call
-through a Spark job group."""
+Each round runs a fixed set of driver actions: for the run-to-fixpoint
+loops, the count that also materializes the round's lazy checkpoints
+plus the loop's probe where it has one; for the fixed-round loops (MIS,
+HITS, k-hop), the round's one eager checkpoint. Spark counts every
+adaptive-execution shuffle-map stage and broadcast build inside an
+action as its own job, so a round reads as several jobs, not one.
+These tests pin what matters for a job budget: the job count is
+exactly ``setup + J * rounds`` — a fixed setup cost plus the same J
+jobs every round, never growing with depth — and J stays within the
+per-operator ceiling below. Jobs are counted per call through a Spark
+job group."""
 
 from __future__ import annotations
 
 import itertools
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from end_to_end_aws_data_pipeline_spark.cache import release_all
 from end_to_end_aws_data_pipeline_spark.operators.dedup import (
     connected_components,
     connected_components_star,
 )
 from end_to_end_aws_data_pipeline_spark.operators.graph import (
+    hits_scores,
     kcore_peel_deep,
+    mis_rounds,
+    q_graph_khop,
     scc_labels,
 )
 from tests.conftest import SF_SMOKE
 
-# ceilings on J: measured jobs per round (4 local cores, 4 shuffle
-# partitions)
-_BUDGET = {"cc": 9, "star": 14, "kcore_deep": 8, "scc_color": 6}
+# ceilings on J, measured jobs per round, and on k-hop's build jobs
+# (4 local cores, 4 shuffle partitions)
+_BUDGET = {
+    "cc": 9,
+    "star": 14,
+    "kcore_deep": 8,
+    "scc_color": 6,
+    "mis": 12,
+    "hits": 6,
+    "khop_build": 19,
+}
+
+# purchase-graph node ids (customer c is node 2c, supplier s is node
+# 2s + 1) of a path on which Luby's md5 priorities leave some node
+# undecided at the start of each of four rounds
+_SLOW_MIS_PATH = [
+    128176, 153337, 17650, 113365, 156778, 184899,
+    79428, 104169, 168386, 20879, 122450,
+]
 
 _GROUPS = itertools.count()
 
@@ -178,3 +202,68 @@ def test_scc_color_phase_jobs_per_round(spark):
         }
         samples.append((n + 1, jobs))
     assert _jobs_per_round(samples) <= _BUDGET["scc_color"]
+
+
+def _purchase_path(tmp_path, path: list[int]) -> str:
+    """An sf dir whose purchase graph is ``path``: one order per edge."""
+    pairs = [
+        (a // 2, b // 2) if a % 2 == 0 else (b // 2, a // 2)
+        for a, b in zip(path, path[1:])
+    ]
+    keys = list(range(len(pairs)))
+    pq.write_table(
+        pa.table({"o_orderkey": keys, "o_custkey": [c for c, _ in pairs]}),
+        tmp_path / "orders.parquet",
+    )
+    pq.write_table(
+        pa.table({"l_orderkey": keys, "l_suppkey": [s for _, s in pairs]}),
+        tmp_path / "lineitem.parquet",
+    )
+    return str(tmp_path)
+
+
+def _warm_samples(spark, fn, rs) -> list[tuple[int, int]]:
+    """``[(r, jobs of fn(r)), ...]`` after one warm-up call, each call
+    from the same cache state."""
+    fn(rs[0])  # fills the table-schema cache
+    samples = []
+    for r in rs:
+        release_all()
+        samples.append((r, _jobs(spark, lambda r=r: fn(r))))
+    return samples
+
+
+def test_mis_rounds_jobs_per_round(spark, tmp_path):
+    sf = _purchase_path(tmp_path, _SLOW_MIS_PATH)
+    state = mis_rounds(spark, sf, rounds=4).collect()
+    # round 4 decides a node, so each sampled round starts undecided
+    assert max(r["round"] for r in state) == 4
+    samples = _warm_samples(
+        spark, lambda r: mis_rounds(spark, sf, rounds=r), [1, 2, 3]
+    )
+    assert _jobs_per_round(samples) <= _BUDGET["mis"]
+
+
+def test_mis_rounds_stop_once_decided(spark):
+    """Luby decides every sf0.001 node in two rounds; later rounds take
+    no job (adaptive execution's empty-relation pruning made their job
+    count vary between runs)."""
+    samples = _warm_samples(
+        spark, lambda r: mis_rounds(spark, SF_SMOKE, rounds=r), [2, 3, 4]
+    )
+    assert len({j for _, j in samples}) == 1, samples
+
+
+def test_hits_scores_jobs_per_iteration(spark):
+    samples = _warm_samples(
+        spark, lambda r: hits_scores(spark, SF_SMOKE, iters=r), [1, 2, 3]
+    )
+    assert _jobs_per_round(samples) <= _BUDGET["hits"]
+
+
+def test_khop_build_jobs_repeat(spark):
+    samples = _warm_samples(
+        spark, lambda _: q_graph_khop(spark, SF_SMOKE), [0, 1, 2]
+    )
+    jobs = {j for _, j in samples}
+    assert len(jobs) == 1 and jobs.pop() <= _BUDGET["khop_build"], samples

@@ -1,6 +1,6 @@
 """The shared streaming store (streaming/store.py): staging is atomic
 and idempotent for every stager, and per-invocation run dirs of the
-summary streams do not leak into /tmp."""
+summary streams do not leak into the scratch root."""
 
 from __future__ import annotations
 
@@ -76,6 +76,23 @@ def test_stager_atomic_and_idempotent(events_copy, stager):
     assert os.path.exists(os.path.join(d, "_STAGED"))
     assert _chunks(d) == chunks
     assert not os.path.exists(tmp)
+
+
+def test_scratch_root_follows_tempdir(events_copy, monkeypatch, tmp_path):
+    """Staged stream inputs and derived source files land under the
+    process temp dir, wherever it points."""
+    import tempfile
+
+    from end_to_end_aws_data_pipeline_spark.operators.sources import (
+        _derived_dir,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src, staged = events_copy
+    d = staged_time_dir(src)
+    staged.append(d)
+    assert os.path.dirname(d) == str(tmp_path)
+    assert os.path.dirname(_derived_dir(SF_SMOKE, "csv")) == str(tmp_path)
 
 
 def test_stage_loser_adopts_winner(events_copy):

@@ -9,7 +9,7 @@ Two modes:
       q_stream_pattern_alternation [n_pairs]
 
   # compare two VARIANTS of one query via an env flag the code reads
-  # per call (e.g. SPARK_GRAFT_NO_JOB_OVERLAP, SPARK_GRAFT_PCT_NO_FUSE):
+  # per call (e.g. SPARK_GRAFT_NO_JOB_OVERLAP, SPARK_GRAFT_EAGER_CKPT):
   python tools/ab_pairs.py --flag SPARK_GRAFT_NO_JOB_OVERLAP \
       q_ann_ivf_trained [n_pairs]
   (A = flag SET (old behavior), B = flag unset (new behavior))

@@ -88,8 +88,9 @@ SHOWCASE = {
         "final top-k plan reads ExistingRDD leaves ONLY — the "
         "alternating contribution joins executed eagerly inside the "
         "per-half-step localCheckpoints (lineage truncated; six "
-        "nested crossJoin plans made ANALYSIS cost 20 s warm on 600 "
-        "rows before truncation)",
+        "nested half-step plans made ANALYSIS cost 20 s warm on 600 "
+        "rows before truncation); the renormalization scalar is "
+        "observed by each checkpoint's action and applied as a literal",
         "no corpus re-scan, no cartesian; the vector broadcast / "
         "dual-partitioned regimes live inside the checkpointed "
         "half-steps (size-aware, the HyperANF pick)",
@@ -137,10 +138,12 @@ SHOWCASE = {
     ],
     "q_graph_mis": [
         "per round: ONE edge-sized join against the undecided-"
-        "priority table + a node-sized partial_min aggregate + two "
-        "anti-joins; priorities are md5 expressions, no UDF",
-        "round tables are ExistingRDD leaves (localCheckpoint) — "
-        "fixed 4-round depth, flat plans",
+        "priority table + a node-sized partial_min aggregate + one "
+        "edge-sized semi-join for the winners' neighbors; priorities "
+        "are md5 expressions, no UDF",
+        "the (node, status, round) state is an ExistingRDD leaf (one "
+        "localCheckpoint per round, flat plans); the per-(status, "
+        "round) counts are one aggregate over it",
     ],
     "q_embed_kcenter_seed": [
         "each round is a NARROW map (64-multiply zip_with fold on "
