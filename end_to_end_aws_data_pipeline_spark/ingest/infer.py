@@ -64,6 +64,36 @@ def infer_schema_from_csv_head(csv_text_head: str) -> T.StructType:
     return infer_schema_first_row(header, first)
 
 
+def _driver_head(spark: SparkSession, path: str) -> str | None:
+    """The first two lines of the file at ``path`` (header and first
+    row), joined by a newline, read on the driver through the Hadoop
+    ``FileSystem`` (no Spark job). Lines are split and a compressed file
+    (``.gz``, ``.bz2``, ..., by extension) is decoded as Spark's text
+    source does it: the same ``LineReader`` (LF, CRLF or CR) over the
+    codec factory's stream, and a UTF-8 BOM at the start of the file is
+    dropped, as Hadoop's ``LineRecordReader`` drops it. ``None`` when
+    ``path`` is not one file (a directory or a glob)."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fs = hpath.getFileSystem(conf)
+    if not fs.isFile(hpath):
+        return None
+    codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(hpath)
+    stream = fs.open(hpath)
+    lines: list[str] = []
+    try:
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        reader = jvm.org.apache.hadoop.util.LineReader(stream)
+        text = jvm.org.apache.hadoop.io.Text()
+        while len(lines) < 2 and reader.readLine(text) > 0:
+            lines.append(text.toString())
+    finally:
+        stream.close()
+    return "\n".join(lines).removeprefix("\ufeff")
+
+
 def read_csv_with_inferred_schema(
     spark: SparkSession, path: str, policy: str = "native"
 ) -> DataFrame:
@@ -72,15 +102,17 @@ def read_csv_with_inferred_schema(
 
     policy="native": Spark all-row sampling inference (superset lattice).
     policy="reference": first-row-only inference, for oracle-exact parity
-    with the legacy MySQL DDL. Only the file head crosses the driver.
+    with the legacy MySQL DDL. Only the file head crosses the driver,
+    read there without a Spark job (a directory or glob reads its head
+    through the text datasource instead).
     """
     if policy == "reference":
-        # read just the head through the datasource (limit(1) prunes IO)
-        head = spark.read.text(path).limit(2).collect()
-        schema = infer_schema_from_csv_head("\n".join(r.value for r in head))
+        head = _driver_head(spark, path)
+        if head is None:
+            head = "\n".join(r.value for r in spark.read.text(path).limit(2).collect())
         return (
             spark.read.option("header", True)
-            .schema(schema)
+            .schema(infer_schema_from_csv_head(head))
             .option("mode", "PERMISSIVE")
             .csv(path)
         )

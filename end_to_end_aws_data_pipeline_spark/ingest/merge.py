@@ -10,8 +10,16 @@ Two forms:
 - ``merge_into_parquet``: applies ``upsert`` against a parquet table on
   disk: a whole-table read-modify-write swapped into place by
   ``replace_dir``, or, given a partition column, a rewrite of only the
-  partitions the delivery touches. The returned row count comes from
-  the parquet footers, not from a Spark job.
+  partitions the delivery touches. The base table's schema and the
+  returned row count come from the parquet footers, read on the driver,
+  not from Spark jobs: a merge launches only the jobs of its own
+  shuffle and write (plus, partition-scoped, the lookup of the touched
+  partitions).
+
+Dedup is the merge's: the key window keeps one row per key, so exact
+duplicate rows in a delivery collapse there, and a first write (no
+table yet) drops them with ``dropDuplicates()``. Distinct rows that
+share a key are not detected: the window keeps one of them.
 
 The reference never declares a primary key (SURVEY.md §1.2), so its
 "upsert" silently degrades to append. We make the key explicit and
@@ -20,20 +28,29 @@ required — the honest version of the same contract.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from typing import Callable
 
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# the key under which Spark's parquet writer stores the row schema (as
+# StructType JSON) in every file footer; its own schema inference reads it
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def upsert(base: DataFrame, updates: DataFrame, keys: list[str]) -> DataFrame:
     """Insert-or-replace by key: updates win over base on key collision.
 
-    updates must be unique per key (enforced upstream); base may hold at
-    most one row per key (a table invariant this function preserves).
+    base may hold at most one row per key (a table invariant this
+    function preserves). The window keeps one row per key, so exact
+    duplicate rows in ``updates`` collapse into one; distinct update
+    rows sharing a key are not detected — one of them is kept.
     Implementation: tag + union + one window over the key taking the
     highest-precedence row — a single hash shuffle, no join needed.
 
@@ -69,8 +86,8 @@ def merge_into_parquet(
     partition_by: str | None = None,
 ) -> int:
     """Upsert ``updates`` into the parquet table at ``target_dir``;
-    creates it if absent. Returns the resulting row count, read from the
-    parquet footers (no Spark job).
+    creates it if absent, without exact duplicate rows. Returns the
+    resulting row count, read from the parquet footers (no Spark job).
 
     With ``partition_by`` set (which must be one of ``keys``' hash
     inputs — every key lives in exactly one partition), the merge is
@@ -83,14 +100,16 @@ def merge_into_parquet(
     if partition_by is not None and os.path.exists(target_dir):
         _merge_partition_scoped(spark, target_dir, updates, keys, partition_by)
     elif partition_by is not None:
-        updates.write.mode("overwrite").partitionBy(partition_by).parquet(target_dir)
+        updates.dropDuplicates().write.mode("overwrite").partitionBy(partition_by).parquet(
+            target_dir
+        )
     else:
         # never overwrite the directory still being scanned by the merge
         # plan: write the merged table aside and swap it in
         merged = (
-            upsert(spark.read.parquet(target_dir), updates, keys)
+            upsert(read_table(spark, target_dir), updates, keys)
             if os.path.exists(target_dir)
-            else updates
+            else updates.dropDuplicates()
         )
         replace_dir(target_dir, lambda tmp: merged.write.mode("overwrite").parquet(tmp))
     return footer_row_count(target_dir)
@@ -141,16 +160,52 @@ def _listed(name: str) -> bool:
     return not name.startswith(".") and (not name.startswith("_") or "=" in name)
 
 
-def footer_row_count(table_dir: str) -> int:
-    """Exact row count of the parquet table at ``table_dir`` from its
-    file footers (metadata only, no data pages, no Spark job). Lists the
-    same files ``spark.read.parquet(table_dir)`` reads, partition
-    directories included, so it equals that DataFrame's ``count()``."""
+def _table_files(table_dir: str) -> list[str]:
+    """The files ``spark.read.parquet(table_dir)`` reads, partition
+    directories included."""
     files = []
     for root, dirs, names in os.walk(table_dir):
         dirs[:] = [d for d in dirs if _listed(d)]
         files += [os.path.join(root, n) for n in names if _listed(n)]
+    return files
+
+
+def footer_row_count(table_dir: str) -> int:
+    """Exact row count of the parquet table at ``table_dir`` from its
+    file footers (metadata only, no data pages, no Spark job). Reads the
+    same files as ``spark.read.parquet(table_dir)``, so it equals that
+    DataFrame's ``count()``."""
+    files = _table_files(table_dir)
     return ds.dataset(files, format="parquet").count_rows() if files else 0
+
+
+def footer_schema(table_dir: str) -> T.StructType | None:
+    """The data schema Spark records in the footers of the table's files
+    (``_SPARK_SCHEMA_KEY``), read on the driver with pyarrow — the schema
+    Spark's own footer inference returns. Partition columns are not in
+    it (they live in the paths). ``None`` when there is no file, a file
+    lacks the key, or the files disagree: Spark's inference then reads
+    one file it picks by listing order, so only it can say."""
+    found = set()
+    for f in _table_files(table_dir):
+        meta = pq.read_metadata(f).metadata or {}
+        if _SPARK_SCHEMA_KEY not in meta:
+            return None
+        found.add(meta[_SPARK_SCHEMA_KEY])
+    if len(found) != 1:
+        return None
+    return T.StructType.fromJson(json.loads(found.pop()))
+
+
+def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    """``spark.read.parquet(table_dir)`` without its footer-inference job
+    when the footers carry Spark's schema. Given that data schema, Spark
+    still discovers partition columns from the paths, with the types it
+    infers for them, and reads every field as nullable, so the result's
+    schema is the one plain inference gives."""
+    schema = footer_schema(table_dir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(table_dir)
 
 
 def _merge_partition_scoped(
@@ -178,7 +233,7 @@ def _merge_partition_scoped(
             f"{partition_by!r}; partition keys must be non-null for a "
             f"partition-scoped merge"
         )
-    base = spark.read.parquet(target_dir)
+    base = read_table(spark, target_dir)
     base_affected = base.filter(F.col(partition_by).isin(affected))
     merged = upsert(base_affected, updates, keys)
     (

@@ -6,22 +6,29 @@ File layout contract (ref second_lambda_function.py:29-31, S3 listing
 1737920487152.jpeg): ``<ingest_root>/<YYYYMMDD_HHMMSS>/<Table>.csv`` —
 the folder name is the version timestamp of the delivery.
 
-Stage order per file matches the reference exactly: gate → schema
-(CREATE TABLE IF NOT EXISTS ≈ first write wins) → audit → clean →
-upsert → watermark advance → report. A failure before the advance
-leaves the watermark untouched → the file replays on the next run and
-the keyed upsert absorbs the replay (idempotent).
+Stage order per file: gate (driver) → schema from the CSV head
+(driver; CREATE TABLE IF NOT EXISTS ≈ first write wins) → upsert of
+the rows without nulls, with the null audit's counts observed on the
+merge's own scan of the file and exact duplicate rows collapsed by the
+merge → audit report (the observed counts, plus a ≤20-row sample job
+only when a row holds a null) → watermark advance (driver) → report.
+The reference audits and cleans before it upserts; here those passes
+ride on the merge, so a delivery launches only the merge's jobs and at
+most one sample job. A failure before the advance leaves the watermark
+untouched → the file replays on the next run and the keyed upsert
+absorbs the replay (idempotent).
 """
 
 from __future__ import annotations
 
 import os
 import re
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from end_to_end_aws_data_pipeline_spark.ingest.clean import NullAudit, clean, null_audit
+from end_to_end_aws_data_pipeline_spark.ingest.clean import NullAudit, null_audit, observe_audit
 from end_to_end_aws_data_pipeline_spark.ingest.infer import read_csv_with_inferred_schema
 from end_to_end_aws_data_pipeline_spark.ingest.merge import merge_into_parquet
 from end_to_end_aws_data_pipeline_spark.ingest.watermark import WatermarkStore
@@ -89,20 +96,22 @@ class IngestPipeline:
         df = read_csv_with_inferred_schema(self.spark, path, policy=self.schema_policy)
         if not df.columns:
             return IngestResult(table_name, folder_ts, "skipped_empty", None, 0)
-        audit = null_audit(df)
-        cleaned = clean(df)
+        # one observation per load, under a name no other load shares
+        name = f"null_audit:{table_name}:{folder_ts}:{uuid.uuid4().hex}"
+        observed, obs = observe_audit(df, name)
         # key policy: explicit per-table keys if configured, else all
         # columns (exact-row identity) — the honest version of the
         # reference's keyless ON DUPLICATE KEY UPDATE (which degraded to
         # append, SURVEY.md §2.A row 8)
-        keys = self.keys_by_table.get(table_name, list(cleaned.columns))
+        keys = self.keys_by_table.get(table_name, list(df.columns))
         n = merge_into_parquet(
             self.spark,
             self.table_dir(table_name),
-            cleaned,
+            observed.na.drop("any"),
             keys,
             partition_by=self.partition_by_table.get(table_name),
         )
+        audit = null_audit(df, observation=obs)
         self.watermarks.advance(table_name, folder_ts)
         # notification parity (ref delta_load.py:77-84, 267-286): one
         # bounded null report + one success event per load

@@ -4,8 +4,9 @@ SURVEY.md §3) as one Structured Streaming app.
 A checkpointed file source replaces S3-event + SQS + DynamoDB gate:
 Spark's source log records each processed file exactly once (subsumes
 the watermark gate and the SQS dedup id, SURVEY.md §2.A rows 11, 13);
-``foreachBatch`` applies the same clean → keyed-upsert body as the
-batch pipeline, so replays after failure are idempotent — end-to-end
+``foreachBatch`` applies the same body as the batch pipeline (the rows
+without nulls go to the keyed upsert, whose key window collapses exact
+duplicate rows), so replays after failure are idempotent — end-to-end
 exactly-once effect without any of the reference's seven services.
 """
 
@@ -16,7 +17,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.ingest.clean import clean
 from end_to_end_aws_data_pipeline_spark.ingest.merge import merge_into_parquet
 
 
@@ -42,15 +42,15 @@ class StreamingIngest:
         self.checkpoint = os.path.join(warehouse_dir, "_checkpoints", table_name)
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        # same body as the batch pipeline (ingest/pipeline.py): clean →
-        # keyed upsert; idempotent, so a replayed epoch is harmless
+        # same body as the batch pipeline (ingest/pipeline.py): rows
+        # without nulls → keyed upsert, which owns the dedup; idempotent,
+        # so a replayed epoch is harmless
         if batch_df.isEmpty():
             return
-        cleaned = clean(batch_df.drop("__source_file"))
         merge_into_parquet(
             self.spark,
             os.path.join(self.warehouse_dir, self.table_name),
-            cleaned,
+            batch_df.drop("__source_file").na.drop("any"),
             self.keys,
         )
 

@@ -1,6 +1,6 @@
 """The ingest control plane launches no Spark jobs: watermarks are read
 and written on the driver, and a merge's row count comes from parquet
-footers. Pins the per-delivery job budget, the watermark store's
+footers. Pins the exact per-delivery job count, the watermark store's
 format compatibility and crash safety, and the footer count."""
 
 from __future__ import annotations
@@ -43,10 +43,20 @@ def _write(tmp_path, folder, text):
     return str(p)
 
 
+# Spark jobs of one delivery: (first write, steady state with a null
+# row, steady state without one). A first write and a whole-table merge
+# run 2 (the shuffle before the write, the write); a partition-scoped
+# merge 4 (2 more to look up the partitions it touches); a null row
+# adds the audit's sample job.
+_DELIVERY_JOBS = {None: (2, 3, 2), "shard": (2, 5, 4)}
+
+
 @pytest.mark.parametrize("partition_by", [None, "shard"])
 def test_delivery_job_budget(spark, tmp_path, partition_by):
-    """A steady-state delivery (table and watermark exist) launches at
-    most 10 jobs; a replay the gate skips launches none."""
+    """A delivery launches exactly its merge's jobs, plus one sample job
+    when a row holds a null: the CSV head, the base table's schema, the
+    null counts, the watermark and the row count launch none. A replay
+    the gate skips launches none."""
     pipe = IngestPipeline(
         spark,
         str(tmp_path / "wh"),
@@ -54,17 +64,28 @@ def test_delivery_job_budget(spark, tmp_path, partition_by):
         schema_policy="reference",
         partition_by_table={"T": partition_by} if partition_by else None,
     )
+    first, with_null, without_null = _DELIVERY_JOBS[partition_by]
     p1 = _write(tmp_path, "20250101_000001", "k,v,shard\n1,a,1\n2,b,1\n3,c,2\n")
     p2 = _write(tmp_path, "20250101_000002", "k,v,shard\n1,A,1\n4,d,2\n5,,3\n")
-    assert pipe.ingest_file(p1).status == "loaded"
+    # no null; an exact duplicate row, which the merge collapses
+    p3 = _write(tmp_path, "20250101_000003", "k,v,shard\n1,B,1\n6,e,2\n6,e,2\n")
+
+    res, n_jobs = _jobs(spark, lambda: pipe.ingest_file(p1))
+    assert (res.status, res.n_rows_written, n_jobs) == ("loaded", 3, first)
 
     res, n_jobs = _jobs(spark, lambda: pipe.ingest_file(p2))
-    assert (res.status, res.n_rows_written) == ("loaded", 4)
-    assert n_jobs <= 10, f"one delivery launched {n_jobs} Spark jobs"
+    assert (res.status, res.n_rows_written, res.audit.n_bad_rows) == ("loaded", 4, 1)
+    assert n_jobs == with_null, f"a delivery with a null row launched {n_jobs} Spark jobs"
 
-    res, n_jobs = _jobs(spark, lambda: pipe.ingest_file(p2))
+    res, n_jobs = _jobs(spark, lambda: pipe.ingest_file(p3))
+    assert (res.status, res.n_rows_written, res.audit.n_bad_rows) == ("loaded", 5, 0)
+    assert n_jobs == without_null, f"a delivery without nulls launched {n_jobs} Spark jobs"
+
+    res, n_jobs = _jobs(spark, lambda: pipe.ingest_file(p3))
     assert res.status == "skipped_not_newer"
     assert n_jobs == 0, f"a gated replay launched {n_jobs} Spark jobs"
+    rows = {(r.k, r.v) for r in spark.read.parquet(pipe.table_dir("T")).collect()}
+    assert rows == {(1, "B"), (2, "b"), (3, "c"), (4, "d"), (6, "e")}
 
 
 def test_watermark_store_reads_spark_written_state(spark, tmp_path):

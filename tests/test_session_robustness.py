@@ -30,4 +30,4 @@ def test_observed_clean_counts_during_load(spark):
     cleaned, obs = observed_clean(df)
     out = sorted(map(tuple, cleaned.collect()))  # the action drives the observe
     assert out == [(1, "a")]
-    assert obs.get == {"n_rows": 4, "n_bad_rows": 2}
+    assert obs.get == {"n_rows": 4, "n_bad_rows": 2, "null:k": 1, "null:v": 1}
