@@ -143,13 +143,3 @@ def stable_round(col: Column | str, out_scale: int = 6) -> Column:
 def stable_round_sql(expr: str, out_scale: int = 6) -> str:
     p = 10**out_scale
     return f"floor(({expr}) * {p} + 0.5) / {p}"
-
-
-def lsum(col: Column | str) -> Column:
-    """Integer sum as BIGINT (DuckDB widens to HUGEINT; align on int64)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c).cast("long")
-
-
-def lsum_sql(expr: str) -> str:
-    return f"CAST(sum({expr}) AS BIGINT)"

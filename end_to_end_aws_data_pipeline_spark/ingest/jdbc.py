@@ -1,4 +1,4 @@
-"""JDBC sinks: append (native) and batched upsert (custom).
+"""JDBC sinks: batched upsert (custom) and its streaming form.
 
 The reference upserts row-by-row — one ``INSERT ... ON DUPLICATE KEY
 UPDATE`` + one commit per row over the network (ref delta_load.py:
@@ -75,12 +75,6 @@ def upsert_sql(
             f"ON CONFLICT ({keylist}) DO UPDATE SET {updates}"
         )
     raise ValueError(f"unsupported dialect: {dialect}")
-
-
-def write_jdbc_append(df: DataFrame, url: str, table: str, properties: dict[str, str]) -> None:
-    """Native JDBC append — parity with the effective behavior of the
-    reference's keyless upsert (degrades to append, SURVEY.md §2.A row 8)."""
-    df.write.jdbc(url=url, table=table, mode="append", properties=properties)
 
 
 def write_jdbc_upsert(

@@ -15,11 +15,10 @@ Scale notes: each iteration is one equi-join of the rank vector against
 the edge list plus one aggregate — the textbook distributed PageRank
 step (edges partition by src; ranks co-partition; AQE handles the skew
 of popular nodes). Iterations are persisted so execution does not
-recompute, and `pagerank_ranks(..., checkpoint_every=3)` additionally
-truncates the LOGICAL plan every 3 rounds (persist alone does not stop
-the analyzer re-walking the whole nested plan each round) — the
-measured depth-10 wall/plan-size numbers live in SCALING.md, and
-checkpoint-placement invariance is property-tested.
+recompute. Persist alone does not stop the analyzer re-walking the
+whole nested plan each round, so deeper loops truncate lineage with a
+per-round localCheckpoint; the measured depth-10 wall/plan-size
+numbers and the run-to-convergence stop rounds live in SCALING.md.
 """
 
 from __future__ import annotations
@@ -34,7 +33,6 @@ from end_to_end_aws_data_pipeline_spark.operators.iterate import (
     fixpoint,
     fused_ckpt,
     min_label_step,
-    run_until_periodic,
 )
 from end_to_end_aws_data_pipeline_spark.registry import register
 
@@ -178,136 +176,21 @@ def pagerank_ranks(
     spark: SparkSession,
     sf_dir: str,
     iters: int = _PR_ITERS,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """The iterative core: integer PageRank rank vector after ``iters``
     rounds over the undirected customer–supplier purchase graph.
 
-    ``checkpoint_every=k`` truncates lineage every k rounds via
-    localCheckpoint(eager) — without it, each round's plan nests the
-    previous round's, and past ~10 rounds analysis/optimization time
-    (not execution) starts to dominate as the logical plan grows
-    superlinearly.  persist() alone does NOT cap plan growth: caching
-    short-circuits execution but the analyzer still walks the full
-    nested plan each round.  A production run on a real cluster would
-    use reliable checkpoint() to survive executor loss; localCheckpoint
-    gives the identical plan-truncation behavior without needing a
-    checkpoint directory.  Checkpoint placement never changes the
-    arithmetic — equality with the uncheckpointed run is
-    property-tested, and the depth-10 wall/plan-size measurements live
-    in SCALING.md."""
+    Each round is persisted, so execution never recomputes an earlier
+    round; the plan still nests every round, which is cheap at the
+    query's 3 rounds. Past ~10 rounds analysis time (not execution)
+    dominates as the logical plan grows — the depth-10 wall/plan-size
+    measurements and the run-to-convergence stop rounds live in
+    SCALING.md."""
     edges_d, nodes = _pr_graph(spark, sf_dir)
     ranks = nodes.select("node", F.lit(_PR_R0).cast("long").alias("rank"))
-    for i in range(1, iters + 1):
-        ranks = _pr_round(edges_d, ranks, F.lit(_PR_TELEPORT))
-        if checkpoint_every and i % checkpoint_every == 0 and i < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-        else:
-            ranks = persisted(ranks)
+    for _ in range(iters):
+        ranks = persisted(_pr_round(edges_d, ranks, F.lit(_PR_TELEPORT)))
     return ranks
-
-
-def pagerank_ranks_deep(
-    spark: SparkSession,
-    sf_dir: str,
-    max_rounds: int = 150,
-    checkpoint_every: int = 3,
-    check_every: int = 2,
-    period: int = 2,
-    r0: int = _PR_R0,
-    rounds_per_step: int = 2,
-) -> tuple[DataFrame, int, bool]:
-    """Run-to-convergence PageRank with an EXECUTABLE residual stop
-    (operators/iterate.run_until_periodic). Integer arithmetic makes
-    the rank vector an element of a finite lattice, so exact
-    state-repeat detection replaces float PageRank's residual
-    threshold — but the MEASURED stop criterion on this graph is
-    ``period=2``, not 1: the purchase graph is bipartite
-    (customer/supplier), and once the damped residual shrinks to the
-    integer quantum — after ≈ ln(r0)/ln(1/0.85) rounds (≈127 at
-    r0=1e9; driver-exact replay measures the orbit entered at t=113
-    on sf0.001) — the truncation error alternates sides of the
-    bipartition forever, a period-2 rank orbit. This is the LPA
-    label-orbit phenomenon (SCALING.md, LPA convergence study) at the
-    rank level: ranks(t) == ranks(t-1) provably never fires, while
-    ranks(t) == ranks(t-2) detects the orbit as the fixpoint. The
-    returned vector is one member of the final orbit (amplitude: the
-    integer quantum, i.e. ±1 in the last digit of a 1e9-scaled rank).
-
-    The period-2 probe detects BOTH terminal behaviors: at coarse
-    precision the quantum is large enough that the map lands on an
-    EXACT fixpoint (measured r0=20: ranks(5)==ranks(4), a fixpoint is
-    trivially period-2-stable), while at r0=1e9 the terminal state is
-    the genuine 2-orbit (60 rounds of period-1 probing never fire;
-    the runner stops at round 116). ``r0`` scales precision AND
-    convergence depth together (teleport is derived as 0.15·r0), so
-    tests run r0=20 to converge in ~6 rounds instead of ~116.
-    Returns (ranks, rounds_run, converged).
-    The probe is one node-sized co-partitioned join every
-    ``check_every`` rounds; lineage truncates on the measured
-    checkpoint-every-3 policy (SCALING.md: uncheckpointed depth-20
-    OOMs the driver in explainString before any task runs). Measured
-    stop rounds per scale live in SCALING.md §round-9.
-
-    ``rounds_per_step=2`` (the default, round-10 A/B): each runner
-    step nests TWO contribution joins into one plan, halving the
-    eager checkpoint actions and per-step scheduler round-trips while
-    the probe cadence is rescaled to the identical every-2-rounds
-    parity — measured 59.7/66.6 s -> 38.5/48.9 s (~30%) for the full
-    122-round sf0.01 convergence run with a bit-identical final
-    vector and the same detected stop round. rounds_per_step must
-    divide both ``period`` and ``check_every`` so detection semantics
-    cannot drift; returned rounds are real rank updates, not steps."""
-    teleport = F.lit((15 * r0) // 100)
-    edges_d, nodes = _pr_graph(spark, sf_dir)
-    ranks0 = nodes.select("node", F.lit(r0).cast("long").alias("rank"))
-    rounds = {"i": 0}
-
-    def step(ranks: DataFrame) -> DataFrame:
-        rounds["i"] += 1
-        nxt = ranks
-        # rounds_per_step > 1 nests that many contribution joins into
-        # ONE step plan (no persist between them) — fewer probe/
-        # checkpoint actions per round of real work; the probe cadence
-        # below is rescaled so detection parity is unchanged
-        for _ in range(rounds_per_step):
-            nxt = _pr_round(edges_d, nxt, teleport)
-        # checkpoint cadence is denominated in STEPS: with the default
-        # rounds_per_step=2 the effective truncation interval is
-        # checkpoint_every x rounds_per_step = 6 ROUNDS of 2-deep
-        # nested plans between eager checkpoints — a deliberate trade
-        # (fewer eager actions is where the ~30% batching win comes
-        # from); lineage depth stays bounded and SCALING.md carries
-        # the measurement
-        if rounds["i"] % checkpoint_every == 0:
-            return nxt.localCheckpoint(eager=True)
-        return persisted(nxt)
-
-    # translate round-denominated cadences into step units; the orbit
-    # probe must still compare states exactly `period` ROUNDS apart, so
-    # rounds_per_step must divide period (2 rounds/step probes the
-    # period-2 orbit with a period-1 step comparison at equal parity)
-    # max_rounds included: floor division would otherwise SILENTLY
-    # shrink an odd round budget (max_rounds=149 ran 148 rounds)
-    if (
-        period % rounds_per_step
-        or check_every % rounds_per_step
-        or max_rounds % rounds_per_step
-    ):
-        raise ValueError(
-            "rounds_per_step must divide period, check_every and "
-            "max_rounds"
-        )
-    ranks, steps_run, converged = run_until_periodic(
-        ranks0,
-        step,
-        max_rounds=max_rounds // rounds_per_step,
-        period=period // rounds_per_step,
-        key="node",
-        val="rank",
-        check_every=check_every // rounds_per_step,
-    )
-    return ranks, steps_run * rounds_per_step, converged
 
 
 @register("q_graph_pagerank", oracle=_pr_oracle())
@@ -713,8 +596,8 @@ def _kcore_peel(g: DataFrame, rm: DataFrame) -> tuple[DataFrame, DataFrame]:
     it fits) from the edge list ``g``, then re-degree the induced
     subgraph. Returns the (edges, degree vector) pair; both are
     ``fused_ckpt``-ed, so they materialize inside the caller's next
-    action (the fixed-R query's stats collect, the deep runner's probe)
-    instead of costing actions of their own."""
+    action (the query's per-round stats collect) instead of costing
+    actions of their own."""
     g = fused_ckpt(
         g.join(rm, "src", "left_anti")
         .join(rm.select(F.col("src").alias("dst")), "dst", "left_anti")
@@ -737,8 +620,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Synchronous peeling is deterministic (no tie-breaking: all sub-k
     nodes drop together), so the DuckDB oracle replays the rounds as
     unrolled CTEs bit-for-bit. Fixed round count = bounded plan depth;
-    to full convergence, the loop continues until rm is empty with
-    the checkpoint-every-3 policy PageRank measures in SCALING.md.
+    to full convergence, the loop continues until rm is empty (the
+    measured stop rounds are in SCALING.md).
 
     Scale shape per round: one combinable degree aggregate + two
     left_anti hash joins against the (small, shrinking) removal set —
@@ -761,8 +644,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 24.7 s lazy-union vs 3.5 s eager at sf0.1. Eager collection also
     # keeps each round's anti-join visible to AQE as a fresh small
     # relation (runtime broadcast).
-    # localCheckpoint per round TRUNCATES lineage (the checkpoint-every-k
-    # policy PageRank documents): without it the logical plan grows per
+    # localCheckpoint per round TRUNCATES lineage (the depth study in
+    # SCALING.md): without it the logical plan grows per
     # round and optimizer/cache-lookup time escalated 1.2 s -> 12.5 s
     # for the IDENTICAL per-round degree aggregate by round 4 at sf0.1.
     deg = g.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
@@ -813,49 +696,6 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "round long, n_removed long, n_nodes long, n_edges long, "
         "node_checksum long",
     )
-
-
-def kcore_peel_deep(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _KCORE_K,
-    max_rounds: int = 50,
-) -> tuple[DataFrame, int, bool]:
-    """Full-convergence k-core peel through the generic iteration
-    runner: state = the NODE-sized degree vector, step = peel + induce
-    + re-degree. Peeling is monotone (degrees only fall, nodes only
-    leave), so oscillation is impossible and period=1 is the classic
-    changed==0 stop — with ``keys_shrink=True`` because peeled keys
-    leave the vector and an inner-join probe alone would miss a
-    disconnected sub-k clique peeling away whole. The step detects its
-    own fixpoint for free (the peel set it must compute anyway is
-    empty) and returns its input unchanged — the runner's identity
-    short-circuit stops without a probe job.
-
-    Returns (degree_vector_of_core, rounds_run, converged). Lineage:
-    localCheckpoint per round, exactly as the fixed-R q_graph_kcore
-    documents (lazy nesting escalated 1.2 s -> 12.5 s by round 4)."""
-    g0 = persisted(_purchase_sym(spark, sf_dir))
-    graph = {"g": g0}
-
-    def step(deg: DataFrame) -> DataFrame:
-        rm = persisted(deg.filter(F.col("d") < k).select("src"))
-        if rm.isEmpty():
-            return deg  # fixpoint detected in-step: identity stop
-        graph["g"], deg = _kcore_peel(graph["g"], rm)
-        return deg
-
-    deg0 = g0.groupBy("src").agg(F.count(F.lit(1)).alias("d")).localCheckpoint()
-    return run_until_periodic(
-        deg0,
-        step,
-        max_rounds=max_rounds,
-        period=1,
-        key="src",
-        val="d",
-        keys_shrink=True,
-    )
-
 
 
 # ---------------------------------------------------------------------------
@@ -1033,37 +873,12 @@ def _lpa_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     enc = F.max(F.col("cnt") * F.lit(_LPA_B) + (b1 - F.col("lbl"))).alias(
         "enc"
     )
-    # fused_ckpt: rounds between the period-2 probes fuse their
-    # shuffles into the probe's job (iterate.py)
+    # fused_ckpt: the round materializes inside the next action's job
+    # (iterate.py)
     return fused_ckpt(
         votes.groupBy("node")
         .agg(enc)
         .select("node", (b1 - F.expr(f"enc & {_LPA_B - 1}")).alias("lbl"))
-    )
-
-
-def lpa_labels_deep(
-    spark: SparkSession,
-    sf_dir: str,
-    max_rounds: int = 20,
-) -> tuple[DataFrame, int, bool]:
-    """Deep-R label propagation with the EXECUTABLE stop criterion the
-    depth study prescribes: labels(t) == labels(t-2) at matching parity
-    (operators/iterate.run_until_periodic, period=2). changed==0 can
-    never fire on this bipartite graph — ~10% of nodes keep a period-2
-    orbit — so the orbit itself is the fixpoint being detected; the
-    returned vector is one member of the final orbit.
-
-    Returns (labels, rounds_run, converged). Measured at sf1 the stop
-    fires at round 8 (33 s wall, 11 communities — SCALING.md); the
-    probe is one node-sized co-partitioned join every 2 rounds,
-    amortized across the edge-sized propagation joins it gates."""
-    edges, labels0 = _lpa_setup(spark, sf_dir)
-    return run_until_periodic(
-        labels0,
-        lambda lbls: _lpa_round(edges, lbls),
-        max_rounds=max_rounds,
-        period=2,
     )
 
 
@@ -1082,8 +897,8 @@ def q_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (node, label) count, and one per-node rank over a partition
     bounded by the node's distinct neighbor labels (≤ degree — never
     global). Label state is one row per node; rounds persist so the
-    driver loop never recomputes (3 rounds needs no checkpoint; deeper
-    propagation inherits pagerank_ranks' checkpoint-every-3 policy).
+    driver loop never recomputes (each round is a lazy localCheckpoint;
+    the run-to-convergence depth study is in SCALING.md).
     Published: the {_LPA_TOP} largest communities after round
     {_LPA_ROUNDS}."""
     from pyspark.sql import Window as W
@@ -1097,8 +912,8 @@ def q_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bipartite graph's nodes sit in a period-2 label orbit even with
     # the self-vote, so changed==0 never fires — the check would cost
     # one round-sized job per round and save nothing at fixed R. Deep-R
-    # deployments stop on labels(t) == labels(t-2) instead — executable
-    # as lpa_labels_deep() below (operators/iterate.run_until_periodic).
+    # deployments stop on labels(t) == labels(t-2) instead (SCALING.md
+    # records the measured stop rounds).
     for _ in range(_LPA_ROUNDS):
         labels = _lpa_round(edges, labels)
     top = (
@@ -1263,8 +1078,7 @@ _HA_P = 6
 _HA_M = 1 << _HA_P
 _HA_WBITS = 56          # md5 hex chars 3..16 -> 56-bit register payload
 _HA_CAP = 48            # same rho cap as q_agg_hll_distinct: int64-safe sums
-_HA_K = 4               # fixed rounds (oracle unrolls them); the deep
-                        # variant runs to the register fixpoint instead
+_HA_K = 4               # fixed rounds (oracle unrolls them)
 # alpha_64 = 0.709 (Flajolet et al., AofA'07, small-m table), times
 # m^2 * 2^cap — precomputed in Python and injected as ONE double literal
 # into both engines (the q_agg_hll_distinct determinism recipe)
@@ -1426,31 +1240,6 @@ def hyperanf_counts(
     return out
 
 
-def hyperanf_deep(
-    spark: SparkSession, sf_dir: str, max_rounds: int = 16
-) -> tuple[DataFrame, int, bool]:
-    """Run HyperANF to the register FIXPOINT instead of a fixed k —
-    registers are monotone nondecreasing (max-merge), so the classic
-    changed==0 stop (run_until_periodic, period=1) fires exactly when
-    every ball has saturated its connected component; the stop round
-    is the graph's (register-resolution) radius. Deep-R stop rules per
-    operators/iterate.py. Returns (final sketches, rounds, converged)."""
-    edges, sk0, small = _ha_graph(spark, sf_dir)
-
-    def step(sk: DataFrame) -> DataFrame:
-        return persisted(_ha_round(edges, sk, small))
-
-    return run_until_periodic(
-        sk0,
-        step,
-        max_rounds=max_rounds,
-        period=1,
-        key="node",
-        val="regs",
-        check_every=1,
-    )
-
-
 def _ha_oracle() -> str:
     """Unrolled-CTE replay: long-format (node, bucket, rho) registers,
     K max-merge rounds along the same edge list, per-k integer-cents
@@ -1538,10 +1327,9 @@ def q_graph_hyperanf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifted to graph iteration; the oracle unrolls the identical
     register algebra as CTEs. The per-k readout is K+1 bounded
     one-row collects (audit-scalar class); the pct/effective-diameter
-    algebra runs on K+1 driver ints (tiny-relation doctrine).
-
-    hyperanf_deep runs the same fold to the register fixpoint under
-    operators/iterate.py's deep-R stop rules (monotone ⇒ period=1).
+    algebra runs on K+1 driver ints (tiny-relation doctrine). The
+    fold run on to its register fixpoint (monotone, so changed==0 is
+    the stop) is on record in SCALING.md.
     """
     rows = hyperanf_counts(spark, sf_dir)
     mx = max(c for _, c in rows)
@@ -2292,7 +2080,7 @@ def scc_labels(
     peels) finishes as a driver Tarjan instead of 10+ more
     distributed rounds. Round counts are graph-depth-bounded: loud
     RuntimeErrors, not silent truncation, past max_outer/max_inner
-    (the iterate.py deep-R contract)."""
+    (the iterate.fixpoint contract)."""
     if local_max_edges > 0:
         n_edges = edges.limit(local_max_edges + 1).count()
         if n_edges <= local_max_edges:

@@ -1,6 +1,7 @@
-"""Scale-posture helpers: skew salting, partitioning advice, bucketing
-DDL — the knobs that matter when the same plans run on a 1000-executor
-cluster against 100 TB.
+"""Scale-posture helpers: skew salting, clustered, compacted and
+bucketed layouts, and overlapped driver actions — the knobs that
+matter when the same plans run on a 1000-executor cluster against
+100 TB.
 
 Catalyst + AQE already handle: broadcast selection, post-shuffle
 partition coalescing, runtime skew-join splitting, dynamic partition
@@ -31,13 +32,9 @@ def overlap_jobs(*thunks: Callable):
     Use ONLY for genuinely independent actions — e.g. a bounded
     query-matrix collect next to an iterative trainer's first round.
     Exceptions propagate (the first one raised, after all threads
-    join). ``SPARK_GRAFT_NO_JOB_OVERLAP=1`` forces sequential
-    execution — the A/B lever, and the off switch for deployments
-    whose scheduler pools are managed externally.
+    join).
     """
-    import os
-
-    if len(thunks) <= 1 or os.environ.get("SPARK_GRAFT_NO_JOB_OVERLAP"):
+    if len(thunks) <= 1:
         return [t() for t in thunks]
     from pyspark import InheritableThread
 
@@ -93,54 +90,6 @@ def salted_agg(
     salt = F.pmod(F.xxhash64(*df.columns), F.lit(n_salts))
     phase1 = df.withColumn("__salt", salt).groupBy(*group_cols, "__salt").agg(*aggs())
     return phase1.groupBy(*group_cols).agg(*merge_aggs())
-
-
-def salted_join_left_hot(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-resistant equi-join when the LEFT side has hot keys and the
-    right side is too large to broadcast: salt the left key, replicate
-    each right row to all salts (explode), join on (key, salt).
-
-    Right-side inflation is n_salts×, so this only wins when the right
-    side is much smaller than the skewed left (else rely on AQE's
-    runtime skew splitting, enabled by default in session.py).
-    """
-    # content-hash salt: deterministic under task retries (see salted_agg)
-    lsalt = left.withColumn(
-        "__salt", F.pmod(F.xxhash64(*left.columns), F.lit(n_salts))
-    )
-    rsalt = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = lsalt.join(rsalt, [on, "__salt"])
-    return out.drop("__salt")
-
-
-def repartition_for_join(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
-    """Pre-shuffle on the join key so repeated joins on the same key
-    reuse one exchange (Catalyst reuses compatible output partitioning
-    across stages)."""
-    return df.repartition(n, key) if n else df.repartition(key)
-
-
-def bucketing_ddl(table: str, key: str, n_buckets: int, path: str) -> str:
-    """The DDL that removes the fact-fact shuffle entirely on a real
-    lake: both sides bucketed on the join key co-locate, and the
-    sort-merge join reads pre-bucketed files with zero exchange.
-
-    (Testdata is plain parquet, so this is documentation + the string a
-    deployment would run; `df.write.bucketBy(n, key).saveAsTable(t)` is
-    the writer-side equivalent.)
-    """
-    return (
-        f"CREATE TABLE {table} USING PARQUET "
-        f"CLUSTERED BY ({key}) INTO {n_buckets} BUCKETS "
-        f"LOCATION '{path}'"
-    )
 
 
 def clustered_write(

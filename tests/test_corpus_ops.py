@@ -624,212 +624,43 @@ def test_lpa_two_planted_clusters(spark, tmp_path):
 
 
 def test_lpa_deep_stop_period2(spark):
-    """The deep-R stop criterion is EXECUTABLE and correct: on the real
-    bipartite purchase graph (a) the period-2 probe fires, (b) a plain
-    changed==0 fixpoint NEVER fires before it (the measured orbit the
-    depth study documents — SCALING.md), and (c) the runner's
-    final vector equals a manual replay of the same rounds."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_aws_data_pipeline_spark.cache import persisted
+    """The evidence for q_graph_lpa_communities' fixed round count: on
+    the bipartite purchase graph a plain changed==0 stop never fires,
+    while the period-2 stop labels(t) == labels(t-2) does (the orbit the
+    depth study in SCALING.md measured). Replays ``_lpa_round`` and
+    compares every round's label vector on the driver."""
     from end_to_end_aws_data_pipeline_spark.operators.graph import (
         _lpa_round,
-        _purchase_fwd,
-        lpa_labels_deep,
-    )
-    from end_to_end_aws_data_pipeline_spark.operators.iterate import (
-        vectors_differ,
+        _lpa_setup,
     )
     from tests.conftest import SF_SMOKE
 
-    final, r, conv = lpa_labels_deep(spark, SF_SMOKE, max_rounds=20)
-    assert conv, "period-2 stop must fire within 20 rounds"
-    assert r % 2 == 0 and r >= 2
+    edges, labels = _lpa_setup(spark, SF_SMOKE)
 
-    # manual replay of the identical rounds, keeping full history
-    e0 = _purchase_fwd(spark, SF_SMOKE)
-    edges = persisted(
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).repartition("dst")
-    )
-    labels = persisted(
-        edges.select(F.col("src").alias("node")).distinct().select(
-            "node", F.col("node").alias("lbl")
-        )
-    )
-    hist = [labels]
-    for _ in range(r):
+    def vec(df) -> dict:
+        return {r.node: r.lbl for r in df.collect()}
+
+    hist = [vec(labels)]
+    while len(hist) <= 20 and (len(hist) < 3 or hist[-1] != hist[-3]):
         labels = _lpa_round(edges, labels)
-        hist.append(labels)
+        hist.append(vec(labels))
+    r = len(hist) - 1
+    assert hist[r] == hist[r - 2], "period-2 stop must fire within 20 rounds"
     # changed==0 never fires: every round changes SOME node's label
     for t in range(1, r + 1):
-        assert vectors_differ(hist[t], hist[t - 1]), (
+        assert hist[t] != hist[t - 1], (
             f"round {t}: plain fixpoint fired — orbit assumption broken"
         )
-    # the criterion that does fire: labels(r) == labels(r-2)
-    assert not vectors_differ(hist[r], hist[r - 2])
-    # and not earlier (r is the FIRST even round with a period-2 match)
-    for t in range(2, r, 2):
-        assert vectors_differ(hist[t], hist[t - 2])
-    # runner's final state is the replay's final state
-    assert not vectors_differ(final, hist[r])
-
-
-def test_run_until_periodic_period1_monotone(spark):
-    """period=1 degrades to the classic changed==0 fixpoint — checked
-    on a monotone toy step (cap values at a floor) where oscillation is
-    impossible."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_aws_data_pipeline_spark.operators.iterate import (
-        run_until_periodic,
-        vectors_differ,
-    )
-
-    s0 = spark.createDataFrame(
-        [(i, 10 - i) for i in range(8)], "node long, lbl long"
-    )
-
-    def step(df):
-        return df.select(
-            "node", F.greatest(F.col("lbl") - 2, F.lit(3)).alias("lbl")
-        ).localCheckpoint()
-
-    final, r, conv = run_until_periodic(
-        s0, step, max_rounds=10, period=1, key="node", val="lbl"
-    )
-    assert conv and r <= 5
-    assert not vectors_differ(final, step(final))
-    assert {row.lbl for row in final.collect()} == {3}
-
-
-def test_pagerank_deep_stop(spark):
-    """pagerank_ranks_deep's run_until_periodic wiring converges and the
-    final vector is an exact fixpoint at coarse precision (r0=20: the
-    integer quantum is large enough that the damped map lands, measured
-    driver-exact, on ranks(5)==ranks(4); the period-2 probe detects it
-    at the round-6 check). One manual replay round from the final
-    vector must reproduce it bit-for-bit."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_aws_data_pipeline_spark.cache import persisted
-    from end_to_end_aws_data_pipeline_spark.operators.graph import (
-        _purchase_fwd,
-        pagerank_ranks_deep,
-    )
-    from end_to_end_aws_data_pipeline_spark.operators.iterate import (
-        vectors_differ,
-    )
-    from tests.conftest import SF_SMOKE
-
-    final, r, conv = pagerank_ranks_deep(spark, SF_SMOKE, r0=20, max_rounds=30)
-    assert conv, "period-2 stop must fire within 30 rounds at r0=20"
-    assert r == 6  # first even-round probe after the measured t=5 fixpoint
-
-    # manual replay of one more round: exact fixpoint => identical vector
-    fwd = _purchase_fwd(spark, SF_SMOKE)
-    edges = fwd.unionAll(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    edges_d = persisted(edges.join(deg, "src").select("src", "dst", "d"))
-    nxt = (
-        edges_d.join(final, edges_d["src"] == final["node"])
-        .select("dst", F.expr("rank div d").alias("c"))
-        .groupBy("dst")
-        .agg(F.sum("c").alias("contrib"))
-        .select(
-            F.col("dst").alias("node"),
-            (F.lit((15 * 20) // 100) + F.expr("(85 * contrib) div 100"))
-            .cast("long")
-            .alias("rank"),
-        )
-    )
-    assert not vectors_differ(final, nxt, key="node", val="rank")
-
-
-def test_kcore_deep_identity_stop(spark):
-    """kcore_peel_deep stops via the step's own fixpoint detection
-    (empty peel set -> input returned unchanged -> runner identity
-    short-circuit, zero probe jobs) and the surviving degree vector is
-    a true k-core: every survivor's induced degree >= k."""
-    from end_to_end_aws_data_pipeline_spark.operators.graph import (
-        kcore_peel_deep,
-    )
-    from tests.conftest import SF_SMOKE
-
-    # k=2: the purchase graph's min degree is 3, nothing peels — the
-    # very first step detects the fixpoint
-    deg, r, conv = kcore_peel_deep(spark, SF_SMOKE, k=2)
-    assert conv and r == 1
-    rows = deg.collect()
-    assert len(rows) == 160 and min(x.d for x in rows) >= 2
-
-    # k=4: one peel round, identity stop at round 2; survivors >= 4
-    deg, r, conv = kcore_peel_deep(spark, SF_SMOKE, k=4)
-    assert conv and r == 2
-    rows = deg.collect()
-    assert rows and min(x.d for x in rows) >= 4
-
-    # k=30 at smoke scale: the whole graph peels away; the empty vector
-    # is the (degenerate) fixpoint and the runner still reports it
-    deg, r, conv = kcore_peel_deep(spark, SF_SMOKE, k=30)
-    assert conv and deg.count() == 0
-
-
-def test_vectors_differ_keys_shrink(spark):
-    """A removed key is invisible to the inner-join probe (an isolated
-    sub-k clique peels away without touching any survivor's degree);
-    keys_shrink=True catches it via the count pre-check."""
-    from end_to_end_aws_data_pipeline_spark.operators.iterate import (
-        vectors_differ,
-    )
-
-    before = spark.createDataFrame(
-        [(1, 5), (2, 5), (3, 2)], "src long, d long"
-    )
-    after = spark.createDataFrame([(1, 5), (2, 5)], "src long, d long")
-    assert not vectors_differ(after, before, key="src", val="d")
-    assert vectors_differ(after, before, key="src", val="d", keys_shrink=True)
-    # equal vectors stay equal under the stricter probe
-    assert not vectors_differ(
-        after, after.select("src", "d"), key="src", val="d", keys_shrink=True
-    )
-
-
-def test_pagerank_deep_round_batching_invariant(spark):
-    """rounds_per_step=2 (the round-10 scheduler-batching default) must
-    reproduce the unbatched runner exactly: same final vector, same
-    detected stop round — batching is a scheduling change, never an
-    arithmetic one."""
-    from end_to_end_aws_data_pipeline_spark.operators.graph import (
-        pagerank_ranks_deep,
-    )
-    from tests.conftest import SF_SMOKE
-
-    f1, r1, c1 = pagerank_ranks_deep(
-        spark, SF_SMOKE, r0=20, max_rounds=30, rounds_per_step=1
-    )
-    f2, r2, c2 = pagerank_ranks_deep(
-        spark, SF_SMOKE, r0=20, max_rounds=30, rounds_per_step=2
-    )
-    assert c1 and c2 and r1 == r2 == 6
-    rows1 = sorted((r["node"], r["rank"]) for r in f1.collect())
-    rows2 = sorted((r["node"], r["rank"]) for r in f2.collect())
-    assert rows1 == rows2
 
 
 def test_hyperanf_monotone_and_deep_fixpoint(spark):
     """HyperANF invariants: N(k) is monotone nondecreasing (balls only
     grow under max-merge), N(0) is exactly 100 cents per node (the
     single-element linear-counting estimate), the registered query
-    flags exactly one effective-diameter row, and the deep runner's
-    register fixpoint reproduces the fixed-k fold's saturated N."""
+    flags exactly one effective-diameter row, and run deeper the fold
+    reaches its register fixpoint: N(k) stops growing."""
     from end_to_end_aws_data_pipeline_spark.operators.graph import (
-        _ha_nf_cents,
         hyperanf_counts,
-        hyperanf_deep,
         q_graph_hyperanf,
     )
     from tests.conftest import SF_SMOKE
@@ -849,10 +680,9 @@ def test_hyperanf_monotone_and_deep_fixpoint(spark):
     assert max(r["pct_bp"] for r in out) == 10000
     assert eff[0]["pct_bp"] >= 9000
 
-    final, rounds, conv = hyperanf_deep(spark, SF_SMOKE, max_rounds=12)
-    assert conv and 0 < rounds <= 12
-    # at the register fixpoint the estimate equals the saturated curve
-    assert _ha_nf_cents(final) >= vals[-1]
+    deep = [c for _, c in hyperanf_counts(spark, SF_SMOKE, k_rounds=12)]
+    assert deep[:5] == vals and deep == sorted(deep)
+    assert deep[-1] == deep[-2]  # saturated within 12 rounds
 
 
 def test_hyperanf_join_regime_invariance(spark, monkeypatch):

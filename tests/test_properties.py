@@ -681,31 +681,6 @@ def test_sharded_bloom_no_false_negatives_and_equivalence(spark):
     assert one == sharded and len(one) > 0
 
 
-def test_pagerank_checkpoint_placement_invariant(spark):
-    """Lineage checkpointing is a physical concern only: depth-7
-    integer PageRank with checkpoint-every-3 must produce the exact
-    rank vector of the uncheckpointed run (int64 arithmetic has no
-    order sensitivity for checkpoint boundaries to perturb)."""
-    from end_to_end_aws_data_pipeline_spark.cache import release_all
-    from end_to_end_aws_data_pipeline_spark.operators.graph import pagerank_ranks
-    from tests.conftest import SF_SMOKE
-
-    try:
-        plain = sorted(
-            (r.node, r.rank)
-            for r in pagerank_ranks(spark, SF_SMOKE, iters=7).collect()
-        )
-        ckpt = sorted(
-            (r.node, r.rank)
-            for r in pagerank_ranks(
-                spark, SF_SMOKE, iters=7, checkpoint_every=3
-            ).collect()
-        )
-    finally:
-        release_all()
-    assert plain == ckpt and len(plain) > 0
-
-
 def test_ohlc_bar_invariants(spark):
     """Every OHLC bar: low <= open, close <= high; low <= mean <= high;
     bar event counts sum to the table's row count."""

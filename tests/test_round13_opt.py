@@ -27,20 +27,6 @@ class TestOverlapJobs:
         with pytest.raises(RuntimeError, match="trainer failed"):
             overlap_jobs(lambda: spark.range(3).count(), boom)
 
-    def test_sequential_flag(self, spark, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_NO_JOB_OVERLAP", "1")
-        order: list[int] = []
-
-        def mk(i):
-            def t():
-                order.append(i)
-                return i
-
-            return t
-
-        assert overlap_jobs(mk(0), mk(1), mk(2)) == [0, 1, 2]
-        assert order == [0, 1, 2]  # strictly sequential under the flag
-
     def test_single_thunk_runs_inline(self, spark):
         assert overlap_jobs(lambda: 7) == [7]
 

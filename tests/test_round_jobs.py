@@ -18,7 +18,6 @@ import itertools
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
 
 from end_to_end_aws_data_pipeline_spark.cache import release_all
 from end_to_end_aws_data_pipeline_spark.operators.dedup import (
@@ -27,23 +26,23 @@ from end_to_end_aws_data_pipeline_spark.operators.dedup import (
 )
 from end_to_end_aws_data_pipeline_spark.operators.graph import (
     hits_scores,
-    kcore_peel_deep,
     mis_rounds,
+    q_graph_kcore,
     q_graph_khop,
     scc_labels,
 )
 from tests.conftest import SF_SMOKE
 
-# ceilings on J, measured jobs per round, and on k-hop's build jobs
-# (4 local cores, 4 shuffle partitions)
+# ceilings on J, measured jobs per round, and on the k-hop and k-core
+# build jobs (4 local cores, 4 shuffle partitions)
 _BUDGET = {
     "cc": 9,
     "star": 14,
-    "kcore_deep": 8,
     "scc_color": 6,
     "mis": 12,
     "hits": 6,
     "khop_build": 19,
+    "kcore_build": 13,
 }
 
 # purchase-graph node ids (customer c is node 2c, supplier s is node
@@ -55,12 +54,6 @@ _SLOW_MIS_PATH = [
 ]
 
 _GROUPS = itertools.count()
-
-
-@pytest.fixture(autouse=True)
-def _lazy_checkpoints(monkeypatch):
-    # eager checkpoints add one job per checkpointed round state
-    monkeypatch.delenv("SPARK_GRAFT_EAGER_CKPT", raising=False)
 
 
 def _jobs(spark, fn) -> int:
@@ -155,29 +148,6 @@ def test_connected_components_star_jobs_per_round(spark):
     assert _jobs_per_round(samples) <= _BUDGET["star"]
 
 
-def test_kcore_peel_deep_jobs_per_round(spark):
-    from end_to_end_aws_data_pipeline_spark.cache import release_all
-
-    # k=2: nothing peels, the first round stops; k=4: one peel round,
-    # then that stop — so J is the cost of one peel round
-    kcore_peel_deep(spark, SF_SMOKE, k=2)  # fills the table-schema cache
-    samples = []
-    for k in (2, 4):
-        release_all()  # same cache state, so the same setup jobs
-        out = {}
-        jobs = _jobs(
-            spark,
-            lambda k=k: out.update(
-                res=kcore_peel_deep(spark, SF_SMOKE, k=k)
-            ),
-        )
-        _, rounds, converged = out["res"]
-        assert converged
-        samples.append((rounds, jobs))
-    assert [r for r, _ in samples] == [1, 2]
-    assert _jobs_per_round(samples) <= _BUDGET["kcore_deep"]
-
-
 def test_scc_color_phase_jobs_per_round(spark):
     """Path 0→1→…→n plus k→0 for every k: one SCC whose color phase
     needs n+1 rounds (label 0 walks the path one hop a round), while
@@ -267,3 +237,11 @@ def test_khop_build_jobs_repeat(spark):
     )
     jobs = {j for _, j in samples}
     assert len(jobs) == 1 and jobs.pop() <= _BUDGET["khop_build"], samples
+
+
+def test_kcore_build_jobs_repeat(spark):
+    samples = _warm_samples(
+        spark, lambda _: q_graph_kcore(spark, SF_SMOKE), [0, 1, 2]
+    )
+    jobs = {j for _, j in samples}
+    assert len(jobs) == 1 and jobs.pop() <= _BUDGET["kcore_build"], samples

@@ -2,17 +2,12 @@
 measurement protocol (this VM shows ambient hot windows that fabricate
 up to 2x sequential A-then-B deltas; only interleaved pairs count).
 
-Two modes:
+Compare two queries (same code):
 
-  # compare two QUERIES (same code):
   python tools/ab_pairs.py q_stream_pattern_quantified \
       q_stream_pattern_alternation [n_pairs]
 
-  # compare two VARIANTS of one query via an env flag the code reads
-  # per call (e.g. SPARK_GRAFT_NO_JOB_OVERLAP, SPARK_GRAFT_EAGER_CKPT):
-  python tools/ab_pairs.py --flag SPARK_GRAFT_NO_JOB_OVERLAP \
-      q_ann_ivf_trained [n_pairs]
-  (A = flag SET (old behavior), B = flag unset (new behavior))
+To compare two versions of the code, run each from its own checkout.
 
 Methodology mirrors bench.py exactly: timed region = query build + noop
 sink; release_all() after each rep, untimed. Both variants are warmed
@@ -57,24 +52,11 @@ def _stamp() -> dict:
 
 def main() -> int:
     args = sys.argv[1:]
-    flag = None
-    if args and args[0] == "--flag":
-        flag = args[1]
-        args = args[2:]
-    if not args:
+    if len(args) < 2:
         print(__doc__, file=sys.stderr)
         return 2
-    if flag:
-        qa = qb = args[0]
-        n_pairs = int(args[1]) if len(args) > 1 else 5
-        la, lb = f"{qa}[{flag}=1]", f"{qb}[new]"
-    else:
-        if len(args) < 2:
-            print(__doc__, file=sys.stderr)
-            return 2
-        qa, qb = args[0], args[1]
-        n_pairs = int(args[2]) if len(args) > 2 else 5
-        la, lb = qa, qb
+    qa, qb = args[0], args[1]
+    n_pairs = int(args[2]) if len(args) > 2 else 5
 
     import __spark_entry__ as ent
     from end_to_end_aws_data_pipeline_spark.cache import release_all
@@ -87,15 +69,8 @@ def main() -> int:
             print(f"unknown query: {name}", file=sys.stderr)
             return 2
 
-    def run(name: str, flag_on: bool) -> float:
-        if flag:
-            if flag_on:
-                os.environ[flag] = "1"
-            else:
-                os.environ.pop(flag, None)
-        spark.sparkContext.setJobDescription(
-            f"ab:{name}{'[A]' if flag_on else '[B]'}"
-        )
+    def run(name: str, side: str) -> float:
+        spark.sparkContext.setJobDescription(f"ab:{name}[{side}]")
         t0 = time.perf_counter()
         df = qs[name](spark, SF)
         try:
@@ -107,22 +82,22 @@ def main() -> int:
         return dt
 
     print(json.dumps({"start": _stamp()}), flush=True)
-    wa = run(qa, True)
-    wb = run(qb, False)
-    print(f"warm: {la}={wa:.3f}s {lb}={wb:.3f}s", flush=True)
+    wa = run(qa, "A")
+    wb = run(qb, "B")
+    print(f"warm: {qa}={wa:.3f}s {qb}={wb:.3f}s", flush=True)
     pa, pb = [], []
     for i in range(n_pairs):
-        a = run(qa, True)
-        b = run(qb, False)
+        a = run(qa, "A")
+        b = run(qb, "B")
         pa.append(a)
         pb.append(b)
-        print(f"pair {i}: {la}={a:.3f}s {lb}={b:.3f}s", flush=True)
+        print(f"pair {i}: {qa}={a:.3f}s {qb}={b:.3f}s", flush=True)
     med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
     print(
         json.dumps(
             {
-                "A": la,
-                "B": lb,
+                "A": qa,
+                "B": qb,
                 "pairs": [[round(a, 3), round(b, 3)] for a, b in zip(pa, pb)],
                 "min": [round(min(pa), 3), round(min(pb), 3)],
                 "median": [round(med(pa), 3), round(med(pb), 3)],
