@@ -6,7 +6,10 @@
 
 Each query is executed to completion with a noop write (falls back to
 count) so the timing covers the full scan → shuffle → aggregate plan
-without driver-side collection overhead.
+without driver-side collection overhead. The record lists under
+``count_fallback`` the queries that fell back, and the detail artifacts
+(``bench_detail.json``, ``bench_runs/``) hold each rep's Janino compiles
+under ``codegen_compiles``.
 """
 
 from __future__ import annotations
@@ -269,11 +272,16 @@ HEADLINE = (
 )
 
 
-def _execute(df) -> None:
+def _execute(df) -> str:
+    """Run ``df`` to completion and return the path that ran: ``"noop"``,
+    or ``"count"`` when the noop write raised. A count can prune columns,
+    so it times a different plan."""
     try:
         df.write.format("noop").mode("overwrite").save()
+        return "noop"
     except Exception:
         df.count()
+        return "count"
 
 
 def _loadavg() -> list[float] | None:
@@ -355,7 +363,7 @@ def main() -> None:
         os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{heap_gb}g"
 
     from end_to_end_aws_data_pipeline_spark.cache import release_all
-    from end_to_end_aws_data_pipeline_spark.session import get_spark
+    from end_to_end_aws_data_pipeline_spark.session import codegen_compiles, get_spark
     import __spark_entry__ as ent
 
     spark = get_spark("bench")
@@ -388,6 +396,11 @@ def main() -> None:
     # a 12-query contiguous cluster, i.e. a transient window, which the
     # offsets make attributable instead of inferential)
     t_offsets: dict[str, float] = {}
+    # generated-code cache misses per query and rep: a warm rep that
+    # compiles again means the cache is too small for the suite, or the
+    # query's generated source changes from run to run
+    compiles: dict[str, list[int]] = {}
+    count_fallback: list[str] = []
     t_run0 = time.perf_counter()
     for name in names:
         fn = qs.get(name)
@@ -398,9 +411,13 @@ def main() -> None:
         print(f"bench: {name} ...", file=sys.stderr, flush=True)
         try:
             for _ in range(reps):
+                c0 = codegen_compiles(spark)
                 t0 = time.perf_counter()
-                _execute(fn(spark, sf_dir))
+                path = _execute(fn(spark, sf_dir))
                 dt = time.perf_counter() - t0
+                compiles.setdefault(name, []).append(codegen_compiles(spark) - c0)
+                if path == "count" and name not in count_fallback:
+                    count_fallback.append(name)
                 best = dt if best is None or dt < best else best
                 # cache hygiene: drop whatever this query persisted so the
                 # next query (or rep) is measured cold, not against a warm
@@ -436,14 +453,17 @@ def main() -> None:
         "psi_start": psi_start,
         "psi_end": _psi(),
         "reps": reps,
+        "count_fallback": count_fallback,
     }
     # like-for-like subtotals over FIXED query baskets (tools/
-    # r*_subset.json, one frozen at each round's close): the suite
-    # keeps growing — 112 (r5) -> 169 (r6) -> ... — so the grand total
-    # alone conflates engine speed with coverage growth; a basket's
-    # subtotal only appears when every basket query ran (full-suite
-    # runs, not SPARK_GRAFT_BENCH_ONLY subsets). r5 basket record:
-    # 124.268 s; r6 basket record: 164.911 s (both sf0.1 min-of-3).
+    # r*_subset.json): the suite keeps growing, so the grand total
+    # alone conflates engine speed with coverage growth. Two baskets
+    # are kept: r5 (112 queries, the untouched control the north star
+    # divides by; record 124.268 s at sf0.1 min-of-3) and r11 (214,
+    # the newest). The r6-r10 baskets were deleted; their subtotals
+    # stay in the runs archived under bench_runs/. A basket's subtotal
+    # only appears when every basket query ran (full-suite runs, not
+    # SPARK_GRAFT_BENCH_ONLY subsets).
     import glob as _glob
 
     for path in sorted(
@@ -467,9 +487,11 @@ def main() -> None:
             )
     if errors:
         record["errors"] = errors
-    # per-query start offsets go to the DETAIL artifacts only (the
-    # stdout line has a 1500-char budget); popped again before printing
+    # per-query start offsets and compiles go to the DETAIL artifacts
+    # only (the stdout line has a 1500-char budget); popped again before
+    # printing
     record["query_t_offsets"] = t_offsets
+    record["codegen_compiles"] = compiles
     # full per-query detail always lands in a file next to bench.py ...
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     detail_path = os.path.join(repo_dir, "bench_detail.json")
@@ -517,6 +539,7 @@ def main() -> None:
     # slowest queries that fit and say how many were elided and where the
     # rest live.
     record.pop("query_t_offsets", None)
+    record.pop("codegen_compiles", None)
     line = json.dumps(record)
     if len(line) > 1500:
         slowest = sorted(timings.items(), key=lambda kv: -kv[1])

@@ -11,6 +11,18 @@ Local tests run on ``local[N]`` but every default here is chosen for the
   DuckDB oracle (and are cluster-location independent).
 - ``spark.sql.shuffle.partitions`` sized by env (cores locally; on a
   real cluster AQE coalesces from an intentionally high initial value).
+- Per-call costs paid once per session, not per query: generated
+  classes are reused across runs (the codegen cache holds the whole
+  suite's working set, see ``CODEGEN_CACHE_ENTRIES``), and Column calls
+  no longer capture a Python call site. Error messages keep their error
+  class and text, but their ``== DataFrame ==`` context no longer names
+  the Python line that built the failing column.
+
+Caveat: both hold only in a session ``get_spark`` creates. The cache
+size is a static conf, and PySpark reads the debugging switch once per
+process. The ``__spark_entry__`` harness session, ``tools/check_oracle.py
+--bare`` and a ``get_spark`` that ``getOrCreate``s onto an existing
+context keep Spark's 100 entries, and may keep the capture.
 """
 
 from __future__ import annotations
@@ -30,6 +42,21 @@ RUNTIME_REQUIRED_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
+
+
+# generated-code cache entries: one bench.py session over the full
+# list (warm-up plus 2 reps, sf0.001, local[4]) compiled 3,465 distinct
+# classes under an unbounded cap, read with codegen_compiles; this is
+# the power of two at least twice that. A warm rep still compiled 194
+# (classes whose source differs per run), which the headroom absorbs
+CODEGEN_CACHE_ENTRIES = 8192
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far: one per generated-code
+    cache miss (Spark's ``CodegenMetrics`` compilation-time histogram)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
@@ -99,6 +126,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # generated classes are reused across runs: Spark's default cache
+        # (100 entries) is smaller than the four driver_loops basket
+        # queries' ~210 classes, so each warm rerun recompiled them all.
+        # CODEGEN_CACHE_ENTRIES states the cap's source. Static conf.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Column calls stop walking the Python stack (about five py4j
+        # round trips each) to name the caller's line in an error's
+        # `== DataFrame ==` context; error class and text are unchanged
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
