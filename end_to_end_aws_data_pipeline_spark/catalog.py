@@ -8,6 +8,10 @@ At cluster scale the same API fronts partitioned parquet/lakehouse
 directories — `spark.read.parquet` gives partition pruning, predicate
 pushdown and column pruning for free, so *all* engine operators receive
 pruned scans without bespoke code.
+
+Driver-built rows enter plans only through ``local_frame``: they go in
+as a ``pyarrow.Table``, so the frame plans as ``LocalTableScan`` and
+executing it starts no Python worker.
 """
 
 from __future__ import annotations
@@ -15,8 +19,11 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 TABLES = (
     "region",
@@ -84,6 +91,21 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_event_ts(df)
     return df
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver rows (tuples in ``ddl``'s column order) as a DataFrame.
+
+    The one way driver-side rows enter a plan. The rows go in as a
+    ``pyarrow.Table`` built with the DDL's Arrow schema, so the frame
+    plans as ``LocalTableScan`` and executing it starts no Python
+    worker. A Python list handed to ``createDataFrame`` plans as a scan
+    of a Python RDD instead, which starts workers on every execution."""
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.cache import persisted
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
 from end_to_end_aws_data_pipeline_spark.ingest.clean import clean
 from end_to_end_aws_data_pipeline_spark.ingest.merge import upsert
 from end_to_end_aws_data_pipeline_spark.ingest.watermark import gate_strictly_newer
@@ -191,7 +191,7 @@ def q_etl_schema_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_row = ["101", "Asha", "03-06-2016", "50000.5", "00123", "-5", ""]
     schema = infer_schema_first_row(header, first_row)
     rows = [(f.name, SPARK_TO_REF[f.dataType.simpleString()]) for f in schema.fields]
-    return spark.createDataFrame(rows, schema="column_name string, data_type string")
+    return local_frame(spark, rows, "column_name string, data_type string")
 
 
 # ---------------------------------------------------------------------------

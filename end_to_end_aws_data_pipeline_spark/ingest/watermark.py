@@ -30,6 +30,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame
 from end_to_end_aws_data_pipeline_spark.ingest.merge import recover_dir, replace_dir
 
 SCHEMA = "table_name string, folder_ts long"
@@ -53,7 +54,7 @@ class WatermarkStore:
         return dict(zip(t["table_name"].to_pylist(), t["folder_ts"].to_pylist()))
 
     def read(self) -> DataFrame:
-        return self.spark.createDataFrame(list(self._state().items()), schema=SCHEMA)
+        return local_frame(self.spark, self._state().items(), SCHEMA)
 
     def get(self, table_name: str) -> int | None:
         return self._state().get(table_name)

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import dsum, dsum_sql
 from end_to_end_aws_data_pipeline_spark.registry import register
 
@@ -292,7 +292,7 @@ def q_join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join path — the strategy that survives when *both* sides are
     too large to broadcast."""
     p = table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(_BANDS, schema="band string, lo double, hi double")
+    bands = local_frame(spark, _BANDS, "band string, lo double, hi double")
     joined = bucketed_range_join(
         p, bands, point_col="p_retailprice", lo_col="lo", hi_col="hi", bucket_width=500.0
     )

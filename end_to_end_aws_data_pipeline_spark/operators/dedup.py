@@ -22,9 +22,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import spread, table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, spread, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.operators.iterate import (
+    LOCAL_MAX_EDGES,
     fixpoint,
     fused_ckpt,
     min_label_step,
@@ -1029,15 +1030,6 @@ FROM labeled
 """
 
 
-# Below this many (symmetrized) edges, connected components is a
-# single-node problem: O(E α(E)) union-find on the driver finishes in
-# milliseconds, while even ONE distributed label-propagation round costs
-# several shuffle stages. Mirrors the exact-cosine guard philosophy:
-# adaptive routing with the scale-safe path above the cap. 200k edges
-# ≈ a few MB collected — far below driver heap at any configuration.
-_LOCAL_CC_MAX_EDGES = 200_000
-
-
 def _driver_union_find(fwd: DataFrame) -> DataFrame:
     """Union-find (path halving + union by min-root) over a collected
     edge list; returns (node, label=min reachable id) with the input's
@@ -1050,8 +1042,8 @@ def _driver_union_find(fwd: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in fwd.collect():
-        a, b = r[0], r[1]
+    t = fwd.toArrow()
+    for a, b in zip(t.column(0).to_pylist(), t.column(1).to_pylist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -1061,20 +1053,15 @@ def _driver_union_find(fwd: DataFrame) -> DataFrame:
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
 
-    from pyspark.sql.types import StructField, StructType
-
-    node_t = fwd.schema["src"].dataType
-    schema = StructType(
-        [StructField("node", node_t), StructField("label", node_t)]
-    )
+    node_t = fwd.schema["src"].dataType.simpleString()
     rows = [(n, find(n)) for n in parent]
-    return fwd.sparkSession.createDataFrame(rows, schema)
+    return local_frame(fwd.sparkSession, rows, f"node {node_t}, label {node_t}")
 
 
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
-    local_max_edges: int = _LOCAL_CC_MAX_EDGES,
+    local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Label every node of an undirected edge list ``(src, dst)`` with
     the minimum node id reachable from it (its connected component).
@@ -1137,7 +1124,7 @@ def connected_components(
 def connected_components_star(
     edges: DataFrame,
     max_iterations: int = 50,
-    local_max_edges: int = _LOCAL_CC_MAX_EDGES,
+    local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -1507,7 +1494,7 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bitmap, m_bits = digest_bloom(corpus_digests, corpus_digests.count())
     bloom_df = F.broadcast(
-        docs.sparkSession.createDataFrame([(bitmap,)], "bloom array<long>")
+        local_frame(docs.sparkSession, [(bitmap,)], "bloom array<long>")
     )
     batch = (
         docs.filter(is_batch)
@@ -1622,7 +1609,8 @@ def q_dedup_incremental_bloom_sharded(spark: SparkSession, sf_dir: str) -> DataF
         corpus_digests, corpus_digests.count(), _BLOOM_N_SHARDS
     )
     bloom_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(s), bm) for s, bm in sorted(bitmaps.items())],
             "shard long, bloom array<long>",
         )

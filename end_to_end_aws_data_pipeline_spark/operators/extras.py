@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 
@@ -2092,7 +2092,7 @@ def q_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         # degenerate input (empty events): no chain to absorb over —
         # return the declared-empty shape; the oracle's final WHERE
         # guard agrees (see _rmv_oracle)
-        return spark.createDataFrame([], _RMV_SCHEMA)
+        return local_frame(spark, [], _RMV_SCHEMA)
     deg: dict[str, int] = {}
     for s, _t, n in edges:
         deg[s] = deg.get(s, 0) + n
@@ -2129,7 +2129,7 @@ def q_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
         # zero conversions in the full chain: removal effects are
         # undefined (division by zero on both engines) — empty result,
         # mirrored by the oracle's conv_full_fp > 0 guard
-        return spark.createDataFrame([], _RMV_SCHEMA)
+        return local_frame(spark, [], _RMV_SCHEMA)
     rows = []
     for c in chans:
         cr = absorb(variant(c))
@@ -2138,8 +2138,9 @@ def q_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     if tot == 0:
         # every removal left conversion untouched: credit shares are
         # 0/0 — same empty-result contract as the oracle's sum guard
-        return spark.createDataFrame([], _RMV_SCHEMA)
-    return spark.createDataFrame(
+        return local_frame(spark, [], _RMV_SCHEMA)
+    return local_frame(
+        spark,
         [(c, f_, cr, rm, rm * _RMV_R0 // tot) for c, f_, cr, rm in rows],
         _RMV_SCHEMA,
     )

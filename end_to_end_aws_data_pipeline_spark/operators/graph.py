@@ -27,9 +27,10 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.cache import persisted
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.operators.iterate import (
+    LOCAL_MAX_EDGES,
     fixpoint,
     fused_ckpt,
     min_label_step,
@@ -691,8 +692,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append(
             (i, n_removed, cur["n_nodes"], cur["n_edges"], cur["node_checksum"])
         )
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "round long, n_removed long, n_nodes long, n_edges long, "
         "node_checksum long",
     )
@@ -1335,7 +1336,8 @@ def q_graph_hyperanf(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = max(c for _, c in rows)
     pct = [(k, c, c * 10000 // mx) for k, c in rows]
     eff = min(k for k, _c, p in pct if p >= 9000)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(k, c, p, k == eff) for k, c, p in pct],
         "k int, nf_cents long, pct_bp long, is_eff_diameter boolean",
     )
@@ -1962,21 +1964,14 @@ def _scc_digraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.filter(coin % _SCC_SPARSIFY == 0)
 
 
-# Below this many edges SCC is a single-node problem: iterative Tarjan
-# on the driver is O(V+E) and finishes in milliseconds, while EVERY
-# round of the distributed decomposition costs several jobs — the same
-# adaptive routing (and the same cap) as dedup.py's _LOCAL_CC_MAX_EDGES.
-_SCC_LOCAL_MAX_EDGES = 200_000
-
-
 def _driver_tarjan(edges_df: DataFrame) -> DataFrame:
     """Iterative Tarjan SCC over a collected edge list; returns
     (node, scc=min member id). Caller guarantees the edge count is
-    bounded (the _SCC_LOCAL_MAX_EDGES routing contract)."""
+    bounded (the iterate.LOCAL_MAX_EDGES routing contract)."""
     adj: dict = {}
     all_nodes: set = set()
-    for r in edges_df.collect():
-        s, d = r[0], r[1]
+    t = edges_df.toArrow()
+    for s, d in zip(t.column(0).to_pylist(), t.column(1).to_pylist()):
         adj.setdefault(s, []).append(d)
         all_nodes.add(s)
         all_nodes.add(d)
@@ -2026,14 +2021,9 @@ def _driver_tarjan(edges_df: DataFrame) -> DataFrame:
                 u, _ = work[-1]
                 low[u] = min(low[u], low[v])
 
-    from pyspark.sql.types import StructField, StructType
-
-    node_t = edges_df.schema["src"].dataType
-    schema = StructType(
-        [StructField("node", node_t), StructField("scc", node_t)]
-    )
+    node_t = edges_df.schema["src"].dataType.simpleString()
     rows = [(n, label[n]) for n in all_nodes]
-    return edges_df.sparkSession.createDataFrame(rows, schema)
+    return local_frame(edges_df.sparkSession, rows, f"node {node_t}, scc {node_t}")
 
 
 def scc_labels(
@@ -2041,7 +2031,7 @@ def scc_labels(
     edges: DataFrame,
     max_outer: int = _SCC_MAX_OUTER,
     max_inner: int = _SCC_MAX_INNER,
-    local_max_edges: int = _SCC_LOCAL_MAX_EDGES,
+    local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """(node, scc) labels — scc = min member id — for EVERY node of the
     digraph, via the coloring algorithm (Orzan '04; the FW-BW/Slota

@@ -36,6 +36,13 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Below this many edges, connected components (dedup) and SCC (graph)
+# are single-node problems: union-find or iterative Tarjan on the
+# driver is near-linear and finishes in milliseconds, while every round
+# of the distributed loop costs several jobs. 200k edges is a few MB
+# on the driver, far below its heap at any configuration.
+LOCAL_MAX_EDGES = 200_000
+
 
 def fused_ckpt(df: DataFrame) -> DataFrame:
     """LAZY localCheckpoint for per-round lineage truncation: the

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import dsum, dsum_sql
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
@@ -308,7 +308,7 @@ def q_join_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/asof.py which bucketizes the range key first.)
     """
     p = table(spark, sf_dir, "part")
-    bands = spark.createDataFrame(_BANDS, schema="band string, lo double, hi double")
+    bands = local_frame(spark, _BANDS, "band string, lo double, hi double")
     return (
         p.join(
             F.broadcast(bands),

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 
@@ -225,13 +225,6 @@ def binned_exact_percentiles_multi(
     """
     import math
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
     cols = list(specs)
     # stack the k value columns into (g, cidx, v) rows: one scan feeds
     # every column's histogram; nulls drop per-column
@@ -297,15 +290,8 @@ def binned_exact_percentiles_multi(
         )
     # state-table schema mirrors the group column's actual type (a
     # hardcoded string type would break long/int group keys)
-    _state_schema = StructType(
-        [
-            StructField("sid", IntegerType()),
-            StructField("c_s", IntegerType()),
-            StructField("g_s", df.schema[group_col].dataType),
-            StructField("lo", DoubleType()),
-            StructField("hi", DoubleType()),
-        ]
-    )
+    g_type = df.schema[group_col].dataType.simpleString()
+    _state_schema = f"sid int, c_s int, g_s {g_type}, lo double, hi double"
     # search states: one per needed order statistic
     # state: [cidx, g, rank, lo, hi, k_local, population, value_or_None,
     #         point_suspect]
@@ -352,7 +338,7 @@ def binned_exact_percentiles_multi(
             (sid, s[0], s[1], float(s[3]), float(s[4]))
             for sid, s in enumerate(stalled)
         ]
-        st = spark.createDataFrame(rows, _state_schema)
+        st = local_frame(spark, rows, _state_schema)
         per_v = (
             base.join(
                 F.broadcast(st),
@@ -408,7 +394,8 @@ def binned_exact_percentiles_multi(
         if not rows:
             continue
         hist_states = rows
-        st = spark.createDataFrame(
+        st = local_frame(
+            spark,
             [
                 (sid, s[0], s[1], float(s[3]), float(s[4]))
                 for sid, s in enumerate(hist_states)
@@ -495,7 +482,7 @@ def binned_exact_percentiles_multi(
             (sid, s[0], s[1], float(s[3]), float(s[4]))
             for sid, s in enumerate(rest)
         ]
-        st = spark.createDataFrame(rows, _state_schema)
+        st = local_frame(spark, rows, _state_schema)
         got = (
             base.join(
                 F.broadcast(st),
@@ -562,8 +549,8 @@ def q_agg_percentiles_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for g in sorted(price)
     ]
-    raw = spark.createDataFrame(
-        rows,
+    raw = local_frame(
+        spark, rows,
         "l_returnflag: string, median_price: double, p95_price: double, "
         "q1_qty: double, min_price: double, max_price: double",
     )
@@ -1054,7 +1041,7 @@ def q_agg_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
         (g, float(ps[0.1]), float(ps[0.9])) for g, ps in sorted(bounds.items())
     ]
     b = F.broadcast(
-        v.sparkSession.createDataFrame(brows, "g string, lo double, hi double")
+        local_frame(v.sparkSession, brows, "g string, lo double, hi double")
     )
     j = v.join(b, "g")
     in_mid = (F.col("vc") >= F.col("lo")) & (F.col("vc") <= F.col("hi"))
@@ -1835,8 +1822,8 @@ def q_agg_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = sum(s - 1 for s in steps.values())
     span = max(int(r["hi"]) for r in per_g) - min(int(r["lo"]) for r in per_g)
     band = span * max(len(per_g), 1) // 4096 + 1
-    gm = spark.createDataFrame(
-        sorted(steps.items()), "g long, s long"
+    gm = local_frame(
+        spark, sorted(steps.items()), "g long, s long"
     )
     ranked_g, _sizes = segmented_group_rank(v, "g", "vc", ["uniq"], band)
     l1 = persisted(
@@ -1883,7 +1870,8 @@ def q_agg_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cw"),
         )
     )
-    spec = spark.createDataFrame(
+    spec = local_frame(
+        spark,
         [(q, (q * n_rows + 999_999) // 1_000_000) for q in _KLL_QS],
         "q_ppm long, t long",
     )

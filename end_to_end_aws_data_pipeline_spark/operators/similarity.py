@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import spread, table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, spread, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 
@@ -347,12 +347,13 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.filter(F.col("vec_id") % _QUERY_MOD == 0).orderBy("vec_id").limit(_MAX_QUERIES)
     )
     q_cents = cent_ids[(q_mat @ cent_mat.T).argmax(axis=1)]
-    qs = spark.createDataFrame(
+    qs = local_frame(
+        spark,
         [
             (int(qid), [int(x) for x in qv], int(cid))
             for qid, qv, cid in zip(q_ids, q_mat, q_cents)
         ],
-        schema="query_id long, qq array<long>, cent_id long",
+        "query_id long, qq array<long>, cent_id long",
     )
     dot_q = F.aggregate(
         F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
@@ -464,8 +465,8 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append(
                 (int(qid), [int(x) for x in q_mat[i]], int(cent_ids[j]), pr)
             )
-    qs = spark.createDataFrame(
-        rows, schema="query_id long, qq array<long>, cent_id long, probe_rank int"
+    qs = local_frame(
+        spark, rows, "query_id long, qq array<long>, cent_id long, probe_rank int"
     )
     dot_q = F.aggregate(
         F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
@@ -748,12 +749,13 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
         _assign, schema="vec_id long, cent_id long, q array<long>"
     )
     q_cents = cent_ids[(q_mat @ cent_mat.T).argmax(axis=1)]
-    qs = spark.createDataFrame(
+    qs = local_frame(
+        spark,
         [
             (int(qid), [int(x) for x in qv], int(cid))
             for qid, qv, cid in zip(q_ids, q_mat, q_cents)
         ],
-        schema="query_id long, qq array<long>, cent_id long",
+        "query_id long, qq array<long>, cent_id long",
     )
     dot_q = F.aggregate(
         F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
@@ -1032,12 +1034,13 @@ def q_ann_ivf_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     for s, qv in zip(qbs, q_mat):
         ci = cand[int(s)]
         q_cents.append(int(cent_ids[ci[(cent_mat[ci] @ qv).argmax()]]))
-    qs = spark.createDataFrame(
+    qs = local_frame(
+        spark,
         [
             (int(qid), [int(x) for x in qv], cid)
             for qid, qv, cid in zip(q_ids, q_mat, q_cents)
         ],
-        schema="query_id long, qq array<long>, cent_id long",
+        "query_id long, qq array<long>, cent_id long",
     )
     dot_q = F.aggregate(
         F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
@@ -1910,7 +1913,7 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = [
         (dim, int(v), float(v) / _PCA_VS) for dim, v in _pca_power_core(gram, d)
     ]
-    return spark.createDataFrame(out, "dim int, v_fp long, loading double")
+    return local_frame(spark, out, "dim int, v_fp long, loading double")
 
 
 # ---------------------------------------------------------------------------
@@ -2115,8 +2118,8 @@ def q_embed_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cid, row in zip(cent_ids, cent_mat)
     ]
     cdf = F.broadcast(
-        assign.sparkSession.createDataFrame(
-            cent_rows, "cent_id long, cq array<long>"
+        local_frame(
+            assign.sparkSession, cent_rows, "cent_id long, cq array<long>"
         )
     )
     dot = F.aggregate(
@@ -2144,8 +2147,8 @@ def q_embed_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(len(cent_ids))
     ]
     sep = F.broadcast(
-        assign.sparkSession.createDataFrame(
-            sep_rows, "cent_id long, nn_cent long, nn_dot long"
+        local_frame(
+            assign.sparkSession, sep_rows, "cent_id long, nn_cent long, nn_dot long"
         )
     )
     return comp.join(sep, "cent_id").select(
@@ -2275,21 +2278,6 @@ def q_embed_kcenter_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.greatest("maxdot", _dot(sel["q"])).alias("maxdot"),
             ).localCheckpoint(eager=True)
 
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("seed_rank", IntegerType()),
-            StructField("vec_id", LongType()),
-            StructField("radius_sim", DoubleType()),
-        ]
-    )
     import math
 
     rows = [
@@ -2302,4 +2290,5 @@ def q_embed_kcenter_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for rank, vid, md in picks
     ]
-    return spark.createDataFrame(rows, schema).orderBy("seed_rank")
+    schema = "seed_rank int, vec_id long, radius_sim double"
+    return local_frame(spark, rows, schema).orderBy("seed_rank")

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.cache import persisted
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -443,12 +443,12 @@ def segmented_group_rank(
             off_rows.append((g, b, acc, n_g))
             acc += c
     g_type = df.schema[grp_col].dataType.simpleString()
-    offsets = df.sparkSession.createDataFrame(
-        off_rows,
+    offsets = local_frame(
+        df.sparkSession, off_rows,
         f"{grp_col} {g_type}, bucket long, offset long, n_g long",
     )
-    sizes = df.sparkSession.createDataFrame(
-        size_rows, f"{grp_col} {g_type}, n_g long"
+    sizes = local_frame(
+        df.sparkSession, size_rows, f"{grp_col} {g_type}, n_g long"
     )
     local = o.withColumn(
         "local_rn",
@@ -2779,16 +2779,13 @@ def q_timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t long, day string, y_c long, fitted_c long, resid_c long, "
         "level_c long, trend_c long"
     )
+    # fewer than 2 distinct days: no steps, an empty frame as in the oracle
     steps = _holt_steps(ys)
-    if not steps:
-        # degenerate series (<2 distinct days): no trend is definable;
-        # mirror the oracle's graceful empty result instead of crashing
-        return spark.createDataFrame([], schema)
     out = [
         (t, days[t - 1], y, fitted, resid, nl, nb)
         for (t, y, fitted, resid, nl, nb) in steps
     ]
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -3033,13 +3030,11 @@ def q_timeseries_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level_c long, trend_c long, seasonal_c long"
     )
     steps = _hw_steps(ys)
-    if not steps:
-        return spark.createDataFrame([], schema)
     out = [
         (t, days[t - 1], y, fitted, resid, nl, nb, ns)
         for (t, y, fitted, resid, nl, nb, ns) in steps
     ]
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import spread, table
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, spread, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 
@@ -199,7 +199,7 @@ def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     'unknown' when no marker hits."""
     d = table(spark, sf_dir, "documents")
     lex = F.broadcast(
-        spark.createDataFrame(_LANG_LEXICON, schema="lex_lang string, word string")
+        local_frame(spark, _LANG_LEXICON, "lex_lang string, word string")
     )
     tok = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("word"))
     hits = tok.join(lex, "word").groupBy("doc_id", "lex_lang").agg(
@@ -505,7 +505,7 @@ def q_text_sentiment(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized score."""
     d = table(spark, sf_dir, "documents")
     lex = F.broadcast(
-        spark.createDataFrame(_SENT_LEXICON, schema="word string, polarity int")
+        local_frame(spark, _SENT_LEXICON, "word string, polarity int")
     )
     tok = d.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("word"))
     scores = (
@@ -910,8 +910,8 @@ def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (step, lhs, rhs, merged, pair_count) — the merges file a
     BPE tokenizer ships."""
     merges, _vocab = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "step int, lhs string, rhs string, merged string, pair_count long"
+    return local_frame(
+        spark, merges, "step int, lhs string, rhs string, merged string, pair_count long"
     )
 
 
@@ -1492,9 +1492,10 @@ def q_text_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((p, c) for p, c in model.items() if len(p) > 1),
         key=lambda kv: (-kv[1], kv[0]),
     )[:_ULM_TOP]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, p, c) for i, (p, c) in enumerate(rows)],
-        schema="rank int, piece string, piece_count long",
+        "rank int, piece string, piece_count long",
     )
 
 
@@ -1790,8 +1791,8 @@ def q_text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     lex = F.broadcast(
-        spark.createDataFrame(
-            _LANG_LEXICON, schema="lex_lang string, word string"
+        local_frame(
+            spark, _LANG_LEXICON, "lex_lang string, word string"
         )
     )
     tok = d.select(

@@ -1,10 +1,12 @@
-"""Physical-plan audits: machine-checkable assertions that the plans we
-ship are the plans we want at 100 TB.
+"""Plan text for audits: the formatted explain and the final physical
+plan of a DataFrame.
 
-`tests/test_plans.py` runs these on the headline queries so a
-regression that silently drops a pushdown, de-broadcasts a dim join, or
-kicks an operator out of whole-stage codegen fails CI — plan quality is
-part of correctness here, not a hope.
+The predicates the tests assert over these plans (pushed filters,
+forced broadcasts, shuffle counts, whole-stage codegen, global-window
+row flow) live in `tests/plan_checks.py`: plan quality is part of
+correctness here, and `tests/test_plans.py` fails on a regression that
+drops a pushdown, de-broadcasts a dim join, or kicks an operator out of
+whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -23,145 +25,3 @@ def physical_plan(df: DataFrame) -> str:
     # an executed AQE plan echoes the pre-adaptive plan below the final
     # one — keep only the final section or every operator counts twice
     return plan.split("== Initial Plan ==")[0]
-
-
-def has_pushed_filters(df: DataFrame, fragment: str | None = None) -> bool:
-    """True if the scan carries PushedFilters (optionally matching a
-    column fragment) — i.e. the predicate reaches the parquet reader."""
-    plan = formatted_plan(df)
-    for line in plan.splitlines():
-        if "PushedFilters" in line and "[]" not in line.replace(" ", ""):
-            if fragment is None or fragment in line:
-                return True
-    return False
-
-
-def scan_read_schema(df: DataFrame, table_fragment: str) -> str:
-    """ReadSchema of the scan whose location matches table_fragment —
-    to assert column pruning (a 2-column projection must not scan 16)."""
-    plan = formatted_plan(df)
-    blocks = plan.split("(")
-    for i, b in enumerate(blocks):
-        if table_fragment in b and "ReadSchema" in b:
-            for line in b.splitlines():
-                if line.strip().startswith("ReadSchema"):
-                    return line.strip()
-    # fallback: any ReadSchema line mentioning the fragment in context
-    lines = plan.splitlines()
-    for i, line in enumerate(lines):
-        if table_fragment in line:
-            for j in range(i, min(i + 12, len(lines))):
-                if "ReadSchema" in lines[j]:
-                    return lines[j].strip()
-    return ""
-
-
-def forced_broadcast_count(df: DataFrame) -> int:
-    """Number of *explicit* broadcast hints surviving to the optimized
-    logical plan (`rightHint=(strategy=broadcast)` on a Join node).
-
-    Auto-selected broadcasts (size-threshold / AQE runtime stats) do NOT
-    appear here — only user-forced `F.broadcast(...)` hints. The scale
-    invariant is: forced hints are allowed ONLY on fixed-cardinality
-    inputs (region=5, nation=25, literal band/lexicon tables); an
-    sf-scaling table behind a forced hint bypasses AQE's size check and
-    OOMs executors at 100 TB.
-    """
-    return (
-        df._jdf.queryExecution()  # noqa: SLF001
-        .optimizedPlan()
-        .toString()
-        .count("strategy=broadcast")
-    )
-
-
-def count_broadcast_joins(df: DataFrame) -> int:
-    return physical_plan(df).count("BroadcastHashJoin") + physical_plan(df).count(
-        "BroadcastNestedLoopJoin"
-    )
-
-
-def count_shuffles(df: DataFrame) -> int:
-    """Exchange operators in the physical plan (each is a full shuffle
-    of its input — the scarcest resource at 100 TB)."""
-    return physical_plan(df).count("Exchange hashpartitioning") + physical_plan(
-        df
-    ).count("Exchange rangepartitioning")
-
-
-def has_wholestage_codegen(df: DataFrame) -> bool:
-    """Under AQE the codegen'd stages only appear in the *final* plan,
-    so this executes the query (cheap at test SF) and inspects the
-    executed plan."""
-    df.collect()  # count() would spawn a separate plan; collect
-    # finalizes THIS DataFrame's adaptive plan in place
-    plan = physical_plan(df)
-    # final AQE plans mark codegen'd stages as `*(n) Operator`
-    return "WholeStageCodegen" in plan or "*(" in plan
-
-
-def uses_take_ordered(df: DataFrame) -> bool:
-    """ORDER BY + LIMIT should plan TakeOrderedAndProject (per-partition
-    top-N + merge), never a global sort."""
-    return "TakeOrderedAndProject" in physical_plan(df)
-
-
-def global_window_input_rows(df: DataFrame) -> list[tuple[str, int]]:
-    """EXECUTE df and return, for every UNPARTITIONED WindowExec /
-    WindowGroupLimitExec in the final adaptive plan, (window operator
-    one-line description, rows that flowed through it).
-
-    A window's output rows equal its input rows, so the node's own
-    numOutputRows metric IS the single-partition row count the
-    WindowExec warning is about. This turns every "bounded global
-    window" justification comment into an executable gate: the
-    documented bound is asserted against the measured row flow, not
-    trusted. Foldable partitionBy(lit) tricks don't fool it — the
-    optimizer folds those away and the node still reports empty
-    partitionSpec (see scale-lessons)."""
-    df.collect()
-    qe = df._jdf.queryExecution()  # noqa: SLF001
-    out: list[tuple[str, int]] = []
-
-    def rows_of(node) -> int:
-        m = node.metrics()
-        it = m.iterator()
-        best = -1
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() == "numOutputRows":
-                best = kv._2().value()
-        if best >= 0:
-            return best
-        # some nodes (e.g. SortExec) carry no row metric: descend
-        ch = node.children()
-        for i in range(ch.size()):
-            r = rows_of(ch.apply(i))
-            if r >= 0:
-                return r
-        return -1
-
-    def walk(node) -> None:
-        name = node.getClass().getSimpleName()
-        if name == "AdaptiveSparkPlanExec":
-            walk(node.executedPlan())
-            return
-        if name in ("WindowExec", "WindowGroupLimitExec"):
-            if node.partitionSpec().isEmpty():
-                child = node.children().apply(0)
-                n = rows_of(child)
-                if n < 0:
-                    n = rows_of(node)
-                out.append((node.verboseStringWithOperatorId()
-                            if hasattr(node, "verboseStringWithOperatorId")
-                            else name, int(n)))
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-        # reused exchanges / subqueries hide under innerChildren
-        inner = node.innerChildren()
-        for i in range(inner.size()):
-            walk(inner.apply(i))
-
-    walk(qe.executedPlan())
-    return out

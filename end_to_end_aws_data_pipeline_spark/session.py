@@ -13,12 +13,13 @@ Local tests run on ``local[N]`` but every default here is chosen for the
   real cluster AQE coalesces from an intentionally high initial value).
 - Per-call costs paid once per session, not per query: generated
   classes are reused across runs (the codegen cache holds the whole
-  suite's working set, see ``CODEGEN_CACHE_ENTRIES``), and Column calls
+  suite's working set, see ``CODEGEN_CACHE_ENTRIES``, and whole-stage
+  class names carry no adaptive stage id), and Column calls
   no longer capture a Python call site. Error messages keep their error
   class and text, but their ``== DataFrame ==`` context no longer names
   the Python line that built the failing column.
 
-Caveat: both hold only in a session ``get_spark`` creates. The cache
+Caveat: these hold only in a session ``get_spark`` creates. The cache
 size is a static conf, and PySpark reads the debugging switch once per
 process. The ``__spark_entry__`` harness session, ``tools/check_oracle.py
 --bare`` and a ``get_spark`` that ``getOrCreate``s onto an existing
@@ -47,8 +48,8 @@ RUNTIME_REQUIRED_CONFS = {
 # generated-code cache entries: one bench.py session over the full
 # list (warm-up plus 2 reps, sf0.001, local[4]) compiled 3,465 distinct
 # classes under an unbounded cap, read with codegen_compiles; this is
-# the power of two at least twice that. A warm rep still compiled 194
-# (classes whose source differs per run), which the headroom absorbs
+# the power of two at least twice that. With stage ids out of the class
+# names, a warm rep of that session compiles 14-24 classes (186 before)
 CODEGEN_CACHE_ENTRIES = 8192
 
 
@@ -131,6 +132,10 @@ def get_spark(
         # queries' ~210 classes, so each warm rerun recompiled them all.
         # CODEGEN_CACHE_ENTRIES states the cap's source. Static conf.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # ...and hit that cache: a whole-stage class name carries its
+        # codegen stage id, which adaptive execution assigns in the order
+        # stages materialize, so an identical stage rerun gets new source
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Column calls stop walking the Python stack (about five py4j
         # round trips each) to name the caller's line in an error's
         # `== DataFrame ==` context; error class and text are unchanged

@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema
+from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema, local_frame
 from end_to_end_aws_data_pipeline_spark.registry import register
 from end_to_end_aws_data_pipeline_spark.streaming.store import (
     drain,
@@ -311,8 +311,8 @@ def merge_sketches(spark: SparkSession, acc: str, n_rows: int) -> DataFrame:
                 wsum == n_rows,
             )
         )
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        spark, out,
         "q_ppm long, target_rank long, est_vc long, err_bound long, "
         "n_rows long, merged_items long, sketch_items long, "
         "n_batches long, weight_exact boolean",
@@ -567,7 +567,8 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         e[1] += t_by_g[int(r["g"])]
         e[2] += 1
     top = sorted(cand.items(), key=lambda kv: (-kv[1][0], kv[0]))[:_HH_TOP]
-    top_df = spark.createDataFrame(
+    top_df = local_frame(
+        spark,
         [
             (k, lo, lo + total_t - tcov, groups)
             for k, (lo, tcov, groups) in top

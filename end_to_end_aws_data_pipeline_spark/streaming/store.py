@@ -34,7 +34,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import scratch_root
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame, scratch_root
 
 # snapshot shards: hash(key) % BUCKETS, partitionBy'd on the bucket
 BUCKETS = 8
@@ -220,7 +220,7 @@ def read_prev(
     empty state for batch 0.  Read with an explicit schema: an inferred
     read costs one footer-sampling job per micro-batch."""
     if bid == 0:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     prev = os.path.join(store, f"b{bid - 1}")
     if not os.path.isdir(prev):
         # the checkpoint proves batch bid-1 committed, so its snapshot

@@ -15,18 +15,18 @@ from end_to_end_aws_data_pipeline_spark.operators.relational import (
     q_filter_predicates,
     q_sort_limit,
 )
-from end_to_end_aws_data_pipeline_spark.plans.explain import (
+from end_to_end_aws_data_pipeline_spark.plans.explain import physical_plan
+from end_to_end_aws_data_pipeline_spark.plans.scale import salted_agg
+from tests.conftest import SF_SMOKE
+from tests.plan_checks import (
     count_broadcast_joins,
     count_shuffles,
     forced_broadcast_count,
     has_pushed_filters,
     has_wholestage_codegen,
-    physical_plan,
     scan_read_schema,
     uses_take_ordered,
 )
-from end_to_end_aws_data_pipeline_spark.plans.scale import salted_agg
-from tests.conftest import SF_SMOKE
 
 
 def test_q1_pushdown_and_codegen(spark):
@@ -226,11 +226,7 @@ def test_cdc_and_nprobe_plans(spark):
     from end_to_end_aws_data_pipeline_spark.operators.similarity import (
         q_ann_ivf_nprobe,
     )
-    from end_to_end_aws_data_pipeline_spark.plans.explain import (
-        count_broadcast_joins,
-        count_shuffles,
-        formatted_plan,
-    )
+    from end_to_end_aws_data_pipeline_spark.plans.explain import formatted_plan
 
     cdc = q_etl_cdc_apply(spark, SF_SMOKE)
     assert "Cartesian" not in formatted_plan(cdc)
@@ -1093,9 +1089,7 @@ def test_global_windows_are_bounded(spark):
         sweep,
         text,
     )
-    from end_to_end_aws_data_pipeline_spark.plans.explain import (
-        global_window_input_rows,
-    )
+    from tests.plan_checks import global_window_input_rows
     from end_to_end_aws_data_pipeline_spark.registry import queries
 
     qs = queries()
@@ -1205,9 +1199,7 @@ def test_round8_new_ops_plan_posture(spark):
     from end_to_end_aws_data_pipeline_spark.operators.percentiles import (
         q_agg_histogram,
     )
-    from end_to_end_aws_data_pipeline_spark.plans.explain import (
-        global_window_input_rows,
-    )
+    from tests.plan_checks import global_window_input_rows
     from end_to_end_aws_data_pipeline_spark.operators.sweep import (
         q_window_streaks,
     )
@@ -1255,9 +1247,7 @@ def test_round8_sketch_and_segment_ops_plan_posture(spark):
     from end_to_end_aws_data_pipeline_spark.operators.sweep import (
         q_agg_rfm_segments,
     )
-    from end_to_end_aws_data_pipeline_spark.plans.explain import (
-        global_window_input_rows,
-    )
+    from tests.plan_checks import global_window_input_rows
 
     kll = q_agg_kll_quantiles(spark, SF_SMOKE)
     p = physical_plan(kll)
@@ -1297,9 +1287,7 @@ def test_round9_new_ops_plan_posture(spark):
     from end_to_end_aws_data_pipeline_spark.operators.sweep import (
         q_events_pattern_match,
     )
-    from end_to_end_aws_data_pipeline_spark.plans.explain import (
-        global_window_input_rows,
-    )
+    from tests.plan_checks import global_window_input_rows
 
     pm = q_events_pattern_match(spark, SF_SMOKE)
     p = physical_plan(pm)
