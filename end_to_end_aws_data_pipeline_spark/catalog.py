@@ -38,9 +38,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def scratch_root() -> str:
     """Where derived and staged files go: the temp dir (``TMPDIR``)."""
     return tempfile.gettempdir()

@@ -1,13 +1,7 @@
-"""Vector math over ``array<float|double>`` columns.
-
-Two implementations of the same semantics:
-- expression form (zip_with/aggregate folds): JVM-side, codegen'd,
-  deterministic left-to-right accumulation — used by every
-  oracle-checked operator;
-- Arrow-batched Pandas UDF form (numpy): the escape hatch pattern for
-  math that built-ins cannot express; numpy's pairwise summation makes
-  results differ from the fold in the last ulps, so it is used only
-  where bit-exactness doesn't matter (tests assert 1e-9 closeness).
+"""Vector math over ``array<float|double>`` columns, as expressions
+(zip_with/aggregate folds): JVM-side, codegen'd, deterministic
+left-to-right accumulation, so every oracle-checked operator gets the
+same bits.
 
 Elements are cast to DOUBLE before arithmetic so float32 storage widens
 identically everywhere.
@@ -15,11 +9,8 @@ identically everywhere.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def fsum(arr: Column) -> Column:
@@ -51,17 +42,3 @@ def l2_normalize(a: Column) -> Column:
     cosine queries)."""
     n = l2_norm(a)
     return F.transform(a, lambda x: x.cast("double") / n)
-
-
-@F.pandas_udf(T.DoubleType())
-def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched cosine: numpy vectorized over the batch."""
-    import numpy as np
-
-    # widen to float64 first — Arrow hands over raw float32 storage and
-    # numpy would otherwise accumulate in float32
-    av = np.stack(a.to_numpy()).astype(np.float64)
-    bv = np.stack(b.to_numpy()).astype(np.float64)
-    num = (av * bv).sum(axis=1)
-    den = np.linalg.norm(av, axis=1) * np.linalg.norm(bv, axis=1)
-    return pd.Series(num / den)

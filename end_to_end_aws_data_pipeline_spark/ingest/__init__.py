@@ -13,7 +13,6 @@ from end_to_end_aws_data_pipeline_spark.ingest.infer import (  # noqa: F401
 from end_to_end_aws_data_pipeline_spark.ingest.clean import (  # noqa: F401
     clean,
     null_audit,
-    observed_clean,
 )
 from end_to_end_aws_data_pipeline_spark.ingest.merge import upsert  # noqa: F401
 from end_to_end_aws_data_pipeline_spark.ingest.watermark import (  # noqa: F401

@@ -95,19 +95,6 @@ def _observed(observation: Observation) -> dict:
     return observation.get if observation._jo.getRow().size() else {}
 
 
-def observed_clean(df: DataFrame, observation_name: str = "null_audit"):
-    """clean() with a zero-extra-pass audit: the audit aggregates are
-    observed *while* the cleaning query itself executes, so the counts
-    cost nothing beyond the load (the `df.observe()` channel of
-    SURVEY.md §4.3).
-
-    Returns (cleaned_df, observation); read ``observation.get`` AFTER an
-    action on cleaned_df.
-    """
-    observed, obs = observe_audit(df, observation_name)
-    return clean(observed), obs
-
-
 def clean(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """dropna(any) + full-row dedup (ref delta_load.py:97-98).
 

@@ -268,7 +268,7 @@ def q_etl_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE shuffle each side on the join key (both versions
     of a real table are co-partitioned on disk in practice — bucketed
-    layouts make this diff exchange-free, see plans/scale.py), then a
+    layouts make this diff exchange-free), then a
     tiny 4-row aggregate. The delta sum goes through exact DECIMAL so
     'net drift of 0.00' is a bit-exact statement, not a float
     coincidence. Works unchanged at any version pair cardinality; the

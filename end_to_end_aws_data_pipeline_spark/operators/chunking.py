@@ -279,8 +279,8 @@ def q_sample_exact_k_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     window stays healthy because cardinality spreads the hash
     partitioning (see q_curation_source_cap's note — few-stratum
     windows are the regime to watch, and lang has 5 values here, each
-    group a fraction of the corpus; a known-hot stratum routes through
-    the salted two-phase top-k in plans/scale.py)."""
+    group a fraction of the corpus; a known-hot stratum would need a
+    salted two-phase top-k)."""
     from pyspark.sql.window import Window as W
 
     d = table(spark, sf_dir, "documents")

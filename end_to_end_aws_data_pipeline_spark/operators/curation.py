@@ -566,9 +566,9 @@ def q_curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     handful of rows; this is the opposite regime from few-stratum
     partitionBy (see q_sample_stratified's note, where per-stratum
     windows are the anti-pattern). A known-hot tail (a domain with
-    billions of pages) routes through the salted two-phase top-k in
-    plans/scale.py instead: per-salt row_number <= cap, merge, re-rank —
-    same result, bounded reducer input.
+    billions of pages) would need a salted two-phase top-k instead:
+    per-salt row_number <= cap, merge, re-rank — same result, bounded
+    reducer input.
     """
     d = table(spark, sf_dir, "documents")
     from pyspark.sql.window import Window

@@ -19,6 +19,8 @@ xxhash64) — no Python in the hot path.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,20 +59,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_copies"),
         F.min("n_chars").alias("n_chars"),
     ).drop("text")
-
-
-def exact_dedup(df: DataFrame, cols: list[str], keep_order_col: str) -> DataFrame:
-    """Library form: keep the min-``keep_order_col`` row per duplicate
-    group. Hashes wide columns to digests before the shuffle."""
-    from pyspark.sql import Window as W
-
-    digest = F.sha2(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols]), 256)
-    w = W.partitionBy(digest).orderBy(F.col(keep_order_col))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -592,60 +580,6 @@ _SIMHASH_BITS = 64
 _SIMHASH_BAND_BITS = 16  # 4 bands → catches hamming ≤ 3 pairs
 
 
-def _simhash_words(text: Column) -> Column:
-    """Tokens as structs of two md5-derived 60-bit halves: w1 = hex
-    chars 1-15, w2 = chars 16-30. Bit i of the token hash = (w1 >> i)&1
-    for i < 60 else (w2 >> (i-60))&1 — two conv() calls per token
-    instead of one per hex digit; DuckDB replays both halves via
-    ('0x' || substr(md5(w), ...))::BIGINT."""
-
-    def _halves(w: Column) -> Column:
-        h = F.md5(w)
-        return F.struct(
-            F.conv(F.substring(h, 1, 15), 16, 10).cast("long").alias("w1"),
-            F.conv(F.substring(h, 16, 15), 16, 10).cast("long").alias("w2"),
-        )
-
-    return F.transform(F.split(text, " "), _halves)
-
-
-def _half_bit(w1: Column, w2: Column, i: int) -> Column:
-    src, off = (w1, i) if i < 60 else (w2, i - 60)
-    return F.shiftright(src, off).bitwiseAND(F.lit(1))
-
-
-def simhash(text: Column, bits: int = _SIMHASH_BITS) -> Column:
-    """SimHash over word tokens: per bit, sum ±1 votes of each token's
-    hash bit; the sign vector packs into a long. Pure fold expressions.
-
-    Token hashes are md5-derived (see _simhash_words) so the
-    fingerprint is engine-independent — DuckDB computes the identical
-    value, which is what upgrades the driver check from rows-only to
-    full hash-match.
-
-    (Library form for column-level use; the bulk query below computes
-    the same fingerprint through explode + codegen'd aggregates, which
-    is the faster shape for whole-corpus runs.)
-    """
-    hashes = _simhash_words(text)
-
-    def _vote(i: int) -> Column:  # closure factory, see minhash_signature note
-        return F.aggregate(
-            hashes,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + F.when(_half_bit(h["w1"], h["w2"], i) == 1, 1).otherwise(-1),
-        )
-
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        # bit 63 of 1<<63 overflows signed long via F.lit; accumulate
-        # with to-signed wraparound semantics
-        weight = F.lit(1 << i if i < 63 else -(1 << 63)).cast("long")
-        out = out + F.when(_vote(i) > 0, weight).otherwise(0)
-    return out
-
-
 def _simhash_by_agg(tokens: DataFrame, bits: int = _SIMHASH_BITS) -> DataFrame:
     """tokens(doc_id, w) → (doc_id, sh): per-bit ±1 vote sums as
     codegen'd aggregates (map-side combinable), then pack the sign
@@ -660,8 +594,8 @@ def _simhash_by_agg(tokens: DataFrame, bits: int = _SIMHASH_BITS) -> DataFrame:
     cost that many py4j round trips of driver latency per invocation
     (the hyperanf plan-construction lesson; results hash-equal, the
     physical aggregate is the same 64 map-side-combined sums).
-    shiftleft(1L, 63) wraps to BIGINT min exactly like the old
-    F.lit(-(1 << 63)) weight, so the packed value is bit-identical."""
+    shiftleft(1L, 63) wraps to BIGINT min exactly like the oracle's
+    -(1 << 63) weight, so the packed value is bit-identical."""
     h = F.md5(F.col("w"))
     halves = tokens.select(
         "doc_id",
@@ -1526,7 +1460,6 @@ def q_dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sharded bloom (the >10^8-element shape the single bitmap can't reach)
 # ---------------------------------------------------------------------------
 
-_BLOOM_SHARD_SEED = 97  # disjoint from the k=7 position seeds 0..6
 _BLOOM_N_SHARDS = 8
 
 
@@ -2674,8 +2607,8 @@ def q_contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # subsets by doc_id, different token masses so mass-weighting shows.
 _BP_FOOT_A = "subscribe to our newsletter for weekly product updates"  # 8 tok
 _BP_FOOT_B = "terms of service and privacy policy"                     # 6 tok
-_BP_MD5_A = "e52fda1587a2ab02d424c5cefac0e4a3"
-_BP_MD5_B = "08cf7e6733016a00a18c35c9e787d45f"
+_BP_MD5_A = hashlib.md5(_BP_FOOT_A.encode()).hexdigest()
+_BP_MD5_B = hashlib.md5(_BP_FOOT_B.encode()).hexdigest()
 
 _LINE_WEIGHT_ORACLE = f"""
 WITH t AS MATERIALIZED (

@@ -572,8 +572,6 @@ def q_events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # correlation matrix from exact decimal moments
 # ---------------------------------------------------------------------------
 
-_CORR_COLS = ("l_quantity", "l_extendedprice", "l_discount")
-
 _CORR_ORACLE = """
 WITH m AS (
   SELECT count(*) AS n,

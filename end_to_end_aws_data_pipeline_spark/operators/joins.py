@@ -19,8 +19,7 @@ Scale notes, per query:
   gates this invariant.
 - fact-fact joins (orders ⋈ lineitem) shuffle on the join key once;
   AQE coalesces post-shuffle partitions. On a real lake these tables
-  would be bucketed by orderkey to remove even that shuffle
-  (`plans/scale.py` documents the bucketing DDL).
+  would be bucketed by orderkey to remove even that shuffle.
 """
 
 from __future__ import annotations

@@ -32,12 +32,6 @@ from pyspark.sql import functions as F
 from end_to_end_aws_data_pipeline_spark.catalog import table
 from end_to_end_aws_data_pipeline_spark.registry import register
 
-# schema convention for multimodal tables
-BINARY_DOC_SCHEMA = (
-    "doc_id long, payload binary, "
-    "meta struct<media_type: string, n_bytes: long, source: string>"
-)
-
 _FEATURE_SCHEMA = (
     "doc_id long, media_type string, n_bytes long, first_byte int, "
     "fake_width long, fake_height long, checksum8 long"

@@ -1745,7 +1745,6 @@ def q_embed_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PCA_QS = 4096  # component quantization (2^12): float32 → int, ~0.01% err
 _PCA_VS = 1 << 20  # eigenvector fixed-point scale between iterations
-_PCA_CS = 1 << 30  # covariance renormalization target
 _PCA_ITERS = 3
 
 

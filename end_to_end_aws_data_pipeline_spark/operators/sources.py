@@ -435,21 +435,6 @@ def q_source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def read_evolving_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution-tolerant parquet read: ``mergeSchema`` unions
-    the footers of every file so columns added by later writers appear
-    (null-filled for older files) and partition-directory columns are
-    discovered — the lakehouse contract for a table whose producers
-    evolve independently (generalizes ref delta_load.py:120-158's
-    ALTER-TABLE-on-new-columns dance to a read-side no-op).
-
-    At 100 TB this costs a distributed footer read per file on first
-    planning; production tables front this with a catalog/metastore
-    schema, so the helper belongs on evolving RAW zones, not curated
-    ones."""
-    return spark.read.option("mergeSchema", "true").parquet(path)
-
-
 # ---------------------------------------------------------------------------
 # XML source (built-in in Spark 4: the spark-xml package was merged
 # upstream — SPARK-44265), exercised parquet → XML → schema'd scan

@@ -2139,8 +2139,6 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BM25_TERMS = ("hash", "join", "merge")
-_BM25_K1 = 1.2  # term-frequency saturation
-_BM25_B = 0.75  # length normalization
 _BM25_TOP = 10
 
 # shared CTE chain (tokenize -> tf/df -> per-(doc,term) micro score ->

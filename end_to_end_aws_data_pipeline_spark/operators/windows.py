@@ -10,8 +10,8 @@ keys here (orderkey, custkey, user_id) have bounded group sizes, so no
 single task ever materializes an unbounded frame; the sort within each
 partition is the only extra cost. Skewed partition keys would be the
 risk at 100 TB — these keys are near-uniform by construction, and
-`plans/scale.py::salted` documents the salting pattern for ones that
-are not.
+`plans/scale.py::salted_agg` is the salting pattern for ones that are
+not.
 """
 
 from __future__ import annotations

@@ -493,8 +493,8 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: the dimension broadcast is per-executor O(|dim|); for
     dimensions too big to broadcast, the scale path is the same query
-    with the dimension bucketed on the join key (plans/scale.py) so
-    each micro-batch does a co-located join, or a state-store-backed
+    with the dimension bucketed on the join key so each micro-batch
+    does a co-located join, or a state-store-backed
     stream-stream join with the dimension replayed as a CDC stream.
     """
     from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs

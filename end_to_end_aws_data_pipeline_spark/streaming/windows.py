@@ -76,14 +76,6 @@ def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def with_watermark(events: DataFrame, delay: str = "10 minutes") -> DataFrame:
-    """Late-data bound: streaming state for windows older than
-    max(event time) − delay is finalized and late rows are dropped —
-    the streaming analogue of the reference's strictly-newer timestamp
-    gate (ref second_lambda_function.py:76-88)."""
-    return events.withWatermark("ts", delay)
-
-
 def ohlc_bars(events: DataFrame, width: str = "1 hour") -> DataFrame:
     """Streaming-capable OHLC bars per event type: open/close via
     min_by/max_by over the (ts, event_id) struct — lexicographic, so

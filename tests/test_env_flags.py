@@ -1,6 +1,7 @@
-"""The package reads exactly three ``SPARK_GRAFT_*`` environment
-variables, all configuration: the core count, the driver memory and the
-default data directory. A new flag, or an A/B lever, fails here."""
+"""The package reads exactly two ``SPARK_GRAFT_*`` environment
+variables, both configuration: the core count and the driver memory.
+The data directory is an argument of every query; ``bench.py`` and
+the tools read their own. A new flag, or an A/B lever, fails here."""
 
 from __future__ import annotations
 
@@ -17,4 +18,4 @@ def test_package_env_flags_are_configuration_only():
         for p in root.rglob("*.py")
         for m in re.findall(r"SPARK_GRAFT_([A-Z_]+)", p.read_text())
     }
-    assert names == {"CPUS", "DRIVER_MEM", "SF_DIR"}
+    assert names == {"CPUS", "DRIVER_MEM"}

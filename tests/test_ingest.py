@@ -331,27 +331,3 @@ def test_scd2_build_intervals(spark):
     }
 
 
-def test_read_evolving_parquet_merges_schemas(spark, tmp_path):
-    """Three writer generations — base columns, +added column, under a
-    new partition dir — read back as ONE schema with nulls where a
-    generation lacked the column, and the partition column discovered."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_aws_data_pipeline_spark.operators.sources import (
-        read_evolving_parquet,
-    )
-
-    root = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a")], "k long, v string").write.parquet(
-        f"{root}/gen=1"
-    )
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "k long, v string, score double"
-    ).write.parquet(f"{root}/gen=2")
-    out = read_evolving_parquet(spark, root)
-    assert set(out.columns) == {"k", "v", "score", "gen"}
-    rows = {r.k: (r.v, r.score, r.gen) for r in out.collect()}
-    assert rows[1] == ("a", None, 1)   # old file: null-filled new column
-    assert rows[2] == ("b", 9.5, 2)
-    # pruning still works through the merged schema
-    assert read_evolving_parquet(spark, root).filter(F.col("gen") == 2).count() == 1

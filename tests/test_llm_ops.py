@@ -7,13 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import table
-from end_to_end_aws_data_pipeline_spark.functions.vector import cosine, cosine_pandas
 from end_to_end_aws_data_pipeline_spark.operators.dedup import (
-    exact_dedup,
+    _simhash_by_agg,
     q_dedup_minhash_lsh,
     q_dedup_ngram_jaccard,
     q_dedup_simhash,
-    simhash,
 )
 from end_to_end_aws_data_pipeline_spark.operators.multimodal import (
     decode_image,
@@ -49,7 +47,8 @@ def test_simhash_identical_and_near(spark):
         ],
         "doc_id long, text string",
     )
-    rows = {r.doc_id: r.sh for r in df.select("doc_id", simhash(F.col("text")).alias("sh")).collect()}
+    tokens = df.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    rows = {r.doc_id: r.sh for r in _simhash_by_agg(tokens).collect()}
     assert rows[1] == rows[2]
     mask = (1 << 64) - 1  # fingerprints are signed longs; mask for popcount
     ham_13 = bin((rows[1] ^ rows[3]) & mask).count("1")
@@ -130,15 +129,6 @@ def test_ngram_jaccard_prefix_filter_equals_bruteforce(spark):
         assert got == expected, f"direct_sumdf2_max={cap}"
     assert (300, 301) in expected  # the sub-k identical pair is present
     assert any(a >= 100 and a < 200 for a, _ in expected)  # threshold family
-
-
-def test_exact_dedup_library(spark):
-    df = spark.createDataFrame(
-        [(3, "x", 1.0), (1, "x", 1.0), (2, "y", 2.0)], "id long, a string, b double"
-    )
-    out = exact_dedup(df, cols=["a", "b"], keep_order_col="id")
-    got = sorted((r.id, r.a) for r in out.collect())
-    assert got == [(1, "x"), (2, "y")]
 
 
 def test_ivf_recall_vs_bruteforce(spark):
@@ -348,20 +338,6 @@ def test_ivf_centroids_scale_as_sqrt():
     assert n_centroids_for(500) == 23
     assert n_centroids_for(2000) == 45
     assert n_centroids_for(10**8) == 10_000
-
-
-def test_cosine_pandas_matches_expression(spark):
-    e = table(spark, SF_SMOKE, "embeddings").limit(50)
-    a = e.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
-    b = e.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).limit(200)
-    rows = pairs.select(
-        cosine(F.col("ea"), F.col("eb")).alias("expr_cos"),
-        cosine_pandas(F.col("ea"), F.col("eb")).alias("udf_cos"),
-    ).collect()
-    assert rows
-    for r in rows:
-        assert abs(r.expr_cos - r.udf_cos) < 1e-9
 
 
 def test_multimodal_decode_unowned_formats_stubbed():

@@ -165,56 +165,6 @@ def test_aqe_skew_join_split(spark):
                 spark.conf.set(k, v)
 
 
-def test_clustered_write_disjoint_file_stats(spark, tmp_path):
-    """Range-clustered layout: per-file min/max of the cluster key are
-    disjoint intervals (verified from parquet footers via pyarrow), so
-    a selective predicate prunes to ~1 file instead of all of them."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from end_to_end_aws_data_pipeline_spark.plans.scale import clustered_write
-
-    df = spark.range(0, 100_000).selectExpr(
-        "pmod(hash(id), 1000000) as k", "id as payload"
-    )
-    out = str(tmp_path / "clustered")
-    clustered_write(df, out, "k", n_files=8)
-    ranges = []
-    for f in glob.glob(out + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)
-            assert col.path_in_schema == "k"
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    assert len(ranges) >= 6  # ~8 files (range partitioner may merge)
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2, f"overlapping file ranges {hi1} >= {lo2}"
-    # round-trip completeness
-    assert spark.read.parquet(out).count() == 100_000
-
-
-def test_compacted_write_file_count(spark, tmp_path):
-    import glob
-
-    from end_to_end_aws_data_pipeline_spark.plans.scale import compacted_write
-
-    df = spark.range(0, 10_000).selectExpr("id", "id * 2 as v")
-    # simulate a small-files mess: 64 tiny files
-    messy = str(tmp_path / "messy")
-    df.repartition(64).write.parquet(messy)
-    assert len(glob.glob(messy + "/*.parquet")) == 64
-    out = str(tmp_path / "compact")
-    compacted_write(spark.read.parquet(messy), out, target_rows_per_file=4000)
-    files = glob.glob(out + "/*.parquet")
-    assert len(files) == 3  # ceil(10000/4000)
-    assert spark.read.parquet(out).count() == 10_000
-
-
 def test_cdc_and_nprobe_plans(spark):
     """New round-3 operators keep the plan shapes that scale: no
     cartesian products; the nprobe probe-set join is a broadcast (the
@@ -502,123 +452,6 @@ def test_q2_q16_plan_posture(spark):
     p16 = formatted_plan(q16)
     assert "Cartesian" not in p16
     assert "BroadcastHashJoin LeftAnti" in p16 or "LeftAnti BuildRight" in p16
-
-
-def test_zorder_write_prunes_both_dimensions(spark, tmp_path):
-    """Z-order layout evidence from parquet footers: on a uniform 2D
-    grid, per-file (x, y) bounding boxes from a Morton-clustered write
-    must cover far less total area than a single-column range-clustered
-    write (whose second column spans the whole domain in every file) —
-    the statistic that makes predicates on EITHER column prune files.
-    Also pins morton_key's bit interleave on known values."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from end_to_end_aws_data_pipeline_spark.plans.scale import (
-        clustered_write,
-        morton_key,
-        zordered_write,
-    )
-
-    got = (
-        spark.range(1)
-        .select(
-            morton_key(F.lit(0b1010), F.lit(0b0110)).alias("z1"),
-            morton_key(F.lit(0), F.lit(1)).alias("z2"),
-            morton_key(F.lit((1 << 16) - 1), F.lit((1 << 16) - 1)).alias("z3"),
-        )
-        .collect()[0]
-    )
-    assert got.z1 == 0b01101100  # x bits at even, y bits at odd positions
-    assert got.z2 == 2
-    assert got.z3 == (1 << 32) - 1
-
-    n = 1 << 14  # 128x128 grid
-    grid = spark.range(n).select(
-        (F.col("id") % 128).cast("int").alias("x"),
-        (F.col("id") / 128).cast("int").alias("y"),
-    )
-
-    def total_area(path: str) -> int:
-        area = 0
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            lo = {}
-            hi = {}
-            for rg in range(md.num_row_groups):
-                for ci in range(md.row_group(rg).num_columns):
-                    col = md.row_group(rg).column(ci)
-                    name = col.path_in_schema
-                    lo[name] = min(lo.get(name, 1 << 30), col.statistics.min)
-                    hi[name] = max(hi.get(name, -1), col.statistics.max)
-            area += (hi["x"] - lo["x"] + 1) * (hi["y"] - lo["y"] + 1)
-        return area
-
-    zpath, lpath = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    zordered_write(grid, zpath, "x", "y", n_files=16)
-    clustered_write(grid, lpath, "x", n_files=16)
-
-    def y_ranges(path: str) -> list[tuple[int, int]]:
-        out = []
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            lo, hi = 1 << 30, -1
-            for rg in range(md.num_row_groups):
-                for ci in range(md.row_group(rg).num_columns):
-                    col = md.row_group(rg).column(ci)
-                    if col.path_in_schema == "y":
-                        lo = min(lo, col.statistics.min)
-                        hi = max(hi, col.statistics.max)
-            out.append((lo, hi))
-        return out
-
-    zr, lr = y_ranges(zpath), y_ranges(lpath)
-    # the discriminating statistic is SECOND-column pruning power: every
-    # x-range-clustered file spans the full y domain (no file skipped by
-    # any y predicate), while Z-curve segments cover bounded y tiles
-    # (range-partition sampling can straddle a tile boundary, so allow
-    # up to half the domain rather than an exact tile edge)
-    assert all(hi - lo + 1 == 128 for lo, hi in lr)
-    assert max(hi - lo + 1 for lo, hi in zr) <= 64
-    hit_z = sum(1 for lo, hi in zr if lo <= 15)  # predicate y < 16
-    hit_l = sum(1 for lo, hi in lr if lo <= 15)
-    assert hit_l == len(lr)  # linear prunes nothing on y
-    assert hit_z <= len(zr) // 2  # z-order skips most files
-    assert total_area(zpath) < 128 * 128 * len(zr)  # sanity: boxes are tiles
-
-
-def test_bucketed_join_eliminates_shuffle(spark):
-    """Co-located bucketed join: two tables bucketed on the same key
-    and count sort-merge-join with ZERO exchanges (both sides read
-    pre-bucketed files), while the same join over plain tables shuffles
-    both sides. The write-once-join-shuffle-free contract for fact-fact
-    joins at scale."""
-    from end_to_end_aws_data_pipeline_spark.plans.scale import bucketed_write
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    try:
-        # forbid broadcast so the plan shape is the join strategy itself
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a = spark.range(0, 20_000).selectExpr("id as k", "id * 2 as va")
-        b = spark.range(0, 20_000).selectExpr("id as k", "id * 3 as vb")
-        bucketed_write(a, "bkt_a", "k", 8)
-        bucketed_write(b, "bkt_b", "k", 8)
-        ta, tb = spark.table("bkt_a"), spark.table("bkt_b")
-        joined = ta.join(tb, "k")
-        assert joined.count() == 20_000
-        assert count_shuffles(joined) == 0  # bucket co-location honored
-        assert "SortMergeJoin" in physical_plan(joined)
-
-        plain = a.join(b, "k")
-        assert count_shuffles(plain) >= 2  # both sides exchange
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-        if old is None:
-            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        else:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_round5_second_wave_plan_posture(spark):

@@ -137,32 +137,3 @@ def test_every_query_oracle_backed_except_known_two():
     assert missing == {"q_agg_approx", "q_ann_lsh_projection"}
 
 
-class TestBucketedWriteGuards:
-    def test_db_qualified_name_rejected(self, spark):
-        from end_to_end_aws_data_pipeline_spark.plans.scale import (
-            bucketed_write,
-        )
-
-        with pytest.raises(ValueError, match="unqualified"):
-            bucketed_write(spark.range(3), "db.tbl", "id", 2)
-
-    def test_orphan_reaped_in_current_database(self, spark, tmp_path):
-        """An unqualified name lands in the current database, so the
-        orphan left there by a killed run is the one reaped."""
-        from end_to_end_aws_data_pipeline_spark.plans.scale import (
-            bucketed_write,
-        )
-
-        db_dir = tmp_path / "bw_db.db"
-        orphan = db_dir / "bkt_orphan"
-        orphan.mkdir(parents=True)
-        (orphan / "part-00000.parquet").write_bytes(b"debris")
-        prev = spark.catalog.currentDatabase()
-        spark.sql(f"CREATE DATABASE bw_db LOCATION '{db_dir}'")
-        try:
-            spark.catalog.setCurrentDatabase("bw_db")
-            bucketed_write(spark.range(10), "bkt_orphan", "id", 2)
-            assert spark.table("bkt_orphan").count() == 10
-        finally:
-            spark.catalog.setCurrentDatabase(prev)
-            spark.sql("DROP DATABASE IF EXISTS bw_db CASCADE")

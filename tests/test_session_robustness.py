@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import table
-from end_to_end_aws_data_pipeline_spark.ingest.clean import observed_clean
+from end_to_end_aws_data_pipeline_spark.ingest.clean import clean, observe_audit
 from end_to_end_aws_data_pipeline_spark.session import RUNTIME_REQUIRED_CONFS
 from tests.conftest import SF_SMOKE
 
@@ -27,7 +27,8 @@ def test_observed_clean_counts_during_load(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (None, "c"), (1, "a")], schema="k int, v string"
     )
-    cleaned, obs = observed_clean(df)
+    observed, obs = observe_audit(df, "null_audit")
+    cleaned = clean(observed)
     out = sorted(map(tuple, cleaned.collect()))  # the action drives the observe
     assert out == [(1, "a")]
     assert obs.get == {"n_rows": 4, "n_bad_rows": 2, "null:k": 1, "null:v": 1}

@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 from end_to_end_aws_data_pipeline_spark.catalog import table
 from end_to_end_aws_data_pipeline_spark.streaming.ingest_stream import StreamingIngest
 from end_to_end_aws_data_pipeline_spark.streaming.stateful import user_session_tracker
-from end_to_end_aws_data_pipeline_spark.streaming.windows import (
-    tumbling_counts,
-    with_watermark,
-)
+from end_to_end_aws_data_pipeline_spark.streaming.windows import tumbling_counts
 from tests.conftest import SF_SMOKE
 
 _names = (f"__t{i}" for i in itertools.count())
@@ -88,13 +85,11 @@ def test_watermark_drops_late_rows(spark, tmp_path):
     _write_csv(src_dir, ".", "b1.csv",
                "ts,user_id,value\n2024-01-01 12:00:00,1,1.0\n2024-01-01 13:00:00,1,1.0\n")
     q = (
-        with_watermark(
-            spark.readStream.schema("ts timestamp, user_id long, value double")
-            .option("header", True)
-            .option("maxFilesPerTrigger", 1)
-            .csv(src_dir),
-            "10 minutes",
-        )
+        spark.readStream.schema("ts timestamp, user_id long, value double")
+        .option("header", True)
+        .option("maxFilesPerTrigger", 1)
+        .csv(src_dir)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .writeStream.format("memory")
