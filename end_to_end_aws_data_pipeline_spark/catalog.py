@@ -90,6 +90,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def arrow_batch(rows, schema: pa.Schema) -> pa.RecordBatch:
+    """Row tuples (in ``schema``'s column order) as one Arrow batch,
+    each column converted straight to its field's type."""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, schema)]
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
 def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """Driver rows (tuples in ``ddl``'s column order) as a DataFrame.
 
@@ -99,10 +107,8 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     worker. A Python list handed to ``createDataFrame`` plans as a scan
     of a Python RDD instead, which starts workers on every execution."""
     schema = DataType.fromDDL(ddl)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow)]
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+    batch = arrow_batch(rows, to_arrow_schema(schema))
+    return spark.createDataFrame(pa.Table.from_batches([batch]), schema)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -26,10 +26,6 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(fsum(F.transform(a, lambda x: x.cast("double") * x.cast("double"))))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
 def dot_raw(a: Column, b: Column) -> Column:
     """Dot product of two already-double arrays (no per-element cast) —
     for pre-normalized vectors where cosine ≡ plain dot."""

@@ -361,7 +361,7 @@ def q_etl_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute (the algebraic-aggregate contract of classic
     view-maintenance literature and of every streaming aggregation).
 
-    Here the split is l_shipdate < {split} (~75% base / 25% delta) —
+    Here the split is l_shipdate < 1997-01-01 (~75% base / 25% delta) —
     both derived from the same lineitem table so the identity is
     checkable at any SF.
 
@@ -400,11 +400,6 @@ def q_etl_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("price_c").cast("long").alias("price_c"),
         )
     )
-
-
-_MV_DOC_FIX = q_etl_mv_incremental.__doc__
-if _MV_DOC_FIX is not None:
-    q_etl_mv_incremental.__doc__ = _MV_DOC_FIX.replace("{split}", _MV_SPLIT)
 
 
 # ---------------------------------------------------------------------------
@@ -908,7 +903,7 @@ def q_etl_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nation, market segment, $1000 balance band) — the privacy
     measurement a governed release runs before publishing: the
     table's k (smallest group size), how many groups and rows fall
-    below k = {_KANON_K} (re-identifiable), and the suppression rate a
+    below k = 5 (re-identifiable), and the suppression rate a
     k-threshold release would pay. Companion to the GDPR erasure
     cascade (right-to-be-forgotten) — this is the aggregate-disclosure
     side of the same governance surface (Sweeney, IJUFKS 2002).

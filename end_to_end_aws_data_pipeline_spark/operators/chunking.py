@@ -46,8 +46,8 @@ FROM starts s JOIN t ON t.doc_id = s.doc_id
 
 @register("q_chunk_documents", oracle=_CHUNK_ORACLE)
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunking: split each document into {W}-token
-    chunks at stride {S} (overlap W-S), the standard long-document →
+    """Sliding-window chunking: split each document into 64-token
+    chunks at stride 48 (overlap 16), the standard long-document →
     context-window shard step before tokenization.
 
     Expression-only: split → sequence of starts → posexplode → slice.

@@ -308,7 +308,7 @@ WHERE n_words > 0 AND 1.0 - CAST(n_distinct AS DOUBLE) / n_words > {_REP_TAU}
 @register("q_curation_repetition", oracle=_REP_ORACLE)
 def q_curation_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition filter: flag docs whose duplicate-word
-    mass exceeds {tau} (Gopher-style repetition signal, the cheap
+    mass exceeds 0.35 (Gopher-style repetition signal, the cheap
     first-pass quality gate before any cross-doc dedup). Expression-only
     single pass, no shuffle until the (tiny) flagged set."""
     d = table(spark, sf_dir, "documents")
@@ -370,8 +370,8 @@ FROM binned GROUP BY stratum, bin_in_stratum
 
 @register("q_curation_pack", oracle=_PACK_ORACLE)
 def q_curation_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget packing: assign docs to ~{budget}-token context
-    windows by running-cumsum binning, stratified {strata} ways so the
+    """Token-budget packing: assign docs to ~2048-token context
+    windows by running-cumsum binning, stratified 32 ways so the
     inherently sequential cumsum runs as independent per-stratum
     windows (no global single-partition WindowExec; raise the stratum
     count with the cluster). A doc starts a new bin when the previous
@@ -554,7 +554,7 @@ FROM ranked WHERE rk <= {_SOURCE_CAP}
 
 @register("q_curation_source_cap", oracle=_SOURCE_CAP_ORACLE)
 def q_curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source document quota: keep at most {CAP} docs per source,
+    """Per-source document quota: keep at most 10 docs per source,
     preferring the longest (content-richest) ones, deterministic
     doc_id tie-break — the domain-capping step web-corpus pipelines
     apply so no single site dominates the training mix (the C4/RefinedWeb
@@ -644,7 +644,7 @@ LIMIT {_DSIR_TOP}
 def q_curation_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style data selection: score every document by the
     log-likelihood ratio of a hashed bag-of-words model of the TARGET
-    distribution (here the '{tgt}' slice) against the RAW corpus, and
+    distribution (here the 'de' slice) against the RAW corpus, and
     keep the top-weighted documents — the importance-resampling recipe
     of Xie et al. (NeurIPS 2023) used to select web data that "looks
     like" a trusted corpus.
@@ -661,7 +661,7 @@ def q_curation_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus 1/16-bit quantization from 4 fractional bits) - far below the
     inter-document spread that drives selection.
 
-    Scale shape: one pass builds the {B}-bucket histogram
+    Scale shape: one pass builds the 64-bucket histogram
     (hash-partition aggregate over tokens, map-side combined); the
     per-bucket weight table is tiny and broadcasts back onto the token
     stream; one more aggregate sums per-doc weights; a
@@ -712,13 +712,6 @@ def q_curation_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
         docw.orderBy(F.col("weight").desc(), "doc_id")
         .limit(_DSIR_TOP)
         .select("doc_id", "n_tokens", "weight")
-    )
-
-
-_DSIR_DOC = q_curation_dsir.__doc__
-if _DSIR_DOC is not None:
-    q_curation_dsir.__doc__ = _DSIR_DOC.replace("{tgt}", _DSIR_TARGET).replace(
-        "{B}", str(_DSIR_B)
     )
 
 

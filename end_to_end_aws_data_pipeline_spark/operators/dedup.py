@@ -366,38 +366,6 @@ def _mh_base(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % _MH_P
 
 
-def minhash_signature(shingle_col: Column, k: int = _MINHASH_K) -> Column:
-    """k-permutation MinHash signature (array<long>): per permutation i,
-    MIN over shingles of (a_i·base + b_i) mod p, base = md5-derived.
-
-    MinHash only needs a uniform hash with a total order; md5 gives a
-    cross-engine base value and the mod-p linear permutations give k
-    independent orders for one string hash per shingle. Everything
-    replays bit-for-bit in the DuckDB oracle.
-
-    NOTE: the seed must be bound via a closure *factory*, not a lambda
-    default arg — PySpark dispatches higher-order-function lambdas on
-    arity, so an extra defaulted parameter silently becomes the array
-    index Column and shadows the seed.
-    """
-
-    zero = F.array(*[F.lit(_MH_P).cast("long") for _ in range(k)])  # > any h
-
-    def _hash_vec(s: Column) -> Column:
-        base = _mh_base(s)
-        return F.array(
-            *[(F.lit(a) * base + F.lit(b)) % _MH_P for a, b in _MH_AB[:k]]
-        )
-
-    # single fold over the shingle array, merging element-wise minima —
-    # one pass regardless of k (vs k separate transform+array_min passes)
-    return F.aggregate(
-        shingle_col,
-        zero,
-        lambda acc, s: F.zip_with(acc, _hash_vec(s), lambda a, b: F.least(a, b)),
-    )
-
-
 def _minhash_oracle() -> str:
     """DuckDB replay of q_dedup_minhash_lsh: identical shingles (proven
     by the green _JACCARD_ORACLE), identical md5-derived signatures,
@@ -465,7 +433,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     small SF). At 100 TB this is the only tractable shape: candidate
     count ≈ duplicate count, not n².
 
-    Hashes are md5-derived (see minhash_signature) so the DuckDB oracle
+    Hashes are md5-derived (see _mh_base) so the DuckDB oracle
     replays the ENTIRE pipeline — including which candidate pairs LSH
     surfaces — and the driver records a full hash-green row, not
     rows-only. Cost: ONE md5 per shingle (the Broder base hash) + k
@@ -1871,7 +1839,7 @@ def q_dedup_run_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REMOVAL half of substring dedup (Lee et al. ACL'22 removes
     every duplicated span, not just flags pairs): per document, how
     many tokens are covered by at least one exactly-shared run of
-    >= {_RUN_MIN} tokens with ANY other document, and the kept
+    >= 20 tokens with ANY other document, and the kept
     fraction after cutting them.
 
     Each shared run covers a token interval on BOTH documents of its
@@ -1988,7 +1956,7 @@ HAVING count(*) >= {_WIN_M}
 def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS algorithm): per document, keep the MINIMUM
-    k-gram hash of every {_WIN_W}-hash window; two documents sharing
+    k-gram hash of every 4-hash window; two documents sharing
     any token run of >= k + w - 1 = {_WIN_K + _WIN_W - 1} tokens are
     GUARANTEED to share a fingerprint (the window guarantee), while
     only ~2/(w+1) of all k-grams survive as fingerprints. This is the
@@ -1999,7 +1967,7 @@ def q_dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A window's selected fingerprint SET per document is exactly the
     set of distinct window-minima, so selection is one windowed min
-    (bounded frame of {_WIN_W} rows, partitioned per document) + one
+    (bounded frame of 4 rows, partitioned per document) + one
     distinct — no argmin bookkeeping. Pair generation reuses the
     grouped i<j expansion (one shuffle of int64 fingerprints,
     df-capped) rather than a self-join. Full windows only (the tail
@@ -2095,7 +2063,7 @@ WHERE n_shared * 1.0 >= {_CONT_TAU} * n_a
 @register("q_dedup_containment", oracle=_CONT_ORACLE)
 def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle CONTAINMENT C(A→B) = |S_A∩S_B| / |S_A|: flags
-    documents ≥{TAU}% of whose 3-gram shingles appear in another
+    documents ≥80% of whose 3-gram shingles appear in another
     document — the quote/subset/boilerplate-inclusion detector that
     symmetric Jaccard structurally misses (a paragraph fully quoted
     inside a 100× longer page has Jaccard ≈ 1%, containment = 100%).
@@ -2142,13 +2110,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         stable_round(F.col("n_shared").cast("double") / F.col("n_a"), 6).alias(
             "containment"
         ),
-    )
-
-
-_CONT_DOC = q_dedup_containment.__doc__
-if _CONT_DOC is not None:
-    q_dedup_containment.__doc__ = _CONT_DOC.replace(
-        "{TAU}", str(int(_CONT_TAU * 100))
     )
 
 

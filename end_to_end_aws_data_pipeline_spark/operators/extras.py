@@ -1769,10 +1769,10 @@ FROM {prev}"""
 @register("q_events_markov_stationary", oracle=_mkv_oracle())
 def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the event-type Markov chain by
-    {_MKV_ITERS} rounds of integer power iteration — where user
+    8 rounds of integer power iteration — where user
     journeys settle in the long run, the chain-level summary on top of
     q_events_transition_matrix (one step) and q_events_top_paths
-    (three steps). Mass is fixed-point int64 ({_MKV_R0} units), each
+    (three steps). Mass is fixed-point int64 (10^9 units), each
     step moves mass · n_ij // n_i (floor division, deterministic), so
     the oracle's unrolled CTE rounds replay the iteration exactly —
     the integer-PageRank playbook on the behavioral chain.
@@ -1781,7 +1781,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one lead() window per user, combinable counts); the iteration
     state is |event types| rows and each round joins two tiny
     relations — constant cost at any corpus size, so the unpersisted
-    {_MKV_ITERS}-round loop needs no checkpoint policy."""
+    8-round loop needs no checkpoint policy."""
     from end_to_end_aws_data_pipeline_spark.cache import persisted
 
     from pyspark.sql import Window as W

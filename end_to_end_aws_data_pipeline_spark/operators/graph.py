@@ -196,10 +196,10 @@ def pagerank_ranks(
 
 @register("q_graph_pagerank", oracle=_pr_oracle())
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer PageRank, {ITERS} rounds, over the undirected
+    """Integer PageRank, 3 rounds, over the undirected
     customer–supplier purchase graph (edges = distinct (custkey,
     suppkey) pairs via orders⋈lineitem, both directions); returns the
-    top-{TOP} nodes by final rank.
+    top-20 nodes by final rank.
 
     Each round: contribution join (rank vector ⋈ edges, floor-div by
     out-degree), aggregate by target, damp with integer arithmetic.
@@ -729,17 +729,17 @@ FROM tri
 def q_graph_triangles_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOULION sampled triangle count (Tsourakakis et al., KDD'09) —
     the scale path for the exact oriented-wedge count above: keep each
-    edge with probability p = 1/{_DLN_P_INV} and scale the sampled
+    edge with probability p = 1/4 and scale the sampled
     subgraph's exact count by 1/p³. Wedge volume grows with degree², so
     sampling cuts the dominant cost by ~p² on dense graphs — at this
     corpus's sf1 the exact count's wedge join is 6× super-unit while
-    the sampled subgraph's is ~{_DLN_P_INV}² smaller; on a 100 TB
+    the sampled subgraph's is ~4² smaller; on a 100 TB
     co-occurrence graph this is the difference between feasible and
     not (accuracy is tunable: variance ∝ 1/p³, and the estimator is
     unbiased for any p).
 
     DETERMINISTIC sampling: the keep decision is an md5 hash of the
-    edge key mod {_DLN_P_INV} — no RNG, identical in both engines, so
+    edge key mod 4 — no RNG, identical in both engines, so
     the oracle replays the sample AND the estimate bit-for-bit, and
     the relative-error-vs-exact property is pinned in tests rather
     than asserted probabilistically.
@@ -892,7 +892,7 @@ def q_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     randomly; here the tie-break is TOTAL — (count DESC, label ASC),
     evaluated as a per-node row_number — so the full label trajectory
     is deterministic and the unrolled-CTE oracle replays all
-    {_LPA_ROUNDS} rounds bit-for-bit (the integer-PageRank playbook).
+    3 rounds bit-for-bit (the integer-PageRank playbook).
 
     Scale shape: each round is one edges-to-labels equi-join, one
     (node, label) count, and one per-node rank over a partition
@@ -900,8 +900,8 @@ def q_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     global). Label state is one row per node; rounds persist so the
     driver loop never recomputes (each round is a lazy localCheckpoint;
     the run-to-convergence depth study is in SCALING.md).
-    Published: the {_LPA_TOP} largest communities after round
-    {_LPA_ROUNDS}."""
+    Published: the 20 largest communities after round
+    3."""
     from pyspark.sql import Window as W
 
     edges, labels = _lpa_setup(spark, sf_dir)
@@ -1413,7 +1413,7 @@ def q_graph_harmonic_centrality(
     Determinism: per-node cents are exact int64 (floor-to-cents, the
     q_graph_hyperanf recipe) and the 1/k weights are lcm-scaled
     integers (×12), so hc_fp12 is exact integer algebra the oracle
-    replays; top-{_HC_TOP} with (hc desc, node) tiebreak is a unique
+    replays; top-20 with (hc desc, node) tiebreak is a unique
     cut. Per-k ball ESTIMATES can dip at a linear-counting→raw
     switch (a standard HLL artifact); both engines compute the
     identical estimator, so the hash ties them regardless.
@@ -1707,16 +1707,16 @@ def hits_scores(
 
 @register("q_graph_hits", oracle=_hits_oracle())
 def q_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs and authorities (Kleinberg, JACM '99): top-{TOP}
-    customers by hub score and top-{TOP} suppliers by authority score
-    after {ITERS} alternating iterations over the directed
+    """HITS hubs and authorities (Kleinberg, JACM '99): top-20
+    customers by hub score and top-20 suppliers by authority score
+    after 3 alternating iterations over the directed
     customer→supplier purchase graph — the classic iterative-graph
     operator the family lacked, sharing the PageRank contribution-join
     plan with the roles swapped each half-step.
 
     Integer fixed-point throughout (no float drift): scores renormalize
     to a fixed total mass via divide-by-scalar, and the oracle unrolls
-    all {ITERS} iterations as CTEs replaying the arithmetic exactly —
+    all 3 iterations as CTEs replaying the arithmetic exactly —
     iterative + normalized, yet fully hash-checked.  The top-k cuts
     tiebreak on node id, so the result set is order-unique."""
     hub, auth = hits_scores(spark, sf_dir)
@@ -1797,7 +1797,7 @@ ORDER BY walk_seed, step"""
 @register("q_graph_random_walks", oracle=_rw_oracle())
 def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-walk corpus generation (DeepWalk, KDD '14 / node2vec,
-    KDD '16 — the walk-sampling stage only): one {_RW_STEPS}-step walk
+    KDD '16 — the walk-sampling stage only): one 8-step walk
     from every seed customer over the undirected purchase graph — the
     training-data pipeline op that turns a graph into a sequence corpus
     for embedding training (each walk is a "sentence" of node tokens).
@@ -1807,7 +1807,7 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     id via lexicographic struct-min — engine-agnostic) — each neighbor
     is equally likely to hold the min hash, so the choice is uniform
     like a seeded RNG, yet the corpus is reproducible run-to-run AND
-    replayable by the oracle, which unrolls all {_RW_STEPS} steps as
+    replayable by the oracle, which unrolls all 8 steps as
     chained CTEs making the identical md5 choice (the
     q_graph_triangles_doulion md5-coin idiom).
 
@@ -1823,7 +1823,7 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges (the reverse is a projection of the same cache — the
     symmetrized union never materializes). Per-step cost is one
     half-edge scan, amortized over ALL walks in flight — the DeepWalk
-    regime (a walk per NODE) pays the same {_RW_STEPS} scans for N
+    regime (a walk per NODE) pays the same 8 scans for N
     walks. Frontiers localCheckpoint so stacked joins never grow the
     analyzed plan (the HITS depth-6 lesson)."""
     fwd = persisted(_purchase_fwd(spark, sf_dir))
@@ -2254,7 +2254,7 @@ def q_graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum) plus a scc_id = -1 row pooling every singleton SCC — so the
     oracle (algorithm-independent mutual-reachability ground truth via
     a recursive-CTE closure) checks the full partition, not a sample.
-    The digraph is md5-sparsified to 1/{SPARSIFY} of distinct successor
+    The digraph is md5-sparsified to 1/8 of distinct successor
     edges, keeping mean degree — and the one-giant-SCC-plus-singletons
     regime of sparse random digraphs — invariant across scale factors."""
     labels = scc_labels(spark, _scc_digraph(spark, sf_dir))
@@ -2444,7 +2444,7 @@ def mis_rounds(
 def q_graph_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-independent-set rounds (Luby, SICOMP '86) over the
     purchase graph — the symmetry-breaking primitive behind distributed
-    scheduling/coloring, run for {_MIS_ROUNDS} deterministic
+    scheduling/coloring, run for 4 deterministic
     hash-priority rounds with per-round accounting: one row per
     (status, round) with node count + id sum ('mis' = joined the
     independent set that round, 'out' = excluded as a winner's

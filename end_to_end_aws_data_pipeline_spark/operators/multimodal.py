@@ -1,6 +1,6 @@
 """Multimodal (image/audio/video) column handling: opaque ``binary``
 payloads + typed metadata structs, with decode / feature-extraction /
-frame-sampling as Arrow-batched ``mapInPandas`` operators.
+frame-sampling as Arrow-batched operators.
 
 Decode is REAL for the formats a dependency-free engine can own:
 24-bit BMP (BITMAPINFOHEADER, padded bottom-up rows), binary PPM (P6),
@@ -9,27 +9,36 @@ AND progressive JFIF JPEG with chroma subsampling (operators/jpeg.py),
 and PCM16 RIFF/WAVE audio — no codec library involved. The remaining
 boundaries (WebP, arithmetic-coded JPEG, compressed audio, ...) raise
 ``NotImplementedError`` naming the feature; the rest of the pipeline —
-binary schema convention, partition-count preservation, the
-mapInPandas batch iterator signature, deterministic feature
-extraction — is independent of the codec and oracle-checked.
+binary schema convention, partition-count preservation, the batch
+iterator signature, deterministic feature extraction — is independent
+of the codec and oracle-checked.
+
+The synthetic-codec queries each run one ``per_doc`` pass: a
+``mapInArrow`` over the spread doc_ids in which a per-document
+``rows_of`` encodes that document's synthetic input (``_gradient``,
+``_decoded_image``, ``_decoded_wav``, ``_decoded_gif``), decodes it and
+yields its result rows. Only ``extract_features``, which reads payload
+columns, maps pandas batches.
 
 Scale notes: binary payloads ride in parquet as byte arrays; metadata
 lives in a sibling struct so filters on media_type/size prune row
 groups WITHOUT touching payload bytes (column pruning keeps the scan
-narrow). mapInPandas processes Arrow batches — payload bytes cross to
-Python once per batch, not per row.
+narrow). Both map operators process Arrow batches — payload bytes cross
+to Python once per batch, not per row.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
-from end_to_end_aws_data_pipeline_spark.catalog import table
+from end_to_end_aws_data_pipeline_spark.catalog import arrow_batch, spread, table
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 _FEATURE_SCHEMA = (
@@ -439,6 +448,32 @@ def sample_frames(binary_docs: DataFrame, n_frames: int = 4) -> DataFrame:
     )
 
 
+def per_doc(
+    spark: SparkSession,
+    sf_dir: str,
+    ddl: str,
+    rows_of: Callable[[int], Iterable[tuple]],
+) -> DataFrame:
+    """One Arrow-batched pass over ``documents.doc_id``: ``rows_of``
+    yields zero or more tuples (in ``ddl``'s column order) per doc_id,
+    and each input batch becomes one output Arrow batch of them.
+
+    The ids are spread first: the sf corpora are single parquet files,
+    so a 1-partition scan would serialize the CPU-bound codec work,
+    while spreading 8-byte ids costs almost nothing. ``mapInArrow``
+    hands the worker Arrow batches and takes Arrow batches back, so no
+    pandas frame is built on either side."""
+    schema = to_arrow_schema(DataType.fromDDL(ddl))
+
+    def _batches(batches):
+        for batch in batches:
+            ids = batch.column(0).to_pylist()
+            yield arrow_batch([r for d in ids for r in rows_of(d)], schema)
+
+    docs = spread(table(spark, sf_dir, "documents").select("doc_id"))
+    return docs.mapInArrow(_batches, ddl)
+
+
 _MM_ORACLE = """
 WITH b AS (
   SELECT doc_id, text, encode(text) AS payload, source FROM documents
@@ -459,7 +494,7 @@ FROM b
 @register("q_multimodal_features", oracle=_MM_ORACLE)
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column pipeline end-to-end: text → binary payload + meta
-    struct → Arrow-batched mapInPandas feature extraction. The oracle
+    struct → Arrow-batched ``extract_features``. The oracle
     recomputes the same features arithmetically in SQL (ASCII text ⇒
     utf-8 bytes == character codes), independently validating the UDF
     path."""
@@ -472,6 +507,36 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decoder output arithmetically, without any image code of its own
 _DEC_W = "(4 + doc_id % 29)"  # widths 4..32 → exercises all 4 BMP pads
 _DEC_H = "(4 + (doc_id // 7) % 23)"
+_IMG_FORMATS = ("bmp", "ppm", "png")  # by doc_id % 3
+
+
+def _gradient(doc_id: int):
+    """The synthetic image of one document: an (h, w) uint8 gradient,
+    pixel (x + y + doc_id) mod 256, sized ``_DEC_W`` × ``_DEC_H``."""
+    import numpy as np
+
+    w = 4 + doc_id % 29
+    h = 4 + (doc_id // 7) % 23
+    yy, xx = np.mgrid[0:h, 0:w]
+    return ((xx + yy + doc_id) % 256).astype(np.uint8)
+
+
+def _decoded_image(doc_id: int):
+    """The document's gradient on all 3 channels, encoded as BMP, PPM
+    or PNG (by doc_id % 3; PNG with scanline filter doc_id % 5, so every
+    unfilter path runs) and decoded back by ``decode_image``."""
+    import numpy as np
+
+    pix = np.repeat(_gradient(doc_id)[:, :, None], 3, axis=2)
+    fmt = _IMG_FORMATS[doc_id % 3]
+    if fmt == "bmp":
+        payload = encode_bmp(pix)
+    elif fmt == "ppm":
+        payload = encode_ppm(pix)
+    else:
+        payload = encode_png(pix, filter_type=doc_id % 5)
+    return decode_image(payload)
+
 
 _DECODE_ORACLE = f"""
 SELECT doc_id,
@@ -497,66 +562,25 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     to actual BMP (doc_id%3==0 — padded bottom-up BGR rows), PPM (==1)
     or PNG (==2, zlib IDAT, scanline filter doc_id%5 so every unfilter
     path runs) bytes, then *decoded* back by the pure-python parsers in
-    ``decode_image``, all inside one Arrow-batched mapInPandas pass.
+    ``decode_image``, all inside one ``per_doc`` (mapInArrow) pass.
     The oracle recomputes width/height/channels/pixel_sum arithmetically
     — any header-parse, stride, row-order, channel-order or unfilter
     bug in the codecs shows up as a hash mismatch.
     """
     import numpy as np
 
-    # the sf corpora are single parquet files → a 1-partition scan would
-    # serialize the (CPU-bound) codec work; spreading the 8-byte ids is
-    # ~free and buys full-core decode. At real scale the source has many
-    # files/row-groups and this coalesces/keeps parallelism the same way.
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows_of(doc_id):
+        img = _decoded_image(doc_id)
+        h, w, ch = img.shape
+        fmt = _IMG_FORMATS[doc_id % 3]
+        yield doc_id, fmt, w, h, ch, int(img.astype(np.int64).sum())
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "format", "width", "height", "channels", "pixel_sum"
-            )}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 29
-                h = 4 + (doc_id // 7) % 23
-                yy, xx = np.mgrid[0:h, 0:w]
-                val = ((xx + yy + doc_id) % 256).astype(np.uint8)
-                pix = np.repeat(val[:, :, None], 3, axis=2)
-                fmt = ("bmp", "ppm", "png")[doc_id % 3]
-                if fmt == "bmp":
-                    payload = encode_bmp(pix)
-                elif fmt == "ppm":
-                    payload = encode_ppm(pix)
-                else:
-                    payload = encode_png(pix, filter_type=doc_id % 5)
-                img = decode_image(payload)
-                out["doc_id"].append(doc_id)
-                out["format"].append(fmt)
-                out["width"].append(img.shape[1])
-                out["height"].append(img.shape[0])
-                out["channels"].append(img.shape[2])
-                out["pixel_sum"].append(int(img.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "format": out["format"],
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "channels": pd.Series(out["channels"], dtype="int32"),
-                    "pixel_sum": pd.Series(out["pixel_sum"], dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema=(
-            "doc_id long, format string, width int, height int, "
-            "channels int, pixel_sum long"
-        ),
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, format string, width int, height int, channels int, "
+        "pixel_sum long",
+        rows_of,
     )
 
 
@@ -606,7 +630,7 @@ def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     path: per document a block-constant grayscale image (8×8 block
     (br,bc) has value (br+bc+doc_id) mod 256) is huffman-encoded to a
     spec-conformant JFIF file and decoded back by operators/jpeg.py
-    inside one Arrow-batched mapInPandas pass. With the flat-8 quant
+    inside one ``per_doc`` (mapInArrow) pass. With the flat-8 quant
     table the round trip is bit-exact, so any bitstream, huffman-table,
     zigzag, dequant or IDCT bug shows up as a driver hash mismatch
     against the arithmetic oracle."""
@@ -617,40 +641,21 @@ def q_multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg,
     )
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows_of(doc_id):
+        bw = 1 + doc_id % 4
+        bh = 1 + (doc_id // 5) % 3
+        bc, br = np.meshgrid(np.arange(bw), np.arange(bh))
+        vals = ((br + bc + doc_id) % 256).astype(np.uint8)
+        img = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
+        out = decode_jpeg(encode_jpeg(img))
+        h, w, ch = out.shape
+        yield doc_id, w, h, ch, int(out.astype(np.int64).sum())
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, sums = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                bw = 1 + doc_id % 4
-                bh = 1 + (doc_id // 5) % 3
-                bc, br = np.meshgrid(np.arange(bw), np.arange(bh))
-                vals = ((br + bc + doc_id) % 256).astype(np.uint8)
-                img = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-                out = decode_jpeg(encode_jpeg(img))
-                ids.append(doc_id)
-                hs.append(out.shape[0])
-                ws.append(out.shape[1])
-                sums.append(int(out.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "channels": pd.Series([3] * len(ids), dtype="int32"),
-                    "pixel_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema="doc_id long, width int, height int, channels int, pixel_sum long",
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, width int, height int, channels int, pixel_sum long",
+        rows_of,
     )
 
 
@@ -723,6 +728,20 @@ _WAV_RATE = 16000
 _WAV_N = "(800 + (doc_id % 5) * 160)"  # 50-90 ms at 16 kHz
 _WAV_STEP = "(1 + doc_id % 7)"
 
+
+def _decoded_wav(doc_id: int):
+    """The document's triangle wave (``_WAV_N`` samples, sample i =
+    (i·``_WAV_STEP``) mod 2048 − 1024) round-tripped through a PCM16
+    WAV file: ``(rate, channels, samples)``, the one channel's samples
+    as int64."""
+    import numpy as np
+
+    i = np.arange(800 + (doc_id % 5) * 160, dtype=np.int64)
+    pcm = ((i * (1 + doc_id % 7)) % 2048 - 1024).astype(np.int16)
+    rate, ch, frames = decode_wav(encode_wav(pcm, _WAV_RATE))
+    return rate, ch, frames[:, 0].astype(np.int64)
+
+
 _AUDIO_ORACLE = f"""
 SELECT doc_id,
        CAST({_WAV_N} AS BIGINT) AS n_frames,
@@ -745,61 +764,32 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode through the binary-column path: per document a
     deterministic int16 triangle wave (sample i = (i·step) mod 2048 −
     1024) is encoded to an actual PCM16 RIFF/WAVE file and decoded back
-    by ``decode_wav`` inside one Arrow-batched mapInPandas pass;
+    by ``decode_wav`` inside one ``per_doc`` (mapInArrow) pass;
     features (frame count, duration, peak, |x|-sum, energy) are integer
     arithmetic the oracle recomputes independently — any header,
     chunk-walk, dtype or interleave bug shows up as a hash mismatch."""
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows_of(doc_id):
+        rate, ch, x = _decoded_wav(doc_id)
+        n = len(x)
+        yield (
+            doc_id,
+            n,
+            ch,
+            rate,
+            n * 1000 // rate,
+            int(np.abs(x).max()),
+            int(np.abs(x).sum()),
+            int((x * x).sum()),
+        )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nf = 800 + (doc_id % 5) * 160
-                step = 1 + doc_id % 7
-                i = np.arange(nf, dtype=np.int64)
-                pcm = ((i * step) % 2048 - 1024).astype(np.int16)
-                rate, ch, frames = decode_wav(encode_wav(pcm, _WAV_RATE))
-                x = frames[:, 0].astype(np.int64)
-                out.append(
-                    (
-                        doc_id,
-                        frames.shape[0],
-                        ch,
-                        rate,
-                        frames.shape[0] * 1000 // rate,
-                        int(np.abs(x).max()),
-                        int(np.abs(x).sum()),
-                        int((x * x).sum()),
-                    )
-                )
-            cols = (
-                "doc_id", "n_frames", "channels", "sample_rate",
-                "duration_ms", "peak", "sum_abs", "sum_sq",
-            )
-            yield pd.DataFrame(
-                {
-                    c: pd.Series(
-                        [r[j] for r in out],
-                        dtype="int32" if c in ("channels", "sample_rate") else "int64",
-                    )
-                    for j, c in enumerate(cols)
-                }
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema=(
-            "doc_id long, n_frames long, channels int, sample_rate int, "
-            "duration_ms long, peak long, sum_abs long, sum_sq long"
-        ),
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, n_frames long, channels int, sample_rate int, "
+        "duration_ms long, peak long, sum_abs long, sum_sq long",
+        rows_of,
     )
 
 
@@ -837,50 +827,21 @@ def q_multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle between decode and window extraction."""
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows_of(doc_id):
+        _, _, x = _decoded_wav(doc_id)
+        n_frames = (len(x) - _FRM) // _HOP + 1
+        idx = np.arange(n_frames)[:, None] * _HOP + np.arange(_FRM)[None, :]
+        w = x[idx]  # (n_frames, _FRM) strided frame matrix
+        peaks = np.abs(w).max(axis=1).tolist()
+        energies = (w * w).sum(axis=1).tolist()
+        for f in range(n_frames):
+            yield doc_id, f, f * _HOP, peaks[f], energies[f]
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, fis, starts, peaks, energies = [], [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nf = 800 + (doc_id % 5) * 160
-                step = 1 + doc_id % 7
-                i = np.arange(nf, dtype=np.int64)
-                pcm = ((i * step) % 2048 - 1024).astype(np.int16)
-                _, _, frames = decode_wav(encode_wav(pcm, _WAV_RATE))
-                x = frames[:, 0].astype(np.int64)
-                n_frames = (len(x) - _FRM) // _HOP + 1
-                idx = (
-                    np.arange(n_frames)[:, None] * _HOP
-                    + np.arange(_FRM)[None, :]
-                )
-                w = x[idx]  # (n_frames, _FRM) strided frame matrix
-                ids.extend([doc_id] * n_frames)
-                fis.extend(range(n_frames))
-                starts.extend((np.arange(n_frames) * _HOP).tolist())
-                peaks.extend(np.abs(w).max(axis=1).tolist())
-                energies.extend((w * w).sum(axis=1).tolist())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(fis, dtype="int32"),
-                    "start_sample": pd.Series(starts, dtype="int64"),
-                    "peak": pd.Series(peaks, dtype="int64"),
-                    "energy": pd.Series(energies, dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema=(
-            "doc_id long, frame_idx int, start_sample long, "
-            "peak long, energy long"
-        ),
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, frame_idx int, start_sample long, peak long, energy long",
+        rows_of,
     )
 
 
@@ -936,54 +897,23 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows_of(doc_id):
+        img = _decoded_image(doc_id)
+        thumb = resize_nearest(img, _THUMB, _THUMB)
+        yield (
+            doc_id,
+            img.shape[1],
+            img.shape[0],
+            _THUMB,
+            int(thumb.astype(np.int64).sum()),
+        )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in (
-                "doc_id", "src_width", "src_height", "thumb_edge", "thumb_sum"
-            )}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 29
-                h = 4 + (doc_id // 7) % 23
-                yy, xx = np.mgrid[0:h, 0:w]
-                val = ((xx + yy + doc_id) % 256).astype(np.uint8)
-                pix = np.repeat(val[:, :, None], 3, axis=2)
-                fmt = ("bmp", "ppm", "png")[doc_id % 3]
-                if fmt == "bmp":
-                    payload = encode_bmp(pix)
-                elif fmt == "ppm":
-                    payload = encode_ppm(pix)
-                else:
-                    payload = encode_png(pix, filter_type=doc_id % 5)
-                img = decode_image(payload)
-                thumb = resize_nearest(img, _THUMB, _THUMB)
-                out["doc_id"].append(doc_id)
-                out["src_width"].append(img.shape[1])
-                out["src_height"].append(img.shape[0])
-                out["thumb_edge"].append(_THUMB)
-                out["thumb_sum"].append(int(thumb.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "src_width": pd.Series(out["src_width"], dtype="int32"),
-                    "src_height": pd.Series(out["src_height"], dtype="int32"),
-                    "thumb_edge": pd.Series(out["thumb_edge"], dtype="int32"),
-                    "thumb_sum": pd.Series(out["thumb_sum"], dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema=(
-            "doc_id long, src_width int, src_height int, "
-            "thumb_edge int, thumb_sum long"
-        ),
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, src_width int, src_height int, thumb_edge int, "
+        "thumb_sum long",
+        rows_of,
     )
 
 
@@ -1037,7 +967,7 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal pipelines dedup by pHash before any embedding work, cf.
     LAION's pipeline).
 
-    Scale shape: decode+hash is one Arrow-batched mapInPandas pass
+    Scale shape: decode+hash is one ``per_doc`` (mapInArrow) pass
     (CPU-bound, embarrassingly parallel, bytes never leave executors);
     the dedup shuffle carries ONLY the 8-byte hash + id — identical
     posture to sha256 text dedup. Bucket output is |distinct hashes|
@@ -1049,49 +979,18 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets exactly like SemDeDup verifies within centroid buckets."""
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    ks = np.arange(_DH_H, dtype=np.int64)[:, None] * 8 + np.arange(_DH_W - 1)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ii = np.arange(_DH_W - 1)
-        for pdf in it:
-            out = {"doc_id": [], "hi": [], "lo": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 29
-                h = 4 + (doc_id // 7) % 23
-                yy, xx = np.mgrid[0:h, 0:w]
-                val = ((xx + yy + doc_id) % 256).astype(np.uint8)
-                pix = np.repeat(val[:, :, None], 3, axis=2)
-                fmt = ("bmp", "ppm", "png")[doc_id % 3]
-                if fmt == "bmp":
-                    payload = encode_bmp(pix)
-                elif fmt == "ppm":
-                    payload = encode_ppm(pix)
-                else:
-                    payload = encode_png(pix, filter_type=doc_id % 5)
-                img = decode_image(payload)
-                gray = resize_nearest(img, _DH_W, _DH_H)[:, :, 0].astype(np.int64)
-                bits = (gray[:, 1:] > gray[:, :-1]).astype(np.int64)
-                ks = (np.arange(_DH_H)[:, None] * 8 + ii[None, :]).astype(np.int64)
-                # pack halves separately: bit 63 would wrap int64 in one sum
-                lo = int((bits[:4] << ks[:4]).sum())
-                hi = int((bits[4:] << (ks[4:] - 32)).sum())
-                out["doc_id"].append(doc_id)
-                out["hi"].append(hi)
-                out["lo"].append(lo)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "hi": pd.Series(out["hi"], dtype="int64"),
-                    "lo": pd.Series(out["lo"], dtype="int64"),
-                }
-            )
+    def rows_of(doc_id):
+        img = resize_nearest(_decoded_image(doc_id), _DH_W, _DH_H)
+        gray = img[:, :, 0].astype(np.int64)
+        bits = (gray[:, 1:] > gray[:, :-1]).astype(np.int64)
+        # pack halves separately: bit 63 would wrap int64 in one sum
+        hi = int((bits[4:] << (ks[4:] - 32)).sum())
+        lo = int((bits[:4] << ks[:4]).sum())
+        yield doc_id, hi, lo
 
-    dh = docs.mapInPandas(_batches, schema="doc_id long, hi long, lo long")
+    dh = per_doc(spark, sf_dir, "doc_id long, hi long, lo long", rows_of)
     return dh.groupBy("hi", "lo").agg(
         F.count(F.lit(1)).cast("long").alias("n_images"),
         F.min("doc_id").cast("long").alias("keeper_id"),
@@ -1109,17 +1008,31 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # GIF decode (LZW) through the binary-column path
 # ---------------------------------------------------------------------------
 
-_GIF_W = "(4 + doc_id % 29)"
-_GIF_H = "(4 + (doc_id // 7) % 23)"
+
+def _decoded_gif(doc_id: int):
+    """The document's gradient as indices into a gray palette,
+    LZW-coded into a GIF89a (4-pass interlaced for odd doc_ids) and
+    decoded back to RGB by operators/gif.py."""
+    import numpy as np
+
+    from end_to_end_aws_data_pipeline_spark.operators.gif import (
+        decode_gif,
+        encode_gif,
+    )
+
+    gray = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
+    inter = bool(doc_id % 2)
+    return decode_gif(encode_gif(_gradient(doc_id), gray, interlace=inter))
+
 
 _DECODE_GIF_ORACLE = f"""
 SELECT doc_id,
        CAST(doc_id % 2 = 1 AS BOOLEAN) AS interlaced,
-       CAST({_GIF_W} AS INT) AS width,
-       CAST({_GIF_H} AS INT) AS height,
+       CAST({_DEC_W} AS INT) AS width,
+       CAST({_DEC_H} AS INT) AS height,
        CAST(3 * list_sum(list_transform(
-             range(0, {_GIF_W} * {_GIF_H}),
-             i -> (i % {_GIF_W} + i // {_GIF_W} + doc_id) % 256))
+             range(0, {_DEC_W} * {_DEC_H}),
+             i -> (i % {_DEC_W} + i // {_DEC_W} + doc_id) % 256))
             AS BIGINT) AS pixel_sum
 FROM documents
 """
@@ -1134,7 +1047,7 @@ def q_multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     row order with the descriptor flag set), then decoded back by the
     from-spec codec in operators/gif.py — variable-width LSB-first
     codes widening 9→12 bits, KwKwK self-reference handling,
-    de-interlacing — inside one Arrow-batched mapInPandas pass. The
+    de-interlacing — inside one ``per_doc`` (mapInArrow) pass. The
     oracle recomputes width/height/pixel_sum arithmetically, so any
     bit-packing, width-bump-timing, palette or interlace bug is a hash
     mismatch. Bytes never leave the executors; the driver sees only
@@ -1142,52 +1055,21 @@ def q_multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from end_to_end_aws_data_pipeline_spark.operators.gif import (
-        decode_gif,
-        encode_gif,
-    )
+    def rows_of(doc_id):
+        rgb = _decoded_gif(doc_id)
+        yield (
+            doc_id,
+            bool(doc_id % 2),
+            rgb.shape[1],
+            rgb.shape[0],
+            int(rgb.astype(np.int64).sum()),
+        )
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    gray = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in (
-                "doc_id", "interlaced", "width", "height", "pixel_sum"
-            )}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 29
-                h = 4 + (doc_id // 7) % 23
-                yy, xx = np.mgrid[0:h, 0:w]
-                idx = ((xx + yy + doc_id) % 256).astype(np.uint8)
-                inter = bool(doc_id % 2)
-                rgb = decode_gif(encode_gif(idx, gray, interlace=inter))
-                rows["doc_id"].append(doc_id)
-                rows["interlaced"].append(inter)
-                rows["width"].append(rgb.shape[1])
-                rows["height"].append(rgb.shape[0])
-                rows["pixel_sum"].append(int(rgb.astype(np.int64).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "interlaced": pd.Series(rows["interlaced"], dtype="bool"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "pixel_sum": pd.Series(rows["pixel_sum"], dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema=(
-            "doc_id long, interlaced boolean, width int, height int, "
-            "pixel_sum long"
-        ),
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, interlaced boolean, width int, height int, pixel_sum long",
+        rows_of,
     )
 
 
@@ -1239,65 +1121,37 @@ def q_multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     This is the standard-data-pipeline normalization step (every ASR /
     audio-LM corpus resamples to one rate) in the shape it must take
-    at 100 TB: stateless per-clip arithmetic inside Arrow-batched
-    mapInPandas, no driver involvement, bytes never leaving executors.
+    at 100 TB: stateless per-clip arithmetic inside one ``per_doc``
+    (mapInArrow) pass, no driver involvement, bytes never leaving
+    executors.
     A production polyphase filter replaces the interpolation kernel;
     the pipeline shape is identical.
     """
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows_of(doc_id):
+        rate, _, x = _decoded_wav(doc_id)
+        nf = len(x)
+        n_out = (nf - 1) * _RS_DEN // _RS_NUM + 1
+        pos = np.arange(n_out, dtype=np.int64) * _RS_NUM
+        i0 = pos // _RS_DEN
+        i1 = np.minimum(i0 + 1, nf - 1)
+        y3 = _RS_DEN * x[i0] + pos % _RS_DEN * (x[i1] - x[i0])
+        yield (
+            doc_id,
+            nf,
+            n_out,
+            rate * _RS_DEN // _RS_NUM,
+            int(np.abs(y3).sum()),
+            int((y3 * y3).sum()),
+        )
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nf = 800 + (doc_id % 5) * 160
-                step = 1 + doc_id % 7
-                i = np.arange(nf, dtype=np.int64)
-                pcm = ((i * step) % 2048 - 1024).astype(np.int16)
-                rate, ch, frames = decode_wav(encode_wav(pcm, _WAV_RATE))
-                x = frames[:, 0].astype(np.int64)
-                n_out = (nf - 1) * _RS_DEN // _RS_NUM + 1
-                j = np.arange(n_out, dtype=np.int64)
-                pos = j * _RS_NUM
-                i0 = pos // _RS_DEN
-                f = pos % _RS_DEN
-                i1 = np.minimum(i0 + 1, nf - 1)
-                y3 = _RS_DEN * x[i0] + f * (x[i1] - x[i0])
-                out.append(
-                    (
-                        doc_id,
-                        nf,
-                        n_out,
-                        rate * _RS_DEN // _RS_NUM,
-                        int(np.abs(y3).sum()),
-                        int((y3 * y3).sum()),
-                    )
-                )
-            cols = ("doc_id", "n_in", "n_out", "out_rate",
-                    "sum_abs3", "sum_sq9")
-            yield pd.DataFrame(
-                {
-                    c: pd.Series(
-                        [r[k] for r in out],
-                        dtype="int32" if c == "out_rate" else "int64",
-                    )
-                    for k, c in enumerate(cols)
-                }
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema=(
-            "doc_id long, n_in long, n_out long, out_rate int, "
-            "sum_abs3 long, sum_sq9 long"
-        ),
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, n_in long, n_out long, out_rate int, "
+        "sum_abs3 long, sum_sq9 long",
+        rows_of,
     )
 
 
@@ -1311,8 +1165,8 @@ _IMG_HIST_ORACLE = f"""
 WITH per_doc AS (
   SELECT doc_id, b.b AS bin,
          CAST(list_sum(list_transform(
-           range(0, {_GIF_W} * {_GIF_H}),
-           i -> CASE WHEN (i % {_GIF_W} + i // {_GIF_W} + doc_id) % 256
+           range(0, {_DEC_W} * {_DEC_H}),
+           i -> CASE WHEN (i % {_DEC_W} + i // {_DEC_W} + doc_id) % 256
                           // {256 // _IH_BINS} = b.b THEN 1 ELSE 0 END))
               AS BIGINT) AS n_px
   FROM documents, (SELECT unnest(range(0, {_IH_BINS})) AS b) b
@@ -1328,7 +1182,7 @@ FROM per_doc GROUP BY bin
 def q_multimodal_img_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level image intensity histogram computed from REAL
     decodes: every document's gradient image round-trips the GIF/LZW
-    codec, the decoded pixels histogram into {bins} intensity bins
+    codec, the decoded pixels histogram into 16 intensity bins
     per image inside the Arrow batch, and per-image bin counts
     aggregate to the corpus distribution — the exposure/brightness
     audit an image-training pipeline runs to catch a miscalibrated
@@ -1336,65 +1190,26 @@ def q_multimodal_img_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans). The doc-weighted checksum pins per-image histograms, not
     just the corpus totals, so one wrong image can't hide.
 
-    Scale shape: decode CPU ∝ bytes inside mapInPandas (bytes never
-    reach the driver); the shuffle carries doc×{bins} small ints;
-    the final aggregate is {bins} rows.
+    Scale shape: decode CPU ∝ bytes inside mapInArrow (bytes never
+    reach the driver); the shuffle carries doc×16 small ints;
+    the final aggregate is 16 rows.
     """
     import numpy as np
 
-    from end_to_end_aws_data_pipeline_spark.operators.gif import (
-        decode_gif,
-        encode_gif,
-    )
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    gray = np.stack([np.arange(256)] * 3, axis=1).astype(np.uint8)
     width = 256 // _IH_BINS
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {"doc_id": [], "bin": [], "n_px": []}
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 29
-                h = 4 + (doc_id // 7) % 23
-                yy, xx = np.mgrid[0:h, 0:w]
-                idx = ((xx + yy + doc_id) % 256).astype(np.uint8)
-                rgb = decode_gif(encode_gif(idx, gray, interlace=bool(doc_id % 2)))
-                counts = np.bincount(
-                    rgb[:, :, 0].ravel() // width, minlength=_IH_BINS
-                )
-                for b in range(_IH_BINS):
-                    rows["doc_id"].append(doc_id)
-                    rows["bin"].append(b)
-                    rows["n_px"].append(int(counts[b]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "bin": pd.Series(rows["bin"], dtype="int32"),
-                    "n_px": pd.Series(rows["n_px"], dtype="int64"),
-                }
-            )
+    def rows_of(doc_id):
+        gray = _decoded_gif(doc_id)[:, :, 0].ravel()
+        counts = np.bincount(gray // width, minlength=_IH_BINS)
+        for b in range(_IH_BINS):
+            yield doc_id, b, int(counts[b])
 
-    per_doc = docs.mapInPandas(
-        _batches, schema="doc_id long, bin int, n_px long"
-    )
-    return per_doc.groupBy("bin").agg(
+    bins = per_doc(spark, sf_dir, "doc_id long, bin int, n_px long", rows_of)
+    return bins.groupBy("bin").agg(
         F.sum("n_px").cast("long").alias("n_pixels"),
         F.sum(F.col("doc_id") * F.col("n_px"))
         .cast("long")
         .alias("doc_checksum"),
-    )
-
-
-_IH_DOC = q_multimodal_img_histogram.__doc__
-if _IH_DOC is not None:
-    q_multimodal_img_histogram.__doc__ = _IH_DOC.replace(
-        "{bins}", str(_IH_BINS)
     )
 
 
@@ -1446,7 +1261,7 @@ def q_multimodal_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The video bytes are REAL: the UDF materializes every frame,
     re-slices the payload at frame stride, and computes diffs from the
-    decoded pixels inside one Arrow-batched mapInPandas pass — bytes
+    decoded pixels inside one ``per_doc`` (mapInArrow) pass — bytes
     never reach the driver and never shuffle (the aggregate emits 4
     scalars per doc). The oracle predicts the same cuts arithmetically
     from the generator formula, so a slicing/stride/diff bug is a hash
@@ -1455,47 +1270,24 @@ def q_multimodal_video_scenes(spark: SparkSession, sf_dir: str) -> DataFrame:
     in production a codec) dominates and partitions by file."""
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    def rows_of(doc_id):
+        nf = 8 + doc_id % 5
+        slen = 3 + doc_id % 3
+        # encode: one constant 16x16 frame per scene step
+        payload = b"".join(
+            bytes([(doc_id * 7 + (f // slen) * 97) % 256]) * _SC_FRAME_PX
+            for f in range(nf)
+        )
+        # decode: re-slice at frame stride, diff consecutive means
+        arr = np.frombuffer(payload, dtype=np.uint8).reshape(nf, _SC_FRAME_PX)
+        diffs = np.abs(np.diff(arr.mean(axis=1).astype(np.int64)))
+        yield doc_id, nf, int((diffs >= _SC_TAU).sum()) + 1, int(diffs.sum())
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nfs, scenes, sums = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nf = 8 + doc_id % 5
-                slen = 3 + doc_id % 3
-                # encode: one constant 16x16 frame per scene step
-                payload = b"".join(
-                    bytes([(doc_id * 7 + (f // slen) * 97) % 256])
-                    * _SC_FRAME_PX
-                    for f in range(nf)
-                )
-                # decode: re-slice at frame stride, diff consecutive means
-                arr = np.frombuffer(payload, dtype=np.uint8).reshape(
-                    nf, _SC_FRAME_PX
-                )
-                means = arr.mean(axis=1).astype(np.int64)
-                diffs = np.abs(np.diff(means))
-                ids.append(doc_id)
-                nfs.append(nf)
-                scenes.append(int((diffs >= _SC_TAU).sum()) + 1)
-                sums.append(int(diffs.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "n_frames": pd.Series(nfs, dtype="int64"),
-                    "n_scenes": pd.Series(scenes, dtype="int64"),
-                    "sum_diff": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema="doc_id long, n_frames long, n_scenes long, sum_diff long",
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, n_frames long, n_scenes long, sum_diff long",
+        rows_of,
     )
 
 
@@ -1544,70 +1336,40 @@ GROUP BY a.doc_id
 @register("q_multimodal_audio_vad", oracle=_VAD_ORACLE)
 def q_multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy-gated voice-activity detection through the real codec
-    path: decode the PCM16 WAV, frame into {_VAD_FRAME}-sample (10 ms)
+    path: decode the PCM16 WAV, frame into 160-sample (10 ms)
     windows, gate each frame on exact int64 energy (Σx² >
-    {_VAD_THR}), then contiguous active frames collapse to SEGMENTS
+    50,000,000), then contiguous active frames collapse to SEGMENTS
     via gaps-and-islands — per clip: frame count, active frames,
     segment count, longest segment. The speech-segmentation front-end
     every ASR/audio-LM corpus runs before cutting training clips; a
     production VAD swaps the energy gate for a model score, the
     framing/segmentation plumbing is identical.
 
-    All arithmetic is integer (energy ≤ {_VAD_FRAME}·1024² ≈ 1.7e8
+    All arithmetic is integer (energy ≤ 160·1024² ≈ 1.7e8
     per frame), so the oracle replays decode-equivalent samples, frame
-    sums, and island segmentation exactly. Scale shape: Arrow-batched
-    mapInPandas per clip — bytes never leave executors, per-clip state
+    sums, and island segmentation exactly. Scale shape: one mapInArrow
+    pass per clip — bytes never leave executors, per-clip state
     is one frame-energy array, and the segment logic is numpy on a
     handful of frames (no window over anything corpus-sized)."""
-    import numpy as np
+    def rows_of(doc_id):
+        _, _, x = _decoded_wav(doc_id)
+        nfr = len(x) // _VAD_FRAME
+        en = (x[: nfr * _VAD_FRAME].reshape(nfr, _VAD_FRAME) ** 2).sum(axis=1)
+        act = en > _VAD_THR
+        # islands: segment boundaries where activity turns on
+        starts = int(act[0]) + int((act[1:] & ~act[:-1]).sum())
+        longest = run = 0
+        for a in act:
+            run = run + 1 if a else 0
+            longest = max(longest, run)
+        yield doc_id, nfr, int(act.sum()), starts, longest
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                nf = 800 + (doc_id % 5) * 160
-                step = 1 + doc_id % 7
-                i = np.arange(nf, dtype=np.int64)
-                pcm = ((i * step) % 2048 - 1024).astype(np.int16)
-                rate, ch, frames = decode_wav(encode_wav(pcm, _WAV_RATE))
-                x = frames[:, 0].astype(np.int64)
-                nfr = len(x) // _VAD_FRAME
-                en = (
-                    x[: nfr * _VAD_FRAME].reshape(nfr, _VAD_FRAME) ** 2
-                ).sum(axis=1)
-                act = en > _VAD_THR
-                # islands: segment boundaries where activity turns on
-                starts = int(act[0]) + int((act[1:] & ~act[:-1]).sum())
-                longest = 0
-                run = 0
-                for a in act:
-                    run = run + 1 if a else 0
-                    longest = max(longest, run)
-                rows.append(
-                    (doc_id, nfr, int(act.sum()), starts, longest)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_frames",
-                    "n_active",
-                    "n_segments",
-                    "longest_segment",
-                ],
-            )
-
-    return docs.mapInPandas(
-        _batches,
-        schema="doc_id long, n_frames long, n_active long, "
-        "n_segments long, longest_segment long",
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, n_frames long, n_active long, n_segments long, "
+        "longest_segment long",
+        rows_of,
     )
 
 
@@ -1648,68 +1410,32 @@ FROM ps GROUP BY doc_id
 @register("q_multimodal_patches", oracle=_PATCHES_ORACLE)
 def q_multimodal_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ViT-style patchification through the real codec path: decode
-    the BMP/PPM/PNG bytes, nearest-neighbor to the canonical
-    {_PATCH_EDGE}×{_PATCH_EDGE} input, split into a
-    {_PATCH_GRID}×{_PATCH_GRID} grid of {_PATCH_PX}×{_PATCH_PX}
-    patches in raster order — the exact front-end every vision
+    the BMP/PPM/PNG bytes, nearest-neighbor to the canonical 16×16
+    input, split into a 4×4 grid of 4×4 patches in raster order — the exact front-end every vision
     transformer runs before embedding. The published POSITIONAL
     checksum Σ(p+1)·patch_sum is order-sensitive by construction:
     a transposed or shuffled patch sequence (the classic patching
     bug) changes the value even when pixel totals don't.
 
     All integer; the oracle replays decode-equivalent pixels, the
-    resize indexing, and the raster patch order. Arrow-batched
-    mapInPandas; bytes never leave executors."""
+    resize indexing, and the raster patch order. One mapInArrow
+    pass; bytes never leave executors."""
     import numpy as np
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
     G, P, E = _PATCH_GRID, _PATCH_PX, _PATCH_EDGE
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                w = 4 + doc_id % 29
-                h = 4 + (doc_id // 7) % 23
-                yy, xx = np.mgrid[0:h, 0:w]
-                val = ((xx + yy + doc_id) % 256).astype(np.uint8)
-                pix = np.repeat(val[:, :, None], 3, axis=2)
-                fmt = ("bmp", "ppm", "png")[doc_id % 3]
-                if fmt == "bmp":
-                    payload = encode_bmp(pix)
-                elif fmt == "ppm":
-                    payload = encode_ppm(pix)
-                else:
-                    payload = encode_png(pix, filter_type=doc_id % 5)
-                img = decode_image(payload)
-                canon = resize_nearest(img, E, E).astype(np.int64)
-                # raster patch order: (E,E,3)->(G,P,G,P,3)->(G,G,...)
-                patches = canon.reshape(G, P, G, P, 3).transpose(
-                    0, 2, 1, 3, 4
-                ).reshape(G * G, -1)
-                sums = patches.sum(axis=1)
-                pos = int(((np.arange(G * G) + 1) * sums).sum())
-                rows.append(
-                    (doc_id, G * G, pos, int(sums.min()), int(sums.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_patches",
-                    "pos_checksum",
-                    "min_patch_sum",
-                    "max_patch_sum",
-                ],
-            )
+    def rows_of(doc_id):
+        canon = resize_nearest(_decoded_image(doc_id), E, E).astype(np.int64)
+        # raster patch order: (E,E,3)->(G,P,G,P,3)->(G,G,...)
+        patches = canon.reshape(G, P, G, P, 3).transpose(0, 2, 1, 3, 4)
+        sums = patches.reshape(G * G, -1).sum(axis=1)
+        pos = int(((np.arange(G * G) + 1) * sums).sum())
+        yield doc_id, G * G, pos, int(sums.min()), int(sums.max())
 
-    return docs.mapInPandas(
-        _batches,
-        schema="doc_id long, n_patches int, pos_checksum long, "
+    return per_doc(
+        spark,
+        sf_dir,
+        "doc_id long, n_patches int, pos_checksum long, "
         "min_patch_sum long, max_patch_sum long",
+        rows_of,
     )

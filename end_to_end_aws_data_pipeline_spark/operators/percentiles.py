@@ -1126,9 +1126,9 @@ def q_agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape is the point: "k smallest" is mergeable (the min-k of
     min-k unions is the global min-k), so the plan fans out as a
-    per-(group, salt) local top-k window over {SALTS} hash-derived
-    salts — each sorting 1/{SALTS} of a group — then a final top-k
-    over the ≤ {SALTS}·k survivors. No group-sized sort anywhere; at
+    per-(group, salt) local top-k window over 32 hash-derived
+    salts — each sorting 1/32 of a group — then a final top-k
+    over the ≤ 32·k survivors. No group-sized sort anywhere; at
     100 TB each phase-1 partition stays reducer-sized by
     construction. The estimate's single division runs on identical
     exact operands, so the driver hash pins the sketch AND the
@@ -1176,11 +1176,6 @@ def q_agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("h_k").cast("long").alias("h_k"),
         stable_round(est, 2).alias("kmv_parts"),
     )
-
-
-_KMV_DOC = q_agg_kmv_distinct.__doc__
-if _KMV_DOC is not None:
-    q_agg_kmv_distinct.__doc__ = _KMV_DOC.replace("{SALTS}", str(_KMV_SALTS))
 
 
 # ---------------------------------------------------------------------------
@@ -1384,18 +1379,18 @@ FROM b GROUP BY g
 @register("q_agg_bitmap_distinct", oracle=_BITMAP_ORACLE)
 def q_agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT distinct count over a dense integer domain via bitmap
-    words: key k sets bit k mod {bits} of word k div {bits}; words
+    words: key k sets bit k mod 62 of word k div 62; words
     combine with BIT_OR — an associative, idempotent, map-side-
     combinable aggregate — and the distinct count is the popcount
     sum. This is the poor-man's roaring bitmap: where count(DISTINCT)
     shuffles every distinct VALUE, the bitmap shuffles
-    domain/{bits} words regardless of row count, and the same words
+    domain/62 words regardless of row count, and the same words
     roll up across partitions/days by OR (the HLL-merge argument,
     but EXACT — the trade is requiring a bounded integer domain,
     which surrogate keys are).
 
     The word checksum pins which words are populated, not just how
-    many bits survived; {bits}-bit words keep every shift inside
+    many bits survived; 62-bit words keep every shift inside
     signed int64 in both engines.
     """
     li = table(spark, sf_dir, "lineitem")
@@ -1419,11 +1414,6 @@ def q_agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_words",
         "word_checksum",
     )
-
-
-_BM_DOC = q_agg_bitmap_distinct.__doc__
-if _BM_DOC is not None:
-    q_agg_bitmap_distinct.__doc__ = _BM_DOC.replace("{bits}", str(_BM_BITS))
 
 
 # ---------------------------------------------------------------------------
@@ -1609,14 +1599,14 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width value histogram per group — the generic
     distribution-shape readout behind every profiler bar chart, with
     ADAPTIVE bounds: a one-row global min/max probe fixes
-    {_HISTO_BINS} integer-cent bins (width = span//bins + 1 — exact
+    16 integer-cent bins (width = span//bins + 1 — exact
     integer, no float edges, so bin assignment replays in any engine),
     then one combinable pass counts and sums per (group, bin). The
     fixed-band lesson (scale-lessons: a $100 band collapsed a
     deviation pass) is why bounds adapt instead of being constants.
 
     Scale shape: probe (1 row) + one map-side-combinable groupBy whose
-    key space is groups x {_HISTO_BINS} — never data-sized; executor
+    key space is groups x 16 — never data-sized; executor
     state is a handful of int64 counters per task."""
     li = table(spark, sf_dir, "lineitem")
     v = li.select(

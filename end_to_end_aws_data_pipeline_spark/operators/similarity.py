@@ -1220,7 +1220,7 @@ FROM (
 def q_contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-level decontamination: flag corpus vectors whose
     cosine to ANY held-out eval vector (deterministic membership:
-    vec_id % {MOD} == 0) reaches τ — the semantic complement of the
+    vec_id % 100 == 0) reaches τ — the semantic complement of the
     n-gram q_curation_contamination (paraphrased eval leakage that
     shares no 8-gram still lands next to its source in embedding
     space; cf. the train/test-overlap audits in GPT-3 appx. C / PaLM).
@@ -1976,10 +1976,10 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused score is INTEGER micro-units 1000000 div (k + rank) — pure
     integer division in both engines, no float anywhere in the fusion.
 
-    Scale shape: each list is cut to its top-{_RRF_N} by
+    Scale shape: each list is cut to its top-50 by
     orderBy+limit (TakeOrderedAndProject: per-partition heaps, never a
     corpus-sized global window — the segmented-rank lesson), so the
-    fusion join touches at most 2x{_RRF_N} rows regardless of corpus
+    fusion join touches at most 2x50 rows regardless of corpus
     size; the semantic side is one broadcast probe vector against the
     quantized embeddings (expression-only zip_with dot product)."""
     from end_to_end_aws_data_pipeline_spark.operators.text import bm25_scores
@@ -2101,7 +2101,7 @@ def q_embed_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Exactness: every dot is the same int64 quantized fold the IVF
     oracle replays; per-centroid sums are int64 (member dot ≤
-    {_SCALE_SQ}, so 2^63/{_SCALE_SQ} ≈ 9e3 members per cluster of
+    10^16, so 2^63/10^16 ≈ 9e3 members per cluster of
     headroom per 1e15 — at larger clusters widen to decimal);
     publishes through the floor stabilizer.
 
@@ -2230,7 +2230,7 @@ WITH v AS MATERIALIZED ({_QV_SQL}
 def q_embed_kcenter_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center seeding (Gonzalez '85 farthest-point traversal;
     the k-means++ alternative when determinism beats D² sampling):
-    {_KC_K} maximally-spread embedding rows — the coreset/codebook
+    8 maximally-spread embedding rows — the coreset/codebook
     initialization a training pipeline runs before clustering, with
     the published radius_sim column (each new seed's cosine to its
     NEAREST prior seed) giving the classic 2-approximation coverage

@@ -172,7 +172,7 @@ def q_source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     enters the engine from an object store (one row per file: path,
     length, content bytes) — feeding the pure-python BMP decoder.
 
-    Staging: the first {n} documents are rendered as real BMP files on
+    Staging: the first 24 documents are rendered as real BMP files on
     disk (deterministic gradient, same derivation as
     q_multimodal_decode); the scan reads them back via binaryFile,
     extracts doc_id from the file name, and decodes content to
@@ -182,6 +182,7 @@ def q_source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from end_to_end_aws_data_pipeline_spark.operators.multimodal import (
+        _gradient,
         decode_image,
         encode_bmp,
     )
@@ -191,11 +192,7 @@ def q_source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(done):
         os.makedirs(out, exist_ok=True)
         for doc_id in range(_BINFILE_N):
-            w = 4 + doc_id % 29
-            h = 4 + (doc_id // 7) % 23
-            yy, xx = np.mgrid[0:h, 0:w]
-            val = ((xx + yy + doc_id) % 256).astype(np.uint8)
-            pix = np.repeat(val[:, :, None], 3, axis=2)
+            pix = np.repeat(_gradient(doc_id)[:, :, None], 3, axis=2)
             with open(os.path.join(out, f"doc_{doc_id:05d}.bmp"), "wb") as f:
                 f.write(encode_bmp(pix))
         with open(done, "w") as f:

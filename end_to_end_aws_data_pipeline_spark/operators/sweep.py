@@ -1797,7 +1797,7 @@ GROUP BY a.event_type, l.lag, den.den
 
 @register("q_timeseries_acf", oracle=_ACF_ORACLE)
 def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation function per event type at lags 1..{_ACF_MAX_LAG}
+    """Autocorrelation function per event type at lags 1..5
     — the seasonality probe read before fitting any forecast (a weekly
     cycle shows as an acf(7) spike, a trending series decays slowly).
 
@@ -1922,7 +1922,7 @@ GROUP BY a.event_type, b.event_type, l.lag, da.den, db.den
 @register("q_timeseries_ccf", oracle=_CCF_ORACLE)
 def q_timeseries_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-correlation function between every ordered pair of event
-    types at lags -{_CCF_MAX_LAG}..+{_CCF_MAX_LAG} — the lead/lag probe
+    types at lags -3..+3 — the lead/lag probe
     the ACF can't answer: a positive-lag spike in ccf(view, purchase)
     says views LEAD purchases by that many days, the signal a
     campaign-attribution or forecast-feature pipeline reads first.
@@ -2127,7 +2127,7 @@ def q_window_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest consecutive-day activity streak per user (with its start
     date and the user's total streak count) — the engagement metric
     behind every retention dashboard, published for users whose best
-    streak reaches {_STREAK_MIN} days. Deterministic tie: the EARLIEST
+    streak reaches 7 days. Deterministic tie: the EARLIEST
     equally-long streak wins.
 
     Gaps-and-islands on DISTINCT user-days: island id = day −

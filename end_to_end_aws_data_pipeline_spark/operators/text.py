@@ -420,8 +420,6 @@ def q_text_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 bigrams: shingle explode → count → global
     top-k with deterministic ties (the NGram + CountVectorizer shape
     without mllib overhead)."""
-    from end_to_end_aws_data_pipeline_spark.operators.dedup import shingles
-
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     idx = F.sequence(F.lit(0), F.greatest(F.size(words) - 2, F.lit(0)))
@@ -888,7 +886,7 @@ def _bpe_train(
 
 @register("q_text_bpe_merges", oracle=_bpe_oracle_from(_bpe_oracle()))
 def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learn the first {ROUNDS} BPE merge rules from the corpus — the
+    """Learn the first 6 BPE merge rules from the corpus — the
     tokenizer-training step of an LLM data pipeline, run as an
     iterative Spark job (the q_graph_pagerank playbook applied to
     subword learning).
@@ -904,7 +902,7 @@ def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: counts are exact integers; the argmax tie-break is
     (count DESC, pair ASC); merge application is greedy
     left-to-right (within a run of identical overlapping matches,
-    merges land at even offsets). The oracle unrolls all {ROUNDS}
+    merges land at even offsets). The oracle unrolls all 6
     rounds as CTE chains and re-derives every argmax and every merge,
     so tokenizer TRAINING — not just application — is hash-verified.
     Output: (step, lhs, rhs, merged, pair_count) — the merges file a
@@ -1469,18 +1467,18 @@ ORDER BY cnt DESC, piece LIMIT {_ULM_TOP}"""
 def q_text_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM (SentencePiece-style) tokenizer training — the EM
     sibling of q_text_bpe_merges (Kudo, "Subword Regularization",
-    ACL'18): seed a candidate vocabulary with every ≤{_ULM_PLEN}-char
-    substring of the clean-word table (top {_ULM_SEED} by corpus count
-    + the full alphabet), then run {_ULM_ROUNDS} Viterbi hard-EM
+    ACL'18): seed a candidate vocabulary with every ≤4-char
+    substring of the clean-word table (top 48 by corpus count
+    + the full alphabet), then run 2 Viterbi hard-EM
     rounds — E-step segments every distinct word by minimum total
     -log2 p(piece) (exact int64 fixed-point, extras._l2hi_steps
     semantics), M-step re-counts pieces from the chosen segmentations.
-    Published: the final top-{_ULM_TOP} multi-char pieces.
+    Published: the final top-15 multi-char pieces.
 
     Determinism: costs are integers, the DP tie-break is total
     ((cost, n_pieces), then longest piece), and seed selection ties
     break on the piece string — so the oracle's unrolled-CTE replay
-    (seed → per-round cost table → {_ULM_MAXLEN}-stage list-carrying
+    (seed → per-round cost table → 12-stage list-carrying
     DP → re-count) reproduces training EXACTLY, like the BPE oracle.
 
     100 TB: every distributed pass is vocabulary-sized (distinct clean
@@ -1892,7 +1890,7 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers, the OLS moments are exact sums, and the two final
     divisions run on identical operands — the regression itself is the
     q_agg_regression shape applied to a derived log-log space.
-    One token pass (combinable counts), a {TOP}-row head via ranked
+    One token pass (combinable counts), a 64-row head via ranked
     window over the aggregated frequency table, then literal
     arithmetic.
     """
@@ -1940,11 +1938,6 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         stable_round(slope, 6).alias("zipf_slope"),
         stable_round(intercept, 6).alias("intercept_log2"),
     )
-
-
-_ZIPF_DOC = q_text_zipf.__doc__
-if _ZIPF_DOC is not None:
-    q_text_zipf.__doc__ = _ZIPF_DOC.replace("{TOP}", str(_ZIPF_TOP))
 
 
 # ---------------------------------------------------------------------------
@@ -2329,7 +2322,7 @@ def q_text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: word scores are integer micro-units (deg * 1e6 div
     freq — integer division in both engines); phrase scores are exact
-    integer sums; the top-{_RAKE_TOP} order (score desc, phrase) is
+    integer sums; the top-15 order (score desc, phrase) is
     total. Identical phrases always contain identical words, so max()
     over their per-occurrence scores is exact, not a tie-break.
 
@@ -2478,7 +2471,7 @@ def q_text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Weighted integer PageRank: per-edge contribution is
     (rank * weight) div weighted_degree — exact int64 (rank ≤ R0=1e9,
     weight/wdeg ratios ≤ 1), damping is the integer (85·x) div 100,
-    so the DuckDB oracle replays all {_TR_ITERS} unrolled rounds
+    so the DuckDB oracle replays all 3 unrolled rounds
     bit-for-bit, exactly like q_graph_pagerank.
 
     Scale shape: the co-occurrence build is one corpus scan + one
@@ -2584,8 +2577,8 @@ def q_text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape) and char entropy (symbol level).
 
     Shape: token pass → (source, word) counts → frequency-of-
-    frequencies (vocabulary-sized, then SPECTRUM-sized: |{m}| distinct
-    counts) → one exact-integer aggregate; the numerator is pure int64
+    frequencies (vocabulary-sized, then SPECTRUM-sized: one row per
+    distinct count m) → one exact-integer aggregate; the numerator is pure int64
     and the single division publishes via the stabilizer."""
     from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 

@@ -20,10 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import table
-from end_to_end_aws_data_pipeline_spark.functions.aggs import (
-    stable_round,
-    stable_round_sql,
-)
+from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -311,7 +308,7 @@ def q_window_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The recurrence form of EWMA (s_t = αx + (1-α)s_{t-1}) is
     sequential and engine-hostile; the TAP form used here is one window
-    with {D} lag columns — a single shuffle on user_id, whole-stage
+    with 7 lag columns — a single shuffle on user_id, whole-stage
     codegen'd, identical cost to any other framed window at 100 TB.
     Eight binary taps carry 255/256 of the geometric mass, so the
     truncation is below cent resolution for typical magnitudes."""

@@ -715,8 +715,8 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A pure-Python STREAMING connector executed for real inside the
     gate: the custom data source's partitioned `streamReader` face
     (operators/sources.py — same registration serves spark.read and
-    spark.readStream) advances a cursor offset {_PYDS_STREAM_BATCH}
-    rows per micro-batch over {_PYDS_STREAM_N} deterministic events,
+    spark.readStream) advances a cursor offset 1700
+    rows per micro-batch over 5000 deterministic events,
     and `partitions()`
     fans each micro-batch's offset range across multiple
     InputPartitions, so rows materialize in parallel tasks on

@@ -322,7 +322,7 @@ def merge_sketches(spark: SparkSession, acc: str, n_rows: int) -> DataFrame:
 @register("q_stream_sketch_merge", oracle=_SK_ORACLE)
 def q_stream_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming sketch maintenance, EXECUTED in the gate: the events
-    table arrives as {_SK_BUCKETS} deterministic micro-batches
+    table arrives as 4 deterministic micro-batches
     (maxFilesPerTrigger=1 over staged bucket files), foreachBatch
     builds each batch's canonical level-1 rank sketch and upserts it
     into a summary store by partition-scoped overwrite, and the

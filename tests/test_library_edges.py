@@ -1,17 +1,10 @@
 """Edge cases for library operators not fully covered by the registry
-queries: bucketized range join with misaligned intervals, minhash
-signature shape/determinism."""
+queries: bucketized range join with misaligned intervals, Python data
+source partitioning."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from end_to_end_aws_data_pipeline_spark.operators.asof import bucketed_range_join
-from end_to_end_aws_data_pipeline_spark.operators.dedup import (
-    _MINHASH_K,
-    minhash_signature,
-    shingles,
-)
 
 
 def test_bucketed_range_join_misaligned_intervals(spark):
@@ -43,24 +36,6 @@ def test_bucketed_range_join_misaligned_intervals(spark):
     assert got == naive
     assert (5, "edge") in got  # x=500.0 ∈ [500, 501)
     assert all(n != "empty" for _, n in got)
-
-
-def test_minhash_signature_shape_and_determinism(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g"), (2, "a b c d e f g"), (3, "x y z w v u t")],
-        "doc_id long, text string",
-    )
-    sigs = {
-        r.doc_id: tuple(r.sig)
-        for r in df.select(
-            "doc_id", minhash_signature(shingles(F.col("text"))).alias("sig")
-        ).collect()
-    }
-    assert all(len(s) == _MINHASH_K for s in sigs.values())
-    assert sigs[1] == sigs[2]  # identical text → identical signature
-    assert sigs[1] != sigs[3]
-    # signature entries differ per seed (the arity-trap regression)
-    assert len(set(sigs[1])) > 1
 
 
 def test_python_datasource_partition_parallelism(spark):

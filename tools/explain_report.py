@@ -60,8 +60,9 @@ SHOWCASE = {
         "then a 3-row broadcast join against the exact twin",
     ],
     "q_multimodal_resize": [
-        "decode→resize runs in one Arrow-batched MapInPandas over a "
-        "repartitioned 8-byte id column (bytes never cross to the driver)",
+        "decode→resize runs in one MapInArrow (multimodal.per_doc) over "
+        "a round-robin-spread 8-byte id column: Arrow batches in and out, "
+        "no pandas frame, bytes never cross to the driver",
     ],
     "q_sample_stratified": [
         "scan + Filter + Project ONLY — zero exchanges, zero Python: "
