@@ -32,6 +32,12 @@ from end_to_end_aws_data_pipeline_spark.operators.iterate import (
     fused_ckpt,
     min_label_step,
 )
+from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
+    Q_SCALE,
+    SCALE_SQ,
+    int_matrix,
+    quantized,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -760,9 +766,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gram blocks computed by numpy matmul, deterministic by construction)
 # ---------------------------------------------------------------------------
 
-_Q_SCALE = 100_000_000  # 1e8: quantized unit-vector dots fit int64 with
-# huge headroom (|dot_q| ≤ 1e16 + slop) and give ~1e-8 cosine resolution
-
 _TARGET_BLOCK_ROWS = 4096  # per-block row bound → constant per-task memory
 _MIN_BLOCKS = 8  # parallelism floor: ≥ B(B+1)/2 = 36 block-pair tasks
 
@@ -783,16 +786,16 @@ WITH v AS (
            (CAST(x AS DOUBLE) /
              sqrt(list_sum(list_transform(embedding,
                   y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))
-           ) * {_Q_SCALE}) AS BIGINT)) AS q
+           ) * {Q_SCALE}) AS BIGINT)) AS q
   FROM embeddings
 )
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        floor(CAST(list_sum(list_transform(range(1, len(a.q)+1),
-             i -> a.q[i] * b.q[i])) AS DOUBLE) / {_Q_SCALE * _Q_SCALE}.0
+             i -> a.q[i] * b.q[i])) AS DOUBLE) / {SCALE_SQ}.0
              * 1000000 + 0.5) / 1000000 AS cosine
 FROM v a JOIN v b ON a.vec_id < b.vec_id
 WHERE CAST(list_sum(list_transform(range(1, len(a.q)+1),
-      i -> a.q[i] * b.q[i])) AS DOUBLE) / {_Q_SCALE * _Q_SCALE}.0 >= {_COS_TAU}
+      i -> a.q[i] * b.q[i])) AS DOUBLE) / {SCALE_SQ}.0 >= {_COS_TAU}
 """
 
 
@@ -803,10 +806,13 @@ def q_dedup_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     Vectors are unit-normalized, quantized to int64 (×1e8 — exact,
     associative arithmetic ⇒ engine/plan-order independent), grouped
     into blocks, and every block *pair* computes its sub-Gram with one
-    numpy int64 matmul inside mapInPandas. Work is B(B+1)/2 independent
-    block pairs — the classic distributed all-pairs layout: each task
-    touches two blocks, compute is a dense matmul (cache-friendly),
-    and nothing quadratic ever sits in one task's memory at scale.
+    numpy int64 matmul inside one mapInArrow. Work is B(B+1)/2
+    independent block pairs — the classic distributed all-pairs layout:
+    each task touches two blocks, compute is a dense matmul
+    (cache-friendly), and nothing quadratic ever sits in one task's
+    memory at scale. Each row carries two ``list<struct<vec_id, q>>``
+    blocks rather than one ``q`` column, so this pass keeps its own
+    ``mapInArrow`` and decodes each block with ``vecbatch.int_matrix``.
 
     The block count adapts to the corpus: B = ceil(N / 4096), so a
     block never exceeds 4096 vectors (~2 MB at dim 64) regardless of N
@@ -816,18 +822,14 @@ def q_dedup_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same semantics as q_dedup_embedding_cosine at 1e-8 quantization.
     """
     import numpy as np
-    import pandas as pd
-
-    from end_to_end_aws_data_pipeline_spark.functions.vector import l2_normalize
+    import pyarrow as pa
 
     e = table(spark, sf_dir, "embeddings")
     n_blocks = n_blocks_for(e.count())  # parquet-metadata count: cheap
-    quant = F.transform(
-        l2_normalize(F.col("embedding")),
-        lambda x: F.round(x * _Q_SCALE).cast("long"),
-    )
     v = e.select(
-        "vec_id", quant.alias("q"), (F.col("vec_id") % n_blocks).alias("blk")
+        "vec_id",
+        quantized(F.col("embedding")).alias("q"),
+        (F.col("vec_id") % n_blocks).alias("blk"),
     )
     blocks = v.groupBy("blk").agg(
         F.collect_list(F.struct("vec_id", "q")).alias("vecs")
@@ -842,19 +844,24 @@ def q_dedup_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.vecs").alias("vb"),
         )
     )
-    tau_q = _COS_TAU  # compared on dot/SCALE² as double, like the oracle
 
-    def _gram(it):
-        for pdf in it:
-            out_a, out_b, out_d = [], [], []
-            for _, row in pdf.iterrows():
-                ids_a = np.array([r["vec_id"] for r in row["va"]], dtype=np.int64)
-                ids_b = np.array([r["vec_id"] for r in row["vb"]], dtype=np.int64)
-                qa = np.array([r["q"] for r in row["va"]], dtype=np.int64)
-                qb = np.array([r["q"] for r in row["vb"]], dtype=np.int64)
+    def _block(cell):
+        vecs = cell.values  # the row's struct<vec_id, q> array
+        return vecs.field("vec_id").to_numpy(), int_matrix(vecs.field("q"))
+
+    def _gram(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            blk_a, blk_b = batch.column("blk_a").to_pylist(), batch.column("blk_b").to_pylist()
+            out = ([], [], [])
+            for r in range(batch.num_rows):
+                ids_a, qa = _block(batch.column("va")[r])
+                ids_b, qb = _block(batch.column("vb")[r])
                 g = qa @ qb.T  # exact int64 sub-Gram
-                keep = g.astype(np.float64) / (_Q_SCALE * _Q_SCALE) >= tau_q
-                if row["blk_a"] == row["blk_b"]:
+                # compared on dot/SCALE² as double, like the oracle
+                keep = g.astype(np.float64) / SCALE_SQ >= _COS_TAU
+                if blk_a[r] == blk_b[r]:
                     # diagonal block: each unordered pair appears once
                     keep &= ids_a[:, None] < ids_b[None, :]
                 else:
@@ -862,24 +869,19 @@ def q_dedup_cosine_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # every pair once, canonicalized to (min, max) below
                     keep &= ids_a[:, None] != ids_b[None, :]
                 ii, jj = np.nonzero(keep)
-                lo = np.minimum(ids_a[ii], ids_b[jj])
-                hi = np.maximum(ids_a[ii], ids_b[jj])
-                out_a.extend(lo)
-                out_b.extend(hi)
-                out_d.extend(g[ii, jj])
-            yield pd.DataFrame(
-                {"vec_a": pd.Series(out_a, dtype="int64"),
-                 "vec_b": pd.Series(out_b, dtype="int64"),
-                 "dot_q": pd.Series(out_d, dtype="int64")}
+                out[0].append(np.minimum(ids_a[ii], ids_b[jj]))
+                out[1].append(np.maximum(ids_a[ii], ids_b[jj]))
+                out[2].append(g[ii, jj])
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(c)) for c in out],
+                names=["vec_a", "vec_b", "dot_q"],
             )
 
-    pairs = bp.mapInPandas(_gram, schema="vec_a long, vec_b long, dot_q long")
+    pairs = bp.mapInArrow(_gram, "vec_a long, vec_b long, dot_q long")
     return pairs.select(
         "vec_a",
         "vec_b",
-        stable_round(
-            F.col("dot_q").cast("double") / (_Q_SCALE * _Q_SCALE), 6
-        ).alias("cosine"),
+        stable_round(F.col("dot_q").cast("double") / SCALE_SQ, 6).alias("cosine"),
     )
 
 

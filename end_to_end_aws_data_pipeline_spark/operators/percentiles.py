@@ -1646,12 +1646,17 @@ _KLL_K = 256  # per-sketch capacity: rank error ~ (groups + max stratum)/N
 _KLL_QS = (250_000, 500_000, 750_000, 950_000)  # q in ppm
 _KLL_QS_SQL = ", ".join(f"({q})" for q in _KLL_QS)
 
-_KLL_ORACLE = f"""
+
+
+def kll_oracle_sql(source: str, extra_cols: str = "") -> str:
+    """The KLL construction, merge, estimation and rank-error audit in
+    DuckDB over ``source`` (the body of a SELECT of group ``g``, value
+    ``vc`` and tie-break ``uniq``); ``extra_cols`` lines go into the
+    output just before ``weight_exact``. The batch oracle below and the
+    stream twin (streaming/sketch.py) differ only in these."""
+    return f"""
 WITH v AS MATERIALIZED (
-  SELECT year(l_shipdate) * 12 + month(l_shipdate) AS g,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS vc,
-         l_orderkey * 8 + l_linenumber AS uniq
-  FROM lineitem
+{source}
 ), powers AS MATERIALIZED (
   SELECT CAST(1 AS BIGINT) << CAST(p AS INT) AS sp FROM range(0, 41) t(p)
 ), gr AS MATERIALIZED (
@@ -1718,10 +1723,18 @@ SELECT CAST(a.q_ppm AS BIGINT) AS q_ppm,
        CAST(a.n AS BIGINT) AS n_rows,
        CAST(s2t.m_items AS BIGINT) AS merged_items,
        (SELECT CAST(count(*) AS BIGINT) FROM strata) AS sketch_items,
-       s2t.wsum = a.n AS weight_exact
+{extra_cols}       s2t.wsum = a.n AS weight_exact
 FROM audit a CROSS JOIN bound b CROSS JOIN s2t
 ORDER BY q_ppm
 """
+
+
+_KLL_ORACLE = kll_oracle_sql(
+    """  SELECT year(l_shipdate) * 12 + month(l_shipdate) AS g,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS vc,
+         l_orderkey * 8 + l_linenumber AS uniq
+  FROM lineitem"""
+)
 
 
 @register("q_agg_kll_quantiles", oracle=_KLL_ORACLE)
@@ -1926,11 +1939,16 @@ def q_agg_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HH_K = 64   # per-group summary capacity
 _HH_TOP = 20  # published global heavy hitters
 
-_HH_ORACLE = f"""
+
+
+def hh_oracle_sql(source: str, key: str) -> str:
+    """The heavy-hitters summary, merge and exact audit in DuckDB over
+    ``source`` (the body of a SELECT of group ``g`` and key ``k``),
+    publishing the key as ``key``. The batch oracle below and the
+    stream twin (streaming/sketch.py) differ only in these."""
+    return f"""
 WITH v AS MATERIALIZED (
-  SELECT year(l_shipdate) * 12 + month(l_shipdate) AS g,
-         l_partkey AS k
-  FROM lineitem
+{source}
 ), c AS MATERIALIZED (
   SELECT g, k, CAST(count(*) AS BIGINT) AS cnt FROM v GROUP BY g, k
 ), r AS MATERIALIZED (
@@ -1960,13 +1978,21 @@ WITH v AS MATERIALIZED (
   SELECT v.k, CAST(count(*) AS BIGINT) AS exact_cnt
   FROM v JOIN top ON top.k = v.k GROUP BY v.k
 )
-SELECT top.k AS l_partkey, top.lo AS est_lo, top.hi AS est_hi,
+SELECT top.k AS {key}, top.lo AS est_lo, top.hi AS est_hi,
        ex.exact_cnt, top.groups_present,
        (top.lo <= ex.exact_cnt AND ex.exact_cnt <= top.hi)
          AS within_bound
 FROM top JOIN ex ON ex.k = top.k
-ORDER BY est_lo DESC, l_partkey
+ORDER BY est_lo DESC, {key}
 """
+
+
+_HH_ORACLE = hh_oracle_sql(
+    """  SELECT year(l_shipdate) * 12 + month(l_shipdate) AS g,
+         l_partkey AS k
+  FROM lineitem""",
+    "l_partkey",
+)
 
 
 @register("q_agg_heavy_hitters_merge", oracle=_HH_ORACLE)

@@ -28,11 +28,7 @@ records a full rows/schema/hash row.
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterator
-
-import pandas as pd
-
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -41,14 +37,29 @@ from end_to_end_aws_data_pipeline_spark.catalog import spread
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 from end_to_end_aws_data_pipeline_spark.operators.similarity import (
+    _ASSIGN_DDL,
     _CENTROIDS_SQL,
     _MAX_QUERIES,
     _QUERY_MOD,
     _QV_SQL,
-    _SCALE_SQ,
     _TOP_K,
     _quantized,
     _query_matrix,
+    _query_set,
+    _seeds,
+    n_centroids_for,
+)
+from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
+    SCALE_SQ,
+    cluster_sums,
+    floor_means,
+    long_partials,
+    nearest,
+    pq_encode,
+    pq_luts,
+    reduced_sums,
+    topk_rows,
+    vector_map,
 )
 
 _PQ_DIM = 64  # embeddings table dimensionality (TESTDATA.md)
@@ -71,62 +82,26 @@ def _pq_codebooks(v: DataFrame):
     with K=16 codes that is ~6e15, inside the 9e15 budget — larger
     corpora should raise K, which also sharpens the quantizer).
     Per-round executor→driver traffic is the M·K·DS partial-sum matrix
-    (bounded, 1k rows here), never vectors.
+    (bounded, 1k rows here), never vectors. Returns the M×K×DS
+    codebooks.
 
     Mirrors the generated oracle chain in _pq_oracle() step for step.
     """
-    import numpy as np
-
-    seed_rows = v.filter(F.col("vec_id") < _PQ_K).orderBy("vec_id").collect()
-    seeds = np.array([r["q"] for r in seed_rows], dtype=np.int64)  # K×D
-    books = [
-        seeds[:, m * _PQ_DS : (m + 1) * _PQ_DS].copy() for m in range(_PQ_M)
-    ]
-
+    # code j of subspace m = subvector m of the seed vector vec_id == j
+    seeds = _seeds(v, _PQ_K)[1].reshape(_PQ_K, _PQ_M, _PQ_DS)
+    books = seeds.transpose(1, 0, 2).copy()
     for _ in range(_PQ_ITERS):
-        bks = [b.copy() for b in books]  # bind this round's value
 
-        def _partials(
-            it: Iterator[pd.DataFrame], bks: list = bks
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                mat = np.array(list(pdf["q"]), dtype=np.int64)  # B×D
-                out_m, out_c, out_p, out_s, out_n = [], [], [], [], []
-                for m in range(_PQ_M):
-                    x = mat[:, m * _PQ_DS : (m + 1) * _PQ_DS]
-                    bk = bks[m]
-                    cost = (bk * bk).sum(axis=1)[None, :] - 2 * (x @ bk.T)
-                    best = cost.argmin(axis=1)  # first min → lowest code
-                    for ci in np.unique(best):
-                        sel = x[best == ci]
-                        sums = sel.sum(axis=0)
-                        out_m.extend([m] * _PQ_DS)
-                        out_c.extend([int(ci)] * _PQ_DS)
-                        out_p.extend(range(_PQ_DS))
-                        out_s.extend(int(t) for t in sums)
-                        out_n.extend([sel.shape[0]] * _PQ_DS)
-                yield pd.DataFrame(
-                    {
-                        "m": pd.Series(out_m, dtype="int32"),
-                        "code": pd.Series(out_c, dtype="int32"),
-                        "pos": pd.Series(out_p, dtype="int32"),
-                        "s": pd.Series(out_s, dtype="int64"),
-                        "n": pd.Series(out_n, dtype="int64"),
-                    }
-                )
+        def _partials(b, m, bks=books):  # binds this round's codebooks
+            codes = pq_encode(m, bks)
+            sub = m.reshape(len(m), _PQ_M, _PQ_DS)
+            sums, counts = zip(
+                *(cluster_sums(sub[:, j], codes[:, j], _PQ_K) for j in range(_PQ_M))
+            )
+            return long_partials(np.stack(sums), np.stack(counts))
 
-        rows = (
-            v.mapInPandas(_partials, schema="m int, code int, pos int, s long, n long")
-            .groupBy("m", "code", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        new_books = [b.copy() for b in books]  # empty codes carry forward
-        for r in rows:
-            new_books[r["m"]][r["code"]][r["pos"]] = math.floor(r["s"] / r["n"])
-        books = new_books
+        parts = vector_map(v, "m int, code int, pos int, s long, n long", _partials)
+        books = floor_means(books, *reduced_sums(parts, books.shape))
     return books
 
 
@@ -208,7 +183,7 @@ def _pq_oracle() -> str:
   FROM scored
 )
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       round(CAST(adc AS DOUBLE) / {_SCALE_SQ}.0, 6) AS adc_cosine
+       round(CAST(adc AS DOUBLE) / {SCALE_SQ}.0, 6) AS adc_cosine
 FROM ranked WHERE rank <= {_TOP_K}
 """
     )
@@ -235,8 +210,6 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose driver check is EXACT because training/encoding replay in the
     oracle (see _pq_oracle).
     """
-    import numpy as np
-
     from end_to_end_aws_data_pipeline_spark.plans.scale import overlap_jobs
 
     v = persisted(spread(_quantized(spark, sf_dir)))
@@ -244,65 +217,22 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # training — overlap the two action chains (guide §2.6)
     books, (q_ids, q_mat) = overlap_jobs(
         lambda: _pq_codebooks(v),
-        lambda: _query_matrix(
-            v.filter(F.col("vec_id") % _QUERY_MOD == 0)
-            .orderBy("vec_id")
-            .limit(_MAX_QUERIES)
-        ),
+        lambda: _query_matrix(_query_set(v)),
     )
-    # per-query ADC lookup tables: luts[q, m, k] = q_m · code_mk
-    luts = np.stack(
-        [
-            q_mat[:, m * _PQ_DS : (m + 1) * _PQ_DS] @ books[m].T
-            for m in range(_PQ_M)
-        ],
-        axis=1,
-    )  # Q×M×K
-    bks = [b.copy() for b in books]
+    luts = pq_luts(q_mat, books)
 
-    def _score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(list(pdf["q"]), dtype=np.int64)  # B×D
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            codes = np.empty((len(pdf), _PQ_M), dtype=np.int64)
-            for m in range(_PQ_M):
-                x = mat[:, m * _PQ_DS : (m + 1) * _PQ_DS]
-                bk = bks[m]
-                cost = (bk * bk).sum(axis=1)[None, :] - 2 * (x @ bk.T)
-                codes[:, m] = cost.argmin(axis=1)
-            # ADC: Q×B score matrix from M table gathers
-            scores = np.zeros((len(q_ids), len(pdf)), dtype=np.int64)
-            for m in range(_PQ_M):
-                scores += luts[:, m, codes[:, m]]
-            out_q, out_n, out_a = [], [], []
-            for qi, qid in enumerate(q_ids):
-                row = scores[qi]
-                # batch-local top-k under the SAME (adc DESC,
-                # neighbor_id ASC) order as the global window — PQ
-                # collides scores whenever two vectors share all M
-                # codes, so an order-agnostic argpartition could
-                # keep the wrong side of a boundary tie
-                order = np.lexsort((ids, -row))
-                taken = 0
-                for j in order:
-                    if taken >= _TOP_K:
-                        break
-                    if ids[j] != qid:
-                        out_q.append(int(qid))
-                        out_n.append(int(ids[j]))
-                        out_a.append(int(row[j]))
-                        taken += 1
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    "adc": pd.Series(out_a, dtype="int64"),
-                }
-            )
+    def _score(b, m):
+        ids = b.column("vec_id").to_numpy()
+        codes = pq_encode(m, books)
+        s = sum(luts[:, j, codes[:, j]] for j in range(_PQ_M)).T  # B×Q ADC
+        # batch-local top-k under the SAME (adc DESC, neighbor_id ASC)
+        # order as the global window — PQ collides scores whenever two
+        # vectors share all M codes, so an order-agnostic argpartition
+        # could keep the wrong side of a boundary tie
+        j, i = topk_rows(s, ids, ids[:, None] != q_ids, _TOP_K)
+        return q_ids[j], ids[i], s[i, j]
 
-    cand = v.mapInPandas(_score, schema="query_id long, neighbor_id long, adc long")
+    cand = vector_map(v, "query_id long, neighbor_id long, adc long", _score)
     w = W.partitionBy("query_id").orderBy(
         F.col("adc").desc(), F.col("neighbor_id")
     )
@@ -313,7 +243,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "neighbor_id",
             "rank",
-            F.round(F.col("adc").cast("double") / _SCALE_SQ, 6).alias(
+            F.round(F.col("adc").cast("double") / SCALE_SQ, 6).alias(
                 "adc_cosine"
             ),
         )
@@ -335,38 +265,14 @@ def _residual_assigned(spark: SparkSession, sf_dir: str):
     Residual components are bounded by 2·1e8, so every downstream PQ
     quantity (code norms, ADC partial dots) stays far inside int64.
     """
-    import numpy as np
-
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        n_centroids_for,
-    )
-
     v = _quantized(spark, sf_dir)
-    n_cent = n_centroids_for(v.count())
-    cent_ids, cent_mat = _query_matrix(
-        v.filter(F.col("vec_id") < n_cent).orderBy("vec_id")
-    )
+    cent_ids, cent_mat = _seeds(v, n_centroids_for(v.count()))
 
-    def _assign(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            best = (m @ cent_mat.T).argmax(axis=1)
-            res = m - cent_mat[best]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cent_id": pd.Series(cent_ids[best], dtype="int64"),
-                    "q": list(res),
-                }
-            )
+    def _assign(b, m):
+        best = nearest(m, cent_mat)[0]
+        return b.column("vec_id"), cent_ids[best], m - cent_mat[best]
 
-    residuals = persisted(
-        spread(v).mapInPandas(
-            _assign, schema="vec_id long, cent_id long, q array<long>"
-        )
-    )
+    residuals = persisted(vector_map(spread(v), _ASSIGN_DDL, _assign))
     return residuals, cent_ids, cent_mat
 
 
@@ -474,7 +380,7 @@ def _ivfpq_oracle() -> str:
 )
 SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
        CAST(rank AS INT) AS rank,
-       round(CAST(adc AS DOUBLE) / {_SCALE_SQ}.0, 6) AS adc_cosine
+       round(CAST(adc AS DOUBLE) / {SCALE_SQ}.0, 6) AS adc_cosine
 FROM ranked WHERE rank <= {_TOP_K}
 """
     )
@@ -497,76 +403,36 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     both knobs (nprobe, K) runtime-tunable. Training, encoding and
     scoring replay exactly in the oracle (see _ivfpq_oracle).
     """
-    import numpy as np
-
     from end_to_end_aws_data_pipeline_spark.plans.scale import overlap_jobs
 
     residuals, cent_ids, cent_mat = _residual_assigned(spark, sf_dir)
     # bounded query set: raw vectors + their probed centroid + q·cent —
     # the query collect scans raw v and is independent of residual
     # codebook training; overlap the two action chains (guide §2.6)
-    v = _quantized(spark, sf_dir)
     books, (q_ids, q_mat) = overlap_jobs(
         lambda: _pq_codebooks(residuals),
-        lambda: _query_matrix(
-            v.filter(F.col("vec_id") % _QUERY_MOD == 0)
-            .orderBy("vec_id")
-            .limit(_MAX_QUERIES)
-        ),
+        lambda: _query_matrix(_query_set(_quantized(spark, sf_dir))),
     )
-    probe_idx = (q_mat @ cent_mat.T).argmax(axis=1)
-    q_cents = cent_ids[probe_idx]
-    q_qcent = np.take_along_axis(
-        q_mat @ cent_mat.T, probe_idx[:, None], axis=1
-    )[:, 0]
-    luts = np.stack(
-        [
-            q_mat[:, m * _PQ_DS : (m + 1) * _PQ_DS] @ books[m].T
-            for m in range(_PQ_M)
-        ],
-        axis=1,
-    )  # Q×M×K
-    bks = [b.copy() for b in books]
+    probe, q_qcent = nearest(q_mat, cent_mat)
+    q_cents = cent_ids[probe]
+    luts = pq_luts(q_mat, books)
 
-    def _score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(list(pdf["q"]), dtype=np.int64)  # B×D residuals
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cents = pdf["cent_id"].to_numpy(dtype=np.int64)
-            codes = np.empty((len(pdf), _PQ_M), dtype=np.int64)
-            for m in range(_PQ_M):
-                x = mat[:, m * _PQ_DS : (m + 1) * _PQ_DS]
-                bk = bks[m]
-                cost = (bk * bk).sum(axis=1)[None, :] - 2 * (x @ bk.T)
-                codes[:, m] = cost.argmin(axis=1)
-            out_q, out_n, out_c, out_a = [], [], [], []
-            for qi, qid in enumerate(q_ids):
-                sel = np.flatnonzero((cents == q_cents[qi]) & (ids != qid))
-                if len(sel) == 0:
-                    continue
-                adc = np.full(len(sel), int(q_qcent[qi]), dtype=np.int64)
-                for m in range(_PQ_M):
-                    adc += luts[qi, m, codes[sel, m]]
-                order = np.lexsort((ids[sel], -adc))[:_TOP_K]
-                for j in order:
-                    out_q.append(int(qid))
-                    out_n.append(int(ids[sel[j]]))
-                    out_c.append(int(q_cents[qi]))
-                    out_a.append(int(adc[j]))
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    "probed_centroid": pd.Series(out_c, dtype="int64"),
-                    "adc": pd.Series(out_a, dtype="int64"),
-                }
-            )
+    def _score(b, m):  # m: B×D residuals
+        ids, cents = b.column("vec_id").to_numpy(), b.column("cent_id").to_numpy()
+        codes = pq_encode(m, books)
+        keep = (cents[:, None] == q_cents) & (ids[:, None] != q_ids)
+        # score only each query's bucket members: the coarse quantizer
+        # bounds WHICH rows pay the M lookups
+        r, c = np.nonzero(keep)
+        s = np.zeros(keep.shape, dtype=np.int64)
+        s[r, c] = q_qcent[c] + luts[c[:, None], np.arange(_PQ_M), codes[r]].sum(axis=1)
+        j, i = topk_rows(s, ids, keep, _TOP_K)
+        return q_ids[j], ids[i], q_cents[j], s[i, j]
 
-    cand = residuals.mapInPandas(
+    cand = vector_map(
+        residuals,
+        "query_id long, neighbor_id long, probed_centroid long, adc long",
         _score,
-        schema="query_id long, neighbor_id long, probed_centroid long, adc long",
     )
     w = W.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
     return (
@@ -577,7 +443,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             "probed_centroid",
             "rank",
-            F.round(F.col("adc").cast("double") / _SCALE_SQ, 6).alias(
+            F.round(F.col("adc").cast("double") / SCALE_SQ, 6).alias(
                 "adc_cosine"
             ),
         )

@@ -4,15 +4,16 @@ partitioned search as the scale path (ICDE'21 / EDBT'20 top-k
 similarity-search shape, PAPERS.md).
 
 Numeric core: vectors are unit-normalized then quantized to int64
-(×1e8, same formulation as the blocked Gram dedup in operators/dedup.py)
-so every dot product is EXACT, ASSOCIATIVE integer arithmetic. That
-buys two things at once:
+(×1e8, operators/vecbatch.py, shared with the blocked Gram dedup in
+operators/dedup.py) so every dot product is EXACT, ASSOCIATIVE integer
+arithmetic. That buys two things at once:
 - cross-engine determinism: DuckDB recomputes identical integers, so
   the driver hash-check holds with no float-order caveats;
-- vectorizability: an exact int64 matmul (numpy, inside Arrow-batched
-  mapInPandas) replaces per-pair interpreted expression folds — the
-  10× scale step (SCALING.md) showed the fold-based variants spending
-  >80% of their time in expression interpretation.
+- vectorizability: an exact int64 matmul (numpy, inside the one
+  Arrow-batched ``vecbatch.vector_map`` pass) replaces per-pair
+  interpreted expression folds — the 10× scale step (SCALING.md)
+  showed the fold-based variants spending >80% of their time in
+  expression interpretation.
 
 Scale posture:
 - brute force is O(|Q|·N): the fact side streams through one scan in
@@ -31,15 +32,26 @@ Scale posture:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, spread, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
+from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
+    Q_SCALE,
+    SCALE_SQ,
+    TwoLevel,
+    cluster_sums,
+    floor_means,
+    long_partials,
+    nearest,
+    quantized,
+    reduced_sums,
+    topk_rows,
+    vector_map,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 _TOP_K = 5
@@ -49,9 +61,6 @@ _MAX_QUERIES = 64  # hard cap on the query side: without it the %-sample
 # it the footprint is O(1) in corpus size. Larger query sets should loop
 # in _MAX_QUERIES-sized batches (one scan each).
 
-_Q_SCALE = 100_000_000  # 1e8 quantization (see operators/dedup.py): dots
-_SCALE_SQ = _Q_SCALE * _Q_SCALE  # fit int64 with headroom, ~1e-8 resolution
-
 # quantized-vector CTE shared by both oracles — mirrors _quantized()
 # exactly so Spark and DuckDB derive identical integers
 _QV_SQL = f"""
@@ -60,7 +69,7 @@ _QV_SQL = f"""
            (CAST(x AS DOUBLE) /
              sqrt(list_sum(list_transform(embedding,
                   y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))
-           ) * {_Q_SCALE}) AS BIGINT)) AS q
+           ) * {Q_SCALE}) AS BIGINT)) AS q
   FROM embeddings
 """
 
@@ -81,13 +90,9 @@ def n_centroids_for(n_rows: int) -> int:
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings as (vec_id, q array<long>): unit-normalized int64
     quantization (must mirror _QV_SQL exactly)."""
-    from end_to_end_aws_data_pipeline_spark.functions.vector import l2_normalize
-
-    quant = F.transform(
-        l2_normalize(F.col("embedding")),
-        lambda x: F.round(x * _Q_SCALE).cast("long"),
+    return table(spark, sf_dir, "embeddings").select(
+        "vec_id", quantized(F.col("embedding")).alias("q")
     )
-    return table(spark, sf_dir, "embeddings").select("vec_id", quant.alias("q"))
 
 
 def _query_matrix(qdf: DataFrame):
@@ -104,8 +109,22 @@ def _query_matrix(qdf: DataFrame):
     return ids, mat
 
 
-def _cosine_out(col: str = "dot_q"):
-    return stable_round(F.col(col).cast("double") / _SCALE_SQ, 6).alias("cosine")
+def _seeds(v: DataFrame, n: int):
+    """(ids, matrix) of the first ``n`` vectors by vec_id: the
+    deterministic seed rows of every codebook in the family."""
+    return _query_matrix(v.filter(F.col("vec_id") < n).orderBy("vec_id"))
+
+
+def _query_set(v: DataFrame) -> DataFrame:
+    """The bounded query set: every _QUERY_MOD-th vec_id, first
+    _MAX_QUERIES of them."""
+    return (
+        v.filter(F.col("vec_id") % _QUERY_MOD == 0).orderBy("vec_id").limit(_MAX_QUERIES)
+    )
+
+
+def _cosine_out():
+    return stable_round(F.col("dot_q").cast("double") / SCALE_SQ, 6).alias("cosine")
 
 
 _BRUTE_ORACLE = f"""
@@ -126,7 +145,7 @@ WITH v AS ({_QV_SQL}
   FROM scored
 )
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor(CAST(dot_q AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
 FROM ranked WHERE rank <= {_TOP_K}
 """
@@ -143,47 +162,21 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     N·|Q|. Integer dots make the batch-local pruning safe: partial
     top-k of an exact total order composes to the global top-k.
     """
-    import numpy as np
-
     v = _quantized(spark, sf_dir)
-    qdf = (
-        v.filter(F.col("vec_id") % _QUERY_MOD == 0).orderBy("vec_id").limit(_MAX_QUERIES)
-    )
-    q_ids, q_mat = _query_matrix(qdf)
+    q_ids, q_mat = _query_matrix(_query_set(v))
 
-    def _score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            s = m @ q_mat.T  # B×|Q| exact int64 dots
-            out_q, out_n, out_d = [], [], []
-            for j, qid in enumerate(q_ids):
-                mask = ids != qid
-                col, nid = s[mask, j], ids[mask]
-                take = min(_TOP_K, len(nid))
-                # batch-local top-k by (dot desc, neighbor asc)
-                order = np.lexsort((nid, -col))[:take]
-                out_q.extend([qid] * take)
-                out_n.extend(nid[order])
-                out_d.extend(col[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    "neighbor_id": pd.Series(out_n, dtype="int64"),
-                    "dot_q": pd.Series(out_d, dtype="int64"),
-                }
-            )
+    def _score(b, m):
+        ids = b.column("vec_id").to_numpy()
+        s = m @ q_mat.T  # B×|Q| exact int64 dots
+        j, i = topk_rows(s, ids, ids[:, None] != q_ids, _TOP_K)
+        return q_ids[j], ids[i], s[i, j]
 
     # spread ONLY the matmul input: the sf embeddings file scans as one
     # unsplittable partition, which would serialize the CPU-bound batch
     # matmuls on a single core. The query-set branch above stays on the
     # plain scan so its filter+limit still push down (a spread there
     # would force a full shuffle just to collect 64 rows).
-    cand = spread(v).mapInPandas(
-        _score, schema="query_id long, neighbor_id long, dot_q long"
-    )
+    cand = vector_map(spread(v), "query_id long, neighbor_id long, dot_q long", _score)
     w = W.partitionBy("query_id").orderBy(F.col("dot_q").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
@@ -243,46 +236,71 @@ def q_ann_lsh_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_ASSIGN_DDL = "vec_id long, cent_id long, q array<long>"
+
+
+def _assigned(vs: DataFrame, cent_ids, route) -> DataFrame:
+    """(vec_id, cent_id, q): every vector of ``vs`` bucketed by
+    ``route`` (:func:`vecbatch.nearest`'s signature) in one Arrow pass,
+    its quantized array passed through so probe scoring needs no second
+    join back to the corpus."""
+    return vector_map(
+        vs,
+        _ASSIGN_DDL,
+        lambda b, m: (b.column("vec_id"), cent_ids[route(m)[0]], b.column("q")),
+    )
+
+
 def _ivf_assigned(spark: SparkSession, sf_dir: str):
     """Shared IVF build: quantized vectors + their nearest-centroid
-    assignment (one N×C exact int64 matmul pass in Arrow batches).
+    assignment (one N×C exact int64 matmul pass in Arrow batches; ties
+    go to the lowest cent_id — the oracle's (dot DESC, cent_id) rank).
 
-    Returns (v, assign, cent_ids, cent_mat); `assign` carries each
-    vector's quantized array so probe scoring needs no second join back
-    to the corpus.
+    Returns (v, assign, cent_ids, cent_mat).
     """
-    import numpy as np
-
     v = _quantized(spark, sf_dir)
-    n_cent = n_centroids_for(v.count())  # parquet-metadata count: cheap
-    cent_ids, cent_mat = _query_matrix(
-        v.filter(F.col("vec_id") < n_cent).orderBy("vec_id")
-    )
-
-    def _assign(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            s = m @ cent_mat.T  # B×C exact int64 dots
-            # argmax takes the FIRST max; cent_ids ascend, so ties
-            # resolve to the lowest cent_id — same as the oracle's
-            # (dot DESC, cent_id) ranking
-            best = s.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cent_id": pd.Series(cent_ids[best], dtype="int64"),
-                    "q": pdf["q"],
-                }
-            )
-
+    # parquet-metadata count: cheap
+    cent_ids, cent_mat = _seeds(v, n_centroids_for(v.count()))
     # spread the assignment matmul across cores (see q_ann_bruteforce);
     # the centroid-collect branch keeps the plain pushdown-friendly scan
-    assign = spread(v).mapInPandas(
-        _assign, schema="vec_id long, cent_id long, q array<long>"
-    )
+    assign = _assigned(spread(v), cent_ids, partial(nearest, mat=cent_mat))
     return v, assign, cent_ids, cent_mat
+
+
+def _probe_top_k(assign: DataFrame, q_ids, q_mat, q_cents) -> DataFrame:
+    """nprobe=1 probe: each query scores the members of its bucket
+    ``q_cents`` with a JVM-side integer fold (each query touches ~√N
+    bucket rows, so this phase is sub-linear), then the top _IVF_K by
+    (dot desc, neighbor_id asc)."""
+    qs = local_frame(
+        assign.sparkSession,
+        [
+            (int(qid), [int(x) for x in qv], int(cid))
+            for qid, qv, cid in zip(q_ids, q_mat, q_cents)
+        ],
+        "query_id long, qq array<long>, cent_id long",
+    )
+    dot_q = F.aggregate(
+        F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    scored = (
+        assign.join(F.broadcast(qs), "cent_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("cent_id").cast("long").alias("probed_centroid"),
+            dot_q.alias("dot_q"),
+        )
+    )
+    w = W.partitionBy("query_id").orderBy(F.col("dot_q").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= _IVF_K)
+        .select("query_id", "neighbor_id", "probed_centroid", "rank", _cosine_out())
+    )
 
 
 _IVF_ORACLE = f"""
@@ -319,7 +337,7 @@ WITH v AS ({_QV_SQL}
 )
 SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
        CAST(rank AS INT) AS rank,
-       floor(CAST(dot_q AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
 FROM ranked WHERE rank <= {_IVF_K}
 """
@@ -343,39 +361,8 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assign the (bounded) query set on the driver with the identical
     # int64 argmax — otherwise deriving it from `assign` would run the
     # corpus-wide assignment pass twice (once for 64 rows)
-    q_ids, q_mat = _query_matrix(
-        v.filter(F.col("vec_id") % _QUERY_MOD == 0).orderBy("vec_id").limit(_MAX_QUERIES)
-    )
-    q_cents = cent_ids[(q_mat @ cent_mat.T).argmax(axis=1)]
-    qs = local_frame(
-        spark,
-        [
-            (int(qid), [int(x) for x in qv], int(cid))
-            for qid, qv, cid in zip(q_ids, q_mat, q_cents)
-        ],
-        "query_id long, qq array<long>, cent_id long",
-    )
-    dot_q = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        assign.join(F.broadcast(qs), "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cent_id").cast("long").alias("probed_centroid"),
-            dot_q.alias("dot_q"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("dot_q").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _IVF_K)
-        .select("query_id", "neighbor_id", "probed_centroid", "rank", _cosine_out())
-    )
+    q_ids, q_mat = _query_matrix(_query_set(v))
+    return _probe_top_k(assign, q_ids, q_mat, cent_ids[nearest(q_mat, cent_mat)[0]])
 
 
 # ---------------------------------------------------------------------------
@@ -428,7 +415,7 @@ WITH v AS ({_QV_SQL}
 SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
        CAST(probe_rank AS INT) AS probe_rank,
        CAST(rank AS INT) AS rank,
-       floor(CAST(dot_q AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
 FROM ranked WHERE rank <= {_IVF_K}
 """
@@ -452,9 +439,7 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     v, assign, cent_ids, cent_mat = _ivf_assigned(spark, sf_dir)
-    q_ids, q_mat = _query_matrix(
-        v.filter(F.col("vec_id") % _QUERY_MOD == 0).orderBy("vec_id").limit(_MAX_QUERIES)
-    )
+    q_ids, q_mat = _query_matrix(_query_set(v))
     # per-query top-P centroids, driver-side (|Q|×C dots on a bounded
     # query set), ties to the lowest cent_id
     dots = q_mat @ cent_mat.T
@@ -524,9 +509,9 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMEANS_ITERS = 3  # fixed Lloyd rounds; deterministic + oracle-replayable
 
 
-def _kmeans_sql(n_iters: int = _KMEANS_ITERS) -> str:
+def _kmeans_sql() -> str:
     """Generate the DuckDB CTE chain that REPLAYS the k-means training
-    exactly: seed c0 = first ceil(sqrt(N)) vectors, then ``n_iters``
+    exactly: seed c0 = first ceil(sqrt(N)) vectors, then _KMEANS_ITERS
     rounds of (nearest-centroid assignment -> element-wise floor-mean
     update, empty clusters carrying the previous centroid forward).
 
@@ -544,7 +529,7 @@ def _kmeans_sql(n_iters: int = _KMEANS_ITERS) -> str:
   SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {_CENTROIDS_SQL}
 )"""
     )
-    for t in range(1, n_iters + 1):
+    for t in range(1, _KMEANS_ITERS + 1):
         parts.append(
             f""", a{t} AS (
   SELECT vec_id, cent_id, q FROM (
@@ -572,7 +557,7 @@ def _kmeans_sql(n_iters: int = _KMEANS_ITERS) -> str:
   ) n USING (cent_id)
 )"""
         )
-    return "".join(parts), f"c{n_iters}"
+    return "".join(parts), f"c{_KMEANS_ITERS}"
 
 
 _KM_CHAIN, _KM_FINAL = _kmeans_sql()
@@ -607,13 +592,13 @@ _IVF_TRAINED_ORACLE = f"""
 )
 SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
        CAST(rank AS INT) AS rank,
-       floor(CAST(dot_q AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
 FROM ranked WHERE rank <= {_IVF_K}
 """
 
 
-def _kmeans_centroids(v: DataFrame, n_cent: int, n_iters: int = _KMEANS_ITERS):
+def _kmeans_centroids(v: DataFrame, n_cent: int):
     """Deterministic distributed Lloyd's k-means on the quantized
     corpus (callers should hand in a PERSISTED, well-partitioned ``v``
     — every round re-reads it). Seeds = first ``n_cent`` vectors by
@@ -630,61 +615,14 @@ def _kmeans_centroids(v: DataFrame, n_cent: int, n_iters: int = _KMEANS_ITERS):
     (recall sags when real clusters don't align with the first rows);
     Lloyd rounds move the coarse quantizer to the data's density.
     """
-    import math
+    cent_ids, cent_mat = _seeds(v, n_cent)
+    for _ in range(_KMEANS_ITERS):
 
-    import numpy as np
+        def _partials(b, m, cm=cent_mat):  # binds this round's centroids
+            return long_partials(*cluster_sums(m, nearest(m, cm)[0], len(cm)))
 
-    cent_ids, cent_mat = _query_matrix(
-        v.filter(F.col("vec_id") < n_cent).orderBy("vec_id")
-    )
-    dim = cent_mat.shape[1]
-    for _ in range(n_iters):
-        cm = cent_mat.copy()  # bind the loop's value into the closure
-
-        def _partials(
-            it: Iterator[pd.DataFrame], cm: "np.ndarray" = cm
-        ) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                m = np.array(list(pdf["q"]), dtype=np.int64)
-                best = (m @ cm.T).argmax(axis=1)  # ties -> lowest cent_id
-                out_c, out_p, out_s, out_n = [], [], [], []
-                for ci in np.unique(best):
-                    sel = m[best == ci]
-                    sums = sel.sum(axis=0)
-                    out_c.extend([int(cent_ids[ci])] * dim)
-                    out_p.extend(range(dim))
-                    out_s.extend(int(x) for x in sums)
-                    out_n.extend([sel.shape[0]] * dim)
-                yield pd.DataFrame(
-                    {
-                        "cent_id": pd.Series(out_c, dtype="int64"),
-                        "pos": pd.Series(out_p, dtype="int32"),
-                        "s": pd.Series(out_s, dtype="int64"),
-                        "n": pd.Series(out_n, dtype="int64"),
-                    }
-                )
-
-        rows = (
-            v.mapInPandas(_partials, schema="cent_id long, pos int, s long, n long")
-            .groupBy("cent_id", "pos")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-            .collect()
-        )
-        new_mat = cent_mat.copy()
-        by_cent: dict[int, dict[int, int]] = {}
-        for r in rows:
-            # float64 division then floor — identical to the oracle's
-            # floor(CAST(sum AS DOUBLE)/count) (see _kmeans_sql bounds)
-            by_cent.setdefault(r["cent_id"], {})[r["pos"]] = math.floor(
-                r["s"] / r["n"]
-            )
-        for idx, cid in enumerate(cent_ids):
-            d = by_cent.get(int(cid))
-            if d is not None:
-                new_mat[idx] = [d[p] for p in range(dim)]
-        cent_mat = new_mat
+        parts = vector_map(v, "c int, pos int, s long, n long", _partials)
+        cent_mat = floor_means(cent_mat, *reduced_sums(parts, cent_mat.shape))
     return cent_ids, cent_mat
 
 
@@ -720,64 +658,11 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # training rounds' idle tail instead of serializing after them
     (cent_ids, cent_mat), (q_ids, q_mat) = overlap_jobs(
         lambda: _kmeans_centroids(vs, n_cent),
-        lambda: _query_matrix(
-            vs.filter(F.col("vec_id") % _QUERY_MOD == 0)
-            .orderBy("vec_id")
-            .limit(_MAX_QUERIES)
-        ),
+        lambda: _query_matrix(_query_set(vs)),
     )
-
-    import numpy as np
-
-    def _assign(
-        it: Iterator[pd.DataFrame], cm: "np.ndarray" = cent_mat
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            best = (m @ cm.T).argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cent_id": pd.Series(cent_ids[best], dtype="int64"),
-                    "q": pdf["q"],
-                }
-            )
-
-    assign = vs.mapInPandas(
-        _assign, schema="vec_id long, cent_id long, q array<long>"
-    )
-    q_cents = cent_ids[(q_mat @ cent_mat.T).argmax(axis=1)]
-    qs = local_frame(
-        spark,
-        [
-            (int(qid), [int(x) for x in qv], int(cid))
-            for qid, qv, cid in zip(q_ids, q_mat, q_cents)
-        ],
-        "query_id long, qq array<long>, cent_id long",
-    )
-    dot_q = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        assign.join(F.broadcast(qs), "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cent_id").cast("long").alias("probed_centroid"),
-            dot_q.alias("dot_q"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("dot_q").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _IVF_K)
-        .select("query_id", "neighbor_id", "probed_centroid", "rank", _cosine_out())
-    )
+    route = partial(nearest, mat=cent_mat)
+    assign = _assigned(vs, cent_ids, route)
+    return _probe_top_k(assign, q_ids, q_mat, cent_ids[route(q_mat)[0]])
 
 
 # ---------------------------------------------------------------------------
@@ -803,10 +688,10 @@ def n_super_for(n_cent: int) -> int:
     return max(1, int(math.ceil(math.sqrt(n_cent))))
 
 
-def _super_kmeans_sql(n_iters: int = _KMEANS_ITERS) -> tuple[str, str]:
+def _super_kmeans_sql() -> tuple[str, str]:
     """CTE chain REPLAYING the super-level Lloyd training over the fine
     centroid relation ``c``: seed s0 = first ceil(sqrt(C)) centroids,
-    then ``n_iters`` rounds of (nearest-super assignment → element-wise
+    then _KMEANS_ITERS rounds of (nearest-super assignment → element-wise
     floor-mean, empty supers carrying forward) — the _kmeans_sql recipe
     applied one level up, over C rows instead of N."""
     parts = [
@@ -814,7 +699,7 @@ def _super_kmeans_sql(n_iters: int = _KMEANS_ITERS) -> tuple[str, str]:
   SELECT cent_id AS sup_id, cq AS sq FROM c WHERE cent_id < {_SUPERS_SQL}
 )"""
     ]
-    for t in range(1, n_iters + 1):
+    for t in range(1, _KMEANS_ITERS + 1):
         parts.append(
             f""", ka{t} AS (
   SELECT cent_id, sup_id, cq FROM (
@@ -842,7 +727,7 @@ def _super_kmeans_sql(n_iters: int = _KMEANS_ITERS) -> tuple[str, str]:
   ) n USING (sup_id)
 )"""
         )
-    return "".join(parts), f"s{n_iters}"
+    return "".join(parts), f"s{_KMEANS_ITERS}"
 
 
 _SUP_CHAIN, _SUP_FINAL = _super_kmeans_sql()
@@ -912,39 +797,28 @@ WITH v AS ({_QV_SQL}
 )
 SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
        CAST(rank AS INT) AS rank,
-       floor(CAST(dot_q AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
 FROM ranked WHERE rank <= {_IVF_K}
 """
 
 
-def _super_quantizer(cent_ids, cent_mat, n_sup, n_iters: int = _KMEANS_ITERS):
-    """(sup_ids, sup_mat, route): DRIVER-LOCAL Lloyd over the C fine
-    centroid rows (they already live on the driver as the codebook
-    matrix — C = √N ≈ 31k rows × dim even at N = 1e9, a few MB), then
-    the fine→super routing table.
+def two_level(cent_mat, n_sup: int) -> TwoLevel:
+    """The two-level router over the C fine centroid rows: a
+    DRIVER-LOCAL Lloyd over them (they already live on the driver as the
+    codebook matrix — C = √N ≈ 31k rows × dim even at N = 1e9, a few MB)
+    seeded with the first ``n_sup`` rows, then the fine→super routing.
 
     Mirrors :func:`_super_kmeans_sql` exactly: int64 dot argmax with
-    ties to the lowest sup_id (np.argmax takes the first max and the
-    seed rows ascend by id), floor(float64(sum)/count) means (per-super
-    per-dim |sums| ≤ C·1e8 ≈ 3e12 — exactly representable in float64,
-    so the floor is exact), empty supers carrying forward."""
-    import numpy as np
-
-    sup_ids = cent_ids[:n_sup].copy()
+    ties to the lowest sup_id, floor(float64(sum)/count) means
+    (per-super per-dim |sums| ≤ C·1e8 ≈ 3e12 — exactly representable in
+    float64, so the floor is exact), empty supers carrying forward."""
     sup = cent_mat[:n_sup].copy()
-    for _ in range(n_iters):
-        best = (cent_mat @ sup.T).argmax(axis=1)
-        new = sup.copy()
-        for si in range(n_sup):
-            sel = cent_mat[best == si]
-            if len(sel):
-                new[si] = np.floor(
-                    sel.sum(axis=0).astype(np.float64) / len(sel)
-                ).astype(np.int64)
-        sup = new
-    route = (cent_mat @ sup.T).argmax(axis=1)
-    return sup_ids, sup, route
+    for _ in range(_KMEANS_ITERS):
+        sup = floor_means(
+            sup, *cluster_sums(cent_mat, nearest(cent_mat, sup)[0], n_sup)
+        )
+    return TwoLevel(cent_mat, sup, nearest(cent_mat, sup)[0])
 
 
 @register("q_ann_ivf_twolevel", oracle=_IVF_TWOLEVEL_ORACLE)
@@ -974,10 +848,6 @@ def q_ann_ivf_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema and ranking rule match q_ann_ivf_topk, only the assignment
     path differs.
     """
-    import numpy as np
-
-    from end_to_end_aws_data_pipeline_spark.cache import persisted
-
     from end_to_end_aws_data_pipeline_spark.plans.scale import overlap_jobs
 
     v = _quantized(spark, sf_dir)
@@ -986,87 +856,13 @@ def q_ann_ivf_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mutually independent scans of v — run them as concurrent jobs
     # (guide §2.6) instead of two serialized full normalize passes
     (cent_ids, cent_mat), (q_ids, q_mat) = overlap_jobs(
-        lambda: _query_matrix(
-            v.filter(F.col("vec_id") < n_cent).orderBy("vec_id")
-        ),
-        lambda: _query_matrix(
-            v.filter(F.col("vec_id") % _QUERY_MOD == 0)
-            .orderBy("vec_id")
-            .limit(_MAX_QUERIES)
-        ),
+        lambda: _seeds(v, n_cent),
+        lambda: _query_matrix(_query_set(v)),
     )
-    sup_ids, sup_mat, route = _super_quantizer(
-        cent_ids, cent_mat, n_super_for(n_cent)
-    )
-    live = np.unique(route)  # ascending → argmax ties hit lowest sup_id
-    live_sup = sup_mat[live]
-    cand = {int(s): np.flatnonzero(route == s) for s in live}
-
-    def _assign2(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            # level 1: B×S dots over live supers only
-            bs = live[(m @ live_sup.T).argmax(axis=1)]
-            out = np.empty(len(m), dtype=np.int64)
-            # level 2: exact argmax within each routed candidate subset
-            # (ci ascends by construction → ties to the lowest cent_id)
-            for s in np.unique(bs):
-                rows = np.flatnonzero(bs == s)
-                ci = cand[int(s)]
-                best = (m[rows] @ cent_mat[ci].T).argmax(axis=1)
-                out[rows] = cent_ids[ci[best]]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cent_id": pd.Series(out, dtype="int64"),
-                    "q": pdf["q"],
-                }
-            )
-
-    assign = spread(v).mapInPandas(
-        _assign2, schema="vec_id long, cent_id long, q array<long>"
-    )
+    router = two_level(cent_mat, n_super_for(n_cent))
+    assign = _assigned(spread(v), cent_ids, router.route)
     # queries routed on the driver with the IDENTICAL two-level rule
-    qbs = live[(q_mat @ live_sup.T).argmax(axis=1)]
-    q_cents = []
-    for s, qv in zip(qbs, q_mat):
-        ci = cand[int(s)]
-        q_cents.append(int(cent_ids[ci[(cent_mat[ci] @ qv).argmax()]]))
-    qs = local_frame(
-        spark,
-        [
-            (int(qid), [int(x) for x in qv], cid)
-            for qid, qv, cid in zip(q_ids, q_mat, q_cents)
-        ],
-        "query_id long, qq array<long>, cent_id long",
-    )
-    dot_q = F.aggregate(
-        F.zip_with(F.col("qq"), F.col("q"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        assign.join(F.broadcast(qs), "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("cent_id").cast("long").alias("probed_centroid"),
-            dot_q.alias("dot_q"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("dot_q").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _IVF_K)
-        .select(
-            "query_id", "neighbor_id", "probed_centroid", "rank", _cosine_out()
-        )
-    )
+    return _probe_top_k(assign, q_ids, q_mat, cent_ids[router.route(q_mat)[0]])
 
 
 # ---------------------------------------------------------------------------
@@ -1079,7 +875,7 @@ def q_ann_ivf_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the demonstration threshold sits at the top of ITS similarity
 # range. Compared in exact integer space: dot_q >= _SEMDEDUP_DOT.
 _SEMDEDUP_TAU = 0.35
-_SEMDEDUP_DOT = int(_SEMDEDUP_TAU * _SCALE_SQ)  # exact: 0.35*1e16 is integral
+_SEMDEDUP_DOT = int(_SEMDEDUP_TAU * SCALE_SQ)  # exact: 0.35*1e16 is integral
 
 _SEMDEDUP_ORACLE = f"""
 WITH v AS ({_QV_SQL}
@@ -1179,7 +975,7 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold, exact in int64 dot space like SemDeDup's.
 _SEMCON_MOD = 23
 _SEMCON_TAU = 0.30
-_SEMCON_DOT = int(_SEMCON_TAU * _SCALE_SQ)  # 0.30*1e16 is integral
+_SEMCON_DOT = int(_SEMCON_TAU * SCALE_SQ)  # 0.30*1e16 is integral
 
 _SEMCON_ORACLE = f"""
 WITH v AS ({_QV_SQL}
@@ -1206,7 +1002,7 @@ WITH v AS ({_QV_SQL}
   FROM corp JOIN ev ON corp.cent_id = ev.cent_id
 )
 SELECT vec_id, cent_id, eval_id AS matched_eval_id,
-       floor(CAST(dot_q AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
 FROM (
   SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -1369,7 +1165,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _RHP_BITS = 64
 _RHP_BAND_BITS = 8  # 8 bands × 8 bits (see q_ann_rhp_lsh docstring)
-_RHP_TAU_DOT = int(0.35 * _SCALE_SQ)  # τ on the exact quantized dot
+_RHP_TAU_DOT = int(0.35 * SCALE_SQ)  # τ on the exact quantized dot
 
 _RHP_ORACLE = f"""
 WITH v AS ({_QV_SQL}
@@ -1410,7 +1206,7 @@ WITH v AS ({_QV_SQL}
               JOIN v vb ON vb.vec_id = c.vec_b
 )
 SELECT vec_a, vec_b,
-       floor(CAST(dot_q AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
 FROM verified WHERE dot_q >= {_RHP_TAU_DOT}
 """
@@ -1466,35 +1262,18 @@ def q_ann_rhp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
+    from end_to_end_aws_data_pipeline_spark.cache import persisted
+
     v = _quantized(spark, sf_dir)
 
-    def _sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            if planes is None:
-                planes = _rhp_planes(m.shape[1])
-            dots = m @ planes.T  # B×bits exact int64 (|Σ| ≤ dim·1e8)
-            bits = (dots > 0).astype(np.uint64)
-            sig = np.zeros(len(m), dtype=np.uint64)
-            for j in range(_RHP_BITS):
-                sig |= bits[:, j] << np.uint64(j)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "sig": sig.view(np.int64),
-                }
-            )
-
-    from end_to_end_aws_data_pipeline_spark.cache import persisted
+    def _sig(b, m):
+        dots = m @ _rhp_planes(m.shape[1]).T  # B×bits exact int64 (|Σ| ≤ dim·1e8)
+        bits = (dots > 0).astype(np.uint64) << np.arange(_RHP_BITS, dtype=np.uint64)
+        return b.column("vec_id"), np.bitwise_or.reduce(bits, axis=1).view(np.int64)
 
     # the band table self-joins below: without a persist Spark would
     # run the signature matmul pass once per join side
-    sigs = persisted(
-        spread(v).mapInPandas(_sig, schema="vec_id long, sig long")
-    )
+    sigs = persisted(vector_map(spread(v), "vec_id long, sig long", _sig))
     n_bands = _RHP_BITS // _RHP_BAND_BITS
     mask = (1 << _RHP_BAND_BITS) - 1
     bands = sigs.select(
@@ -1633,7 +1412,7 @@ WITH v AS (
            (CAST(x AS DOUBLE) /
              sqrt(list_sum(list_transform(embedding,
                   y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))
-           ) * {_Q_SCALE}) AS BIGINT)) AS q
+           ) * {Q_SCALE}) AS BIGINT)) AS q
   FROM embeddings
 ), qs AS (
   SELECT vec_id AS query_id, label AS qlabel, q AS qq FROM v
@@ -1652,7 +1431,7 @@ WITH v AS (
 )
 SELECT query_id, neighbor_id, CAST(neg_label AS BIGINT) AS neg_label,
        CAST(rank AS INT) AS rank,
-       floor(CAST(dot_q AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
 FROM ranked WHERE rank <= {_HN_TOP_K}
 """
@@ -1676,49 +1455,24 @@ def q_embed_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    e = table(spark, sf_dir, "embeddings")
-    from end_to_end_aws_data_pipeline_spark.functions.vector import l2_normalize
-
-    quant = F.transform(
-        l2_normalize(F.col("embedding")),
-        lambda x: F.round(x * _Q_SCALE).cast("long"),
+    v = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.col("label").cast("long").alias("label"),
+        quantized(F.col("embedding")).alias("q"),
     )
-    v = e.select("vec_id", F.col("label").cast("long").alias("label"), quant.alias("q"))
-    qdf = (
-        v.filter(F.col("vec_id") % _QUERY_MOD == 0)
-        .orderBy("vec_id")
-        .limit(_MAX_QUERIES)
-    )
-    rows = qdf.collect()
+    rows = _query_set(v).collect()
     q_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     q_labels = np.array([r["label"] for r in rows], dtype=np.int64)
     q_mat = np.array([r["q"] for r in rows], dtype=np.int64)
 
-    def _score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            labels = pdf["label"].to_numpy(dtype=np.int64)
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            s = m @ q_mat.T
-            out = {"query_id": [], "neighbor_id": [], "neg_label": [], "dot_q": []}
-            for j, qid in enumerate(q_ids):
-                mask = labels != q_labels[j]
-                col, nid, nl = s[mask, j], ids[mask], labels[mask]
-                take = min(_HN_TOP_K, len(nid))
-                order = np.lexsort((nid, -col))[:take]
-                out["query_id"].extend([qid] * take)
-                out["neighbor_id"].extend(nid[order])
-                out["neg_label"].extend(nl[order])
-                out["dot_q"].extend(col[order])
-            yield pd.DataFrame(
-                {k: pd.Series(vv, dtype="int64") for k, vv in out.items()}
-            )
+    def _score(b, m):
+        ids, labels = b.column("vec_id").to_numpy(), b.column("label").to_numpy()
+        s = m @ q_mat.T
+        j, i = topk_rows(s, ids, labels[:, None] != q_labels, _HN_TOP_K)
+        return q_ids[j], ids[i], labels[i], s[i, j]
 
-    scored = spread(v).mapInPandas(
-        _score,
-        schema="query_id long, neighbor_id long, neg_label long, dot_q long",
+    scored = vector_map(
+        spread(v), "query_id long, neighbor_id long, neg_label long, dot_q long", _score
     )
     w = W.partitionBy("query_id").orderBy(
         F.col("dot_q").desc(), "neighbor_id"
@@ -1726,15 +1480,7 @@ def q_embed_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= _HN_TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neg_label",
-            "rank",
-            stable_round(F.col("dot_q").cast("double") / _SCALE_SQ, 6).alias(
-                "cosine"
-            ),
-        )
+        .select("query_id", "neighbor_id", "neg_label", "rank", _cosine_out())
     )
 
 
@@ -1873,7 +1619,6 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     publishes the ITERATE, and the property test separately certifies
     it climbs toward numpy's true eigenvector."""
     import numpy as np
-    import pandas as pd
 
     d = 64
     e = table(spark, sf_dir, "embeddings")
@@ -1888,23 +1633,13 @@ def q_embed_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = e.select(quant.alias("q"))
 
-    def _partials(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            a = np.array(pdf["q"].tolist(), dtype=np.int64)
-            p = a.T @ a  # exact int64 (d+1)² partial
-            ii, jj = np.indices(p.shape)
-            yield pd.DataFrame(
-                {
-                    "i": ii.ravel().astype("int32"),
-                    "j": jj.ravel().astype("int32"),
-                    "p": p.ravel(),
-                }
-            )
+    def _partials(b, a):
+        p = a.T @ a  # exact int64 (d+1)² partial
+        ii, jj = np.indices(p.shape)
+        return ii.ravel(), jj.ravel(), p.ravel()
 
     gram_df = (
-        rows.mapInPandas(_partials, "i int, j int, p long")
+        vector_map(rows, "i int, j int, p long", _partials)
         .groupBy("i", "j")
         .agg(F.sum("p").alias("g"))
     )
@@ -2077,12 +1812,12 @@ WITH v AS ({_QV_SQL}
   ) WHERE rn = 1
 )
 SELECT comp.cent_id, n_members,
-       floor(CAST(sum_dot AS DOUBLE) / (n_members * {_SCALE_SQ}.0)
+       floor(CAST(sum_dot AS DOUBLE) / (n_members * {SCALE_SQ}.0)
              * 1000000 + 0.5) / 1000000 AS mean_cos,
-       floor(CAST(min_dot AS DOUBLE) / {_SCALE_SQ}.0
+       floor(CAST(min_dot AS DOUBLE) / {SCALE_SQ}.0
              * 1000000 + 0.5) / 1000000 AS min_cos,
        CAST(nn_cent AS BIGINT) AS nn_cent,
-       floor(CAST(nn_dot AS DOUBLE) / {_SCALE_SQ}.0
+       floor(CAST(nn_dot AS DOUBLE) / {SCALE_SQ}.0
              * 1000000 + 0.5) / 1000000 AS nn_cos
 FROM comp JOIN sep ON sep.cent_id = comp.cent_id
 """
@@ -2155,14 +1890,14 @@ def q_embed_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_members",
         stable_round(
             F.col("sum_dot").cast("double")
-            / (F.col("n_members") * float(_SCALE_SQ)),
+            / (F.col("n_members") * float(SCALE_SQ)),
             6,
         ).alias("mean_cos"),
-        stable_round(F.col("min_dot").cast("double") / _SCALE_SQ, 6).alias(
+        stable_round(F.col("min_dot").cast("double") / SCALE_SQ, 6).alias(
             "min_cos"
         ),
         "nn_cent",
-        stable_round(F.col("nn_dot").cast("double") / _SCALE_SQ, 6).alias(
+        stable_round(F.col("nn_dot").cast("double") / SCALE_SQ, 6).alias(
             "nn_cos"
         ),
     )
@@ -2213,7 +1948,7 @@ WITH v AS MATERIALIZED ({_QV_SQL}
        CAST(NULL AS DOUBLE) AS radius_sim FROM s1"""]
     legs += [
         f"""SELECT {k}, vec_id,
-       floor(CAST(maxdot AS DOUBLE) / {_SCALE_SQ}.0 * 1000000 + 0.5)
+       floor(CAST(maxdot AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 FROM s{k}"""
         for k in range(2, _KC_K + 1)
     ]
@@ -2285,7 +2020,7 @@ def q_embed_kcenter_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
             vid,
             None
             if md is None
-            else math.floor(md / _SCALE_SQ * 1_000_000 + 0.5) / 1_000_000,
+            else math.floor(md / SCALE_SQ * 1_000_000 + 0.5) / 1_000_000,
         )
         for rank, vid, md in picks
     ]

@@ -24,23 +24,28 @@ RLE fold): staging, the drain and its flag-based deliberate stop,
 bucketed snapshot write (no single-task coalesce), last-RETAIN
 retention and the missing-predecessor refusal.
 
-Scale shape: per batch ONE lazy JVM plan — quantize, one B×C Arrow
-matmul for assignment, one window + one aggregate on cent_id, one
-snapshot-sized full-outer merge.  The snapshot is √N rows (one per
-centroid), never corpus-sized.
+Scale shape: per batch ONE lazy plan — quantize, one B×C int64 matmul
+for assignment in the family's shared Arrow pass
+(operators/vecbatch.vector_map), one window + one aggregate on
+cent_id, one snapshot-sized full-outer merge.  The snapshot is √N rows
+(one per centroid), never corpus-sized.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from functools import partial
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema
+from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
+    nearest,
+    quantized,
+    vector_map,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 from end_to_end_aws_data_pipeline_spark.streaming.store import (
     drain,
@@ -79,140 +84,43 @@ def staged_vec_dir(path: str) -> str:
     return stage(path, "annidx", write_chunks)
 
 
-def _frozen_quantizer(spark: SparkSession, sf_dir: str):
-    """(cent_ids, cent_mat): the offline-trained coarse quantizer —
-    the IDENTICAL √N-centroid rule as the batch IVF, read from the
-    corpus parquet (the 'trained before the stream started' model)."""
+def _frozen_router(spark: SparkSession, sf_dir: str, twolevel: bool):
+    """(cent_ids, route): the offline-trained coarse quantizer, read
+    from the corpus parquet (the 'trained before the stream started'
+    model) — the IDENTICAL √N-centroid rule as the batch IVF, routed
+    directly or, with ``twolevel``, through q_ann_ivf_twolevel's
+    router (super level Lloyd-trained driver-local on the C centroid
+    rows, dead supers excluded). ``route`` has
+    :func:`vecbatch.nearest`'s signature."""
     from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        _query_matrix,
         _quantized,
-        n_centroids_for,
-    )
-
-    v = _quantized(spark, sf_dir)
-    n_cent = n_centroids_for(v.count())
-    return _query_matrix(v.filter(F.col("vec_id") < n_cent).orderBy("vec_id"))
-
-
-def _frozen_quantizer_twolevel(spark: SparkSession, sf_dir: str):
-    """(cent_ids, cent_mat, live, live_sup, cand): the two-level
-    frozen model — the q_ann_ivf_twolevel recipe (same fine codebook
-    as the single-level index, super level Lloyd-trained driver-local
-    on the C centroid rows, dead supers excluded), trained offline
-    before the stream starts."""
-    import numpy as np
-
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        _query_matrix,
-        _quantized,
-        _super_quantizer,
+        _seeds,
         n_centroids_for,
         n_super_for,
+        two_level,
     )
 
     v = _quantized(spark, sf_dir)
     n_cent = n_centroids_for(v.count())
-    cent_ids, cent_mat = _query_matrix(
-        v.filter(F.col("vec_id") < n_cent).orderBy("vec_id")
-    )
-    _sup_ids, sup_mat, route = _super_quantizer(
-        cent_ids, cent_mat, n_super_for(n_cent)
-    )
-    live = np.unique(route)
-    cand = {int(s): np.flatnonzero(route == s) for s in live}
-    return cent_ids, cent_mat, live, sup_mat[live], cand
+    cent_ids, cent_mat = _seeds(v, n_cent)
+    if twolevel:
+        return cent_ids, two_level(cent_mat, n_super_for(n_cent)).route
+    return cent_ids, partial(nearest, mat=cent_mat)
 
 
-def _assign_batch_twolevel(
-    bdf: DataFrame, cent_ids, cent_mat, live, live_sup, cand
-) -> DataFrame:
-    """Two-level routing of one micro-batch: B×S super argmax, then
-    exact-int64 argmax within the routed candidate subset — the
-    maintained index inherits the router's ~2·N^(1/4) assignment cost
-    instead of the √N it inherited from the single-level quantizer
-    (the round-11 verdict's named inheritance)."""
-    import numpy as np
+def _assign_batch(bdf: DataFrame, cent_ids, route) -> DataFrame:
+    """Quantize one micro-batch and route each vector to its frozen
+    centroid — the batch IVF's exact-int64 argmax (ties to the lowest
+    cent_id), plus the winning dot for the shortlist. The two-level
+    route gives the maintained index the router's ~2·N^(1/4)
+    assignment cost instead of the single-level √N."""
+    q = bdf.select("vec_id", quantized(F.col("embedding")).alias("q"))
 
-    from end_to_end_aws_data_pipeline_spark.functions.vector import (
-        l2_normalize,
-    )
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        _Q_SCALE,
-    )
+    def _route(b, m):
+        idx, dot = route(m)
+        return b.column("vec_id"), cent_ids[idx], dot
 
-    quant = F.transform(
-        l2_normalize(F.col("embedding")),
-        lambda x: F.round(x * _Q_SCALE).cast("long"),
-    )
-    q = bdf.select("vec_id", quant.alias("q"))
-
-    def _route(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            bs = live[(m @ live_sup.T).argmax(axis=1)]
-            out_c = np.empty(len(m), dtype=np.int64)
-            out_d = np.empty(len(m), dtype=np.int64)
-            for s in np.unique(bs):
-                rows = np.flatnonzero(bs == s)
-                ci = cand[int(s)]
-                dots = m[rows] @ cent_mat[ci].T
-                best = dots.argmax(axis=1)
-                out_c[rows] = cent_ids[ci[best]]
-                out_d[rows] = dots[np.arange(len(best)), best]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cent_id": pd.Series(out_c, dtype="int64"),
-                    "dot_c": pd.Series(out_d, dtype="int64"),
-                }
-            )
-
-    return q.mapInPandas(
-        _route, schema="vec_id long, cent_id long, dot_c long"
-    )
-
-
-def _assign_batch(bdf: DataFrame, cent_ids, cent_mat) -> DataFrame:
-    """Quantize one micro-batch and route each vector to its nearest
-    frozen centroid — the batch IVF's exact-int64 argmax (ties to the
-    lowest cent_id), plus the winning dot for the shortlist."""
-    import numpy as np
-
-    from end_to_end_aws_data_pipeline_spark.functions.vector import (
-        l2_normalize,
-    )
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        _Q_SCALE,
-    )
-
-    quant = F.transform(
-        l2_normalize(F.col("embedding")),
-        lambda x: F.round(x * _Q_SCALE).cast("long"),
-    )
-    q = bdf.select("vec_id", quant.alias("q"))
-
-    def _route(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["q"]), dtype=np.int64)
-            s = m @ cent_mat.T
-            best = s.argmax(axis=1)  # first max = lowest cent_id on ties
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].astype("int64"),
-                    "cent_id": pd.Series(cent_ids[best], dtype="int64"),
-                    "dot_c": pd.Series(
-                        s[np.arange(len(best)), best], dtype="int64"
-                    ),
-                }
-            )
-
-    return q.mapInPandas(
-        _route, schema="vec_id long, cent_id long, dot_c long"
-    )
+    return vector_map(q, "vec_id long, cent_id long, dot_c long", _route)
 
 
 def run_ann_index_stream(
@@ -228,10 +136,7 @@ def run_ann_index_stream(
     ``twolevel`` swaps the frozen single-level quantizer for the
     hierarchical router (same fold, same store discipline — only the
     per-batch routing pass differs)."""
-    if twolevel:
-        model2 = _frozen_quantizer_twolevel(spark, sf_dir)
-    else:
-        cent_ids, cent_mat = _frozen_quantizer(spark, sf_dir)
+    cent_ids, route = _frozen_router(spark, sf_dir, twolevel)
     schema = _cached_schema(spark, os.path.join(staged, "chunk_0.parquet"))
     src = (
         spark.readStream.schema(schema)
@@ -240,10 +145,7 @@ def run_ann_index_stream(
     )
 
     def upd(bdf: DataFrame, bid: int) -> None:
-        if twolevel:
-            assign = _assign_batch_twolevel(bdf, *model2)
-        else:
-            assign = _assign_batch(bdf, cent_ids, cent_mat)
+        assign = _assign_batch(bdf, cent_ids, route)
         wk = W.partitionBy("cent_id").orderBy(
             F.col("dot_c").desc(), "vec_id"
         )

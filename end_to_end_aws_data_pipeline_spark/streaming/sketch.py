@@ -32,6 +32,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema, local_frame
+from end_to_end_aws_data_pipeline_spark.operators.percentiles import (
+    _HH_K,
+    _HH_TOP,
+    _KLL_K,
+    _KLL_QS,
+    hh_oracle_sql,
+    kll_oracle_sql,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 from end_to_end_aws_data_pipeline_spark.streaming.store import (
     drain,
@@ -39,11 +47,10 @@ from end_to_end_aws_data_pipeline_spark.streaming.store import (
     stage,
 )
 
-_SK_K = 256       # per-sketch capacity (matches q_agg_kll_quantiles)
+# per-sketch capacity and quantiles are q_agg_kll_quantiles' (_KLL_K,
+# _KLL_QS): the stream maintains the same sketch
 _SK_BUCKETS = 4   # staged arrival files = micro-batches = sketch groups
 _SK_LOCAL_ROWS = 1 << 18  # single-sorted-partition rank cutoff per batch
-_SK_QS = (250_000, 500_000, 750_000, 950_000)  # quantiles in ppm
-_SK_QS_SQL = ", ".join(f"({q})" for q in _SK_QS)
 
 # The oracle replays the identical two-level construction in batch:
 # groups = the deterministic arrival buckets (event_id % B — the same
@@ -52,89 +59,19 @@ _SK_QS_SQL = ", ".join(f"({q})" for q in _SK_QS)
 # + realized-rank-error audit identical. floor(x*100 + 0.5) is the
 # cross-engine stable cents publish (every step a correctly-rounded
 # IEEE op — SCALING.md round-6 numerics).
-_SK_ORACLE = f"""
-WITH v AS MATERIALIZED (
-  SELECT event_id % {_SK_BUCKETS} AS g,
+_SK_ORACLE = kll_oracle_sql(
+    f"""  SELECT event_id % {_SK_BUCKETS} AS g,
          CAST(floor(value * 100 + 0.5) AS BIGINT) AS vc,
          event_id AS uniq
-  FROM events
-), powers AS MATERIALIZED (
-  SELECT CAST(1 AS BIGINT) << CAST(p AS INT) AS sp FROM range(0, 41) t(p)
-), gr AS MATERIALIZED (
-  SELECT g, vc, uniq,
-         row_number() OVER (PARTITION BY g ORDER BY vc, uniq) AS rk
-  FROM v
-), gm AS MATERIALIZED (
-  SELECT g, n_g,
-         (SELECT min(sp) FROM powers
-          WHERE sp >= (n_g + {_SK_K - 1}) // {_SK_K}) AS s
-  FROM (SELECT g, CAST(count(*) AS BIGINT) AS n_g FROM v GROUP BY g)
-), l1 AS MATERIALIZED (
-  SELECT gr.g, gr.vc, gr.uniq,
-         CAST(least(gm.s, gm.n_g - gr.rk + 1) AS BIGINT) AS w
-  FROM gr JOIN gm USING (g)
-  WHERE (gr.rk - 1) % gm.s = 0
-), s2t AS MATERIALIZED (
-  SELECT m_items, wsum,
-         (SELECT min(sp) FROM powers
-          WHERE sp >= (m_items + {_SK_K - 1}) // {_SK_K}) AS s2
-  FROM (SELECT CAST(count(*) AS BIGINT) AS m_items,
-               CAST(sum(w) AS BIGINT) AS wsum FROM l1)
-), items AS MATERIALIZED (
-  SELECT vc, uniq, w,
-         row_number() OVER (ORDER BY vc, uniq) AS idx
-  FROM l1
-), strata AS MATERIALIZED (
-  SELECT (idx - 1) // s2t.s2 AS st, min(idx) AS first_idx,
-         CAST(sum(w) AS BIGINT) AS w2
-  FROM items CROSS JOIN s2t GROUP BY 1
-), kept AS MATERIALIZED (
-  SELECT i.vc, i.uniq, s.w2,
-         CAST(sum(s.w2) OVER (ORDER BY i.vc, i.uniq) AS BIGINT) AS cw
-  FROM strata s JOIN items i ON i.idx = s.first_idx
-), nn AS MATERIALIZED (
-  SELECT CAST(sum(n_g) AS BIGINT) AS n FROM gm
-), bound AS MATERIALIZED (
-  SELECT (SELECT CAST(sum(s - 1) AS BIGINT) FROM gm)
-         + (SELECT CAST(max(w2) AS BIGINT) FROM strata) AS b
-), spec AS MATERIALIZED (
-  SELECT q.q_ppm, nn.n, (q.q_ppm * nn.n + 999999) // 1000000 AS t
-  FROM nn CROSS JOIN (VALUES {_SK_QS_SQL}) q(q_ppm)
-), est AS MATERIALIZED (
-  SELECT s.q_ppm, s.n, s.t,
-         (SELECT min(vc) FROM kept WHERE cw >= s.t) AS est_vc
-  FROM spec s
-), audit AS MATERIALIZED (
-  SELECT e.q_ppm, e.n, e.t, e.est_vc,
-         1 + sum(CASE WHEN x.vc < e.est_vc THEN 1 ELSE 0 END) AS lo,
-         sum(CASE WHEN x.vc <= e.est_vc THEN 1 ELSE 0 END) AS hi
-  FROM v x CROSS JOIN est e
-  GROUP BY e.q_ppm, e.n, e.t, e.est_vc
+  FROM events""",
+    "       (SELECT CAST(count(*) AS BIGINT) FROM gm) AS n_batches,\n",
 )
-SELECT CAST(a.q_ppm AS BIGINT) AS q_ppm,
-       CAST(a.t AS BIGINT) AS target_rank,
-       CAST(a.est_vc AS BIGINT) AS est_vc,
-       CAST(CASE WHEN a.t < a.lo THEN a.lo - a.t
-                 WHEN a.t > a.hi THEN a.t - a.hi
-                 ELSE 0 END AS BIGINT) AS rank_err,
-       CAST(b.b AS BIGINT) AS err_bound,
-       (CASE WHEN a.t < a.lo THEN a.lo - a.t
-             WHEN a.t > a.hi THEN a.t - a.hi
-             ELSE 0 END) <= b.b AS within_bound,
-       CAST(a.n AS BIGINT) AS n_rows,
-       CAST(s2t.m_items AS BIGINT) AS merged_items,
-       (SELECT CAST(count(*) AS BIGINT) FROM strata) AS sketch_items,
-       (SELECT CAST(count(*) AS BIGINT) FROM gm) AS n_batches,
-       s2t.wsum = a.n AS weight_exact
-FROM audit a CROSS JOIN bound b CROSS JOIN s2t
-ORDER BY q_ppm
-"""
 
 
 def _pow2ceil(c: int) -> int:
-    """Smallest power of two s with s * _SK_K >= c (compaction step)."""
+    """Smallest power of two s with s * _KLL_K >= c (compaction step)."""
     s = 1
-    while s * _SK_K < c:
+    while s * _KLL_K < c:
         s *= 2
     return s
 
@@ -295,7 +232,7 @@ def merge_sketches(spark: SparkSession, acc: str, n_rows: int) -> DataFrame:
         kept.append((items[j][0], cw, w2))
     bound = b1 + max(w2 for _, _, w2 in kept)
     out = []
-    for q in _SK_QS:
+    for q in _KLL_QS:
         t = (q * n_rows + 999_999) // 1_000_000
         est_vc = next(vc for vc, c, _ in kept if c >= t)
         out.append(
@@ -403,54 +340,16 @@ def q_stream_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_agg_heavy_hitters_merge, maintained incrementally in foreachBatch)
 # ---------------------------------------------------------------------------
 
-_HH_K = 64    # per-batch summary capacity (matches the batch operator)
-_HH_TOP = 20  # published global heavy hitters
-
-# The oracle replays the identical construction in batch: groups = the
+# Per-batch summary capacity and published top are the batch
+# operator's (_HH_K, _HH_TOP). The oracle replays the identical construction in batch: groups = the
 # deterministic arrival buckets (event_id % B), per-group summary = the
 # exact top-K user counts + the K-th count t_g, merge = candidate
 # rollup with the absent-group t_g interval, audit = one exact count
 # pass over the published keys (the q_agg_heavy_hitters_merge
 # arithmetic with calendar months replaced by arrival buckets).
-_HH_STREAM_ORACLE = f"""
-WITH v AS MATERIALIZED (
-  SELECT event_id % {_SK_BUCKETS} AS g, user_id AS k FROM events
-), c AS MATERIALIZED (
-  SELECT g, k, CAST(count(*) AS BIGINT) AS cnt FROM v GROUP BY g, k
-), r AS MATERIALIZED (
-  SELECT g, k, cnt,
-         row_number() OVER (PARTITION BY g ORDER BY cnt DESC, k) AS rk
-  FROM c
-), tg AS MATERIALIZED (
-  SELECT g,
-         CAST(coalesce(max(CASE WHEN rk = {_HH_K} THEN cnt END), 0)
-              AS BIGINT) AS t
-  FROM r GROUP BY g
-), tt AS MATERIALIZED (
-  SELECT CAST(sum(t) AS BIGINT) AS total_t FROM tg
-), kept AS MATERIALIZED (
-  SELECT r.k, r.cnt, tg.t
-  FROM r JOIN tg USING (g) WHERE r.rk <= {_HH_K}
-), cand AS MATERIALIZED (
-  SELECT k, CAST(sum(cnt) AS BIGINT) AS lo, CAST(sum(t) AS BIGINT) AS tcov,
-         CAST(count(*) AS BIGINT) AS groups_present
-  FROM kept GROUP BY k
-), top AS MATERIALIZED (
-  SELECT k, lo, CAST(lo + tt.total_t - tcov AS BIGINT) AS hi,
-         groups_present
-  FROM cand CROSS JOIN tt
-  ORDER BY lo DESC, k LIMIT {_HH_TOP}
-), ex AS MATERIALIZED (
-  SELECT v.k, CAST(count(*) AS BIGINT) AS exact_cnt
-  FROM v JOIN top ON top.k = v.k GROUP BY v.k
+_HH_STREAM_ORACLE = hh_oracle_sql(
+    f"  SELECT event_id % {_SK_BUCKETS} AS g, user_id AS k FROM events", "user_id"
 )
-SELECT top.k AS user_id, top.lo AS est_lo, top.hi AS est_hi,
-       ex.exact_cnt, top.groups_present,
-       (top.lo <= ex.exact_cnt AND ex.exact_cnt <= top.hi)
-         AS within_bound
-FROM top JOIN ex ON ex.k = top.k
-ORDER BY est_lo DESC, user_id
-"""
 
 
 def run_hh_stream(

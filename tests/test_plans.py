@@ -363,7 +363,7 @@ def test_jaccard_adaptive_plan_posture(spark):
 
 def test_ivf_trained_assignment_is_bounded_python(spark):
     """Trained-IVF plan: Python shows up ONLY as the Arrow-batched
-    assignment stage (mapInPandas); the probe join must broadcast the
+    assignment stage (mapInArrow); the probe join must broadcast the
     bounded query set, and ranking must be a window over the candidate
     rows, never a cartesian expansion."""
     from end_to_end_aws_data_pipeline_spark.operators.similarity import (
@@ -372,7 +372,7 @@ def test_ivf_trained_assignment_is_bounded_python(spark):
 
     plan = physical_plan(q_ann_ivf_trained(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
 
     from end_to_end_aws_data_pipeline_spark.cache import release_all
@@ -419,7 +419,7 @@ def test_round5_plan_posture(spark):
         # lineage, not re-executed work
         simple = physical_plan(df)
         assert "InMemoryTableScan" in simple  # persisted corpus reuse
-        assert simple.split("InMemoryTableScan")[0].count("MapInPandas") == 1
+        assert simple.split("InMemoryTableScan")[0].count("MapInArrow") == 1
 
     hll_df = q_agg_hll_distinct(spark, SF_SMOKE)
     hll = formatted_plan(hll_df)
@@ -525,7 +525,7 @@ def test_round5_fourth_wave_plan_posture(spark):
       once, no Python.
     - RHP-LSH: candidate generation is an equi-join on (band, bucket)
       — never a cartesian; Python appears only as the one Arrow
-      signature stage (ArrowEvalPython/MapInPandas), not per-pair.
+      signature stage (MapInArrow), not per-pair.
     """
     from end_to_end_aws_data_pipeline_spark.ingest.queries import q_etl_profile
     from end_to_end_aws_data_pipeline_spark.operators.extras import (
@@ -557,13 +557,13 @@ def test_round5_fourth_wave_plan_posture(spark):
     prhp = physical_plan(rhp)
     assert "Cartesian" not in prhp
     # both sides of the band self-join read the PERSISTED signature
-    # table, i.e. the matmul runs once. MapInPandas text appears only
+    # table, i.e. the matmul runs once. MapInArrow text appears only
     # inside cached-relation descriptions — when the cache is already
     # materialized (shared test session) Spark may elide a repeated
-    # description, so gate on "no more MapInPandas than cached
+    # description, so gate on "no more MapInArrow than cached
     # relations", not exact equality.
     assert prhp.count("InMemoryTableScan") == 2
-    assert 0 < prhp.count("MapInPandas") <= prhp.count("InMemoryRelation")
+    assert 0 < prhp.count("MapInArrow") <= prhp.count("InMemoryRelation")
 
 
 def test_round5_fifth_wave_plan_posture(spark):
@@ -1180,7 +1180,7 @@ def test_round12_plan_posture(spark):
 
     p = physical_plan(q_ann_ivf_twolevel(spark, SF_SMOKE))
     assert "CartesianProduct" not in p
-    assert p.count("MapInPandas") == 1
+    assert p.count("MapInArrow") == 1
     assert "BroadcastHashJoin" in p
 
     pa = q_events_pattern_alternation(spark, SF_SMOKE)

@@ -245,10 +245,10 @@ def test_kcenter_matches_python_greedy(spark):
     (cosine to nearest prior seed) must be non-decreasing."""
     from end_to_end_aws_data_pipeline_spark.operators.similarity import (
         _KC_K,
-        _SCALE_SQ,
         _quantized,
         q_embed_kcenter_seed,
     )
+    from end_to_end_aws_data_pipeline_spark.operators.vecbatch import SCALE_SQ
 
     vecs = {
         r["vec_id"]: r["q"] for r in _quantized(spark, SF).collect()
@@ -277,6 +277,6 @@ def test_kcenter_matches_python_greedy(spark):
         if md is None:
             assert r["radius_sim"] is None
         else:
-            assert abs(r["radius_sim"] - md / _SCALE_SQ) < 2e-6
+            assert abs(r["radius_sim"] - md / SCALE_SQ) < 2e-6
             radii.append(r["radius_sim"])
     assert radii == sorted(radii), "coverage radius must be non-decreasing"

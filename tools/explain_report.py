@@ -44,13 +44,13 @@ SHOWCASE = {
         "bounded probe set rides a BroadcastHashJoin",
     ],
     "q_ann_pq_topk": [
-        "ONE executing MapInPandas (ADC scoring; training collects are "
-        "bounded M·K·ds partial-sum rows per round)",
+        "ONE executing MapInArrow (vecbatch.vector_map ADC scoring; "
+        "training collects are bounded M·K·ds partial-sum rows per round)",
         "InMemoryTableScan: the quantized corpus is persisted once and "
         "reused by training, query collect and scoring",
     ],
     "q_ann_ivfpq_topk": [
-        "scoring MapInPandas reads the persisted residual+assignment frame",
+        "scoring MapInArrow reads the persisted residual+assignment frame",
         "final rank is a per-query window over batch-local top-k emissions",
     ],
     "q_agg_hll_distinct": [
@@ -97,9 +97,8 @@ SHOWCASE = {
         "half-steps (size-aware, the HyperANF pick)",
     ],
     "q_ann_ivf_twolevel": [
-        "assignment is ONE mapInPandas pass (ArrowEvalPython/"
-        "MapInPandas) — two small matmuls per batch, no per-pair "
-        "expression fold",
+        "assignment is ONE MapInArrow pass (vecbatch.vector_map) — "
+        "two small matmuls per batch, no per-pair expression fold",
         "probe join BROADCASTS the 64-query set on cent_id; corpus "
         "side never re-shuffles",
         "top-k per query via window rank over bucket-sized input, "
