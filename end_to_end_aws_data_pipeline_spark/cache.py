@@ -21,12 +21,10 @@ from pyspark.sql import DataFrame
 _LIVE: list[DataFrame] = []
 
 
-def persisted(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
+def persisted(df: DataFrame) -> DataFrame:
     """Persist ``df`` (MEMORY_AND_DISK spills gracefully at scale) and
     record it for a later :func:`release_all`."""
-    _LIVE.append(df.persist(level))
+    _LIVE.append(df.persist(StorageLevel.MEMORY_AND_DISK))
     return df
 
 

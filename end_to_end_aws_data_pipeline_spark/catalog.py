@@ -16,8 +16,14 @@ executing it starts no Python worker.
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import re
+import shutil
 import tempfile
+from collections.abc import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +47,83 @@ TABLES = (
 def scratch_root() -> str:
     """Where derived and staged files go: the temp dir (``TMPDIR``)."""
     return tempfile.gettempdir()
+
+
+@functools.cache
+def _code_digest() -> str:
+    """sha1 of every ``*.py`` file of the package, read once per process.
+
+    Staged data is keyed by the whole package, not by the function
+    that writes it: a writer's behaviour also lives in the helpers it
+    reaches through imports, methods and attribute calls, which no
+    per-function fingerprint follows reliably. The cost is that any
+    edit restages every staged input."""
+    root = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.sha1()
+    for p in sorted(glob.glob(os.path.join(root, "**", "*.py"), recursive=True)):
+        h.update(os.path.relpath(p, root).encode() + b"\0")
+        with open(p, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
+def _inputs_digest(inputs: list[str]) -> str:
+    """sha1 of the sorted (path, size, mtime) of every file under each
+    input, a file or a directory."""
+    h = hashlib.sha1()
+    for top in inputs:
+        top = os.path.abspath(top)
+        files = [top] if os.path.isfile(top) else [
+            os.path.join(d, f) for d, _, fs in os.walk(top) for f in fs
+        ]
+        for p in sorted(files):
+            st = os.stat(p)
+            h.update(f"{p}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()
+
+
+def stage(tag: str, inputs: list[str], build: Callable[[str], None]) -> str:
+    """The staged dir that ``build(out_dir)`` writes from ``inputs``.
+
+    The dir is ``staged_<tag>_<inputs>_<code>`` under ``scratch_root()``,
+    keyed by the input files (see ``_inputs_digest``) and the package
+    code (``_code_digest``), so a rewritten input or an edited writer
+    restages instead of reading an older build. A dir holding its
+    ``_STAGED`` marker is returned as is. Otherwise ``build`` runs in a
+    private ``.tmp.<pid>`` dir, which is marked and renamed into place:
+    two processes staging one key never see a partial dir, and the
+    rename's loser adopts the winner's dir. A dir without its marker is
+    a crashed build; it is cleared, never read. Once a build lands, the
+    complete dirs of the same tag and inputs left by other code are
+    deleted."""
+    root = scratch_root()
+    ins = _inputs_digest(inputs)[:12]
+    d = os.path.join(root, f"staged_{tag}_{ins}_{_code_digest()[:12]}")
+    done = os.path.join(d, "_STAGED")
+    if os.path.exists(done):
+        return d
+    # two processes of one key can both miss the marker: an in-place
+    # build would let one clear the dir while the other is mid-write
+    tmp = f"{d}.tmp.{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    build(tmp)
+    open(os.path.join(tmp, "_STAGED"), "w").close()
+    if os.path.isdir(d) and not os.path.exists(done):
+        shutil.rmtree(d, ignore_errors=True)
+    try:
+        os.rename(tmp, d)
+    except OSError:
+        # another process renamed its complete dir in first
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(done):
+            raise
+    old = re.compile(rf"staged_{re.escape(tag)}_{ins}_[0-9a-f]{{12}}")
+    for name in os.listdir(root):
+        p = os.path.join(root, name)
+        if p != d and old.fullmatch(name) and os.path.exists(os.path.join(p, "_STAGED")):
+            shutil.rmtree(p, ignore_errors=True)
+    return d
 
 
 # Parquet schema cache, keyed by (realpath, mtime). Schema inference

@@ -10,7 +10,7 @@ offending rows — no per-row side effects (a per-row RPC at 100 TB is
 same information). The aggregates run either as their own pass
 (``null_audit(df)``) or ride on the load's own action through
 ``DataFrame.observe`` (``observe_audit``), in which case the audit
-launches no job of its own; the ≤``sample_size``-row sample is one
+launches no job of its own; the ≤20-row sample is one
 ``limit`` job, run only when a bad row was counted.
 
 Cleaning is ``na.drop("any")`` + ``dropDuplicates()`` (``clean``). The
@@ -63,11 +63,9 @@ def observe_audit(df: DataFrame, observation_name: str) -> tuple[DataFrame, Obse
     return df.observe(obs, *_audit_aggs(df)), obs
 
 
-def null_audit(
-    df: DataFrame, sample_size: int = 20, observation: Observation | None = None
-) -> NullAudit:
+def null_audit(df: DataFrame, observation: Observation | None = None) -> NullAudit:
     """Total rows, rows with any null and per-column null counts, plus a
-    bounded driver-side sample of bad rows (the notification payload —
+    driver-side sample of at most 20 bad rows (the notification payload —
     replaces per-row SNS at ref delta_load.py:77-84).
 
     The counts come from ``observation`` (see ``observe_audit``) when
@@ -82,7 +80,7 @@ def null_audit(
         n_rows=metrics["n_rows"],
         n_bad_rows=n_bad,
         null_counts={c: metrics[f"null:{c}"] or 0 for c in df.columns},
-        sample_bad_rows=df.filter(_any_null(df)).limit(sample_size).collect() if n_bad else [],
+        sample_bad_rows=df.filter(_any_null(df)).limit(20).collect() if n_bad else [],
     )
 
 
@@ -95,11 +93,11 @@ def _observed(observation: Observation) -> dict:
     return observation.get if observation._jo.getRow().size() else {}
 
 
-def clean(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
+def clean(df: DataFrame) -> DataFrame:
     """dropna(any) + full-row dedup (ref delta_load.py:97-98).
 
     Keep-first vs keep-any is indistinguishable for *exact* duplicate
     rows, so distributed ``dropDuplicates`` preserves the reference
     semantics while staying shuffle-parallel.
     """
-    return df.na.drop("any", subset=subset).dropDuplicates()
+    return df.na.drop("any").dropDuplicates()

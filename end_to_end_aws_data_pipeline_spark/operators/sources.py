@@ -3,52 +3,52 @@ gate, proving format round-trips preserve values (SURVEY.md §2.B
 scans/sources rows; generalizes the reference's CSV-only ingestion,
 ref delta_load.py:62-66).
 
-Each query materializes a deterministic derived file (once per sf_dir,
-cached by content-independent path) from the canonical parquet, scans
-it back through the format under test, and aggregates — the oracle
+Each query materializes a deterministic derived file from the
+canonical parquet (``catalog.stage``: once per input table file, by
+path, size and mtime, and per package code), scans it back through the
+format under test, and aggregates — the oracle
 computes the same aggregate straight from parquet, so any loss or
 mangling in the write→scan round-trip breaks the hash match.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import scratch_root, table
+from end_to_end_aws_data_pipeline_spark.catalog import stage, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import dsum, dsum_sql
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 
-def _derived_dir(sf_dir: str, fmt: str) -> str:
-    tag = hashlib.sha1(f"{os.path.abspath(sf_dir)}:{fmt}".encode()).hexdigest()[:12]
-    return os.path.join(scratch_root(), f"derived_src_{tag}")
+def _staged(spark: SparkSession, sf_dir: str, name: str, tag: str, write: Callable) -> str:
+    """The dir ``write(df, out_dir)`` stages from table ``name``."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return stage(tag, [path], lambda out: write(table(spark, sf_dir, name), out))
 
 
 def _ensure_nation_csv(spark: SparkSession, sf_dir: str) -> str:
-    out = _derived_dir(sf_dir, "csv")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        table(spark, sf_dir, "nation").coalesce(1).write.mode("overwrite").option(
-            "header", True
-        ).csv(out)
-    return out
+    def write(t: DataFrame, out: str) -> None:
+        t.coalesce(1).write.mode("overwrite").option("header", True).csv(out)
+
+    return _staged(spark, sf_dir, "nation", "csv", write)
 
 
 def _ensure_orders_jsonl(spark: SparkSession, sf_dir: str) -> str:
-    out = _derived_dir(sf_dir, "json")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def write(t: DataFrame, out: str) -> None:
         # project to types JSON round-trips exactly (longs + strings)
-        table(spark, sf_dir, "orders").select(
+        t.select(
             "o_orderkey",
             "o_custkey",
             "o_orderstatus",
             # NTZ → LTZ (session is UTC) → epoch seconds
             F.col("o_orderdate").cast("timestamp").cast("long").alias("order_epoch"),
         ).coalesce(2).write.mode("overwrite").json(out)
-    return out
+
+    return _staged(spark, sf_dir, "orders", "json", write)
 
 
 _CSV_ORACLE = """
@@ -101,8 +101,7 @@ def q_source_json_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_lineitem_orc(spark: SparkSession, sf_dir: str) -> str:
-    out = _derived_dir(sf_dir, "orc")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def write(t: DataFrame, out: str) -> None:
         # partitioned sink: one directory per l_returnflag value, so the
         # scan side can show partition pruning on an ORC source too.
         # repartition on (partition column, bounded salt) first: each
@@ -111,14 +110,15 @@ def _ensure_lineitem_orc(spark: SparkSession, sf_dir: str) -> str:
         # 8 files, so the later SCAN parallelizes past |distinct values|
         # tasks (one-file-per-value capped the sf1 read at 3 tasks:
         # measured 7.3× on the 10× step before, 1.x after)
-        table(spark, sf_dir, "lineitem").select(
+        t.select(
             "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
         ).repartition(
             F.col("l_returnflag"), F.pmod(F.col("l_orderkey"), F.lit(8))
         ).write.mode("overwrite").partitionBy(
             "l_returnflag"
         ).orc(out)
-    return out
+
+    return _staged(spark, sf_dir, "lineitem", "orc", write)
 
 
 _ORC_ORACLE = f"""
@@ -187,17 +187,14 @@ def q_source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_bmp,
     )
 
-    out = _derived_dir(sf_dir, "binfile")
-    done = os.path.join(out, "_STAGED")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
+    def build(out: str) -> None:
         for doc_id in range(_BINFILE_N):
             pix = np.repeat(_gradient(doc_id)[:, :, None], 3, axis=2)
             with open(os.path.join(out, f"doc_{doc_id:05d}.bmp"), "wb") as f:
                 f.write(encode_bmp(pix))
-        with open(done, "w") as f:
-            f.write("ok")
 
+    # the images derive from doc_id alone: no input, one dir for every sf_dir
+    out = stage("binfile", [], build)
     files = spark.read.format("binaryFile").load(out + "/*.bmp")
 
     def _decode(it):
@@ -439,11 +436,10 @@ def q_source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_supplier_xml(spark: SparkSession, sf_dir: str) -> str:
-    out = _derived_dir(sf_dir, "xml")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    def write(t: DataFrame, out: str) -> None:
         # types that XML round-trips exactly: longs + strings (acctbal
         # travels as integer cents, not a float lexical form)
-        table(spark, sf_dir, "supplier").select(
+        t.select(
             "s_suppkey",
             "s_name",
             "s_nationkey",
@@ -451,7 +447,8 @@ def _ensure_supplier_xml(spark: SparkSession, sf_dir: str) -> str:
         ).coalesce(2).write.mode("overwrite").format("xml").option(
             "rootTag", "suppliers"
         ).option("rowTag", "supplier").save(out)
-    return out
+
+    return _staged(spark, sf_dir, "supplier", "xml", write)
 
 
 _XML_ORACLE = """
@@ -505,16 +502,16 @@ def _ensure_malformed_csv(spark: SparkSession, sf_dir: str) -> str:
     """Deterministically corrupt every 5th supplier row (non-numeric
     text in the integer nationkey column) so the corrupt-row set is
     derivable from the clean table by arithmetic."""
-    out = _derived_dir(sf_dir, "csv_malformed")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        table(spark, sf_dir, "supplier").select(
+    def write(t: DataFrame, out: str) -> None:
+        t.select(
             "s_suppkey",
             "s_name",
             F.when(F.col("s_suppkey") % 5 == 0, F.lit("notanint"))
             .otherwise(F.col("s_nationkey").cast("string"))
             .alias("s_nationkey"),
         ).coalesce(2).write.mode("overwrite").option("header", True).csv(out)
-    return out
+
+    return _staged(spark, sf_dir, "supplier", "csvbad", write)
 
 
 _CSV_MALFORMED_ORACLE = """
@@ -583,9 +580,7 @@ def _ensure_evolving_parquet(spark: SparkSession, sf_dir: str) -> str:
     batch 1 (keys % 2 = 0) has (okey, price_c); batch 2 (% 2 = 1) adds
     a `priority` column — the additive-column evolution every
     long-lived lakehouse table goes through."""
-    out = _derived_dir(sf_dir, "parquet_evolve")
-    if not os.path.exists(os.path.join(out, "batch2", "_SUCCESS")):
-        o = table(spark, sf_dir, "orders")
+    def write(o: DataFrame, out: str) -> None:
         base = o.select(
             F.col("o_orderkey").alias("okey"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("price_c"),
@@ -597,7 +592,8 @@ def _ensure_evolving_parquet(spark: SparkSession, sf_dir: str) -> str:
         base.filter(F.col("okey") % 2 == 1).coalesce(2).write.mode(
             "overwrite"
         ).parquet(os.path.join(out, "batch2"))
-    return out
+
+    return _staged(spark, sf_dir, "orders", "evolve", write)
 
 
 _MERGE_SCHEMA_ORACLE = """

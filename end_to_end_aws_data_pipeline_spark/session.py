@@ -49,7 +49,12 @@ RUNTIME_REQUIRED_CONFS = {
 # list (warm-up plus 2 reps, sf0.001, local[4]) compiled 3,465 distinct
 # classes under an unbounded cap, read with codegen_compiles; this is
 # the power of two at least twice that. With stage ids out of the class
-# names, a warm rep of that session compiles 14-24 classes (186 before)
+# names, a warm rep of that session compiles 14-24 classes (186 before).
+# A bigger cache would not remove the rest: each build reads its tables
+# with fresh attribute ids, and Spark orders some plan parts by those
+# ids' hashes, so a rebuilt query can generate permuted source. Seen: a
+# multi-distinct aggregate's Expand groups (q_etl_profile, 6 classes on
+# every warm rep) and a broadcast join condition's compare operands.
 CODEGEN_CACHE_ENTRIES = 8192
 
 

@@ -72,7 +72,7 @@ def staged_vec_dir(path: str) -> str:
     """Stage the embeddings table as _AI_CHUNKS parquet files with
     strictly increasing mtimes (vec_id-ordered slices for
     reproducibility of the STAGING, though the fold is split-invariant
-    by construction).  Idempotent, keyed by (path, mtime)."""
+    by construction).  Idempotent (``store.stage``)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 

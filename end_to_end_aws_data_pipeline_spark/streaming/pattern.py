@@ -73,7 +73,7 @@ def staged_time_dir(path: str) -> str:
     Sorting uses the µs-TRUNCATED timestamp (the engine-wide ns→µs
     normalization) with event_id tiebreak — raw-ns order could split a
     µs-tie across two buckets in the opposite order from the batch
-    composition's ORDER BY. Idempotent, keyed by (path, mtime).
+    composition's ORDER BY. Idempotent (``store.stage``).
     """
     import pyarrow as pa
     import pyarrow.compute as pc

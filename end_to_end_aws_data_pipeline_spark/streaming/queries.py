@@ -16,7 +16,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema, normalize_event_ts, scratch_root, table
+from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema, normalize_event_ts, stage, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import (
     dsum_sql,
     stable_round,
@@ -107,28 +107,17 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 _counter = itertools.count()
 
 
-def stream_dir_for(path: str) -> str:
-    """The file-stream source only accepts directories; stage a symlink
-    dir for a single-file source (cheap, idempotent, local-fs only —
-    on a lake the source is always a directory already)."""
-    import hashlib
+def _link_into(path: str, out: str) -> None:
+    # absolute target: a relative one would resolve against ``out``
+    os.symlink(os.path.abspath(path), os.path.join(out, os.path.basename(path)))
 
-    # absolute target: a RELATIVE path would hash differently per cwd
-    # and, worse, produce a dangling symlink (resolved against the
-    # staging dir) that os.path.exists() reports absent while
-    # os.symlink() still raises FileExistsError on the next run
-    path = os.path.abspath(path)
-    d = os.path.join(
-        scratch_root(),
-        f"stream_src_{hashlib.sha1(path.encode()).hexdigest()[:12]}",
-    )
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, os.path.basename(path))
-    if os.path.islink(link) and os.readlink(link) != path:
-        os.remove(link)  # stale link from an older layout
-    if not os.path.lexists(link):
-        os.symlink(path, link)
-    return d
+
+def stream_dir_for(path: str) -> str:
+    """The file-stream source only accepts directories: a staged dir
+    holding one symlink to the single-file source (``catalog.stage``,
+    once per file and package code; local-fs only — on a lake the
+    source is always a directory already)."""
+    return stage("src", [path], lambda out: _link_into(path, out))
 
 _EXACTLY_ONCE_ORACLE = """
 SELECT event_type, count(*) AS n_events,
@@ -261,10 +250,11 @@ WHERE c.event_type = 'click'
 """
 
 
-def _louter_staged_dir(spark: SparkSession, path: str) -> str:
-    """Stage the events file plus two SENTINEL parquet files (each one
-    future click + one future purchase, ids < 0) in a PRIVATE dir (not
-    stream_dir_for's shared one — other stream queries must never see
+def _louter_staged_dir(path: str) -> str:
+    """Stage a symlink to the events file plus two SENTINEL parquet
+    files (each one future click + one future purchase, ids < 0) in a
+    dir of their own (``catalog.stage``, once per file and package code;
+    not stream_dir_for's — other stream queries must never see
     sentinels). Outer-join state only flushes when the watermark
     passes; the real data alone leaves its own tail (and, in a single
     availableNow batch, everything) un-evicted. Two sentinel files +
@@ -275,38 +265,29 @@ def _louter_staged_dir(spark: SparkSession, path: str) -> str:
     click+purchase sentinels keep BOTH sides' frontiers advancing).
     A third sentinel was one whole state-store maintenance round of
     pure waste — measured 7.5 -> ~5 s at sf0.1 with identical output."""
-    import hashlib
+    import datetime as _dt
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    path = os.path.abspath(path)
-    d = os.path.join(
-        scratch_root(),
-        f"stream_louter_{hashlib.sha1(path.encode()).hexdigest()[:12]}",
-    )
-    if os.path.isdir(d):
-        shutil.rmtree(d)
-    os.makedirs(d)
-    os.symlink(path, os.path.join(d, os.path.basename(path)))
+    def build(d: str) -> None:
+        _link_into(path, d)
+        t = pq.read_table(path)
+        max_ts = pa.compute.max(t.column("ts")).as_py()
+        one = t.slice(0, 1).to_pylist()[0]
+        for i, hours in enumerate((3, 6), start=1):
+            rows = []
+            for j, etype in enumerate(("click", "purchase")):
+                r = dict(one)
+                r["event_id"] = -(2 * i + j)
+                r["user_id"] = -1
+                r["ts"] = max_ts + _dt.timedelta(hours=hours)
+                r["event_type"] = etype
+                rows.append(r)
+            sent = pa.Table.from_pylist(rows, schema=t.schema)
+            pq.write_table(sent, os.path.join(d, f"zz_sentinel_{i}.parquet"))
 
-    t = pq.read_table(path)
-    max_ts = pa.compute.max(t.column("ts")).as_py()
-    one = t.slice(0, 1).to_pylist()[0]
-    import datetime as _dt
-
-    for i, hours in enumerate((3, 6), start=1):
-        rows = []
-        for j, etype in enumerate(("click", "purchase")):
-            r = dict(one)
-            r["event_id"] = -(2 * i + j)
-            r["user_id"] = -1
-            r["ts"] = max_ts + _dt.timedelta(hours=hours)
-            r["event_type"] = etype
-            rows.append(r)
-        sent = pa.Table.from_pylist(rows, schema=t.schema)
-        pq.write_table(sent, os.path.join(d, f"zz_sentinel_{i}.parquet"))
-    return d
+    return stage("louter", [path], build)
 
 
 @register("q_stream_stream_left_join", oracle=_LOUTER_ORACLE)
@@ -340,7 +321,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     schema = _cached_schema(spark, path)
     name = f"__stream_louter_{next(_counter)}"
-    src_dir = _louter_staged_dir(spark, path)
+    src_dir = _louter_staged_dir(path)
 
     def side(event_type: str, prefix: str) -> DataFrame:
         src = normalize_event_ts(

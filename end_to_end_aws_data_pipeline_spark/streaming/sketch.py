@@ -82,9 +82,9 @@ def staged_bucket_dir(path: str) -> str:
     the stand-in for data ARRIVING in bounded batches (a day's files,
     a Kafka partition's offsets). maxFilesPerTrigger=1 then makes each
     micro-batch exactly one bucket, so the stream's unit of sketch
-    maintenance equals the oracle's replayable group. Idempotent and
-    keyed by (path, mtime): re-staging happens only when the source
-    changes."""
+    maintenance equals the oracle's replayable group. Idempotent:
+    re-staging happens only when the source or the package code
+    changes (``store.stage``)."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 

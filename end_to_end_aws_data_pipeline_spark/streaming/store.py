@@ -5,12 +5,10 @@ Three pieces, each idempotent under availableNow replay — the
 reference's watermark gate + upsert contract (delta_load.py) carried
 into streaming state:
 
-- **stage**: the input table, staged once per (path, mtime) as
-  ordered chunk files under ``scratch_root()/stream_<tag>_<sha>``.
-  Each build is private (``.tmp.<pid>``), marked complete
-  (``_STAGED``), then renamed into place, so two processes staging the
-  same source never see a partial dir; the rename's loser adopts the
-  winner's dir.
+- **stage**: the input table as ordered chunk files, staged by
+  ``catalog.stage``: once per input file and package code, built
+  privately and renamed into place, so two processes staging the same
+  source never see a partial dir.
 - **drain**: foreachBatch under ``availableNow`` with a checkpoint, one
   micro-batch per chunk, and a flagged deliberate stop for restart
   tests.
@@ -23,7 +21,6 @@ into streaming state:
 
 from __future__ import annotations
 
-import hashlib
 import itertools
 import os
 import re
@@ -34,7 +31,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import local_frame, scratch_root
+from end_to_end_aws_data_pipeline_spark import catalog
+from end_to_end_aws_data_pipeline_spark.catalog import local_frame
 
 # snapshot shards: hash(key) % BUCKETS, partitionBy'd on the bucket
 BUCKETS = 8
@@ -88,41 +86,16 @@ def stage(
     ``write_chunks(path, out_dir)`` writes the chunks into ``out_dir``
     and returns their file paths in arrival order; each gets mtime
     ``mtime(path) + 10·g``, strictly increasing, so the file source
-    replays them in that order (maxFilesPerTrigger=1).  Idempotent,
-    keyed by (path, mtime): a second call returns the marked dir
-    without rewriting it."""
+    replays them in that order (maxFilesPerTrigger=1).  Staged once per
+    input and package code by ``catalog.stage``."""
     path = os.path.abspath(path)
     mt = int(os.path.getmtime(path))
-    d = os.path.join(
-        scratch_root(),
-        f"stream_{tag}_"
-        + hashlib.sha1(f"{path}:{mt}".encode()).hexdigest()[:12],
-    )
-    done = os.path.join(d, "_STAGED")
-    if os.path.exists(done):
-        return d
-    # build privately and rename into place: two processes keyed to the
-    # same (path, mtime) can both miss the marker, and an in-place build
-    # would let one rmtree the dir while the other is mid-write
-    # (partial chunks under a present marker)
-    tmp = f"{d}.tmp.{os.getpid()}"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
-    for g, f in enumerate(write_chunks(path, tmp)):
-        os.utime(f, (mt + 10 * g, mt + 10 * g))
-    open(os.path.join(tmp, "_STAGED"), "w").close()
-    if os.path.isdir(d) and not os.path.exists(done):
-        # a crashed build (no marker); clear it so the rename can land
-        shutil.rmtree(d, ignore_errors=True)
-    try:
-        os.rename(tmp, d)
-    except OSError:
-        # another process renamed its complete dir in first
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(done):
-            raise
-    return d
+
+    def build(out: str) -> None:
+        for g, f in enumerate(write_chunks(path, out)):
+            os.utime(f, (mt + 10 * g, mt + 10 * g))
+
+    return catalog.stage(tag, [path], build)
 
 
 def write_slices(t, n: int, out_dir: str) -> list[str]:

@@ -28,10 +28,10 @@ def _window_aggs() -> list[Column]:
     ]
 
 
-def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Non-overlapping event-time buckets per event_type."""
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Non-overlapping 1-hour event-time buckets per event_type."""
     return (
-        events.groupBy(F.window("ts", width).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(*_window_aggs())
         .select(
             F.col("w.start").alias("window_start"),
@@ -43,12 +43,11 @@ def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(
-    events: DataFrame, width: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
-    """Overlapping buckets (each event lands in width/slide windows)."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Overlapping 1-hour buckets sliding by 30 minutes (each event
+    lands in two windows)."""
     return (
-        events.groupBy(F.window("ts", width, slide).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(*_window_aggs())
         .select(
             F.col("w.start").alias("window_start"),
@@ -60,11 +59,11 @@ def sliding_counts(
     )
 
 
-def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Gap-based session windows per user (dynamic-length buckets;
-    window.end = last event + gap)."""
+def session_counts(events: DataFrame) -> DataFrame:
+    """Gap-based session windows per user, 30-minute gap (dynamic-length
+    buckets; window.end = last event + gap)."""
     return (
-        events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(*_window_aggs())
         .select(
             F.col("w.start").alias("session_start"),
@@ -76,8 +75,8 @@ def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def ohlc_bars(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Streaming-capable OHLC bars per event type: open/close via
+def ohlc_bars(events: DataFrame) -> DataFrame:
+    """Streaming-capable 1-hour OHLC bars per event type: open/close via
     min_by/max_by over the (ts, event_id) struct — lexicographic, so
     ties break deterministically like the batch twin's dual
     row_number windows (operators/windows.py q_window_ohlc), but
@@ -89,7 +88,7 @@ def ohlc_bars(events: DataFrame, width: str = "1 hour") -> DataFrame:
     ord_key = F.struct("ts", "event_id")
     e = events.select("event_type", "ts", "event_id", vc.alias("vc"))
     return (
-        e.groupBy(F.window("ts", width).alias("w"), "event_type")
+        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             (F.floor(F.min_by("vc", ord_key) + 0.5) / 100).alias("open"),
             (F.floor(F.max("vc") + 0.5) / 100).alias("high"),

@@ -1,16 +1,20 @@
-"""The shared streaming store (streaming/store.py): staging is atomic
-and idempotent for every stager, and per-invocation run dirs of the
-summary streams do not leak into the scratch root."""
+"""Staging (catalog.stage) and the shared streaming store
+(streaming/store.py): staging is atomic, idempotent and keyed by its
+inputs and the package code for every stager, and per-invocation run
+dirs of the summary streams do not leak into the scratch root."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import shutil
+import tempfile
 
 import pyarrow.parquet as pq
 import pytest
 
+from end_to_end_aws_data_pipeline_spark import catalog
 from end_to_end_aws_data_pipeline_spark.streaming.pattern import staged_time_dir
 from end_to_end_aws_data_pipeline_spark.streaming.sketch import (
     q_stream_heavy_hitters,
@@ -65,26 +69,12 @@ def test_stager_atomic_and_idempotent(events_copy, stager):
     assert stager(src) == d
     assert _fingerprint(d) == before
 
-    # a crashed build (no marker, a partial file) and a stale private
-    # build dir are both replaced by a complete build
-    os.remove(os.path.join(d, "_STAGED"))
-    open(os.path.join(d, "partial.parquet"), "w").close()
-    tmp = f"{d}.tmp.{os.getpid()}"
-    os.makedirs(tmp)
-    open(os.path.join(tmp, "junk"), "w").close()
-    assert stager(src) == d
-    assert os.path.exists(os.path.join(d, "_STAGED"))
-    assert _chunks(d) == chunks
-    assert not os.path.exists(tmp)
 
-
-def test_scratch_root_follows_tempdir(events_copy, monkeypatch, tmp_path):
+def test_scratch_root_follows_tempdir(spark, events_copy, monkeypatch, tmp_path):
     """Staged stream inputs and derived source files land under the
     process temp dir, wherever it points."""
-    import tempfile
-
     from end_to_end_aws_data_pipeline_spark.operators.sources import (
-        _derived_dir,
+        _ensure_nation_csv,
     )
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -92,36 +82,165 @@ def test_scratch_root_follows_tempdir(events_copy, monkeypatch, tmp_path):
     d = staged_time_dir(src)
     staged.append(d)
     assert os.path.dirname(d) == str(tmp_path)
-    assert os.path.dirname(_derived_dir(SF_SMOKE, "csv")) == str(tmp_path)
+    assert os.path.dirname(_ensure_nation_csv(spark, SF_SMOKE)) == str(tmp_path)
 
 
-def test_stage_loser_adopts_winner(events_copy):
-    """Two builders of one (path, mtime) key: the one whose rename
-    loses keeps the winner's complete dir and drops its own build."""
-    from end_to_end_aws_data_pipeline_spark.streaming import store
+@pytest.fixture
+def scratch(monkeypatch, tmp_path):
+    """A private scratch root and one input file in it."""
+    root = tmp_path / "scratch"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    src = tmp_path / "in.txt"
+    src.write_text("v1")
+    return str(root), str(src)
 
-    src, staged = events_copy
 
-    def winner(path: str, out: str) -> list[str]:
-        f = os.path.join(out, "chunk_0.parquet")
-        shutil.copyfile(path, f)
-        return [f]
+def _writer(calls: list[str], name: str = "out.txt"):
+    def build(out: str) -> None:
+        calls.append(out)
+        with open(os.path.join(out, name), "w") as f:
+            f.write("built")
 
-    d = store.stage(src, "storetest", winner)
-    staged.append(d)
+    return build
+
+
+def test_stage_loser_adopts_winner(scratch):
+    """Two builders of one key: the one whose rename loses keeps the
+    winner's complete dir and drops its own build."""
+    _, src = scratch
+    d = catalog.stage("t", [src], _writer([], "winner.txt"))
     os.rename(d, d + ".keep")
-    staged.append(d + ".keep")
 
-    def racing(path: str, out: str) -> list[str]:
+    def racing(out: str) -> None:
         # the other builder completes while this one is mid-build
         shutil.copytree(d + ".keep", d)
-        f = os.path.join(out, "chunk_1.parquet")
-        shutil.copyfile(path, f)
-        return [f]
+        _writer([], "loser.txt")(out)
 
-    assert store.stage(src, "storetest", racing) == d
+    assert catalog.stage("t", [src], racing) == d
     assert sorted(os.listdir(d)) == sorted(os.listdir(d + ".keep"))
     assert not os.path.exists(f"{d}.tmp.{os.getpid()}")
+
+
+def test_stage_clears_a_crashed_build(scratch):
+    """A dir without its marker (a crashed build, a partial file) and a
+    stale private build dir are both replaced by a complete build; the
+    unmarked dir is never returned as is."""
+    _, src = scratch
+    calls: list[str] = []
+    d = catalog.stage("t", [src], _writer(calls))
+    assert catalog.stage("t", [src], _writer(calls)) == d and len(calls) == 1
+    os.remove(os.path.join(d, "_STAGED"))
+    open(os.path.join(d, "partial.txt"), "w").close()
+    tmp = f"{d}.tmp.{os.getpid()}"
+    os.makedirs(tmp)
+    open(os.path.join(tmp, "junk"), "w").close()
+    assert catalog.stage("t", [src], _writer(calls)) == d
+    assert len(calls) == 2
+    assert sorted(os.listdir(d)) == ["_STAGED", "out.txt"]
+    assert not os.path.exists(tmp)
+
+
+def test_new_code_restages_and_reaps_old_builds(scratch, monkeypatch):
+    """Other package code lands a new dir and deletes the complete dir
+    the old code staged from the same inputs, but no private build dir
+    and no dir of another shape."""
+    root, src = scratch
+    old = catalog.stage("t", [src], _writer([]))
+    other = catalog.stage("t2", [src], _writer([]))
+    keep = [f"{old}.tmp.999999999", f"{old}.keep"]
+    for k in keep:
+        shutil.copytree(old, k)
+    monkeypatch.setattr(catalog, "_code_digest", lambda: "f" * 40)
+    new = catalog.stage("t", [src], _writer([]))
+    assert new != old and new.endswith("_" + "f" * 12)
+    assert os.path.exists(os.path.join(new, "_STAGED"))
+    assert not os.path.exists(old)
+    assert all(os.path.isdir(k) for k in keep + [other])
+
+
+def test_code_digest_follows_every_package_file(monkeypatch, tmp_path):
+    """Editing any package file, a nested one included, changes the
+    code digest that names every staged dir."""
+    copy = tmp_path / "pkg"
+    shutil.copytree(
+        os.path.dirname(catalog.__file__), copy,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    monkeypatch.setattr(catalog, "__file__", str(copy / "catalog.py"))
+    digest = catalog._code_digest.__wrapped__
+    before = digest()
+    assert before == catalog._code_digest()
+    with open(copy / "operators" / "multimodal.py", "a") as f:
+        f.write("# edited\n")
+    assert digest() != before
+
+
+def test_input_changes_restage(scratch, tmp_path):
+    """Rewriting an input file, or adding a file under a directory
+    input, gives a new dir."""
+    _, src = scratch
+    d1 = catalog.stage("t", [src], _writer([]))
+    with open(src, "w") as f:
+        f.write("v2")
+    st = os.stat(src)
+    os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    d2 = catalog.stage("t", [src], _writer([]))
+    assert d2 != d1
+
+    tree = tmp_path / "tree"
+    (tree / "sub").mkdir(parents=True)
+    (tree / "sub" / "a.txt").write_text("a")
+    d3 = catalog.stage("t", [str(tree)], _writer([]))
+    assert catalog.stage("t", [str(tree)], _writer([])) == d3
+    (tree / "sub" / "b.txt").write_text("b")
+    assert catalog.stage("t", [str(tree)], _writer([])) not in (d1, d2, d3)
+
+
+def test_input_free_stage_serves_every_sf_dir(spark, tmp_path):
+    """The binaryFile scan's images derive from doc_id alone, so one
+    staged dir serves two sf_dirs."""
+    from end_to_end_aws_data_pipeline_spark.operators.sources import (
+        q_source_binaryfile_scan,
+    )
+
+    dirs = {
+        os.path.dirname(f)
+        for sf in (SF_SMOKE, str(tmp_path))
+        for f in q_source_binaryfile_scan(spark, sf).inputFiles()
+    }
+    assert len(dirs) == 1
+    assert os.path.basename(dirs.pop().removeprefix("file:")).startswith(
+        "staged_binfile_"
+    )
+
+
+def test_only_the_stager_handles_markers():
+    """Outside catalog.py no package module writes or tests a staging
+    marker (``_STAGED``, Spark's ``_SUCCESS``) or asks for the scratch
+    root: every staged input goes through ``catalog.stage``."""
+    pkg = os.path.dirname(catalog.__file__)
+    marker = re.compile(r"(^|/)(_STAGED|_SUCCESS)$")
+    found = []
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == catalog.__file__:
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and marker.search(node.value)
+                ) or (
+                    isinstance(node, ast.Name) and node.id == "scratch_root"
+                ) or (
+                    isinstance(node, ast.Attribute) and node.attr == "scratch_root"
+                ):
+                    found.append(f"{os.path.relpath(path, pkg)}:{node.lineno}")
+    assert not found, found
 
 
 @pytest.mark.parametrize(
