@@ -237,12 +237,11 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(sc.defaultParallelism)
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    """Load tables and register each as a temp view (for the SQL surface)."""
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Load the canonical tables and register each as a temp view (for
+    the SQL surface)."""
     out: dict[str, DataFrame] = {}
-    for name in names:
+    for name in TABLES:
         df = table(spark, sf_dir, name)
         df.createOrReplaceTempView(name)
         out[name] = df

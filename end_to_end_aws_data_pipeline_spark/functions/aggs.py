@@ -23,11 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# input quantization precision/scale: wide enough for sf-scaled TPC-H
-# money columns, exact for <= `scale` true decimal digits
-_PREC = 18
-
-
 # split-accumulator geometry: a row's scaled value |x·10^s| < 2^51
 # splits into three parts — v>>34 (≤2^17), (v>>17)&(2^17−1), v&(2^17−1)
 # — each summed in a plain LONG. Part sums stay under 2^63 up to
@@ -38,7 +33,7 @@ _SPLIT = 17
 _MASK = (1 << _SPLIT) - 1
 
 
-def dsum(col: Column | str, scale: int = 2, out_scale: int | None = None) -> Column:
+def dsum(col: Column | str, scale: int = 2) -> Column:
     """Exact sum of a double column with `scale` true decimal digits.
 
     Row quantization is the tie-free floor(x·10^s + 0.5) stabilizer
@@ -53,11 +48,6 @@ def dsum(col: Column | str, scale: int = 2, out_scale: int | None = None) -> Col
     ten — deterministic and bit-identical in Spark and DuckDB.
     """
     c = F.col(col) if isinstance(col, str) else col
-    out_scale = scale if out_scale is None else out_scale
-    if out_scale != scale:  # decimal-domain rounding path (rare)
-        return F.round(
-            F.sum(c.cast(f"decimal({_PREC},{scale})")), out_scale
-        ).cast("double")
     p = 10**scale
     v = F.floor(c * p + F.lit(0.5)).cast("long")
     total = (
@@ -70,13 +60,7 @@ def dsum(col: Column | str, scale: int = 2, out_scale: int | None = None) -> Col
     return total.cast("double") / F.lit(float(p))
 
 
-def dsum_sql(expr: str, scale: int = 2, out_scale: int | None = None) -> str:
-    out_scale = scale if out_scale is None else out_scale
-    if out_scale != scale:  # mirror of the rare decimal path above
-        return (
-            f"CAST(CAST(round(sum(CAST(({expr}) AS DECIMAL({_PREC},{scale}))),"
-            f" {out_scale}) AS VARCHAR) AS DOUBLE)"
-        )
+def dsum_sql(expr: str, scale: int = 2) -> str:
     p = 10**scale
     v = f"CAST(floor(({expr}) * {p} + 0.5) AS BIGINT)"
     total = (
@@ -87,42 +71,23 @@ def dsum_sql(expr: str, scale: int = 2, out_scale: int | None = None) -> str:
     return f"CAST({total} AS DOUBLE) / {p}"
 
 
-def davg(col: Column | str, scale: int = 2, out_scale: int = 6) -> Column:
-    """Exact-sum-based average, published to ``out_scale`` digits.
+def davg(col: Column | str) -> Column:
+    """Exact-sum-based average of a 2-decimal column, published to 6
+    digits.
 
     sum is exact (split-long, see dsum) and count is exact (long); the
     exact total converts to double through the correctly-rounded cast,
-    so the division inputs are bit-identical, and the final publish
-    uses the tie-free floor(x·10^s + 0.5)/10^s stabilizer instead of
+    so the division inputs are bit-identical, and the publish is
+    stable_round's tie-free floor(x·10^s + 0.5)/10^s instead of
     round(double, s) (see scale-lessons: round-on-double diverges on
     expansion ties).
     """
     c = F.col(col) if isinstance(col, str) else col
-    p_in = 10**scale
-    v = F.floor(c * p_in + F.lit(0.5)).cast("long")
-    total = (
-        F.sum(F.shiftright(v, 2 * _SPLIT)).cast("decimal(38,0)")
-        * F.lit(1 << (2 * _SPLIT)).cast("decimal(38,0)")
-        + F.sum(F.shiftright(v, _SPLIT).bitwiseAND(_MASK)).cast("decimal(38,0)")
-        * F.lit(1 << _SPLIT).cast("decimal(38,0)")
-        + F.sum(v.bitwiseAND(_MASK)).cast("decimal(38,0)")
-    )
-    x = total.cast("double") / F.lit(float(p_in)) / F.count(c)
-    p = 10**out_scale
-    return F.floor(x * p + 0.5) / p
+    return stable_round(dsum(c) / F.count(c))
 
 
-def davg_sql(expr: str, scale: int = 2, out_scale: int = 6) -> str:
-    p_in = 10**scale
-    v = f"CAST(floor(({expr}) * {p_in} + 0.5) AS BIGINT)"
-    total = (
-        f"(sum(({v}) >> {2 * _SPLIT}) * {1 << (2 * _SPLIT)}"
-        f" + sum((({v}) >> {_SPLIT}) & {_MASK}) * {1 << _SPLIT}"
-        f" + sum(({v}) & {_MASK}))"
-    )
-    p = 10**out_scale
-    x = f"CAST({total} AS DOUBLE) / {p_in} / count({expr})"
-    return f"floor(({x}) * {p} + 0.5) / {p}"
+def davg_sql(expr: str) -> str:
+    return stable_round_sql(f"{dsum_sql(expr)} / count({expr})")
 
 
 def stable_round(col: Column | str, out_scale: int = 6) -> Column:

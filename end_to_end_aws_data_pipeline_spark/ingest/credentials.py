@@ -32,20 +32,16 @@ class SinkCredentials:
         return f"jdbc:mysql://{self.host}:{self.port}/{self.database}"
 
 
-def get_sink_credentials(
-    spark: SparkSession | None = None, conf_prefix: str = "spark.enginesink."
-) -> SinkCredentials:
+def get_sink_credentials(spark: SparkSession) -> SinkCredentials:
     vals: dict[str, str] = {}
     for key in _KEYS:
-        v = None
-        if spark is not None:
-            v = spark.conf.get(f"{conf_prefix}{key}", None)
+        v = spark.conf.get(f"spark.enginesink.{key}", None)
         if v is None:
             v = os.environ.get(f"ENGINE_SINK_{key.upper()}")
         if v is None:
             raise KeyError(
                 f"sink credential {key!r} not found in spark conf "
-                f"({conf_prefix}{key}) or env (ENGINE_SINK_{key.upper()})"
+                f"(spark.enginesink.{key}) or env (ENGINE_SINK_{key.upper()})"
             )
         vals[key] = v
     return SinkCredentials(

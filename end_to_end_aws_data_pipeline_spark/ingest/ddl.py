@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from end_to_end_aws_data_pipeline_spark.ingest.infer import SPARK_TO_REF
-
 
 def table_exists(spark: SparkSession, name: str) -> bool:
     """Catalog existence probe (ref delta_load.py:116-155, minus the
@@ -23,22 +21,10 @@ def table_exists(spark: SparkSession, name: str) -> bool:
     return spark.catalog.tableExists(name)
 
 
-def ddl_for_schema(name: str, schema: T.StructType, reference_types: bool = False) -> str:
-    """CREATE TABLE IF NOT EXISTS DDL from a StructType.
-
-    ``reference_types=True`` renders the legacy MySQL-style type names
-    (INTEGER/FLOAT/VARCHAR(255)) for auditing parity with the DDL the
-    reference would have produced (ref first_lambda_function.py:101-105);
-    otherwise Spark SQL types.
-    """
-    cols = []
-    for f in schema.fields:
-        t = (
-            SPARK_TO_REF.get(f.dataType.simpleString(), f.dataType.simpleString())
-            if reference_types
-            else f.dataType.simpleString()
-        )
-        cols.append(f"`{f.name}` {t}")
+def ddl_for_schema(name: str, schema: T.StructType) -> str:
+    """CREATE TABLE IF NOT EXISTS DDL from a StructType, in Spark SQL
+    types."""
+    cols = [f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields]
     return f"CREATE TABLE IF NOT EXISTS `{name}` ({', '.join(cols)}) USING PARQUET"
 
 

@@ -120,7 +120,6 @@ def stream_upsert_jdbc(
     table: str,
     connection_factory: Callable[[], Any],
     checkpoint_dir: str,
-    batch_size: int = 1000,
     dialect: str = "mysql",
     key_columns: list[str] | None = None,
 ):
@@ -140,7 +139,6 @@ def stream_upsert_jdbc(
             batch_df,
             table,
             connection_factory,
-            batch_size=batch_size,
             dialect=dialect,
             key_columns=key_columns,
         )

@@ -149,7 +149,7 @@ def q_etl_incremental_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gated = gate_strictly_newer(
         o, wm, key_col="o_custkey", ts_col="o_orderdate",
-        wm_key_col="table_key", wm_ts_col="folder_ts",
+        wm_key_col="table_key",
     )
     return gated.select("o_orderkey", "o_custkey", "o_orderdate")
 

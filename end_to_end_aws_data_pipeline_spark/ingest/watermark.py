@@ -84,10 +84,9 @@ def gate_strictly_newer(
     key_col: str,
     ts_col: str,
     wm_key_col: str = "table_name",
-    wm_ts_col: str = "folder_ts",
 ) -> DataFrame:
-    """Keep incoming rows strictly newer than their key's watermark
-    (rows with no watermark pass — first delivery).
+    """Keep incoming rows strictly newer than their key's ``folder_ts``
+    watermark (rows with no watermark pass — first delivery).
 
     Batch-relational form of the reference's DynamoDB gate; the
     watermark side is small → broadcast join, zero shuffle of the
@@ -95,7 +94,7 @@ def gate_strictly_newer(
     """
     wm = F.broadcast(
         watermarks.select(
-            F.col(wm_key_col).alias("__wm_key"), F.col(wm_ts_col).alias("__wm_ts")
+            F.col(wm_key_col).alias("__wm_key"), F.col("folder_ts").alias("__wm_ts")
         )
     )
     return (

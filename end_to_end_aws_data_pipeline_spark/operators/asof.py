@@ -12,7 +12,7 @@ JVM codegen and scales as a single shuffle on (key, time).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
@@ -115,56 +115,6 @@ def q_asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_ts="ts",
         right_ts="click_ts",
         value_cols=["click_ts", "click_value"],
-    )
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: list[str],
-) -> DataFrame:
-    """Same semantics as :func:`asof_join`, via per-key
-    ``applyInPandas`` + ``pd.merge_asof`` — the escape-hatch shape for
-    as-of variants the window form can't express (tolerance windows,
-    nearest-instead-of-backward). Costs an Arrow transfer per group;
-    prefer :func:`asof_join` (pure JVM) when backward-join semantics
-    suffice. Equivalence is asserted in tests.
-    """
-    import pandas as pd
-
-    keys = [on] if isinstance(on, str) else list(on)
-    out_schema = left.schema.simpleString()[7:-1].replace(":", " ").replace(",", ", ")
-    right_schema = {f.name: f.dataType.simpleString() for f in right.schema.fields}
-    out_schema += ", " + ", ".join(f"{c} {right_schema[c]}" for c in value_cols)
-    left_cols = list(left.columns)
-
-    def _merge(pdf_l: pd.DataFrame, pdf_r: pd.DataFrame) -> pd.DataFrame:
-        pdf_l = pdf_l.sort_values(left_ts, kind="mergesort")
-        pdf_r = pdf_r.sort_values(right_ts, kind="mergesort")[
-            [right_ts] + [c for c in value_cols if c != right_ts]
-        ]
-        merged = pd.merge_asof(
-            pdf_l,
-            pdf_r,
-            left_on=left_ts,
-            right_on=right_ts,
-            direction="backward",
-            suffixes=("", "__r"),
-        )
-        for c in value_cols:
-            src = c if c in merged.columns else f"{c}__r"
-            if src != c:
-                merged[c] = merged[src]
-        return merged[left_cols + value_cols]
-
-    # cogroup: each key's left/right slices meet in one pandas call
-    return (
-        left.groupBy(*keys)
-        .cogroup(right.groupBy(*keys))
-        .applyInPandas(lambda l, r: _merge(l, r), schema=out_schema)
     )
 
 
@@ -600,10 +550,10 @@ LEFT JOIN clicks cn
 def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join with TOLERANCE and BOTH directions — pandas
     merge_asof(direction='backward'/'forward', tolerance=30min)
-    semantics, UDF-free (asof_join_pandas documents this as the
-    escape-hatch case; this query shows the window form covers it
-    after all): for every purchase, the latest click at-or-before AND
-    the earliest click at-or-after, each only within 30 minutes.
+    semantics, UDF-free (tolerance and forward matching need no pandas
+    escape hatch; the window form covers them): for every purchase,
+    the latest click at-or-before AND the earliest click at-or-after,
+    each only within 30 minutes.
 
     Shape: union clicks+purchases, ONE ascending window carries the
     last click forward (clicks sort before purchases on ties, so

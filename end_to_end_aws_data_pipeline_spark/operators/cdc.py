@@ -29,13 +29,7 @@ from end_to_end_aws_data_pipeline_spark.catalog import table
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 
-def apply_cdc(
-    snapshot: DataFrame,
-    changes: DataFrame,
-    key: str,
-    seq_col: str = "seq",
-    op_col: str = "op",
-) -> DataFrame:
+def apply_cdc(snapshot: DataFrame, changes: DataFrame, key: str) -> DataFrame:
     """Apply a change feed to a snapshot (merge-on-read semantics).
 
     ``changes`` rows carry ``op`` ('U' upsert / 'D' delete) and a
@@ -44,7 +38,7 @@ def apply_cdc(
     deterministically). Keys present only in the feed are inserts;
     snapshot rows with no change pass through untouched.
     """
-    w = W.partitionBy(key).orderBy(F.col(seq_col).desc(), F.col(op_col))
+    w = W.partitionBy(key).orderBy(F.col("seq").desc(), F.col("op"))
     latest = (
         changes.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -54,30 +48,28 @@ def apply_cdc(
     merged = snapshot.alias("s").join(
         latest.alias("c"), on=key, how="full_outer"
     )
-    keep = F.col(f"c.{op_col}").isNull() | (F.col(f"c.{op_col}") != "D")
+    keep = F.col("c.op").isNull() | (F.col("c.op") != "D")
     pick = [
-        F.when(
-            F.col(f"c.{op_col}").isNotNull(), F.col(f"c.{p}")
-        ).otherwise(F.col(f"s.{p}")).alias(p)
+        F.when(F.col("c.op").isNotNull(), F.col(f"c.{p}"))
+        .otherwise(F.col(f"s.{p}"))
+        .alias(p)
         for p in payload
     ]
     return merged.filter(keep).select(F.col(key), *pick)
 
 
-def scd2_build(
-    changes: DataFrame, key: str, seq_col: str = "seq"
-) -> DataFrame:
+def scd2_build(changes: DataFrame, key: str) -> DataFrame:
     """Type-2 SCD from a change feed: one row per (key, version) with
     [valid_from, valid_to) validity and an is_current flag — the
     standard warehouse shape for as-of dimension lookups (pairs with
     the as-of join in operators/asof.py)."""
-    w = W.partitionBy(key).orderBy(seq_col)
+    w = W.partitionBy(key).orderBy("seq")
     return changes.select(
         key,
-        F.col(seq_col).alias("valid_from"),
-        F.lead(seq_col).over(w).alias("valid_to"),
-        F.lead(seq_col).over(w).isNull().alias("is_current"),
-        *[c for c in changes.columns if c not in (key, seq_col, "op")],
+        F.col("seq").alias("valid_from"),
+        F.lead("seq").over(w).alias("valid_to"),
+        F.lead("seq").over(w).isNull().alias("is_current"),
+        *[c for c in changes.columns if c not in (key, "seq", "op")],
     )
 
 

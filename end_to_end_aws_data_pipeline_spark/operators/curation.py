@@ -37,20 +37,20 @@ _KNUTH = 2654435761
 _KEY_MOD = 2147483647
 
 
-def hash_bucket(key, buckets: int = 1000):
-    """Deterministic pseudo-uniform bucket in [0, buckets) for a
+def hash_bucket(key):
+    """Deterministic pseudo-uniform bucket in [0, 1000) for a
     non-negative integral key column (pure arithmetic, engine-neutral,
     overflow-free for the full BIGINT key range)."""
     reduced = F.pmod(F.col(key).cast("long"), F.lit(_KEY_MOD))
-    return F.pmod(reduced * F.lit(_KNUTH), F.lit(buckets))
+    return F.pmod(reduced * F.lit(_KNUTH), F.lit(1000))
 
 
-def _bucket_sql(key: str, buckets: int = 1000) -> str:
+def _bucket_sql(key: str) -> str:
     # CAST the modulus to BIGINT: DuckDB types the bare literal INT32
     # and would overflow on the `+ _KEY_MOD` pmod step
     m = f"CAST({_KEY_MOD} AS BIGINT)"
     reduced = f"(({key} % {m} + {m}) % {m})"
-    return f"(({reduced} * {_KNUTH}) % {buckets} + {buckets}) % {buckets}"
+    return f"(({reduced} * {_KNUTH}) % 1000 + 1000) % 1000"
 
 
 # ---------------------------------------------------------------------------
@@ -110,11 +110,11 @@ _MIX_RATES = {
 }
 
 
-def sample_by_rate(df: DataFrame, key: str, rate_col, buckets: int = 1000):
+def sample_by_rate(df: DataFrame, key: str, rate_col):
     """Keep rows whose deterministic hash bucket falls under the
     row's per-mille rate: exact, reproducible weighted sampling with no
     RNG state (a row is kept or not independent of partitioning)."""
-    return df.filter(hash_bucket(key, buckets) < rate_col)
+    return df.filter(hash_bucket(key) < rate_col)
 
 
 _MIX_CASE = " ".join(

@@ -153,11 +153,10 @@ _DIRECT_DF_RATIO = 40
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    tau: float = _JACCARD_TAU,
     direct_sumdf2_max: int | None = None,
 ) -> DataFrame:
     """Exact near-dup pairs ``(doc_a, doc_b, jaccard)`` by 3-shingle
-    Jaccard ≥ ``tau`` over a ``(doc_id, text)`` corpus.
+    Jaccard ≥ ``_JACCARD_TAU`` over a ``(doc_id, text)`` corpus.
 
     Both strategies below compute the SAME exact answer; a cheap probe
     picks between them per-corpus:
@@ -242,20 +241,20 @@ def ngram_jaccard_pairs(
             ta.join(tb, "shingle")
             .filter(
                 (F.col("doc_a") < F.col("doc_b"))
-                & (F.col("na") * F.lit(tau) <= F.col("nb"))
-                & (F.col("nb") * F.lit(tau) <= F.col("na"))
+                & (F.col("na") * F.lit(_JACCARD_TAU) <= F.col("nb"))
+                & (F.col("nb") * F.lit(_JACCARD_TAU) <= F.col("na"))
             )
             .groupBy("doc_a", "doc_b", "na", "nb")
             .agg(F.count(F.lit(1)).alias("n_shared"))
         )
-        return shared.filter(jac >= tau).select(
+        return shared.filter(jac >= _JACCARD_TAU).select(
             "doc_a", "doc_b", stable_round(jac, 6).alias("jaccard")
         )
 
     # PPJoin path: rarest-first global order (ties by hash value — any
     # total order works as long as it's consistent corpus-wide)
     w = W.partitionBy("doc_id").orderBy("df", "shingle")
-    prefix_len = F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1
+    prefix_len = F.col("n") - F.ceil(F.lit(_JACCARD_TAU) * F.col("n")) + 1
     # persist: pref is BOTH sides of the self-join below, and its
     # dfreq-join + per-doc row_number window make it the most expensive
     # subtree in the query — unpersisted it evaluates at least twice
@@ -272,8 +271,8 @@ def ngram_jaccard_pairs(
         (F.col("a.shingle") == F.col("b.shingle"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
         # J ≥ τ bounds the size ratio: τ·max ≤ min
-        & (F.col("a.n") * F.lit(tau) <= F.col("b.n"))
-        & (F.col("b.n") * F.lit(tau) <= F.col("a.n")),
+        & (F.col("a.n") * F.lit(_JACCARD_TAU) <= F.col("b.n"))
+        & (F.col("b.n") * F.lit(_JACCARD_TAU) <= F.col("a.n")),
     ).select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("a.n").alias("na"),
@@ -293,7 +292,9 @@ def ngram_jaccard_pairs(
     # both lists — the blowup mode plain prefix filtering cannot prune
     # (measured at the 10x sf: 49.6M raw candidates → the bound admits
     # only pairs that can still reach τ).
-    overlap_needed = F.lit(tau / (1.0 + tau)) * (F.col("na") + F.col("nb"))
+    overlap_needed = F.lit(_JACCARD_TAU / (1.0 + _JACCARD_TAU)) * (
+        F.col("na") + F.col("nb")
+    )
     cand = (
         raw_cand.groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.min("ia").alias("i0"), F.min("jb").alias("j0"))
@@ -313,7 +314,7 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    return shared.filter(jac >= tau).select(
+    return shared.filter(jac >= _JACCARD_TAU).select(
         "doc_a", "doc_b", stable_round(jac, 6).alias("jaccard")
     )
 
@@ -554,7 +555,7 @@ _SIMHASH_BITS = 64
 _SIMHASH_BAND_BITS = 16  # 4 bands → catches hamming ≤ 3 pairs
 
 
-def _simhash_by_agg(tokens: DataFrame, bits: int = _SIMHASH_BITS) -> DataFrame:
+def _simhash_by_agg(tokens: DataFrame) -> DataFrame:
     """tokens(doc_id, w) → (doc_id, sh): per-bit ±1 vote sums as
     codegen'd aggregates (map-side combinable), then pack the sign
     vector into one long.
@@ -582,13 +583,15 @@ def _simhash_by_agg(tokens: DataFrame, bits: int = _SIMHASH_BITS) -> DataFrame:
     )
     votes = halves.groupBy("doc_id").agg(
         F.expr(
-            "array(" + ", ".join(vote(i) for i in range(bits)) + ") AS votes"
+            "array("
+            + ", ".join(vote(i) for i in range(_SIMHASH_BITS))
+            + ") AS votes"
         )
     )
     return votes.select(
         "doc_id",
         F.expr(
-            f"aggregate(sequence(0, {bits - 1}), CAST(0 AS BIGINT), "
+            f"aggregate(sequence(0, {_SIMHASH_BITS - 1}), CAST(0 AS BIGINT), "
             "(acc, i) -> acc + IF(element_at(votes, i + 1) > 0, "
             "shiftleft(CAST(1 AS BIGINT), i), CAST(0 AS BIGINT)))"
         ).alias("sh"),
@@ -1442,11 +1445,10 @@ def _bloom_shard(n_shards: int) -> Column:
                   F.lit(n_shards))
 
 
-def digest_bloom_sharded(corpus_digests: DataFrame, n_elements: int,
-                         n_shards: int = _BLOOM_N_SHARDS):
+def digest_bloom_sharded(corpus_digests: DataFrame, n_elements: int):
     """Sharded Bloom build: the digest space splits by leading-byte
-    prefix into ``n_shards`` independent filters, each sized for its
-    expected share of elements — so no single bitmap needs to fit a
+    prefix into ``_BLOOM_N_SHARDS`` independent filters, each sized for
+    its expected share of elements — so no single bitmap needs to fit a
     broadcast, only the per-shard slice a row actually consults.  All
     shards build in ONE aggregation pass (groupBy (shard, word-index)
     with bit_or, map-side combinable); the driver holds exactly the
@@ -1457,12 +1459,12 @@ def digest_bloom_sharded(corpus_digests: DataFrame, n_elements: int,
     as one array but fine as 16+ shards of ~78 MB that join to the
     batch on the shard key (a broadcast of the shard TABLE, each row
     one shard's array).  sha2 digests are uniform, so prefix shards
-    balance to n/n_shards within noise and the per-shard fpp stays at
-    the 10-bits-per-element ~0.8%."""
-    per_shard = max(1, -(-n_elements // n_shards))
+    balance to n/_BLOOM_N_SHARDS within noise and the per-shard fpp
+    stays at the 10-bits-per-element ~0.8%."""
+    per_shard = max(1, -(-n_elements // _BLOOM_N_SHARDS))
     m_bits = max(64, ((per_shard * _BLOOM_BITS_PER_ELEM + 63) // 64) * 64)
     pos = corpus_digests.select(
-        _bloom_shard(n_shards).alias("shard"),
+        _bloom_shard(_BLOOM_N_SHARDS).alias("shard"),
         F.explode(
             F.array(
                 *[
@@ -1482,7 +1484,7 @@ def digest_bloom_sharded(corpus_digests: DataFrame, n_elements: int,
         .agg(F.expr("bit_or(w)").alias("w"))
         .collect()
     )
-    bitmaps = {s: [0] * (m_bits // 64) for s in range(n_shards)}
+    bitmaps = {s: [0] * (m_bits // 64) for s in range(_BLOOM_N_SHARDS)}
     for r in words:
         bitmaps[r["shard"]][r["widx"]] = r["w"]
     return bitmaps, m_bits
@@ -1508,9 +1510,7 @@ def q_dedup_incremental_bloom_sharded(spark: SparkSession, sf_dir: str) -> DataF
     corpus_digests = persisted(
         docs.filter(~is_batch).select(F.sha2("text", 256).alias("digest")).distinct()
     )
-    bitmaps, m_bits = digest_bloom_sharded(
-        corpus_digests, corpus_digests.count(), _BLOOM_N_SHARDS
-    )
+    bitmaps, m_bits = digest_bloom_sharded(corpus_digests, corpus_digests.count())
     bloom_df = F.broadcast(
         local_frame(
             spark,

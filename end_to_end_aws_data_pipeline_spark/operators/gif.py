@@ -24,6 +24,7 @@ import numpy as np
 
 _GIF_MAGIC = (b"GIF87a", b"GIF89a")
 _MAX_WIDTH = 12  # LZW code width cap per spec
+_MIN_CODE_SIZE = 8  # the encoder's LZW min code size: 8-bit palette indices
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))  # (start, step) rows
 
 
@@ -36,11 +37,11 @@ def _interlace_order(h: int) -> list[int]:
 # ---------------------------------------------------------------------------
 
 
-def lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
+def lzw_encode(data: bytes) -> bytes:
     """GIF LZW: emits CLEAR, then the string codes, widening from
-    min_code_size+1 up to 12 bits as the dictionary grows; on
+    _MIN_CODE_SIZE+1 up to 12 bits as the dictionary grows; on
     dictionary overflow (code 4096) emits CLEAR and resets."""
-    clear = 1 << min_code_size
+    clear = 1 << _MIN_CODE_SIZE
     end = clear + 1
 
     bits = bytearray()
@@ -60,7 +61,7 @@ def lzw_encode(data: bytes, min_code_size: int = 8) -> bytes:
         return (
             {bytes([i]): i for i in range(clear)},
             end + 1,
-            min_code_size + 1,
+            _MIN_CODE_SIZE + 1,
         )
 
     table, next_code, width = fresh()
@@ -167,7 +168,7 @@ def encode_gif(
     desc = b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, flags)
     rows = indices[_interlace_order(h), :] if interlace else indices
     lzw = lzw_encode(rows.astype(np.uint8).tobytes())
-    body = bytearray(b"\x08")  # LZW min code size
+    body = bytearray([_MIN_CODE_SIZE])
     for i in range(0, len(lzw), 255):
         chunk = lzw[i : i + 255]
         body += bytes([len(chunk)]) + chunk

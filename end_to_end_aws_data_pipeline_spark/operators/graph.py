@@ -173,13 +173,9 @@ def _pr_round(
     )
 
 
-def pagerank_ranks(
-    spark: SparkSession,
-    sf_dir: str,
-    iters: int = _PR_ITERS,
-) -> DataFrame:
-    """The iterative core: integer PageRank rank vector after ``iters``
-    rounds over the undirected customer–supplier purchase graph.
+def pagerank_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The iterative core: integer PageRank rank vector after
+    ``_PR_ITERS`` rounds over the undirected customer–supplier purchase graph.
 
     Each round is persisted, so execution never recomputes an earlier
     round; the plan still nests every round, which is cheap at the
@@ -189,7 +185,7 @@ def pagerank_ranks(
     SCALING.md."""
     edges_d, nodes = _pr_graph(spark, sf_dir)
     ranks = nodes.select("node", F.lit(_PR_R0).cast("long").alias("rank"))
-    for _ in range(iters):
+    for _ in range(_PR_ITERS):
         ranks = persisted(_pr_round(edges_d, ranks, F.lit(_PR_TELEPORT)))
     return ranks
 
@@ -209,7 +205,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     same three rounds as CTEs and replays the integer arithmetic
     exactly — the verification strategy that makes an *iterative*
     operator fully hash-checkable rather than rows-only."""
-    ranks = pagerank_ranks(spark, sf_dir, _PR_ITERS)
+    ranks = pagerank_ranks(spark, sf_dir)
     node_type = F.when(F.col("node") % 2 == 0, "customer").otherwise("supplier")
     return (
         ranks.select(
@@ -2029,8 +2025,6 @@ def _driver_tarjan(edges_df: DataFrame) -> DataFrame:
 def scc_labels(
     spark: SparkSession,
     edges: DataFrame,
-    max_outer: int = _SCC_MAX_OUTER,
-    max_inner: int = _SCC_MAX_INNER,
     local_max_edges: int = LOCAL_MAX_EDGES,
 ) -> DataFrame:
     """(node, scc) labels — scc = min member id — for EVERY node of the
@@ -2069,7 +2063,8 @@ def scc_labels(
     cap, so the shrunken tail (43 nodes at sf10 after the giant SCC
     peels) finishes as a driver Tarjan instead of 10+ more
     distributed rounds. Round counts are graph-depth-bounded: loud
-    RuntimeErrors, not silent truncation, past max_outer/max_inner
+    RuntimeErrors, not silent truncation, past _SCC_MAX_OUTER /
+    _SCC_MAX_INNER
     (the iterate.fixpoint contract)."""
     if local_max_edges > 0:
         n_edges = edges.limit(local_max_edges + 1).count()
@@ -2088,7 +2083,7 @@ def scc_labels(
             deg.filter((F.col("od") <= 0) | (F.col("id_") <= 0)).select("node")
         )
 
-    for _outer in range(max_outer):
+    for _outer in range(_SCC_MAX_OUTER):
         if local_max_edges > 0:
             n_edges = edges.limit(local_max_edges + 1).count()
             if n_edges <= local_max_edges:
@@ -2146,10 +2141,10 @@ def scc_labels(
             )
             return (deg, dead_of(deg)), False
 
-        (deg, _), _, converged = fixpoint((deg, dead_of(deg)), trim, max_inner)
+        (deg, _), _, converged = fixpoint((deg, dead_of(deg)), trim, _SCC_MAX_INNER)
         if not converged:
             raise RuntimeError(
-                f"scc trim did not converge in {max_inner} rounds"
+                f"scc trim did not converge in {_SCC_MAX_INNER} rounds"
             )
         live = deg.select("node")
         if live.count() == 0:
@@ -2170,11 +2165,11 @@ def scc_labels(
             "node", F.col("node").alias("label")
         ).localCheckpoint(eager=True)
         colors, _, converged = fixpoint(
-            colors, min_label_step(e_src), max_inner
+            colors, min_label_step(e_src), _SCC_MAX_INNER
         )
         if not converged:
             raise RuntimeError(
-                f"scc coloring did not converge in {max_inner} rounds"
+                f"scc coloring did not converge in {_SCC_MAX_INNER} rounds"
             )
         # --- backward sweep within color classes from the roots
         member = (
@@ -2206,11 +2201,11 @@ def scc_labels(
             return (fused_ckpt(member.unionAll(new)), new), False
 
         (member, _), _, converged = fixpoint(
-            (member, member), backward, max_inner
+            (member, member), backward, _SCC_MAX_INNER
         )
         if not converged:
             raise RuntimeError(
-                f"scc backward sweep did not converge in {max_inner} rounds"
+                f"scc backward sweep did not converge in {_SCC_MAX_INNER} rounds"
             )
         done.append(member)
         # remainder re-enters the loop (and the adaptive cap) with
@@ -2225,8 +2220,8 @@ def scc_labels(
         )
     else:
         raise RuntimeError(
-            f"scc did not finish in {max_outer} outer rounds; "
-            "raise max_outer for condensation DAGs deeper than that"
+            f"scc did not finish in {_SCC_MAX_OUTER} outer rounds; "
+            "raise _SCC_MAX_OUTER for condensation DAGs deeper than that"
         )
     out = done[0] if done else orig_nodes.limit(0).select(
         "node", F.col("node").alias("scc")

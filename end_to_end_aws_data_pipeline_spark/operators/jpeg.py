@@ -178,13 +178,12 @@ def _encode_block(bw, blk, t, q, pred):
     return zz[0]
 
 
-def encode_jpeg(pixels, qtab=None, subsample: bool = False) -> bytes:
+def encode_jpeg(pixels, subsample: bool = False) -> bytes:
     """Encode an (h, w) grayscale or (h, w, 3) RGB uint8 array as a
-    baseline JFIF JPEG. ``subsample=True`` emits 4:2:0 (RGB only; h, w
-    must then be multiples of 16, else multiples of 8 — the testdata
-    synthesizer guarantees it; a general encoder would edge-pad).
-    ``qtab`` is a 64-entry zigzag-order quantization table (default
-    FLAT_Q8, the exact-roundtrip table)."""
+    baseline JFIF JPEG quantized by FLAT_Q8, the exact-roundtrip table.
+    ``subsample=True`` emits 4:2:0 (RGB only; h, w must then be
+    multiples of 16, else multiples of 8 — the testdata synthesizer
+    guarantees it; a general encoder would edge-pad)."""
     import numpy as np
 
     pix = np.asarray(pixels, dtype=np.float64)
@@ -195,7 +194,6 @@ def encode_jpeg(pixels, qtab=None, subsample: bool = False) -> bytes:
         raise ValueError(f"encode_jpeg requires h, w multiples of {mult}")
     if subsample and gray:
         raise ValueError("subsample applies to RGB input only")
-    qtab = list(FLAT_Q8 if qtab is None else qtab)
     if gray:
         comps = [(pix, 1, 1)]
     else:
@@ -221,7 +219,7 @@ def encode_jpeg(pixels, qtab=None, subsample: bool = False) -> bytes:
     ncomp = len(comps)
     out = bytearray(b"\xff\xd8")  # SOI
     out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += _seg(0xDB, bytes([0x00]) + bytes(qtab))  # DQT, 8-bit table 0
+    out += _seg(0xDB, bytes([0x00]) + bytes(FLAT_Q8))  # DQT, 8-bit table 0
     sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
     for ci, (_, hi, vi) in enumerate(comps):
         sof += bytes([ci + 1, (hi << 4) | vi, 0])
@@ -236,7 +234,7 @@ def encode_jpeg(pixels, qtab=None, subsample: bool = False) -> bytes:
     t = _dct_matrix()
     q = np.empty((8, 8))
     for i, (r_, c_) in enumerate(_ZZ_POS):
-        q[r_, c_] = qtab[i]
+        q[r_, c_] = FLAT_Q8[i]
     bw = _BitWriter()
     hmax = max(hi for _, hi, _ in comps)
     vmax = max(vi for _, _, vi in comps)

@@ -47,7 +47,7 @@ _FEATURE_SCHEMA = (
 )
 
 
-def to_binary_docs(documents: DataFrame, media_type: str = "image/fake") -> DataFrame:
+def to_binary_docs(documents: DataFrame) -> DataFrame:
     """documents(text) → multimodal convention: utf-8 payload bytes +
     metadata struct (the BinaryType + struct pattern of SURVEY.md §2.B
     "multimodal columns")."""
@@ -56,7 +56,7 @@ def to_binary_docs(documents: DataFrame, media_type: str = "image/fake") -> Data
         "doc_id",
         payload.alias("payload"),
         F.struct(
-            F.lit(media_type).alias("media_type"),
+            F.lit("image/fake").alias("media_type"),
             F.octet_length(payload).cast("long").alias("n_bytes"),
             F.col("source").alias("source"),
         ).alias("meta"),
@@ -433,14 +433,14 @@ def extract_features(binary_docs: DataFrame) -> DataFrame:
     return flat.mapInPandas(_batches, schema=_FEATURE_SCHEMA)
 
 
-def sample_frames(binary_docs: DataFrame, n_frames: int = 4) -> DataFrame:
-    """'Video' frame sampling stub: pick n evenly-spaced byte offsets per
+def sample_frames(binary_docs: DataFrame) -> DataFrame:
+    """'Video' frame sampling stub: pick 4 evenly-spaced byte offsets per
     payload (the real operator would seek keyframes); shows the
     explode-to-frames shape downstream operators consume."""
     # integer floor division: double-cast rounding differs across engines
     offsets = F.transform(
-        F.sequence(F.lit(0), F.lit(n_frames - 1)),
-        lambda i: F.floor(i * F.col("meta.n_bytes") / n_frames).cast("long"),
+        F.sequence(F.lit(0), F.lit(3)),
+        lambda i: F.floor(i * F.col("meta.n_bytes") / 4).cast("long"),
     )
     return binary_docs.select(
         "doc_id",

@@ -117,7 +117,6 @@ def binned_exact_percentiles(
     ps: list[float],
     bins: int = 4096,
     collect_cap: int = 8192,
-    max_rounds: int = 16,
     max_groups: int = 10_000,
 ) -> dict:
     """Single-column convenience wrapper over
@@ -129,11 +128,14 @@ def binned_exact_percentiles(
         {value_col: ps},
         bins=bins,
         collect_cap=collect_cap,
-        max_rounds=max_rounds,
         max_groups=max_groups,
     )
     return pcts[value_col]
 
+
+# histogram rounds before the final candidate fetch: bucket
+# populations shrink ~bins× a round, so 100 TB needs ~3
+_MAX_ROUNDS = 16
 
 # distinct _bucket_key values: ±(1 … 128·16), zero and NaN
 _BUCKET_KEYS = 2 * 128 * 16 + 2
@@ -191,7 +193,6 @@ def binned_exact_percentiles_multi(
     specs: dict[str, list[float]],
     bins: int = 4096,
     collect_cap: int = 8192,
-    max_rounds: int = 16,
     max_groups: int = 10_000,
 ) -> tuple[dict, dict]:
     """EXACT interpolated percentiles with bounded memory at any scale:
@@ -323,6 +324,21 @@ def binned_exact_percentiles_multi(
 
     spark = df.sparkSession
 
+    def _in_states(sts: list) -> DataFrame:
+        """``base`` rows inside each state's [lo, hi], tagged with the
+        state's index ``sid`` in ``sts``."""
+        st = local_frame(
+            spark,
+            [(sid, s[0], s[1], float(s[3]), float(s[4])) for sid, s in enumerate(sts)],
+            _state_schema,
+        )
+        return base.join(
+            F.broadcast(st),
+            (F.col("cidx") == F.col("c_s"))
+            & (F.col("g") == F.col("g_s"))
+            & F.col("v").between(F.col("lo"), F.col("hi")),
+        )
+
     def _active():
         return [s for s in states.values() if s[7] is None and s[6] > collect_cap]
 
@@ -334,18 +350,8 @@ def binned_exact_percentiles_multi(
         suspicion and the state goes back to histogram refinement."""
         from pyspark.sql import Window as W
 
-        rows = [
-            (sid, s[0], s[1], float(s[3]), float(s[4]))
-            for sid, s in enumerate(stalled)
-        ]
-        st = local_frame(spark, rows, _state_schema)
         per_v = (
-            base.join(
-                F.broadcast(st),
-                (F.col("cidx") == F.col("c_s"))
-                & (F.col("g") == F.col("g_s"))
-                & F.col("v").between(F.col("lo"), F.col("hi")),
-            )
+            _in_states(stalled)
             .groupBy("sid", "v")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -372,7 +378,7 @@ def binned_exact_percentiles_multi(
                     break
                 cum += c
 
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         act = _active()
         if not act:
             break
@@ -394,14 +400,6 @@ def binned_exact_percentiles_multi(
         if not rows:
             continue
         hist_states = rows
-        st = local_frame(
-            spark,
-            [
-                (sid, s[0], s[1], float(s[3]), float(s[4]))
-                for sid, s in enumerate(hist_states)
-            ],
-            _state_schema,
-        )
         # one scan: histogram every active interval; a row can feed
         # multiple (nested) intervals via the range join.
         # The narrowed interval comes from each bin's OBSERVED min/max
@@ -415,12 +413,7 @@ def binned_exact_percentiles_multi(
         # so cumulative bin counts still locate every rank exactly, and
         # data-derived endpoints are always consistent with the counts.
         hist = (
-            base.join(
-                F.broadcast(st),
-                (F.col("cidx") == F.col("c_s"))
-                & (F.col("g") == F.col("g_s"))
-                & F.col("v").between(F.col("lo"), F.col("hi")),
-            )
+            _in_states(hist_states)
             .select(
                 "sid",
                 F.least(
@@ -478,33 +471,7 @@ def binned_exact_percentiles_multi(
     # final: fetch the few remaining candidates per state in one scan
     rest = [s for s in states.values() if s[7] is None]
     if rest:
-        rows = [
-            (sid, s[0], s[1], float(s[3]), float(s[4]))
-            for sid, s in enumerate(rest)
-        ]
-        st = local_frame(spark, rows, _state_schema)
-        got = (
-            base.join(
-                F.broadcast(st),
-                (F.col("cidx") == F.col("c_s"))
-                & (F.col("g") == F.col("g_s"))
-                & F.col("v").between(F.col("lo"), F.col("hi")),
-            )
-            .groupBy("sid", "v")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .orderBy("sid", "v")
-            .collect()
-        )
-        by_sid2: dict[int, list] = {}
-        for r in got:
-            by_sid2.setdefault(r["sid"], []).append((r["v"], r["c"]))
-        for sid, s in enumerate(rest):
-            cum = 0
-            for v, c in by_sid2.get(sid, []):
-                if s[5] < cum + c:
-                    s[7] = v
-                    break
-                cum += c
+        _value_count(rest, bounded=False)
 
     pcts: dict = {c: {} for c in cols}
     stats_out: dict = {c: {} for c in cols}

@@ -40,9 +40,9 @@ SELECT
   {dsum_sql('l_extendedprice', 2)} AS sum_base_price,
   {dsum_sql('l_extendedprice * (1 - l_discount)', 4)} AS sum_disc_price,
   {dsum_sql('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 6)} AS sum_charge,
-  {davg_sql('l_quantity', 2)} AS avg_qty,
-  {davg_sql('l_extendedprice', 2)} AS avg_price,
-  {davg_sql('l_discount', 2)} AS avg_disc,
+  {davg_sql('l_quantity')} AS avg_qty,
+  {davg_sql('l_extendedprice')} AS avg_price,
+  {davg_sql('l_discount')} AS avg_disc,
   count(*) AS count_order
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -70,9 +70,9 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("l_extendedprice", 2).alias("sum_base_price"),
             dsum(disc_price, 4).alias("sum_disc_price"),
             dsum(charge, 6).alias("sum_charge"),
-            davg("l_quantity", 2).alias("avg_qty"),
-            davg("l_extendedprice", 2).alias("avg_price"),
-            davg("l_discount", 2).alias("avg_disc"),
+            davg("l_quantity").alias("avg_qty"),
+            davg("l_extendedprice").alias("avg_price"),
+            davg("l_discount").alias("avg_disc"),
             F.count(F.lit(1)).alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")

@@ -19,22 +19,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from end_to_end_aws_data_pipeline_spark.catalog import TABLES, load_tables
+from end_to_end_aws_data_pipeline_spark.catalog import load_tables
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 
-def run_sql(
-    spark: SparkSession,
-    sf_dir: str,
-    sql_text: str,
-    tables: tuple[str, ...] = TABLES,
-) -> DataFrame:
+def run_sql(spark: SparkSession, sf_dir: str, sql_text: str) -> DataFrame:
     """Register the canonical tables as temp views and run a SQL text.
 
     Views are (re)registered per call — cheap (lazy scans), and it
     keeps the entry safe on a bare driver-provided session.
     """
-    load_tables(spark, sf_dir, tables)
+    load_tables(spark, sf_dir)
     return spark.sql(sql_text)
 
 

@@ -20,7 +20,7 @@ Everything is DataFrame-only, integer-exact, and DuckDB-oracle-backed
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.cache import persisted
@@ -644,20 +644,18 @@ def segmented_running_weight(
     weight_col: str,
     order_col: str,
     tie_cols: list,
-    band: int | None = None,
 ) -> DataFrame:
     """Exact inclusive ``sum(w) OVER (ORDER BY order_col, *ties)`` for
     every row plus the grand total, without a single-partition sort —
     the SUM-monoid sibling of segmented_global_rank (band-local running
     sum, band-totals prefix offsets, broadcast join back). Adds ``cw``
-    (inclusive cumulative weight) and ``tw`` (total). Band defaults to
-    ~4096 buckets from the measured order-column span (see
+    (inclusive cumulative weight) and ``tw`` (total). The band splits
+    the measured order-column span into ~4096 buckets (see
     segmented_global_rank for why adaptive, not fixed).
     """
-    if band is None:
-        lo, hi = df.agg(F.min(order_col), F.max(order_col)).first()
-        span = int(hi - lo) if hi is not None else 0
-        band = span // 4096 + 1
+    lo, hi = df.agg(F.min(order_col), F.max(order_col)).first()
+    span = int(hi - lo) if hi is not None else 0
+    band = span // 4096 + 1
     o = df.withColumn("bucket", F.expr(f"{order_col} div {band}"))
     local = o.withColumn(
         "local_cw",
@@ -2726,6 +2724,76 @@ def _holt_steps(ys: list[int]) -> list[tuple[int, int, int, int, int, int]]:
     return out
 
 
+# the step columns both smoothing recursions publish; Holt-Winters adds
+# its seasonal state
+_HOLT_DDL = (
+    "t long, day string, y_c long, fitted_c long, resid_c long, "
+    "level_c long, trend_c long"
+)
+_HW_DDL = _HOLT_DDL + ", seasonal_c long"
+
+
+def _day_cents() -> Column:
+    """The day's revenue ``y`` in integer cents: an exact, combinable
+    sum of the per-line cent-rounded prices."""
+    return (
+        F.sum(F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long"))
+        .cast("long")
+        .alias("y")
+    )
+
+
+def _smooth_global(spark: SparkSession, sf_dir: str, steps, ddl: str) -> DataFrame:
+    """The daily-revenue series smoothed by ``steps`` on the driver: one
+    combinable day aggregate, then the O(days) recursion over its
+    collected rows. A series too short for ``steps`` gives an empty
+    frame, as in the oracles."""
+    daily = (
+        table(spark, sf_dir, "lineitem")
+        .groupBy(F.to_date("l_shipdate").alias("day"))
+        .agg(_day_cents())
+        .collect()
+    )
+    daily.sort(key=lambda r: r["day"])
+    ys = [int(r["y"]) for r in daily]
+    days = [str(r["day"]) for r in daily]
+    out = [(t, days[t - 1], *rest) for (t, *rest) in steps(ys)]
+    return local_frame(spark, out, ddl)
+
+
+def _smooth_bykey(spark: SparkSession, sf_dir: str, steps, ddl: str) -> DataFrame:
+    """One daily-revenue series per supplier nation, each smoothed by
+    ``steps`` inside ``applyInPandas``: broadcast dimension joins, one
+    combinable (nation, day) aggregate, one shuffle to group series."""
+    li = table(spark, sf_dir, "lineitem")
+    su = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    na = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    daily = (
+        li.select("l_suppkey", "l_shipdate", "l_extendedprice")
+        .join(F.broadcast(su), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(F.broadcast(na), F.col("s_nationkey") == F.col("n_nationkey"))
+        .groupBy(
+            F.col("n_name").alias("nation"),
+            F.to_date("l_shipdate").alias("day"),
+        )
+        .agg(_day_cents())
+    )
+    out_schema = "nation string, " + ddl
+    cols = [c.split()[0] for c in out_schema.split(", ")]
+
+    def smooth(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("day")
+        ys = [int(v) for v in pdf["y"]]
+        days = [str(v) for v in pdf["day"]]
+        nation = str(pdf["nation"].iloc[0])
+        rows = [(nation, t, days[t - 1], *rest) for (t, *rest) in steps(ys)]
+        return pd.DataFrame(rows, columns=cols)
+
+    return daily.groupBy("nation").applyInPandas(smooth, out_schema)
+
+
 @register("q_timeseries_holt", oracle=_HOLT_ORACLE)
 def q_timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt linear-trend smoothing (double exponential, Holt 1957) over
@@ -2758,34 +2826,7 @@ def q_timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the per-key state is identical; this operator pins the
     arithmetic contract that implementation must reproduce.
     """
-    li = table(spark, sf_dir, "lineitem")
-    daily = (
-        li.groupBy(F.to_date("l_shipdate").alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("y")
-        )
-        .collect()
-    )
-    daily.sort(key=lambda r: r["day"])
-    ys = [int(r["y"]) for r in daily]
-    days = [str(r["day"]) for r in daily]
-    schema = (
-        "t long, day string, y_c long, fitted_c long, resid_c long, "
-        "level_c long, trend_c long"
-    )
-    # fewer than 2 distinct days: no steps, an empty frame as in the oracle
-    steps = _holt_steps(ys)
-    out = [
-        (t, days[t - 1], y, fitted, resid, nl, nb)
-        for (t, y, fitted, resid, nl, nb) in steps
-    ]
-    return local_frame(spark, out, schema)
+    return _smooth_global(spark, sf_dir, _holt_steps, _HOLT_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -2852,50 +2893,7 @@ def q_timeseries_holt_bykey(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: delta_load.py has no time-series analogue; this extends the
     mandated §2.B statistics family (VERDICT r9 item 1).
     """
-    li = table(spark, sf_dir, "lineitem")
-    su = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    na = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    daily = (
-        li.select("l_suppkey", "l_shipdate", "l_extendedprice")
-        .join(F.broadcast(su), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(na), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.to_date("l_shipdate").alias("day"),
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("y")
-        )
-    )
-    out_schema = (
-        "nation string, t long, day string, y_c long, fitted_c long, "
-        "resid_c long, level_c long, trend_c long"
-    )
-
-    def smooth(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("day")
-        ys = [int(v) for v in pdf["y"]]
-        days = [str(v) for v in pdf["day"]]
-        nation = str(pdf["nation"].iloc[0])
-        cols = [
-            "nation", "t", "day", "y_c", "fitted_c", "resid_c",
-            "level_c", "trend_c",
-        ]
-        rows = [
-            (nation, t, days[t - 1], y, fitted, resid, nl, nb)
-            for (t, y, fitted, resid, nl, nb) in _holt_steps(ys)
-        ]
-        return pd.DataFrame(rows, columns=cols)
-
-    return daily.groupBy("nation").applyInPandas(smooth, out_schema)
+    return _smooth_bykey(spark, sf_dir, _holt_steps, _HOLT_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -3008,33 +3006,7 @@ def q_timeseries_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_timeseries_holt_bykey's applyInPandas lift with sv in the pandas
     state.
     """
-    li = table(spark, sf_dir, "lineitem")
-    daily = (
-        li.groupBy(F.to_date("l_shipdate").alias("day"))
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("y")
-        )
-        .collect()
-    )
-    daily.sort(key=lambda r: r["day"])
-    ys = [int(r["y"]) for r in daily]
-    days = [str(r["day"]) for r in daily]
-    schema = (
-        "t long, day string, y_c long, fitted_c long, resid_c long, "
-        "level_c long, trend_c long, seasonal_c long"
-    )
-    steps = _hw_steps(ys)
-    out = [
-        (t, days[t - 1], y, fitted, resid, nl, nb, ns)
-        for (t, y, fitted, resid, nl, nb, ns) in steps
-    ]
-    return local_frame(spark, out, schema)
+    return _smooth_global(spark, sf_dir, _hw_steps, _HW_DDL)
 
 
 # ---------------------------------------------------------------------------
@@ -3115,47 +3087,4 @@ def q_timeseries_holt_winters_bykey(
     combinable (nation, day) aggregate, one shuffle to group series,
     O(days + m) state per pandas group, no corpus-global windows.
     """
-    li = table(spark, sf_dir, "lineitem")
-    su = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    na = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    daily = (
-        li.select("l_suppkey", "l_shipdate", "l_extendedprice")
-        .join(F.broadcast(su), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(na), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.to_date("l_shipdate").alias("day"),
-        )
-        .agg(
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
-            )
-            .cast("long")
-            .alias("y")
-        )
-    )
-    out_schema = (
-        "nation string, t long, day string, y_c long, fitted_c long, "
-        "resid_c long, level_c long, trend_c long, seasonal_c long"
-    )
-
-    def smooth(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("day")
-        ys = [int(v) for v in pdf["y"]]
-        days = [str(v) for v in pdf["day"]]
-        nation = str(pdf["nation"].iloc[0])
-        cols = [
-            "nation", "t", "day", "y_c", "fitted_c", "resid_c",
-            "level_c", "trend_c", "seasonal_c",
-        ]
-        rows = [
-            (nation, t, days[t - 1], y, fitted, resid, nl, nb, ns)
-            for (t, y, fitted, resid, nl, nb, ns) in _hw_steps(ys)
-        ]
-        return pd.DataFrame(rows, columns=cols)
-
-    return daily.groupBy("nation").applyInPandas(smooth, out_schema)
+    return _smooth_bykey(spark, sf_dir, _hw_steps, _HW_DDL)

@@ -60,12 +60,16 @@ def overlap_jobs(*thunks: Callable):
     return results
 
 
+# reducers a hot key's rows spread over
+_N_SALTS = 16
+
+
 def salted_agg(
     df: DataFrame,
     group_cols: list[str],
     aggs: Callable[[], list[Column]],
     merge_aggs: Callable[[], list[Column]],
-    n_salts: int = 16,
+    n_salts: int = _N_SALTS,
 ) -> DataFrame:
     """Two-phase aggregation for skewed group keys.
 
@@ -95,27 +99,26 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     key: str,
-    n_salts: int = 16,
 ) -> DataFrame:
     """Salted equi-join for a skewed BIG side: the big side gets a
-    deterministic per-row salt in [0, n_salts), the small side is
+    deterministic per-row salt in [0, _N_SALTS), the small side is
     replicated once per salt value, and the join runs on (key, salt) —
-    a hot key's rows spread over ``n_salts`` reducers instead of
+    a hot key's rows spread over ``_N_SALTS`` reducers instead of
     pinning one straggler task.
 
     The salt is a content hash of the big side's full row (same
     retry-safety argument as :func:`salted_agg` — partition-id or
     monotonic-id salts move rows between buckets when tasks retry).
     Cost model: the small side's shuffle volume multiplies by
-    ``n_salts``; worth it exactly when one key's row count exceeds
+    ``_N_SALTS``; worth it exactly when one key's row count exceeds
     what one reducer should own. AQE's skew-join split handles the
     SORT-MERGE case adaptively (tests/test_plans.py pins that); this
     helper is the explicit form that also composes with pre-partitioned
     layouts where AQE cannot re-split.
     """
-    salt = F.pmod(F.xxhash64(*big.columns), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64(*big.columns), F.lit(_N_SALTS))
     b = big.withColumn("__salt", salt)
     s = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(_N_SALTS)]))
     )
     return b.join(s, [key, "__salt"]).drop("__salt")

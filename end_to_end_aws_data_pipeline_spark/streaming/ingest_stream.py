@@ -21,8 +21,8 @@ from end_to_end_aws_data_pipeline_spark.ingest.merge import merge_into_parquet
 
 
 class StreamingIngest:
-    """Watch ``<ingest_root>/<version_ts>/<Table>.csv`` and continuously
-    upsert arrivals into parquet tables under ``warehouse_dir``."""
+    """Upsert the ``<ingest_root>/<version_ts>/<Table>.csv`` arrivals not
+    yet in the checkpoint into parquet tables under ``warehouse_dir``."""
 
     def __init__(
         self,
@@ -54,10 +54,10 @@ class StreamingIngest:
             self.keys,
         )
 
-    def start(self, poll_all: bool = True):
-        """Run the stream; ``poll_all=True`` uses availableNow (drain
-        pending files then stop — the batch-test/cron mode), else a
-        continuous micro-batch trigger."""
+    def start(self):
+        """Run the stream with the availableNow trigger: drain the
+        pending files, then stop (the cron mode). Returns the finished
+        query."""
         src = (
             self.spark.readStream.schema(self.schema)
             .option("header", True)
@@ -65,14 +65,12 @@ class StreamingIngest:
             .csv(os.path.join(self.ingest_root, "*", f"{self.table_name}.csv"))
             .withColumn("__source_file", F.input_file_name())
         )
-        writer = (
+        q = (
             src.writeStream.foreachBatch(self._process_batch)
             .option("checkpointLocation", self.checkpoint)
             .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
         )
-        if poll_all:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        if poll_all:
-            q.awaitTermination()
+        q.awaitTermination()
         return q

@@ -3,7 +3,6 @@ rate sampling exactness, packing bin-capacity bound."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.operators.curation import (
@@ -66,11 +65,10 @@ def test_pack_bins_respect_budget(spark):
     assert sum(r["n_docs"] for r in bins) == d.count()
 
 
-@pytest.mark.parametrize("mod", [1000, 64])
-def test_hash_bucket_range(spark, mod):
-    d = spark.range(0, 5000).withColumn("b", hash_bucket("id", mod))
+def test_hash_bucket_range(spark):
+    d = spark.range(0, 5000).withColumn("b", hash_bucket("id"))
     mn, mx = d.agg(F.min("b"), F.max("b")).first()
-    assert mn >= 0 and mx < mod
+    assert mn >= 0 and mx < 1000
 
 
 def test_hash_bucket_huge_keys_match_duckdb(spark):

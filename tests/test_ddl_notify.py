@@ -9,7 +9,6 @@ from pyspark.sql import types as T
 from end_to_end_aws_data_pipeline_spark.ingest.credentials import get_sink_credentials
 from end_to_end_aws_data_pipeline_spark.ingest.ddl import (
     create_table_if_not_exists,
-    ddl_for_schema,
     table_exists,
 )
 from end_to_end_aws_data_pipeline_spark.ingest.pipeline import IngestPipeline
@@ -31,21 +30,6 @@ def test_catalog_probe_and_ddl_sink(spark):
     # second call: no-op, schema frozen (first write wins)
     assert create_table_if_not_exists(spark, name, schema) is False
     spark.sql(f"DROP TABLE {name}")
-
-
-def test_ddl_reference_type_rendering():
-    schema = T.StructType(
-        [
-            T.StructField("Id", T.LongType()),
-            T.StructField("Name", T.StringType()),
-            T.StructField("Score", T.DoubleType()),
-        ]
-    )
-    ddl = ddl_for_schema("T", schema, reference_types=True)
-    assert ddl == (
-        "CREATE TABLE IF NOT EXISTS `T` "
-        "(`Id` INTEGER, `Name` VARCHAR(255), `Score` FLOAT) USING PARQUET"
-    )
 
 
 def test_pipeline_emits_notifications(spark, tmp_path):

@@ -14,6 +14,16 @@ counts only outside the definition's own body and is never an
 ``import`` statement, so a re-export keeps nothing alive; ``from m
 import f as g`` makes a use of ``g`` reach ``f``. Decorators run at
 import time, so they count as module-level code.
+
+The same holds for parameters: a defaulted parameter of a package
+function or method that no call sets, or that every call sets to its
+default, is a knob nothing turns and fails here. One that only tests
+set fails unless ``SEAMS`` names it with a reason. Calls are read from
+the package, the roots and ``tests/``, and match every def of the
+called name (a class name calls its ``__init__``); a ``*args`` or
+``**kwargs`` splat sets every parameter. A default that binds a local
+of the enclosing function (``_sql=sql_text``) is a closure binding,
+not a knob.
 """
 
 from __future__ import annotations
@@ -42,16 +52,109 @@ ALLOWED = {
         "reads the final AQE plan through the JVM; the predicates in "
         "tests/plan_checks.py parse its text"
     ),
-    "functions/aggs.py::stable_round_sql": (
-        "the DuckDB spelling of stable_round that "
-        "test_stable_round_bit_identical_across_engines compares against"
-    ),
-    "operators/asof.py::asof_join_pandas": (
-        "the pandas reference that tests/test_asof_pandas.py compares "
-        "the Spark as-of joins against"
-    ),
     "ingest/pgwire.py::factory": (
         "the connection factory for the write_jdbc_upsert sink"
+    ),
+}
+
+# Only tests set these defaulted parameters: each forces a path or a
+# size the suite cannot reach at test scale, or is kept for the reason
+# given.
+SEAMS = {
+    "functions/aggs.py::stable_round_sql(out_scale)": (
+        "the DuckDB twin of stable_round(out_scale), which run code sets; "
+        "the cross-engine test pairs the two at each scale"
+    ),
+    "ingest/jdbc.py::write_jdbc_upsert(batch_size)": (
+        "a batch smaller than a partition commits mid-partition at test "
+        "scale"
+    ),
+    "ingest/jdbc.py::stream_upsert_jdbc(dialect)": (
+        "the suite's live server is PostgreSQL; the mysql default has none"
+    ),
+    "ingest/jdbc.py::stream_upsert_jdbc(key_columns)": (
+        "PostgreSQL's ON CONFLICT target, required with that dialect"
+    ),
+    "ingest/pgwire.py::_Cursor.execute(params)": (
+        "the DB-API execute signature; the binary-parameter test sends "
+        "bytes through the extended protocol with it"
+    ),
+    "ingest/pipeline.py::IngestPipeline.__init__(schema_policy)": (
+        "perfbench/workloads.py passes it by keyword (as its default); it "
+        "folds when that file next changes"
+    ),
+    "operators/dedup.py::connected_components(local_max_edges)": (
+        "0 forces the distributed path on a test-sized graph"
+    ),
+    "operators/dedup.py::connected_components(max_iterations)": (
+        "a 10-round cap reaches the did-not-converge error in 10 jobs, "
+        "not 50"
+    ),
+    "operators/dedup.py::connected_components_star(local_max_edges)": (
+        "0 forces the distributed path on a test-sized graph"
+    ),
+    "operators/dedup.py::connected_components_star(max_iterations)": (
+        "shows the star variant finishing a 200-node path within the "
+        "10-round cap that propagation exceeds"
+    ),
+    "operators/dedup.py::ngram_jaccard_pairs(direct_sumdf2_max)": (
+        "0 and 2^60 force each route (PPJoin, direct) on the test corpus"
+    ),
+    "operators/graph.py::hits_scores(iters)": (
+        "counting jobs per round needs runs of 1, 2 and 3 rounds"
+    ),
+    "operators/graph.py::hyperanf_counts(k_rounds)": (
+        "running past the query's rounds shows the N(k) curve saturate"
+    ),
+    "operators/graph.py::mis_rounds(rounds)": (
+        "counting jobs per round needs runs of 1 to 4 rounds"
+    ),
+    "operators/graph.py::scc_labels(local_max_edges)": (
+        "0 forces the distributed path on a test-sized graph"
+    ),
+    "operators/jpeg.py::encode_jpeg(subsample)": (
+        "the suite's only source of 4:2:0 JPEGs for decode_jpeg's "
+        "chroma upsampling"
+    ),
+    "operators/percentiles.py::binned_exact_percentiles(bins)": (
+        "a few bins force several refinement rounds on test-sized groups"
+    ),
+    "operators/percentiles.py::binned_exact_percentiles(collect_cap)": (
+        "a small cap forces refinement before the candidate fetch"
+    ),
+    "operators/percentiles.py::binned_exact_percentiles(max_groups)": (
+        "a small cap trips the group-cardinality guard"
+    ),
+    "operators/percentiles.py::guard_exact_percentile(max_rows)": (
+        "a small cap trips the per-group row guard"
+    ),
+    "plans/scale.py::salted_agg(n_salts)": (
+        "1, 7 and 32 salts show the merge is invariant to the salt count"
+    ),
+    "session.py::get_spark(master)": "the test session's fixed core count",
+    "session.py::get_spark(shuffle_partitions)": (
+        "the test session's small shuffle width"
+    ),
+    "streaming/ann_index.py::run_ann_index_stream(ckpt)": (
+        "kill+resume: the second run resumes the first run's checkpoint"
+    ),
+    "streaming/ann_index.py::run_ann_index_stream(stop_after_batches)": (
+        "kill+resume: stops the first run mid-stream"
+    ),
+    "streaming/pattern.py::run_pattern_stream(ckpt)": (
+        "kill+resume: the second run resumes the first run's checkpoint"
+    ),
+    "streaming/pattern.py::run_pattern_stream_rle(ckpt)": (
+        "kill+resume: the second run resumes the first run's checkpoint"
+    ),
+    "streaming/pattern.py::run_pattern_stream_rle(stop_after_batches)": (
+        "kill+resume: stops the first run mid-stream"
+    ),
+    "streaming/sketch.py::run_hh_stream(stop_after_batches)": (
+        "kill+resume: stops the first run mid-stream"
+    ),
+    "streaming/sketch.py::run_sketch_stream(stop_after_batches)": (
+        "kill+resume: stops the first run mid-stream"
     ),
 }
 
@@ -73,17 +176,32 @@ def _uses(nodes) -> set[str]:
     return out
 
 
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), filename=str(path))
+
+
+def _aliases(tree: ast.Module) -> dict[str, str]:
+    """Each import's ``as`` name, mapped to the name it imports."""
+    return {
+        a.asname: a.name.rpartition(".")[2]
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Import, ast.ImportFrom))
+        for a in n.names
+        if a.asname
+    }
+
+
+def _py_files(roots):
+    for root in roots:
+        p = REPO / root
+        yield from [p] if p.is_file() else sorted(p.rglob("*.py"))
+
+
 def _scan(path: Path):
     """``(defs, loose, aliases)`` for one file: each top-level def or
     class as ``(name, registered, uses)``, the uses outside every such
     definition, and each import's ``as`` name."""
-    tree = ast.parse(path.read_text(), filename=str(path))
-    aliases: dict[str, str] = {}
-    for n in ast.walk(tree):
-        if isinstance(n, (ast.Import, ast.ImportFrom)):
-            for a in n.names:
-                if a.asname:
-                    aliases[a.asname] = a.name.rpartition(".")[2]
+    tree = _parse(path)
     defs, loose_nodes = [], []
     for n in tree.body:
         if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
@@ -97,7 +215,7 @@ def _scan(path: Path):
             ))
         else:
             loose_nodes.append(n)
-    return defs, _uses(loose_nodes), aliases
+    return defs, _uses(loose_nodes), _aliases(tree)
 
 
 def _unreached(extra_roots: set[str]) -> set[str]:
@@ -113,11 +231,9 @@ def _unreached(extra_roots: set[str]) -> set[str]:
         defs += [(f"{rel}::{name}", name, body) for name, _, body in file_defs]
         for alias, name in file_aliases.items():
             aliases.setdefault(alias, set()).add(name)
-    for root in ROOTS:
-        p = REPO / root
-        for path in [p] if p.is_file() else sorted(p.rglob("*.py")):
-            file_defs, loose, _ = _scan(path)
-            todo |= loose.union(*(body for *_, body in file_defs))
+    for path in _py_files(ROOTS):
+        file_defs, loose, _ = _scan(path)
+        todo |= loose.union(*(body for *_, body in file_defs))
     by_name: dict[str, list[set[str]]] = {}
     for _, name, body in defs:
         by_name.setdefault(name, []).append(body)
@@ -138,3 +254,146 @@ def test_only_allowlisted_definitions_are_test_only():
     assert not reachable, f"reachable, drop from ALLOWED: {sorted(reachable)}"
     stray = _unreached({key.rpartition("::")[2] for key in ALLOWED})
     assert not stray, f"only tests reach these: {sorted(stray)}"
+
+
+# -- parameters --------------------------------------------------------
+
+
+def _walk_defs(node, prefix, outer, in_class):
+    """``(qualname, def, enclosing locals, is method)`` of every def
+    under ``node``."""
+    for n in ast.iter_child_nodes(node):
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield prefix + n.name, n, outer, in_class
+            a = n.args
+            inner = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+            inner |= {
+                x.id for x in ast.walk(n)
+                if isinstance(x, ast.Name) and isinstance(x.ctx, ast.Store)
+            }
+            yield from _walk_defs(n, f"{prefix}{n.name}.", inner, False)
+        elif isinstance(n, ast.ClassDef):
+            yield from _walk_defs(n, f"{prefix}{n.name}.", set(), True)
+        else:
+            yield from _walk_defs(n, prefix, outer, in_class)
+
+
+def _defaulted_params():
+    """``{call name: [(key, position or None, keyword, default)]}`` for
+    every defaulted parameter of a package def. A default that binds a
+    local of the enclosing function (``cm=cm``) is a closure binding,
+    not a knob, and is left out."""
+    out: dict[str, list] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for qual, fn, outer, method in _walk_defs(_parse(path), "", set(), False):
+            static = any(getattr(d, "id", None) == "staticmethod"
+                         for d in fn.decorator_list)
+            skip = 1 if method and not static else 0
+            name = fn.name
+            if name == "__init__" and method:
+                name = qual.split(".")[-2]
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            params = [
+                (first + j - skip, p, d)
+                for j, (p, d) in enumerate(zip(pos[first:], a.defaults))
+            ]
+            params += [(None, p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                       if d is not None]
+            entry = out.setdefault(name, [])
+            for i, p, d in params:
+                if isinstance(d, ast.Name) and d.id in outer:
+                    continue
+                entry.append((f"{rel}::{qual}({p.arg})", i, p.arg, d))
+    return out
+
+
+def _calls(roots, aliases):
+    """``(callee name, call)`` for every call under ``roots``;
+    ``partial(f, ...)`` counts as a call of ``f``."""
+    for path in _py_files(roots):
+        for n in ast.walk(_parse(path)):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = getattr(f, "id", getattr(f, "attr", None))
+            if name == "partial" and n.args:
+                f = n.args[0]
+                name = getattr(f, "id", getattr(f, "attr", None))
+                n = ast.Call(func=f, args=n.args[1:], keywords=n.keywords)
+            for callee in {name, aliases.get(name)} - {None}:
+                yield callee, n
+
+
+def _passed(call, position, keyword):
+    """The node a call passes for one parameter: ``...`` when a splat
+    may set it, ``None`` when the call leaves it at its default."""
+    for kw in call.keywords:
+        if kw.arg is None:
+            return ...
+        if kw.arg == keyword:
+            return kw.value
+    if position is None:
+        return None
+    for j, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return ...
+        if j == position:
+            return arg
+    return None
+
+
+def _is_default(node, default) -> bool:
+    if node is ...:
+        return False
+    if ast.dump(node) == ast.dump(default):
+        return True
+    try:
+        return ast.literal_eval(node) == ast.literal_eval(default)
+    except ValueError:
+        return False
+
+
+def _param_findings():
+    """``(knobs, test_only)``: the defaulted package parameters no call
+    sets to anything but the default, each with why, and those only
+    tests set otherwise."""
+    params = _defaulted_params()
+    aliases: dict[str, str] = {}
+    for path in _py_files((PKG.name, *ROOTS, "tests")):
+        aliases.update(_aliases(_parse(path)))
+    calls = {}
+    for where, roots in (("run", (PKG.name, *ROOTS)), ("tests", ("tests",))):
+        for name, call in _calls(roots, aliases):
+            if name in params:
+                calls.setdefault(name, []).append((where, call))
+    knobs, test_only = {}, set()
+    for name, entries in params.items():
+        for key, position, keyword, default in entries:
+            passed = [
+                (where, _passed(call, position, keyword))
+                for where, call in calls.get(name, ())
+            ]
+            passed = [(w, node) for w, node in passed if node is not None]
+            turned = {w for w, node in passed if not _is_default(node, default)}
+            if "run" in turned:
+                continue
+            if "tests" in turned:
+                test_only.add(key)
+            else:
+                knobs[key] = "set to its default" if passed else "never set"
+    return knobs, test_only
+
+
+def test_every_defaulted_parameter_is_turned():
+    knobs, test_only = _param_findings()
+    unturned = {k: why for k, why in knobs.items() if k not in SEAMS}
+    seamless = sorted(test_only - set(SEAMS))
+    assert not unturned and not seamless, (
+        f"{len(unturned) + len(seamless)} knobs; fold these into their "
+        f"bodies: {unturned}; only tests set these: {seamless}"
+    )
+    stale = set(SEAMS) - test_only - set(knobs)
+    assert not stale, f"no longer test-only, drop from SEAMS: {sorted(stale)}"

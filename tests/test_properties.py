@@ -648,7 +648,7 @@ def test_sharded_bloom_no_false_negatives_and_equivalence(spark):
     digests = spark.range(0, 500).select(
         F.sha2(F.col("id").cast("string"), 256).alias("digest")
     )
-    bitmaps, m_bits = digest_bloom_sharded(digests, 500, _BLOOM_N_SHARDS)
+    bitmaps, m_bits = digest_bloom_sharded(digests, 500)
     assert set(bitmaps) == set(range(_BLOOM_N_SHARDS))
     bloom_df = spark.createDataFrame(
         [(int(s), bm) for s, bm in sorted(bitmaps.items())],

@@ -32,7 +32,7 @@ def test_streaming_ingest_exactly_once_across_restarts(spark, tmp_path):
     _write_csv(root, "20250101_000000", "T.csv", "K,V\n1,a\n2,a\n")
 
     si = StreamingIngest(spark, root, wh, schema="K long, V string", keys=["K"], table_name="T")
-    si.start(poll_all=True)
+    si.start()
     t1 = spark.read.parquet(os.path.join(wh, "T"))
     assert sorted((r.K, r.V) for r in t1.collect()) == [(1, "a"), (2, "a")]
 
@@ -41,13 +41,13 @@ def test_streaming_ingest_exactly_once_across_restarts(spark, tmp_path):
     # and the keyed upsert applies it
     _write_csv(root, "20250101_000001", "T.csv", "K,V\n2,b\n3,b\n")
     si2 = StreamingIngest(spark, root, wh, schema="K long, V string", keys=["K"], table_name="T")
-    si2.start(poll_all=True)
+    si2.start()
     t2 = spark.read.parquet(os.path.join(wh, "T"))
     assert sorted((r.K, r.V) for r in t2.collect()) == [(1, "a"), (2, "b"), (3, "b")]
 
     # re-running with NO new files must be a no-op
     si3 = StreamingIngest(spark, root, wh, schema="K long, V string", keys=["K"], table_name="T")
-    si3.start(poll_all=True)
+    si3.start()
     t3 = spark.read.parquet(os.path.join(wh, "T"))
     assert t3.count() == 3
 
@@ -66,7 +66,7 @@ def test_streaming_ingest_many_versions(spark, tmp_path):
             f"K,V\n{v % 5},v{v}\n{(v + 1) % 5},v{v}\n",
         )
     si = StreamingIngest(spark, root, wh, schema="K long, V string", keys=["K"], table_name="T")
-    si.start(poll_all=True)
+    si.start()
     rows = {r.K: r.V for r in spark.read.parquet(os.path.join(wh, "T")).collect()}
     assert len(rows) == 5  # one row per key, ever
     # key k last written by version max{v : v%5==k or (v+1)%5==k}
