@@ -108,3 +108,14 @@ def stable_round(col: Column | str, out_scale: int = 6) -> Column:
 def stable_round_sql(expr: str, out_scale: int = 6) -> str:
     p = 10**out_scale
     return f"floor(({expr}) * {p} + 0.5) / {p}"
+
+
+def l2fp(x: str) -> str:
+    """Fixed-point log2 with 4 fractional bits, pure integer arithmetic
+    (valid for x >= 1): 16*floor(log2 x) + linear interpolation of the
+    mantissa between powers of two; worst-case error ~0.149 bit
+    (interpolation + 1/16 quantization). The same text parses in Spark
+    SQL and DuckDB except for the integer-division spelling, left as
+    ``{div}`` for the caller to fill in per engine."""
+    e = f"(length(bin({x})) - 1)"
+    return f"(16 * {e} + ({x}) * 16 {{div}} (CAST(1 AS BIGINT) << {e}) - 16)"

@@ -12,9 +12,10 @@ strip (first_lambda_function.py:103). A header-only file raised
 StopIteration in the reference (first_lambda_function.py:56-59); here it
 returns an all-string schema instead of failing.
 
-Spark's native ``inferSchema`` samples all rows and yields a richer
-lattice (dates, booleans); we default to native inference everywhere
-except when reference parity is requested.
+This is the only inference policy: every load reads with it, for
+oracle-exact parity with the legacy MySQL DDL. Spark's native
+``inferSchema`` (all-row sampling, a richer lattice with dates and
+booleans) is not used.
 """
 
 from __future__ import annotations
@@ -94,26 +95,19 @@ def _driver_head(spark: SparkSession, path: str) -> str | None:
     return "\n".join(lines).removeprefix("\ufeff")
 
 
-def read_csv_with_inferred_schema(
-    spark: SparkSession, path: str, policy: str = "native"
-) -> DataFrame:
+def read_csv_with_inferred_schema(spark: SparkSession, path: str) -> DataFrame:
     """Distributed CSV scan (replaces the whole-object driver-memory read
-    at ref delta_load.py:62-66).
-
-    policy="native": Spark all-row sampling inference (superset lattice).
-    policy="reference": first-row-only inference, for oracle-exact parity
-    with the legacy MySQL DDL. Only the file head crosses the driver,
-    read there without a Spark job (a directory or glob reads its head
-    through the text datasource instead).
+    at ref delta_load.py:62-66) under the reference policy's first-row
+    schema. Only the file head crosses the driver, read there without a
+    Spark job (a directory or glob reads its head through the text
+    datasource instead).
     """
-    if policy == "reference":
-        head = _driver_head(spark, path)
-        if head is None:
-            head = "\n".join(r.value for r in spark.read.text(path).limit(2).collect())
-        return (
-            spark.read.option("header", True)
-            .schema(infer_schema_from_csv_head(head))
-            .option("mode", "PERMISSIVE")
-            .csv(path)
-        )
-    return spark.read.option("header", True).option("inferSchema", True).csv(path)
+    head = _driver_head(spark, path)
+    if head is None:
+        head = "\n".join(r.value for r in spark.read.text(path).limit(2).collect())
+    return (
+        spark.read.option("header", True)
+        .schema(infer_schema_from_csv_head(head))
+        .option("mode", "PERMISSIVE")
+        .csv(path)
+    )

@@ -79,10 +79,12 @@ class IngestPipeline:
             log_notifier,
         )
 
+        # first-row inference is the only schema policy
+        if schema_policy != "reference":
+            raise ValueError(f"unknown schema_policy {schema_policy!r}; only 'reference'")
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self.keys_by_table = keys_by_table or {}
-        self.schema_policy = schema_policy
         self.notifier = notifier or log_notifier
         # optional per-table partition column → partition-scoped merges
         # (IO proportional to each delivery, not the table)
@@ -93,7 +95,7 @@ class IngestPipeline:
         return os.path.join(self.warehouse_dir, table_name)
 
     def _load(self, path: str, table_name: str, folder_ts: int) -> IngestResult:
-        df = read_csv_with_inferred_schema(self.spark, path, policy=self.schema_policy)
+        df = read_csv_with_inferred_schema(self.spark, path)
         if not df.columns:
             return IngestResult(table_name, folder_ts, "skipped_empty", None, 0)
         # one observation per load, under a name no other load shares

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import table
-from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
+from end_to_end_aws_data_pipeline_spark.functions.aggs import l2fp, stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 # Knuth multiplicative hash: maps a BIGINT key to a pseudo-uniform
@@ -593,23 +593,14 @@ _DSIR_TARGET = "de"  # target distribution: the minority-language slice
 _DSIR_TOP = 25
 
 
-def _l2fp(x: str) -> str:
-    """Fixed-point log2 with 4 fractional bits, pure integer arithmetic
-    (valid for x >= 1): 16*floor(log2 x) + linear interpolation of the
-    mantissa between powers of two. Same text parses in Spark SQL and
-    DuckDB except for the integer-division spelling, handled below."""
-    e = f"(length(bin({x})) - 1)"
-    return f"(16 * {e} + ({x}) * 16 {{div}} (CAST(1 AS BIGINT) << {e}) - 16)"
-
-
 def _dsir_lw(div: str) -> str:
     """The per-bucket log importance weight
     L(ct+1) + L(Nr+B) - L(cr+1) - L(Nt+B)  ~  16*log2 of the smoothed
     target/raw probability ratio."""
-    t = _l2fp(f"ct + 1")
-    r = _l2fp(f"cr + 1")
-    nt = _l2fp(f"nt + {_DSIR_B}")
-    nr = _l2fp(f"nr + {_DSIR_B}")
+    t = l2fp(f"ct + 1")
+    r = l2fp(f"cr + 1")
+    nt = l2fp(f"nt + {_DSIR_B}")
+    nr = l2fp(f"nr + {_DSIR_B}")
     return f"({t} + {nr} - {r} - {nt})".replace("{div}", div)
 
 

@@ -373,80 +373,12 @@ def _mh_base(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long") % _MH_P
 
 
-def _minhash_oracle() -> str:
-    """DuckDB replay of q_dedup_minhash_lsh: identical shingles (proven
-    by the green _JACCARD_ORACLE), identical md5-derived signatures,
-    identical band buckets / screen / exact-Jaccard verification."""
-    k, b_, r = _MINHASH_K, _LSH_BANDS, _MINHASH_K // _LSH_BANDS
-    sig_cols = ",\n         ".join(
-        f"min(({a} * x + {b}) % {_MH_P}) AS h{i}"
-        for i, (a, b) in enumerate(_MH_AB[:k])
-    )
-    band_selects = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(CAST(h{b * r} AS VARCHAR)"
-        + "".join(f" || '|' || CAST(h{b * r + j} AS VARCHAR)" for j in range(1, r))
-        + ") AS bucket FROM sig"
-        for b in range(b_)
-    )
-    screen = " + ".join(f"CAST(sa.h{i} = sb.h{i} AS INT)" for i in range(k))
-    return f"""
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-           i -> concat_ws(' ', string_split(text,' ')[i],
-                string_split(text,' ')[i+1], string_split(text,' ')[i+2])
-         )) AS s
-  FROM documents
-), tok AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(unnest(s)), 1, 15))::BIGINT % {_MH_P} AS x
-  FROM sh
-), sig AS (
-  SELECT doc_id,
-         {sig_cols}
-  FROM tok GROUP BY doc_id
-), bands AS (
-  {band_selects}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-), screened AS (
-  SELECT doc_a, doc_b FROM cand
-  JOIN sig sa ON sa.doc_id = doc_a
-  JOIN sig sb ON sb.doc_id = doc_b
-  WHERE {screen} >= {_MINHASH_SCREEN_MIN}
-)
-SELECT s.doc_a, s.doc_b,
-       floor(CAST(len(list_intersect(da.s, db.s)) AS DOUBLE) /
-             (len(da.s) + len(db.s) - len(list_intersect(da.s, db.s)))
-             * 1000000 + 0.5) / 1000000 AS jaccard
-FROM screened s
-JOIN sh da ON da.doc_id = s.doc_a
-JOIN sh db ON db.doc_id = s.doc_b
-WHERE CAST(len(list_intersect(da.s, db.s)) AS DOUBLE) /
-      (len(da.s) + len(db.s) - len(list_intersect(da.s, db.s))) >= {_JACCARD_TAU}
-"""
-
-
-@register("q_dedup_minhash_lsh", oracle=_minhash_oracle())
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs: signature → band → bucket equi-join →
-    exact-Jaccard verification of candidates only.
-
-    The verification step makes output precision exact; recall vs the
-    full O(n²) ground truth is probabilistic (tests assert it on the
-    small SF). At 100 TB this is the only tractable shape: candidate
-    count ≈ duplicate count, not n².
-
-    Hashes are md5-derived (see _mh_base) so the DuckDB oracle
-    replays the ENTIRE pipeline — including which candidate pairs LSH
-    surfaces — and the driver records a full hash-green row, not
-    rows-only. Cost: ONE md5 per shingle (the Broder base hash) + k
-    integer mod-p permutations — the same hash count per token as the
-    original xxhash-free design at 100 TB, with cross-engine replay.
-    """
+def _minhash_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The MinHash LSH index of the documents table: ``(d, sig,
+    bands)`` — each doc's shingle array ``s``, its persisted k-hash
+    signature ``sig``, and its (doc_id, band, bucket) band rows."""
     from end_to_end_aws_data_pipeline_spark.cache import persisted
 
     r = _MINHASH_K // _LSH_BANDS
@@ -501,7 +433,93 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
+    return d, sig, bands
 
+
+def _minhash_oracle_ctx() -> tuple[str, str]:
+    """The DuckDB replay both MinHash oracles start from: the shingle,
+    token, signature and band CTEs (identical shingles proven by the
+    green _JACCARD_ORACLE, identical md5-derived signatures and band
+    buckets), and the signature-screen sum over ``sa``/``sb``."""
+    k, b_, r = _MINHASH_K, _LSH_BANDS, _MINHASH_K // _LSH_BANDS
+    sig_cols = ",\n         ".join(
+        f"min(({a} * x + {b}) % {_MH_P}) AS h{i}"
+        for i, (a, b) in enumerate(_MH_AB[:k])
+    )
+    band_selects = "\n  UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, md5(CAST(h{b * r} AS VARCHAR)"
+        + "".join(f" || '|' || CAST(h{b * r + j} AS VARCHAR)" for j in range(1, r))
+        + ") AS bucket FROM sig"
+        for b in range(b_)
+    )
+    screen = " + ".join(f"CAST(sa.h{i} = sb.h{i} AS INT)" for i in range(k))
+    return f"""
+WITH sh AS (
+  SELECT doc_id,
+         list_distinct(list_transform(
+           range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
+           i -> concat_ws(' ', string_split(text,' ')[i],
+                string_split(text,' ')[i+1], string_split(text,' ')[i+2])
+         )) AS s
+  FROM documents
+), tok AS (
+  SELECT doc_id,
+         ('0x' || substr(md5(unnest(s)), 1, 15))::BIGINT % {_MH_P} AS x
+  FROM sh
+), sig AS (
+  SELECT doc_id,
+         {sig_cols}
+  FROM tok GROUP BY doc_id
+), bands AS (
+  {band_selects}
+""", screen
+
+
+def _minhash_oracle() -> str:
+    """DuckDB replay of q_dedup_minhash_lsh: the shared signature and
+    band CTEs, then band-bucket candidates, the screen and the
+    exact-Jaccard verification."""
+    ctx, screen = _minhash_oracle_ctx()
+    return ctx + f"""), cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a JOIN bands b
+    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
+), screened AS (
+  SELECT doc_a, doc_b FROM cand
+  JOIN sig sa ON sa.doc_id = doc_a
+  JOIN sig sb ON sb.doc_id = doc_b
+  WHERE {screen} >= {_MINHASH_SCREEN_MIN}
+)
+SELECT s.doc_a, s.doc_b,
+       floor(CAST(len(list_intersect(da.s, db.s)) AS DOUBLE) /
+             (len(da.s) + len(db.s) - len(list_intersect(da.s, db.s)))
+             * 1000000 + 0.5) / 1000000 AS jaccard
+FROM screened s
+JOIN sh da ON da.doc_id = s.doc_a
+JOIN sh db ON db.doc_id = s.doc_b
+WHERE CAST(len(list_intersect(da.s, db.s)) AS DOUBLE) /
+      (len(da.s) + len(db.s) - len(list_intersect(da.s, db.s))) >= {_JACCARD_TAU}
+"""
+
+
+@register("q_dedup_minhash_lsh", oracle=_minhash_oracle())
+def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash+LSH near-dup pairs: signature → band → bucket equi-join →
+    exact-Jaccard verification of candidates only.
+
+    The verification step makes output precision exact; recall vs the
+    full O(n²) ground truth is probabilistic (tests assert it on the
+    small SF). At 100 TB this is the only tractable shape: candidate
+    count ≈ duplicate count, not n².
+
+    Hashes are md5-derived (see _mh_base) so the DuckDB oracle
+    replays the ENTIRE pipeline — including which candidate pairs LSH
+    surfaces — and the driver records a full hash-green row, not
+    rows-only. Cost: ONE md5 per shingle (the Broder base hash) + k
+    integer mod-p permutations — the same hash count per token as the
+    original xxhash-free design at 100 TB, with cross-engine replay.
+    """
+    d, sig, bands = _minhash_index(spark, sf_dir)
     a, b = bands.alias("a"), bands.alias("b")
     cand = a.join(
         b,
@@ -2270,38 +2288,8 @@ def _minhash_incr_oracle() -> str:
     """DuckDB replay of q_dedup_minhash_incremental: the full
     signature → band → bucket pipeline of _minhash_oracle, restricted
     to batch-side probes against corpus-side index entries."""
-    k, b_, r = _MINHASH_K, _LSH_BANDS, _MINHASH_K // _LSH_BANDS
-    sig_cols = ",\n         ".join(
-        f"min(({a} * x + {b}) % {_MH_P}) AS h{i}"
-        for i, (a, b) in enumerate(_MH_AB[:k])
-    )
-    band_selects = "\n  UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, md5(CAST(h{b * r} AS VARCHAR)"
-        + "".join(f" || '|' || CAST(h{b * r + j} AS VARCHAR)" for j in range(1, r))
-        + ") AS bucket FROM sig"
-        for b in range(b_)
-    )
-    screen = " + ".join(f"CAST(sa.h{i} = sb.h{i} AS INT)" for i in range(k))
-    return f"""
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(len(string_split(text,' ')) - 2, 1) + 1),
-           i -> concat_ws(' ', string_split(text,' ')[i],
-                string_split(text,' ')[i+1], string_split(text,' ')[i+2])
-         )) AS s
-  FROM documents
-), tok AS (
-  SELECT doc_id,
-         ('0x' || substr(md5(unnest(s)), 1, 15))::BIGINT % {_MH_P} AS x
-  FROM sh
-), sig AS (
-  SELECT doc_id,
-         {sig_cols}
-  FROM tok GROUP BY doc_id
-), bands AS (
-  {band_selects}
-), cand AS (
+    ctx, screen = _minhash_oracle_ctx()
+    return ctx + f"""), cand AS (
   SELECT DISTINCT n.doc_id AS doc_new, c.doc_id AS doc_corpus
   FROM bands n JOIN bands c
     ON n.band = c.band AND n.bucket = c.bucket
@@ -2344,49 +2332,7 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket) so the probe is partition-local. Verified pairs carry the
     exact Jaccard, so downstream keep/drop decisions are identical to
     what the full self-join would have produced for those documents."""
-    from end_to_end_aws_data_pipeline_spark.cache import persisted
-
-    r = _MINHASH_K // _LSH_BANDS
-    d = spread(
-        table(spark, sf_dir, "documents").select("doc_id", "text")
-    ).select("doc_id", shingles(F.col("text")).alias("s"))
-    tok = d.select("doc_id", F.explode("s").alias("sh")).select(
-        "doc_id", _mh_base(F.col("sh")).alias("x")
-    )
-    sig = persisted(
-        tok.groupBy("doc_id").agg(
-            F.array(
-                *[
-                    F.min((F.lit(a) * F.col("x") + F.lit(b)) % _MH_P)
-                    for a, b in _MH_AB
-                ]
-            ).alias("sig")
-        )
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at("sig", b * r + 1 + j).cast(
-                                        "string"
-                                    )
-                                    for j in range(r)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(_LSH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    d, sig, bands = _minhash_index(spark, sf_dir)
     is_batch = F.pmod(F.col("doc_id"), F.lit(_BATCH_MOD)) >= _BATCH_MIN
     probe = bands.filter(is_batch).select(
         F.col("doc_id").alias("doc_new"), "band", "bucket"

@@ -1216,7 +1216,7 @@ def q_agg_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # mutual information via a HIGH-PRECISION fixed-point log2 (64 linear
 # segments per octave, 1/65536-bit units — worst case 6.1e-5 bit,
-# swept over 200k random inputs; the 4-fractional-bit _l2fp's ~0.149
+# swept over 200k random inputs; the 4-fractional-bit l2fp's ~0.149
 # bit would swamp a near-independence MI outright)
 # ---------------------------------------------------------------------------
 
@@ -1329,7 +1329,7 @@ def q_agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_agg_chi2_independence.
 
     I = Σ (O/N)·log2(N·O/(R·C)). Near independence the statistic is
-    TINY (~1e-3 bit here), so the engine's 4-fractional-bit _l2fp
+    TINY (~1e-3 bit here), so the engine's 4-fractional-bit l2fp
     (~0.149-bit worst case) would report 5× the true value; this query
     introduces the high-precision variant: 64 linear segments per
     octave in 1/65536-bit units, worst case 6.1e-5 bit (random sweep,

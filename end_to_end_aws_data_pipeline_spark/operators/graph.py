@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.cache import persisted
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
+from end_to_end_aws_data_pipeline_spark.functions import hll
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.operators.iterate import (
     LOCAL_MAX_EDGES,
@@ -1071,19 +1072,25 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # independent estimates, so the aggregate concentrates far tighter — and
 # small m is what makes the per-round shuffle (edges x 64-int array)
 # affordable at 100 TB, exactly B&V's sizing argument.
-_HA_P = 6
-_HA_M = 1 << _HA_P
-_HA_WBITS = 56          # md5 hex chars 3..16 -> 56-bit register payload
-_HA_CAP = 48            # same rho cap as q_agg_hll_distinct: int64-safe sums
+_HA_M = 64
 _HA_K = 4               # fixed rounds (oracle unrolls them)
-# alpha_64 = 0.709 (Flajolet et al., AofA'07, small-m table), times
-# m^2 * 2^cap — precomputed in Python and injected as ONE double literal
-# into both engines (the q_agg_hll_distinct determinism recipe)
-_HA_NUM = 0.709 * _HA_M * _HA_M * float(1 << _HA_CAP)
-import math as _ha_math
 
-_HA_LNTAB = [_ha_math.log(_HA_M / v) for v in range(1, _HA_M + 1)]
-_HA_LNTAB_SQL = "[" + ", ".join(repr(x) for x in _HA_LNTAB) + "]"
+
+def _ha_cents_duck(k: int) -> tuple[str, str]:
+    """DuckDB text of floor(100 * estimate) per node of the register
+    CTE ``r{k}``, and the FROM clause holding each node's sums."""
+    m, num = _HA_M, repr(hll.num(_HA_M))
+    tab = "[" + ", ".join(repr(x) for x in hll.lntab(m)) + "]"
+    d = f"(denom_ne + ({m} - v_cnt) * (CAST(1 AS BIGINT) << {hll.CAP}))"
+    return f"""floor(100 * CASE
+           WHEN ({m} - v_cnt) > 0
+                AND {num} / {d} <= {2.5 * m}
+           THEN {float(m)!r} * ({tab})[{m} - v_cnt]
+           ELSE {num} / {d}
+         END)""", f"""FROM (SELECT node,
+               sum(CAST(1 AS BIGINT) << ({hll.CAP} - rho)) AS denom_ne,
+               count(*) AS v_cnt
+        FROM r{k} GROUP BY node)"""
 
 
 # sketch-side join strategy threshold: below this node count the whole
@@ -1117,11 +1124,7 @@ def _ha_graph(
         nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
     )
     edges = persisted(edges_all if small else edges_all.repartition("src"))
-    hx = F.md5(F.col("node").cast("string"))
-    bucket = F.pmod(
-        F.conv(F.substring(hx, 1, 2), 16, 10).cast("long"), F.lit(_HA_M)
-    )
-    w = F.conv(F.substring(hx, 3, 14), 16, 10).cast("long")
+    bucket, rho = hll.register_address(F.col("node"), _HA_M)
     # registers are TINYINT (rho <= 48): a 64-register sketch row is
     # ~64 payload bytes instead of 256 — the per-round message shuffle
     # and aggregate state both shrink 4x, which is the dominant cost in
@@ -1130,12 +1133,7 @@ def _ha_graph(
     # F.when(...) Columns: the listcomp form cost ~300 py4j round trips
     # of pure driver latency per invocation (guide §1.2 "per-task work"
     # applies to the DRIVER too — plan construction is timed work).
-    rho = F.least(
-        F.when(w == F.lit(0), F.lit(_HA_WBITS + 1)).otherwise(
-            F.lit(_HA_WBITS + 1) - F.length(F.bin(w))
-        ),
-        F.lit(_HA_CAP),
-    ).cast("tinyint")
+    rho = rho.cast("tinyint")
     sk0 = persisted(
         nodes.select(
             "node", bucket.alias("__b"), rho.alias("__r")
@@ -1187,31 +1185,15 @@ def _ha_round(edges: DataFrame, sk: DataFrame, small: bool) -> DataFrame:
 
 def _ha_cents_expr():
     """floor(100 * HLL-estimate(regs)) as an exact int64 — the
-    per-node ball-size estimate in cents. Mirrors q_agg_hll_distinct:
-    integer-scaled denominator, one shared double constant, literal
-    ln table for the linear-counting branch.
-
-    ONE parsed SQL expression: the previous Column composition built a
-    64-element F.lit array per call (~130 py4j round trips, and this is
-    invoked 5x per hyperanf run, 10x per harmonic run).  All double
-    literals carry the ``D`` suffix — a bare decimal literal parses as
-    DECIMAL in Spark SQL, which would change the arithmetic; with D the
-    doubles are bit-identical to the old F.lit path, so results
-    hash-match (verified against the unchanged oracle)."""
-    denom = (
-        f"aggregate(regs, CAST(0 AS BIGINT), "
-        f"(acc, x) -> acc + shiftleft(CAST(1 AS BIGINT), {_HA_CAP} - x))"
+    per-node ball-size estimate in cents, one parsed SQL expression
+    (built 5x per hyperanf run, 10x per harmonic run)."""
+    denom_ne = (
+        f"aggregate(regs, CAST(0 AS BIGINT), (acc, x) -> acc + "
+        f"IF(x > 0, shiftleft(CAST(1 AS BIGINT), {hll.CAP} - x), 0))"
     )
     v_cnt = "aggregate(regs, 0, (acc, x) -> acc + IF(x > 0, 1, 0))"
-    raw = f"{_HA_NUM!r}D / {denom}"
-    v_empty = f"({_HA_M} - {v_cnt})"
-    lntab = "array(" + ", ".join(f"{x!r}D" for x in _HA_LNTAB) + ")"
-    return F.expr(
-        f"CAST(floor(100.0D * (CASE "
-        f"WHEN {v_empty} > 0 AND {raw} <= {2.5 * _HA_M!r}D "
-        f"THEN {float(_HA_M)!r}D * element_at({lntab}, {v_empty}) "
-        f"ELSE {raw} END)) AS BIGINT)"
-    )
+    est = hll.estimate_sql(denom_ne, v_cnt, _HA_M)
+    return F.expr(f"CAST(floor(100.0D * ({est})) AS BIGINT)")
 
 
 def _ha_nf_cents(sk: DataFrame) -> int:
@@ -1241,7 +1223,7 @@ def _ha_oracle() -> str:
     """Unrolled-CTE replay: long-format (node, bucket, rho) registers,
     K max-merge rounds along the same edge list, per-k integer-cents
     estimates, then the pct/effective-diameter readout."""
-    wb1 = _HA_WBITS + 1
+    wb1 = hll.WBITS + 1
     parts = [
         f"""
 WITH fwd AS MATERIALIZED ({_PR_EDGES_SQL}
@@ -1256,7 +1238,7 @@ WITH fwd AS MATERIALIZED ({_PR_EDGES_SQL}
          ('0x' || substr(md5(CAST(node AS VARCHAR)), 1, 2))::BIGINT
            % {_HA_M} AS bucket,
          least(CASE WHEN w = 0 THEN {wb1}
-                    ELSE {wb1} - length(bin(w)) END, {_HA_CAP}) AS rho
+                    ELSE {wb1} - length(bin(w)) END, {hll.CAP}) AS rho
   FROM (SELECT node,
                ('0x' || substr(md5(CAST(node AS VARCHAR)), 3, 14))::BIGINT
                  AS w
@@ -1273,22 +1255,11 @@ WITH fwd AS MATERIALIZED ({_PR_EDGES_SQL}
         )
 
     def est_sql(k: int) -> str:
-        d = (
-            f"(denom_ne + ({_HA_M} - v_cnt) * "
-            f"(CAST(1 AS BIGINT) << {_HA_CAP}))"
-        )
+        cents, sums = _ha_cents_duck(k)
         return f"""
   SELECT {k} AS k,
-         CAST(sum(CAST(floor(100 * CASE
-           WHEN ({_HA_M} - v_cnt) > 0
-                AND {_HA_NUM!r} / {d} <= {2.5 * _HA_M}
-           THEN {float(_HA_M)!r} * ({_HA_LNTAB_SQL})[{_HA_M} - v_cnt]
-           ELSE {_HA_NUM!r} / {d}
-         END) AS BIGINT)) AS BIGINT) AS nf_cents
-  FROM (SELECT node,
-               sum(CAST(1 AS BIGINT) << ({_HA_CAP} - rho)) AS denom_ne,
-               count(*) AS v_cnt
-        FROM r{k} GROUP BY node)"""
+         CAST(sum(CAST({cents} AS BIGINT)) AS BIGINT) AS nf_cents
+  {sums}"""
 
     union = "\n  UNION ALL".join(est_sql(k) for k in range(_HA_K + 1))
     parts.append(
@@ -1357,24 +1328,13 @@ def _hc_oracle() -> str:
     # the nf/pct readout is hyperanf's, not ours
     cut = base.index(", nf AS MATERIALIZED")
     parts = [base[:cut]]
-    d = (
-        f"(denom_ne + ({_HA_M} - v_cnt) * "
-        f"(CAST(1 AS BIGINT) << {_HA_CAP}))"
-    )
     for k in range(_HA_K + 1):
+        cents, sums = _ha_cents_duck(k)
         parts.append(
             f""", e{k} AS MATERIALIZED (
   SELECT node,
-         CAST(floor(100 * CASE
-           WHEN ({_HA_M} - v_cnt) > 0
-                AND {_HA_NUM!r} / {d} <= {2.5 * _HA_M}
-           THEN {float(_HA_M)!r} * ({_HA_LNTAB_SQL})[{_HA_M} - v_cnt]
-           ELSE {_HA_NUM!r} / {d}
-         END) AS BIGINT) AS cents
-  FROM (SELECT node,
-               sum(CAST(1 AS BIGINT) << ({_HA_CAP} - rho)) AS denom_ne,
-               count(*) AS v_cnt
-        FROM r{k} GROUP BY node))"""
+         CAST({cents} AS BIGINT) AS cents
+  {sums})"""
         )
     combo = " + ".join(
         f"(e{k}.cents - e{k - 1}.cents) * {_HC_W[k]}"

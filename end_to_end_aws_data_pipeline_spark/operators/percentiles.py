@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
+from end_to_end_aws_data_pipeline_spark.functions import hll
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 
@@ -537,45 +538,63 @@ def q_agg_percentiles_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # HyperLogLog with REPLAYABLE registers: an oracle-verifiable sketch
 # ---------------------------------------------------------------------------
 
-_HLL_P = 8  # 2^8 = 256 registers; standard error 1.04/sqrt(m) ~ 6.5%
-_HLL_M = 1 << _HLL_P
-_HLL_WBITS = 56  # md5 hex chars 3..16 -> 56-bit register payload
-_HLL_RHO_CAP = 48  # cap rho so 2^(cap - rho) sums stay deep inside int64
-# Flajolet et al. alpha_m for m >= 128, times m^2 * 2^cap, PRE-computed
-# in Python and injected verbatim into BOTH engines: Spark SQL folds
-# float literal arithmetic in DECIMAL (different answers), so the shared
-# constant must arrive as one IEEE double literal, not an expression.
-_HLL_NUM = (0.7213 / (1.0 + 1.079 / _HLL_M)) * _HLL_M * _HLL_M * float(1 << _HLL_RHO_CAP)
-# small-range (linear counting) correction WITHOUT libm divergence:
-# ln(m/V) has only m possible inputs, so the table is evaluated once in
-# Python and injected into both engines as literals — est = m*ln(m/V)
-# when V empty registers remain and the raw estimate <= 2.5m
-import math as _math
+_HLL_M = 256  # registers; standard error 1.04/sqrt(m) ~ 6.5%
 
-_HLL_LNTAB = [_math.log(_HLL_M / v) for v in range(1, _HLL_M + 1)]
-_HLL_LNTAB_SQL = "[" + ", ".join(repr(x) for x in _HLL_LNTAB) + "]"
 
-_HLL_ORACLE = f"""
+def _hll_est_duck(t: str, pad: str) -> str:
+    """DuckDB text of the estimate published to 2 digits, over the
+    columns ``{t}denom_ne`` and ``{t}v_cnt``; lines after the first are
+    indented by ``pad``."""
+    m, num = _HLL_M, repr(hll.num(_HLL_M))
+    tab = "[" + ", ".join(repr(x) for x in hll.lntab(m)) + "]"
+    den = f"""
+           ({t}denom_ne + ({m} - {t}v_cnt)
+            * (CAST(1 AS BIGINT) << {hll.CAP}))"""
+    est = f"""floor((CASE WHEN ({m} - {t}v_cnt) > 0 AND {num} /{den} <= {2.5 * m}
+      THEN {float(m)!r} * ({tab})[{m} - {t}v_cnt]
+      ELSE {num} /{den}
+      END) * 100 + 0.5) / 100"""
+    return est.replace("\n", "\n" + pad)
+
+
+def _hll_estimate(regs: DataFrame, *keys: str) -> DataFrame:
+    """``keys`` + ``hll``: the estimate per key over a long-format
+    register table (keys, bucket, m_j), published to 2 digits."""
+    agg = regs.groupBy(*keys).agg(
+        F.sum(
+            F.expr(f"shiftleft(CAST(1 AS BIGINT), {hll.CAP} - m_j)")
+        ).alias("denom_ne"),
+        F.count(F.lit(1)).alias("v_cnt"),
+    )
+    est = F.expr(hll.estimate_sql("denom_ne", "v_cnt", _HLL_M))
+    return agg.select(*keys, stable_round(est, 2).alias("hll"))
+
+
+# lineitem's per-row (l_returnflag, bucket, rho), replayed by both
+# l_partkey sketch oracles
+_HLL_RB_SQL = f"""
 WITH h AS (
   SELECT l_returnflag, l_partkey, md5(CAST(l_partkey AS VARCHAR)) AS hx
   FROM lineitem
 ), rb AS (
   SELECT l_returnflag,
          ('0x' || substr(hx, 1, 2))::BIGINT AS bucket,
-         least(CASE WHEN w = 0 THEN {_HLL_WBITS + 1}
-               ELSE {_HLL_WBITS + 1} - length(bin(w)) END,
-               {_HLL_RHO_CAP}) AS rho
+         least(CASE WHEN w = 0 THEN {hll.WBITS + 1}
+               ELSE {hll.WBITS + 1} - length(bin(w)) END,
+               {hll.CAP}) AS rho
   FROM (
     SELECT l_returnflag, hx,
            ('0x' || substr(hx, 3, 14))::BIGINT AS w
     FROM h
   )
-), regs AS (
+"""
+
+_HLL_ORACLE = _HLL_RB_SQL + f"""), regs AS (
   SELECT l_returnflag, bucket, max(rho) AS m_j
   FROM rb GROUP BY l_returnflag, bucket
 ), agg AS (
   SELECT l_returnflag,
-         sum(CAST(1 AS BIGINT) << ({_HLL_RHO_CAP} - m_j)) AS denom_ne,
+         sum(CAST(1 AS BIGINT) << ({hll.CAP} - m_j)) AS denom_ne,
          count(*) AS v_cnt
   FROM regs GROUP BY l_returnflag
 ), ex AS (
@@ -584,14 +603,7 @@ WITH h AS (
 )
 SELECT a.l_returnflag,
        ex.exact_parts,
-       floor((CASE WHEN ({_HLL_M} - a.v_cnt) > 0 AND {_HLL_NUM!r} /
-                  (a.denom_ne + ({_HLL_M} - a.v_cnt)
-                   * (CAST(1 AS BIGINT) << {_HLL_RHO_CAP})) <= {2.5 * _HLL_M}
-             THEN {float(_HLL_M)!r} * ({_HLL_LNTAB_SQL})[{_HLL_M} - a.v_cnt]
-             ELSE {_HLL_NUM!r} /
-                  (a.denom_ne + ({_HLL_M} - a.v_cnt)
-                   * (CAST(1 AS BIGINT) << {_HLL_RHO_CAP}))
-             END) * 100 + 0.5) / 100 AS hll_parts
+       {_hll_est_duck("a.", "       ")} AS hll_parts
 FROM agg a JOIN ex USING (l_returnflag)
 """
 
@@ -619,44 +631,17 @@ def q_agg_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin is asserted in tests/test_approx.py.
     """
     li = table(spark, sf_dir, "lineitem")
-    hx = F.md5(F.col("l_partkey").cast("string"))
-    bucket = F.conv(F.substring(hx, 1, 2), 16, 10).cast("long")
-    w = F.conv(F.substring(hx, 3, 14), 16, 10).cast("long")
-    rho = F.least(
-        F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-            F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
-        ),
-        F.lit(_HLL_RHO_CAP),
-    )
+    bucket, rho = hll.register_address(F.col("l_partkey"), _HLL_M)
     regs = li.select(
         "l_returnflag", bucket.alias("bucket"), rho.alias("rho")
     ).groupBy("l_returnflag", "bucket").agg(F.max("rho").alias("m_j"))
-    agg = regs.groupBy("l_returnflag").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")
-        ).alias("denom_ne"),
-        F.count(F.lit(1)).alias("v_cnt"),
-    )
     exact = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").cast("long").alias("exact_parts")
     )
-    denom = F.col("denom_ne") + (_HLL_M - F.col("v_cnt")) * F.lit(
-        1 << _HLL_RHO_CAP
-    ).cast("long")
-    raw = F.lit(_HLL_NUM) / denom
-    v_empty = (F.lit(_HLL_M) - F.col("v_cnt")).cast("int")
-    lntab = F.array(*[F.lit(x) for x in _HLL_LNTAB])
-    est = F.when(
-        (v_empty > 0) & (raw <= F.lit(2.5 * _HLL_M)),
-        F.lit(float(_HLL_M)) * F.element_at(lntab, v_empty),
-    ).otherwise(raw)
     return (
-        agg.join(exact, "l_returnflag")
-        .select(
-            "l_returnflag",
-            "exact_parts",
-            stable_round(est, 2).alias("hll_parts"),
-        )
+        _hll_estimate(regs, "l_returnflag")
+        .join(exact, "l_returnflag")
+        .select("l_returnflag", "exact_parts", F.col("hll").alias("hll_parts"))
     )
 
 
@@ -818,22 +803,7 @@ def q_agg_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HLL_MERGE_ORACLE = f"""
-WITH h AS (
-  SELECT l_returnflag, l_partkey, md5(CAST(l_partkey AS VARCHAR)) AS hx
-  FROM lineitem
-), rb AS (
-  SELECT l_returnflag,
-         ('0x' || substr(hx, 1, 2))::BIGINT AS bucket,
-         least(CASE WHEN w = 0 THEN {_HLL_WBITS + 1}
-               ELSE {_HLL_WBITS + 1} - length(bin(w)) END,
-               {_HLL_RHO_CAP}) AS rho
-  FROM (
-    SELECT l_returnflag, hx,
-           ('0x' || substr(hx, 3, 14))::BIGINT AS w
-    FROM h
-  )
-), group_regs AS (
+_HLL_MERGE_ORACLE = _HLL_RB_SQL + f"""), group_regs AS (
   SELECT l_returnflag, bucket, max(rho) AS m_j
   FROM rb GROUP BY l_returnflag, bucket
 ), merged_regs AS (
@@ -842,22 +812,15 @@ WITH h AS (
   SELECT bucket, max(rho) AS m_j FROM rb GROUP BY bucket
 ), est AS (
   SELECT which,
-         floor((CASE WHEN ({_HLL_M} - v_cnt) > 0 AND {_HLL_NUM!r} /
-                    (denom_ne + ({_HLL_M} - v_cnt)
-                     * (CAST(1 AS BIGINT) << {_HLL_RHO_CAP})) <= {2.5 * _HLL_M}
-               THEN {float(_HLL_M)!r} * ({_HLL_LNTAB_SQL})[{_HLL_M} - v_cnt]
-               ELSE {_HLL_NUM!r} /
-                    (denom_ne + ({_HLL_M} - v_cnt)
-                     * (CAST(1 AS BIGINT) << {_HLL_RHO_CAP}))
-               END) * 100 + 0.5) / 100 AS hll_parts
+         {_hll_est_duck("", "         ")} AS hll_parts
   FROM (
     SELECT 'merged' AS which,
-           sum(CAST(1 AS BIGINT) << ({_HLL_RHO_CAP} - m_j)) AS denom_ne,
+           sum(CAST(1 AS BIGINT) << ({hll.CAP} - m_j)) AS denom_ne,
            count(*) AS v_cnt
     FROM merged_regs
     UNION ALL
     SELECT 'direct',
-           sum(CAST(1 AS BIGINT) << ({_HLL_RHO_CAP} - m_j)),
+           sum(CAST(1 AS BIGINT) << ({hll.CAP} - m_j)),
            count(*)
     FROM direct_regs
   )
@@ -891,46 +854,18 @@ def q_agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the merge and the driver hash-checks all of it.
     """
     li = table(spark, sf_dir, "lineitem")
-    hx = F.md5(F.col("l_partkey").cast("string"))
-    bucket = F.conv(F.substring(hx, 1, 2), 16, 10).cast("long")
-    w = F.conv(F.substring(hx, 3, 14), 16, 10).cast("long")
-    rho = F.least(
-        F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-            F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
-        ),
-        F.lit(_HLL_RHO_CAP),
-    )
+    bucket, rho = hll.register_address(F.col("l_partkey"), _HLL_M)
     rb = li.select("l_returnflag", bucket.alias("bucket"), rho.alias("rho"))
     group_regs = rb.groupBy("l_returnflag", "bucket").agg(
         F.max("rho").alias("m_j")
     )
     merged_regs = group_regs.groupBy("bucket").agg(F.max("m_j").alias("m_j"))
     direct_regs = rb.groupBy("bucket").agg(F.max("rho").alias("m_j"))
-
-    def estimate(regs):
-        agg = regs.agg(
-            F.sum(
-                F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")
-            ).alias("denom_ne"),
-            F.count(F.lit(1)).alias("v_cnt"),
-        )
-        denom = F.col("denom_ne") + (_HLL_M - F.col("v_cnt")) * F.lit(
-            1 << _HLL_RHO_CAP
-        ).cast("long")
-        raw = F.lit(_HLL_NUM) / denom
-        v_empty = (F.lit(_HLL_M) - F.col("v_cnt")).cast("int")
-        lntab = F.array(*[F.lit(x) for x in _HLL_LNTAB])
-        est = F.when(
-            (v_empty > 0) & (raw <= F.lit(2.5 * _HLL_M)),
-            F.lit(float(_HLL_M)) * F.element_at(lntab, v_empty),
-        ).otherwise(raw)
-        return agg.select(stable_round(est, 2).alias("hll_parts"))
-
     exact = li.agg(
         F.countDistinct("l_partkey").cast("long").alias("exact_parts")
     )
-    m = estimate(merged_regs).withColumnRenamed("hll_parts", "hll_merged")
-    d = estimate(direct_regs).withColumnRenamed("hll_parts", "hll_direct")
+    m = _hll_estimate(merged_regs).withColumnRenamed("hll", "hll_merged")
+    d = _hll_estimate(direct_regs).withColumnRenamed("hll", "hll_direct")
     return (
         m.crossJoin(d)
         .crossJoin(exact)
@@ -1397,9 +1332,9 @@ WITH du AS (
 ), rb AS (
   SELECT day,
          ('0x' || substr(hx, 1, 2))::BIGINT AS bucket,
-         least(CASE WHEN w = 0 THEN {_HLL_WBITS + 1}
-               ELSE {_HLL_WBITS + 1} - length(bin(w)) END,
-               {_HLL_RHO_CAP}) AS rho
+         least(CASE WHEN w = 0 THEN {hll.WBITS + 1}
+               ELSE {hll.WBITS + 1} - length(bin(w)) END,
+               {hll.CAP}) AS rho
   FROM (SELECT day, hx, ('0x' || substr(hx, 3, 14))::BIGINT AS w FROM du)
 ), day_regs AS (
   SELECT day, bucket, max(rho) AS m_j FROM rb GROUP BY day, bucket
@@ -1411,7 +1346,7 @@ merged AS (
   GROUP BY d.day, r.bucket
 ), agg AS (
   SELECT tday,
-         sum(CAST(1 AS BIGINT) << ({_HLL_RHO_CAP} - m_j)) AS denom_ne,
+         sum(CAST(1 AS BIGINT) << ({hll.CAP} - m_j)) AS denom_ne,
          count(*) AS v_cnt
   FROM merged GROUP BY tday
 ), ex AS (
@@ -1423,14 +1358,7 @@ merged AS (
 )
 SELECT CAST(a.tday AS VARCHAR) AS day,
        ex.exact_users_7d,
-       floor((CASE WHEN ({_HLL_M} - a.v_cnt) > 0 AND {_HLL_NUM!r} /
-                  (a.denom_ne + ({_HLL_M} - a.v_cnt)
-                   * (CAST(1 AS BIGINT) << {_HLL_RHO_CAP})) <= {2.5 * _HLL_M}
-             THEN {float(_HLL_M)!r} * ({_HLL_LNTAB_SQL})[{_HLL_M} - a.v_cnt]
-             ELSE {_HLL_NUM!r} /
-                  (a.denom_ne + ({_HLL_M} - a.v_cnt)
-                   * (CAST(1 AS BIGINT) << {_HLL_RHO_CAP}))
-             END) * 100 + 0.5) / 100 AS hll_users_7d
+       {_hll_est_duck("a.", "       ")} AS hll_users_7d
 FROM agg a JOIN ex USING (tday)
 """
 
@@ -1456,15 +1384,7 @@ def q_window_rolling_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct this approximates at scale.
     """
     e = table(spark, sf_dir, "events")
-    hx = F.md5(F.col("user_id").cast("string"))
-    bucket = F.conv(F.substring(hx, 1, 2), 16, 10).cast("long")
-    w = F.conv(F.substring(hx, 3, 14), 16, 10).cast("long")
-    rho = F.least(
-        F.when(w == 0, F.lit(_HLL_WBITS + 1)).otherwise(
-            F.lit(_HLL_WBITS + 1) - F.length(F.bin(w))
-        ),
-        F.lit(_HLL_RHO_CAP),
-    )
+    bucket, rho = hll.register_address(F.col("user_id"), _HLL_M)
     du = e.select(
         F.col("ts").cast("date").alias("day"),
         "user_id",
@@ -1490,12 +1410,6 @@ def q_window_rolling_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tday", "bucket")
         .agg(F.max("m_j").alias("m_j"))
     )
-    agg = merged.groupBy("tday").agg(
-        F.sum(
-            F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_RHO_CAP} - m_j)")
-        ).alias("denom_ne"),
-        F.count(F.lit(1)).alias("v_cnt"),
-    )
     # exact twin for the in-result error check (cheap at any SF: the
     # (day,user) distinct is the same shuffle the exact query pays)
     exact = (
@@ -1514,22 +1428,13 @@ def q_window_rolling_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tday")
         .agg(F.count(F.lit(1)).cast("long").alias("exact_users_7d"))
     )
-    denom = F.col("denom_ne") + (_HLL_M - F.col("v_cnt")) * F.lit(
-        1 << _HLL_RHO_CAP
-    ).cast("long")
-    raw = F.lit(_HLL_NUM) / denom
-    v_empty = (F.lit(_HLL_M) - F.col("v_cnt")).cast("int")
-    lntab = F.array(*[F.lit(x) for x in _HLL_LNTAB])
-    est = F.when(
-        (v_empty > 0) & (raw <= F.lit(2.5 * _HLL_M)),
-        F.lit(float(_HLL_M)) * F.element_at(lntab, v_empty),
-    ).otherwise(raw)
     return (
-        agg.join(exact, "tday")
+        _hll_estimate(merged, "tday")
+        .join(exact, "tday")
         .select(
             F.col("tday").cast("string").alias("day"),
             "exact_users_7d",
-            stable_round(est, 2).alias("hll_users_7d"),
+            F.col("hll").alias("hll_users_7d"),
         )
     )
 

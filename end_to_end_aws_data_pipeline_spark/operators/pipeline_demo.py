@@ -422,30 +422,10 @@ def q_pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DSIR_TARGET,
         _dsir_lw,
     )
-    from end_to_end_aws_data_pipeline_spark.operators.text import (
-        _CLF_BIAS,
-        _CLF_BUCKET_MOD,
-    )
+    from end_to_end_aws_data_pipeline_spark.operators.text import clf_score
 
     docs = table(spark, sf_dir, "documents")
     w = F.split(F.col("text"), " ")
-    bigrams = F.expr(
-        "transform(sequence(1, size(w) - 1), "
-        "i -> concat(element_at(w, i), '_', element_at(w, i + 1)))"
-    )
-    score = F.lit(_CLF_BIAS) + F.coalesce(
-        F.aggregate(
-            bigrams,
-            F.lit(0).cast("long"),
-            lambda acc, x: acc
-            + (
-                F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
-                % _CLF_BUCKET_MOD
-                - 16
-            ),
-        ),
-        F.lit(0).cast("long"),
-    )
     # project the survivor persist down to what downstream consumers
     # read (guide §2.3, project early): the token array `w` carries the
     # text's information; caching `text` and the spent `score` beside
@@ -455,7 +435,7 @@ def q_pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (min 5.0 -> 4.2 s), results identical.
     kept = persisted(
         docs.select("doc_id", "lang", "n_chars", w.alias("w"))
-        .withColumn("score", score)
+        .withColumn("score", clf_score())
         .filter(F.col("score") > 0)
         .drop("score")
     )

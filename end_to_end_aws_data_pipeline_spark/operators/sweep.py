@@ -25,6 +25,13 @@ from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.cache import persisted
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
+from end_to_end_aws_data_pipeline_spark.functions.aggs import l2fp
+from end_to_end_aws_data_pipeline_spark.operators.rowpattern import (
+    ALTERNATION,
+    MATCH,
+    QUANTIFIED,
+    pattern_runs,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -753,10 +760,8 @@ _PSI_SPLIT = "2024-01-16"  # period A: days before; period B: from here on
 
 
 def _psi_oracle() -> str:
-    from end_to_end_aws_data_pipeline_spark.operators.curation import _l2fp
-
-    la = _l2fp("pa_ppm + 1").replace("{div}", "//")
-    lb = _l2fp("pb_ppm + 1").replace("{div}", "//")
+    la = l2fp("pa_ppm + 1").replace("{div}", "//")
+    lb = l2fp("pb_ppm + 1").replace("{div}", "//")
     return f"""
 WITH v AS (
   SELECT CAST(round(value * 100) AS BIGINT) AS cents,
@@ -816,8 +821,6 @@ def q_etl_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     The only full shuffle in the whole query is the rank pass; the bin
     histogram aggregate ships ≤10 rows per task.
     """
-    from end_to_end_aws_data_pipeline_spark.operators.curation import _l2fp
-
     e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     v = e.select(
         F.round(F.col("value") * 100).cast("long").alias("cents"),
@@ -857,8 +860,8 @@ def q_etl_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ca").cast("long").alias("na"),
         F.sum("cb").cast("long").alias("nb"),
     )
-    la = _l2fp("pa_ppm + 1").replace("{div}", "div")
-    lb = _l2fp("pb_ppm + 1").replace("{div}", "div")
+    la = l2fp("pa_ppm + 1").replace("{div}", "div")
+    lb = l2fp("pb_ppm + 1").replace("{div}", "div")
     return (
         cnt.crossJoin(F.broadcast(tot))
         .withColumn("pa_ppm", F.expr("ca * 1000000 div na"))
@@ -1793,35 +1796,19 @@ GROUP BY a.event_type, l.lag, den.den
 """
 
 
-@register("q_timeseries_acf", oracle=_ACF_ORACLE)
-def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation function per event type at lags 1..5
-    — the seasonality probe read before fitting any forecast (a weekly
-    cycle shows as an acf(7) spike, a trending series decays slowly).
-
-    Exactness at any scale: the series value is the daily MEAN in
-    integer cents (total_cents // count — an intensive quantity, so
-    deviations stay ~1e5 regardless of corpus size and every product
-    n·dev_a·dev_b fits int64 with ~9 digits of headroom at a 31-day
-    span); deviations are carried n-scaled (n·y − Σy, pure integers)
-    so no float mean ever enters, and the single division per
-    (type, lag) publishes through the floor stabilizer.
-
-    Scale shape: one corpus-sized combinable pass builds the daily
-    table; everything after — the lag self-join included — runs on the
-    calendar-bounded (type × day) table, constant-cost at any corpus
-    size. n_pairs = n − lag rows enter each lag's sum (complete pairs
-    only: the textbook biased-denominator ACF with Σ dev² over the
-    full series)."""
-    from end_to_end_aws_data_pipeline_spark.cache import persisted
-
-    e = table(spark, sf_dir, "events")
+def _daily_dev(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(dev, den)`` of each event type's daily series: the series
+    value ``y`` is the day's mean in integer cents, ``dev`` holds each
+    (event_type, day)'s n-scaled deviation ``dv = n·y − Σy`` (pure
+    integers, so no float mean enters), and ``den`` holds Σ dv² per
+    type."""
     # persisted: five downstream consumers (stats, deviations, the
     # denominator, and both lag-join sides) would each re-run the
     # corpus-sized pass — the consume-once lesson; the daily table
     # itself is calendar-bounded (type x day), trivially cacheable
     daily = persisted(
-        e.groupBy(
+        table(spark, sf_dir, "events")
+        .groupBy(
             "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
         )
         .agg(
@@ -1842,6 +1829,30 @@ def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     den = dev.groupBy("event_type").agg(
         F.sum(F.col("dv") * F.col("dv")).cast("long").alias("den")
     )
+    return dev, den
+
+
+@register("q_timeseries_acf", oracle=_ACF_ORACLE)
+def q_timeseries_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Autocorrelation function per event type at lags 1..5
+    — the seasonality probe read before fitting any forecast (a weekly
+    cycle shows as an acf(7) spike, a trending series decays slowly).
+
+    Exactness at any scale: the series value is the daily MEAN in
+    integer cents (total_cents // count — an intensive quantity, so
+    deviations stay ~1e5 regardless of corpus size and every product
+    n·dev_a·dev_b fits int64 with ~9 digits of headroom at a 31-day
+    span); deviations are carried n-scaled (n·y − Σy, pure integers)
+    so no float mean ever enters, and the single division per
+    (type, lag) publishes through the floor stabilizer.
+
+    Scale shape: one corpus-sized combinable pass builds the daily
+    table; everything after — the lag self-join included — runs on the
+    calendar-bounded (type × day) table, constant-cost at any corpus
+    size. n_pairs = n − lag rows enter each lag's sum (complete pairs
+    only: the textbook biased-denominator ACF with Σ dev² over the
+    full series)."""
+    dev, den = _daily_dev(spark, sf_dir)
     lags = spark.range(1, _ACF_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
     )
@@ -1938,29 +1949,7 @@ def q_timeseries_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; the pair×lag join runs on the calendar-bounded (type × day)
     table — |types|²·|days|·|lags| rows independent of corpus size —
     so the operator costs one scan + constant tail at 100 TB."""
-    daily = persisted(
-        table(spark, sf_dir, "events")
-        .groupBy(
-            "event_type", F.to_date(F.date_trunc("day", "ts")).alias("day")
-        )
-        .agg(
-            F.expr(
-                "sum(cast(round(value * 100) as bigint)) div count(*)"
-            ).alias("y")
-        )
-    )
-    st = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast("long").alias("s"),
-    )
-    dev = daily.join(st, "event_type").select(
-        "event_type",
-        "day",
-        (F.col("y") * F.col("n") - F.col("s")).alias("dv"),
-    )
-    den = dev.groupBy("event_type").agg(
-        F.sum(F.col("dv") * F.col("dv")).cast("long").alias("den")
-    )
+    dev, den = _daily_dev(spark, sf_dir)
     lags = spark.range(-_CCF_MAX_LAG, _CCF_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
     )
@@ -2319,57 +2308,42 @@ def q_agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pattern_run_ctx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared RLE prologue of the row-pattern family: events → per-user
-    maximal runs with lag/lead neighbour types (the composition every
-    batch pattern query builds its predicate over).
+def _pattern_stats(
+    spark: SparkSession, sf_dir: str, closes: Column, ok: Column, *diag: Column
+) -> DataFrame:
+    """Per-user match stats of the batch pattern family: the view runs
+    between a click and a run that ``closes`` are the candidates, the
+    ones where ``ok`` holds are the matches, and ``diag`` adds a query's
+    own diagnostic aggregates (over the candidates' ``ok`` and
+    ``lead_t``).
 
-    Both event-sized window passes use the SAME spec (partitionBy
-    user_id, orderBy ts, event_id), so the running run-index sum reuses
-    the change-flag pass's exchange AND sort. The previous shape ordered
-    the sum by a derived row_number, which Spark cannot prove equal to
-    the (ts, event_id) order, so every pattern query paid a second full
-    Sort of the event table (optimization guide §2.4: remove shuffles/
-    sorts outright). event_id is unique, so the total order — and with
-    it chg, run_idx, and every downstream row — is unchanged.
-    """
-    ev = table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type"
-    )
-    wu = W.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(
-            ~F.lag("event_type").over(wu).eqNullSafe(F.col("event_type")),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("chg"),
-    )
-    runs = (
-        flagged.withColumn("run_idx", F.sum("chg").over(wu))
-        .groupBy("user_id", "run_idx")
-        .agg(
-            F.min("event_type").alias("etype"),
-            F.count(F.lit(1)).cast("long").alias("run_len"),
-            F.min("ts").alias("run_start"),
-        )
-    )
-    wk = W.partitionBy("user_id").orderBy("run_idx")
-    return runs.select(
-        "user_id",
-        "etype",
-        "run_len",
-        "run_start",
-        F.lag("etype").over(wk).alias("prev_t"),
-        F.lead("etype").over(wk).alias("next_t"),
+    One shuffle on user_id serves all three window passes of
+    ``pattern_runs`` and the user-sized aggregate; state collapses from
+    events to runs before the pattern predicate."""
+    runs = pattern_runs(table(spark, sf_dir, "events"))
+    cand = runs.filter(
+        (F.col("etype") == "view") & (F.col("lag_t") == "click") & closes
+    ).select("user_id", "run_len", "run_start_us", "lead_t", ok.alias("ok"))
+    okl = F.when(F.col("ok"), F.col("run_len"))
+    return cand.groupBy("user_id").agg(
+        F.count(F.when(F.col("ok"), F.lit(1))).cast("long").alias("n_matches"),
+        F.coalesce(F.sum(okl), F.lit(0)).cast("long").alias("views_matched"),
+        F.coalesce(F.max(okl), F.lit(0)).cast("long").alias(
+            "longest_view_run"
+        ),
+        F.timestamp_micros(F.min(F.when(F.col("ok"), F.col("run_start_us"))))
+        .cast("string")
+        .alias("first_match_start"),
+        *diag,
     )
 
 
-_PATTERN_ORACLE = """
+def _rejected(name: str) -> Column:
+    return F.count(F.when(~F.col("ok"), F.lit(1))).cast("long").alias(name)
+
+
+# The RLE + lag/lead replay every batch pattern oracle starts from.
+_PATTERN_CTX_SQL = """
 WITH ev AS (
   SELECT user_id, ts, event_id, event_type,
          row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
@@ -2389,7 +2363,9 @@ WITH ev AS (
   SELECT *, lag(etype)  OVER (PARTITION BY user_id ORDER BY run_idx) AS prev_t,
             lead(etype) OVER (PARTITION BY user_id ORDER BY run_idx) AS next_t
   FROM runs
-), m AS (
+)"""
+
+PATTERN_ORACLE = _PATTERN_CTX_SQL + """, m AS (
   SELECT user_id, run_len, run_start
   FROM ctx WHERE etype = 'view' AND prev_t = 'click' AND next_t = 'purchase'
 )
@@ -2402,7 +2378,7 @@ FROM m GROUP BY user_id
 """
 
 
-@register("q_events_pattern_match", oracle=_PATTERN_ORACLE)
+@register("q_events_pattern_match", oracle=PATTERN_ORACLE)
 def q_events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATCH_RECOGNIZE-style row-pattern detection over the event log:
     per user (rows ordered by ts, event_id), find every maximal match of
@@ -2433,17 +2409,11 @@ def q_events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same partitioning reused by Catalyst), then one user-sized
     aggregate.
     """
-    ctx = _pattern_run_ctx(spark, sf_dir)
-    m = ctx.filter(
-        (F.col("etype") == "view")
-        & (F.col("prev_t") == "click")
-        & (F.col("next_t") == "purchase")
-    )
-    return m.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_matches"),
-        F.sum("run_len").cast("long").alias("views_matched"),
-        F.max("run_len").cast("long").alias("longest_view_run"),
-        F.min("run_start").cast("string").alias("first_match_start"),
+    return _pattern_stats(
+        spark,
+        sf_dir,
+        F.col("lead_t").isin(*MATCH.terminals),
+        MATCH.accepts(F.col("run_len"), F.col("lead_t")),
     )
 
 
@@ -2451,35 +2421,9 @@ def q_events_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantified row patterns: click view{n,m} purchase
 # ---------------------------------------------------------------------------
 
-# A{n,m} bounds for the quantified pattern family (batch + streaming
-# share them; the streaming form in streaming/pattern.py passes them to
-# the same RLE fold the unquantified stream uses)
-_PQ_LO = 2
-_PQ_HI = 4
-
-_PATTERN_Q_ORACLE = f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id, event_type,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN lag(event_type) OVER (PARTITION BY user_id ORDER BY rn)
-                      IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
-  FROM ev
-), numbered AS (
-  SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY rn) AS run_idx
-  FROM flagged
-), runs AS (
-  SELECT user_id, run_idx, min(event_type) AS etype,
-         CAST(count(*) AS BIGINT) AS run_len, min(ts) AS run_start
-  FROM numbered GROUP BY user_id, run_idx
-), ctx AS (
-  SELECT *, lag(etype)  OVER (PARTITION BY user_id ORDER BY run_idx) AS prev_t,
-            lead(etype) OVER (PARTITION BY user_id ORDER BY run_idx) AS next_t
-  FROM runs
-), mq AS (
+PATTERN_Q_ORACLE = _PATTERN_CTX_SQL + f""", mq AS (
   SELECT user_id, run_len, run_start,
-         run_len BETWEEN {_PQ_LO} AND {_PQ_HI} AS ok
+         run_len BETWEEN {QUANTIFIED.lo} AND {QUANTIFIED.hi} AS ok
   FROM ctx WHERE etype = 'view' AND prev_t = 'click' AND next_t = 'purchase'
 )
 SELECT user_id,
@@ -2494,7 +2438,7 @@ FROM mq GROUP BY user_id
 """
 
 
-@register("q_events_pattern_quantified", oracle=_PATTERN_Q_ORACLE)
+@register("q_events_pattern_quantified", oracle=PATTERN_Q_ORACLE)
 def q_events_pattern_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantified row pattern ``click view{{n,m}} purchase`` (SQL:2016
     bounded quantifier, n=2 m=4): identical RLE + lag/lead composition
@@ -2513,30 +2457,12 @@ def q_events_pattern_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle serves all windows, state collapses events→runs before the
     predicate, final aggregate is run-sized.
     """
-    ctx = _pattern_run_ctx(spark, sf_dir)
-    mq = ctx.filter(
-        (F.col("etype") == "view")
-        & (F.col("prev_t") == "click")
-        & (F.col("next_t") == "purchase")
-    ).select(
-        "user_id",
-        "run_len",
-        "run_start",
-        F.col("run_len").between(_PQ_LO, _PQ_HI).alias("ok"),
-    )
-    okl = F.when(F.col("ok"), F.col("run_len"))
-    return mq.groupBy("user_id").agg(
-        F.count(F.when(F.col("ok"), F.lit(1))).cast("long").alias("n_matches"),
-        F.coalesce(F.sum(okl), F.lit(0)).cast("long").alias("views_matched"),
-        F.coalesce(F.max(okl), F.lit(0)).cast("long").alias(
-            "longest_view_run"
-        ),
-        F.min(F.when(F.col("ok"), F.col("run_start")))
-        .cast("string")
-        .alias("first_match_start"),
-        F.count(F.when(~F.col("ok"), F.lit(1)))
-        .cast("long")
-        .alias("n_quant_rejected"),
+    return _pattern_stats(
+        spark,
+        sf_dir,
+        F.col("lead_t").isin(*QUANTIFIED.terminals),
+        QUANTIFIED.accepts(F.col("run_len"), F.col("lead_t")),
+        _rejected("n_quant_rejected"),
     )
 
 
@@ -2544,36 +2470,11 @@ def q_events_pattern_quantified(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pattern alternation: click view{n,m} (purchase|signup)
 # ---------------------------------------------------------------------------
 
-# terminal alphabet for the alternation family (batch + streaming share
-# it; streaming/pattern.py passes it into the same RLE fold the
-# quantified stream uses — an alphabet predicate, not new machinery)
-_PA_ALTS = ("purchase", "signup")
+_PA_ALTS_SQL = ", ".join(f"'{t}'" for t in ALTERNATION.terminals)
 
-_PA_ALTS_SQL = ", ".join(f"'{t}'" for t in _PA_ALTS)
-
-_PATTERN_ALT_ORACLE = f"""
-WITH ev AS (
-  SELECT user_id, ts, event_id, event_type,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events
-), flagged AS (
-  SELECT *, CASE WHEN lag(event_type) OVER (PARTITION BY user_id ORDER BY rn)
-                      IS DISTINCT FROM event_type THEN 1 ELSE 0 END AS chg
-  FROM ev
-), numbered AS (
-  SELECT *, sum(chg) OVER (PARTITION BY user_id ORDER BY rn) AS run_idx
-  FROM flagged
-), runs AS (
-  SELECT user_id, run_idx, min(event_type) AS etype,
-         CAST(count(*) AS BIGINT) AS run_len, min(ts) AS run_start
-  FROM numbered GROUP BY user_id, run_idx
-), ctx AS (
-  SELECT *, lag(etype)  OVER (PARTITION BY user_id ORDER BY run_idx) AS prev_t,
-            lead(etype) OVER (PARTITION BY user_id ORDER BY run_idx) AS next_t
-  FROM runs
-), ma AS (
+PATTERN_ALT_ORACLE = _PATTERN_CTX_SQL + f""", ma AS (
   SELECT user_id, run_len, run_start, next_t,
-         (run_len BETWEEN {_PQ_LO} AND {_PQ_HI})
+         (run_len BETWEEN {ALTERNATION.lo} AND {ALTERNATION.hi})
            AND next_t IN ({_PA_ALTS_SQL}) AS ok
   FROM ctx
   WHERE etype = 'view' AND prev_t = 'click' AND next_t IS NOT NULL
@@ -2594,7 +2495,7 @@ FROM ma GROUP BY user_id
 """
 
 
-@register("q_events_pattern_alternation", oracle=_PATTERN_ALT_ORACLE)
+@register("q_events_pattern_alternation", oracle=PATTERN_ALT_ORACLE)
 def q_events_pattern_alternation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -2616,44 +2517,19 @@ def q_events_pattern_alternation(
     Scale shape: unchanged — one user_id shuffle serves all windows,
     state collapses events→runs before the predicate, final aggregate
     is run-sized."""
-    ctx = _pattern_run_ctx(spark, sf_dir)
-    ma = ctx.filter(
-        (F.col("etype") == "view")
-        & (F.col("prev_t") == "click")
-        & F.col("next_t").isNotNull()
-    ).select(
-        "user_id",
-        "run_len",
-        "run_start",
-        "next_t",
-        (
-            F.col("run_len").between(_PQ_LO, _PQ_HI)
-            & F.col("next_t").isin(*_PA_ALTS)
-        ).alias("ok"),
-    )
-    okl = F.when(F.col("ok"), F.col("run_len"))
-    return ma.groupBy("user_id").agg(
-        F.count(F.when(F.col("ok"), F.lit(1))).cast("long").alias("n_matches"),
-        F.coalesce(F.sum(okl), F.lit(0)).cast("long").alias("views_matched"),
-        F.coalesce(F.max(okl), F.lit(0)).cast("long").alias(
-            "longest_view_run"
-        ),
-        F.min(F.when(F.col("ok"), F.col("run_start")))
-        .cast("string")
-        .alias("first_match_start"),
-        F.count(
-            F.when(F.col("ok") & (F.col("next_t") == "purchase"), F.lit(1))
-        )
+    ok = F.col("ok")
+    return _pattern_stats(
+        spark,
+        sf_dir,
+        F.col("lead_t").isNotNull(),
+        ALTERNATION.accepts(F.col("run_len"), F.col("lead_t")),
+        F.count(F.when(ok & (F.col("lead_t") == "purchase"), F.lit(1)))
         .cast("long")
         .alias("n_branch_purchase"),
-        F.count(
-            F.when(F.col("ok") & (F.col("next_t") == "signup"), F.lit(1))
-        )
+        F.count(F.when(ok & (F.col("lead_t") == "signup"), F.lit(1)))
         .cast("long")
         .alias("n_branch_signup"),
-        F.count(F.when(~F.col("ok"), F.lit(1)))
-        .cast("long")
-        .alias("n_alt_rejected"),
+        _rejected("n_alt_rejected"),
     )
 
 

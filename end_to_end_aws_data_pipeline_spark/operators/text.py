@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, spread, table
-from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
+from end_to_end_aws_data_pipeline_spark.functions.aggs import l2fp, stable_round
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 _STOPWORDS = ("the", "a", "of", "and")
@@ -945,6 +945,28 @@ GROUP BY source
 """
 
 
+def clf_score() -> Column:
+    """The hashed linear classifier's score of the token array ``w``:
+    bias + the md5-derived weight of each token bigram."""
+    bigrams = F.expr(
+        "transform(sequence(1, size(w) - 1), "
+        "i -> concat(element_at(w, i), '_', element_at(w, i + 1)))"
+    )
+    return F.lit(_CLF_BIAS) + F.coalesce(
+        F.aggregate(
+            bigrams,
+            F.lit(0).cast("long"),
+            lambda acc, x: acc
+            + (
+                F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
+                % _CLF_BUCKET_MOD
+                - 16
+            ),
+        ),
+        F.lit(0).cast("long"),
+    )
+
+
 @register("q_text_classifier", oracle=_CLF_ORACLE)
 def q_text_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality filtering with a hashed linear classifier —
@@ -973,25 +995,8 @@ def q_text_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = table(spark, sf_dir, "documents")
     w = F.split(F.col("text"), " ")
-    bigrams = F.expr(
-        "transform(sequence(1, size(w) - 1), "
-        "i -> concat(element_at(w, i), '_', element_at(w, i + 1)))"
-    )
-    score = F.lit(_CLF_BIAS) + F.coalesce(
-        F.aggregate(
-            bigrams,
-            F.lit(0).cast("long"),
-            lambda acc, x: acc
-            + (
-                F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
-                % _CLF_BUCKET_MOD
-                - 16
-            ),
-        ),
-        F.lit(0).cast("long"),
-    )
     scored = d.select("doc_id", "source", w.alias("w")).select(
-        "doc_id", "source", score.alias("score")
+        "doc_id", "source", clf_score().alias("score")
     )
     return scored.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -1014,12 +1019,10 @@ _KL_B = 64  # hashed token buckets (shared recipe with q_curation_dsir)
 def _kl_lw(div: str) -> str:
     """Fixed-point log2 of the smoothed source/corpus probability
     ratio for one bucket: L(cs+1) + L(n+B) - L(c+1) - L(ns+B)."""
-    from end_to_end_aws_data_pipeline_spark.operators.curation import _l2fp
-
-    s = _l2fp("cs + 1")
-    g = _l2fp("c + 1")
-    ns = _l2fp(f"ns + {_KL_B}")
-    n = _l2fp(f"n + {_KL_B}")
+    s = l2fp("cs + 1")
+    g = l2fp("c + 1")
+    ns = l2fp(f"ns + {_KL_B}")
+    n = l2fp(f"n + {_KL_B}")
     return f"({s} + {n} - {g} - {ns})".replace("{div}", div)
 
 
@@ -1841,10 +1844,8 @@ _ZIPF_TOP = 64  # fit over the head of the distribution
 
 
 def _zipf_oracle() -> str:
-    from end_to_end_aws_data_pipeline_spark.operators.curation import _l2fp
-
-    lx = _l2fp("rk").replace("{div}", "//")
-    ly = _l2fp("freq").replace("{div}", "//")
+    lx = l2fp("rk").replace("{div}", "//")
+    ly = l2fp("freq").replace("{div}", "//")
     return f"""
 WITH tf AS (
   SELECT t.t AS tok, CAST(count(*) AS BIGINT) AS freq
@@ -1896,8 +1897,6 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    from end_to_end_aws_data_pipeline_spark.operators.curation import _l2fp
-
     d = table(spark, sf_dir, "documents")
     tf = (
         d.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
@@ -1916,8 +1915,8 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(W.orderBy(F.col("freq").desc(), "tok")),
     )
     pts = ranked.select(
-        F.expr(_l2fp("rk").replace("{div}", "div")).cast("long").alias("x"),
-        F.expr(_l2fp("freq").replace("{div}", "div")).cast("long").alias("y"),
+        F.expr(l2fp("rk").replace("{div}", "div")).cast("long").alias("x"),
+        F.expr(l2fp("freq").replace("{div}", "div")).cast("long").alias("y"),
     )
     m = pts.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1944,23 +1943,15 @@ def q_text_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # character-entropy quality signal (fixed-point, cross-engine exact)
 # ---------------------------------------------------------------------------
 
-def _ent_l2fp(x: str) -> str:
-    """Fixed-point 16*log2 for x >= 1 — same construction as
-    curation._l2fp (shared SQL text, ``{div}`` spelled per engine);
-    worst-case error ~0.149 bit (interpolation + 1/16 quantization)."""
-    e = f"(length(bin({x})) - 1)"
-    return f"(16 * {e} + ({x}) * 16 {{div}} (CAST(1 AS BIGINT) << {e}) - 16)"
-
-
 def _ent_expr(div: str) -> str:
     """Entropy in 1/16-bit units from per-char counts:
     H*16 = L(N) - (Σ n_c·L(n_c)) div N, all-integer."""
-    return f"({_ent_l2fp('n_total')} - s_nl {{div}} n_total)".replace(
+    return f"({l2fp('n_total')} - s_nl {{div}} n_total)".replace(
         "{div}", div
     )
 
 
-_ENT_L_NC_DUCK = _ent_l2fp("n_c").replace("{div}", "//")
+_ENT_L_NC_DUCK = l2fp("n_c").replace("{div}", "//")
 
 _ENTROPY_ORACLE = f"""
 WITH ch AS (
@@ -2007,7 +1998,7 @@ def q_text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = ch.groupBy("doc_id", "c").agg(
         F.count(F.lit(1)).cast("long").alias("n_c")
     )
-    l_nc = F.expr(_ent_l2fp("n_c").replace("{div}", " div "))
+    l_nc = F.expr(l2fp("n_c").replace("{div}", " div "))
     doc = hist.groupBy("doc_id").agg(
         F.sum("n_c").cast("long").alias("n_total"),
         F.count(F.lit(1)).cast("long").alias("n_distinct"),
@@ -2032,10 +2023,8 @@ _COLL_TOP = 25
 
 
 def _coll_oracle() -> str:
-    from end_to_end_aws_data_pipeline_spark.operators.curation import _l2fp
-
     pmi = (
-        f"({_l2fp('cab')} + {_l2fp('n')} - {_l2fp('ca')} - {_l2fp('cb')})"
+        f"({l2fp('cab')} + {l2fp('n')} - {l2fp('ca')} - {l2fp('cb')})"
     ).replace("{div}", "//")
     return f"""
 WITH toks AS (
@@ -2073,7 +2062,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind phrase-vocabulary induction for tokenizers.
 
     PMI = log2(P(ab) / (P(a)P(b))) is scored as the same 4-fractional-
-    bit integer log2 used by DSIR/KL/Zipf (curation._l2fp): pmi_fp =
+    bit integer log2 used by DSIR/KL/Zipf (aggs.l2fp): pmi_fp =
     L(cab) + L(N) - L(ca) - L(cb). Pure integer in both engines — a
     float log would make the top-k boundary engine-dependent.
 
@@ -2082,8 +2071,6 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair table against unigram counts, then TakeOrdered for the global
     top-k — no corpus-sized window anywhere.
     """
-    from end_to_end_aws_data_pipeline_spark.operators.curation import _l2fp
-
     d = table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
     toks = d.select(F.explode(words).alias("w"))
@@ -2107,7 +2094,7 @@ def q_text_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ua = uni.select(F.col("w").alias("w1"), F.col("c").alias("ca"))
     ub = uni.select(F.col("w").alias("w2"), F.col("c").alias("cb"))
     pmi = (
-        f"({_l2fp('cab')} + {_l2fp('n')} - {_l2fp('ca')} - {_l2fp('cb')})"
+        f"({l2fp('cab')} + {l2fp('n')} - {l2fp('ca')} - {l2fp('cb')})"
     ).replace("{div}", "div")
     scored = (
         pc.join(ua, "w1")

@@ -37,6 +37,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema
+from end_to_end_aws_data_pipeline_spark.operators.rowpattern import (
+    ALTERNATION,
+    MATCH,
+    QUANTIFIED,
+    Pattern,
+    pattern_runs,
+)
+from end_to_end_aws_data_pipeline_spark.operators.sweep import (
+    PATTERN_ALT_ORACLE,
+    PATTERN_ORACLE,
+    PATTERN_Q_ORACLE,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 from end_to_end_aws_data_pipeline_spark.streaming.store import (
     drain,
@@ -215,15 +227,7 @@ def final_matches(spark: SparkSession, sink_dirs: list[str]) -> DataFrame:
     )
 
 
-def _pattern_oracle() -> str:
-    from end_to_end_aws_data_pipeline_spark.operators.sweep import (
-        _PATTERN_ORACLE,
-    )
-
-    return _PATTERN_ORACLE
-
-
-@register("q_stream_pattern_match", oracle=_pattern_oracle())
+@register("q_stream_pattern_match", oracle=PATTERN_ORACLE)
 def q_stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MATCH_RECOGNIZE executed for real inside the gate: the
     events table arrives as 4 time-ordered micro-batches, per-user run
@@ -265,83 +269,16 @@ _RLE_STATE_SCHEMA = (
 )
 
 
-def _batch_runs(bdf: DataFrame) -> DataFrame:
-    """Run-length encode one micro-batch per user, entirely JVM-side:
-    the same chg-flag + running-sum composition as the batch operator,
-    scoped to the batch's rows, plus each run's in-batch neighbours.
-
-    Both event-sized window passes share ONE spec (user_id, ordered by
-    us, event_id), so the running run-index sum reuses the change-flag
-    pass's exchange and sort — the derived-row_number ordering the
-    batch family also dropped cost a second full Sort of the batch per
-    micro-batch (guide §2.4); event_id is unique so the total order and
-    every downstream row are unchanged."""
-    from pyspark.sql import Window as W
-
-    from end_to_end_aws_data_pipeline_spark.catalog import normalize_event_ts
-
-    ev = normalize_event_ts(bdf).select(
-        "user_id",
-        F.unix_micros("ts").alias("us"),
-        "event_id",
-        "event_type",
-    )
-    wu = W.partitionBy("user_id").orderBy("us", "event_id")
-    flagged = ev.select(
-        "user_id",
-        "us",
-        "event_id",
-        "event_type",
-        F.when(
-            ~F.lag("event_type").over(wu).eqNullSafe(F.col("event_type")),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("chg"),
-    )
-    # ROWS frame pinned explicitly: the default RANGE frame treats
-    # (us, event_id) ties as peers, and while event_id is unique in a
-    # clean batch, an at-least-once replay can deliver duplicate rows —
-    # RANGE would then merge runs that unique-row ordering keeps
-    # distinct. ROWS keeps the same exchange + sort (same window spec),
-    # so the plan shape is unchanged.
-    runs = (
-        flagged.withColumn(
-            "idx",
-            F.sum("chg").over(
-                wu.rowsBetween(W.unboundedPreceding, W.currentRow)
-            ),
-        )
-        .groupBy("user_id", "idx")
-        .agg(
-            F.min("event_type").alias("etype"),
-            F.count(F.lit(1)).cast("long").alias("run_len"),
-            F.min("us").alias("run_start_us"),
-        )
-    )
-    wk = W.partitionBy("user_id").orderBy("idx")
-    return runs.select(
-        "user_id",
-        "idx",
-        "etype",
-        "run_len",
-        "run_start_us",
-        F.lag("etype").over(wk).alias("lag_t"),
-        F.lead("etype").over(wk).alias("lead_t"),
-    )
-
-
 def run_pattern_stream_rle(
     spark: SparkSession,
     staged: str,
     store: str,
     ckpt: str | None = None,
     stop_after_batches: int | None = None,
-    len_lo: int | None = None,
-    len_hi: int | None = None,
-    terminals: tuple[str, ...] = ("purchase",),
+    spec: Pattern = MATCH,
 ) -> None:
-    """Drain the staged chunks through the JVM-RLE pattern fold.
+    """Drain the staged chunks through the JVM-RLE fold of pattern
+    ``spec``.
 
     Each micro-batch: RLE the batch per user (windows + one aggregate,
     no Python in the row path), join the previous batch's state table,
@@ -370,7 +307,7 @@ def run_pattern_stream_rle(
     )
 
     def upd(bdf: DataFrame, bid: int) -> None:
-        runs = _batch_runs(bdf)
+        runs = pattern_runs(bdf)
         st = read_prev(spark, store, bid, _RLE_STATE_SCHEMA)
         j = runs.join(st, "user_id", "left")
         cont = (F.col("idx") == 1) & F.col("open_t").eqNullSafe(
@@ -386,27 +323,16 @@ def run_pattern_stream_rle(
             F.col("idx") == 1,
             F.when(cont, F.col("prev_t")).otherwise(F.col("open_t")),
         ).otherwise(F.col("lag_t"))
-        # bounded quantifier view{lo,hi}: one more predicate on the
-        # EFFECTIVE run length (batch-spanning runs accumulate into
-        # eff_len / open_len before the test, so the bound applies to
-        # the maximal run exactly as in the batch composition)
-        def _qlen(col):
-            if len_lo is None and len_hi is None:
-                return F.lit(True)
-            return col.between(
-                len_lo if len_lo is not None else 1,
-                len_hi if len_hi is not None else (1 << 62),
-            )
-
-        # alternation (B|C) over the closing symbol is an ALPHABET
-        # predicate on the neighbour run's type — same compilation as
-        # the batch composition, no new state or machinery
+        # the pattern's length bound tests the EFFECTIVE run length
+        # (batch-spanning runs accumulate into eff_len / open_len first,
+        # so it applies to the maximal run exactly as in the batch
+        # composition), and its alternation is an alphabet predicate on
+        # the closing run's type — no new state or machinery
         run_match = (
             F.col("lead_t").isNotNull()
             & (F.col("etype") == "view")
             & (eff_prev == "click")
-            & F.col("lead_t").isin(*terminals)
-            & _qlen(eff_len)
+            & spec.accepts(eff_len, F.col("lead_t"))
         )
         # the stored open run, closed by the batch's first run
         boundary = (
@@ -414,8 +340,7 @@ def run_pattern_stream_rle(
             & ~cont
             & (F.col("open_t") == "view")
             & (F.col("prev_t") == "click")
-            & F.col("etype").isin(*terminals)
-            & _qlen(F.col("open_len"))
+            & spec.accepts(F.col("open_len"), F.col("etype"))
         )
         e = j.select(
             "user_id",
@@ -527,7 +452,34 @@ def rle_final_matches(spark: SparkSession, store: str) -> DataFrame:
     )
 
 
-@register("q_stream_pattern_match_rle", oracle=_pattern_oracle())
+def _rle_query(
+    spark: SparkSession, sf_dir: str, tag: str, spec: Pattern
+) -> DataFrame:
+    """Stage the events, drain them through the JVM-RLE fold of
+    ``spec`` into a fresh store dir ``tag``, and read the matches."""
+    from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
+
+    ensure_runtime_confs(spark)
+    staged = staged_time_dir(os.path.join(sf_dir, "events.parquet"))
+    store = fresh_run_dir(os.path.dirname(staged), tag)
+    run_pattern_stream_rle(spark, staged, store, spec=spec)
+    return rle_final_matches(spark, store)
+
+
+def _stream_oracle(batch: str) -> str:
+    """A batch pattern oracle projected to the stream's shape: the
+    stream emits only users with at least one accepted match and
+    carries none of the batch form's diagnostics (rejected candidates,
+    branch breakdown): the state fold tracks exactly the five published
+    counters, so every stream pattern form is schema-identical."""
+    return (
+        "SELECT user_id, n_matches, views_matched, longest_view_run, "
+        "first_match_start FROM (" + batch + ") "
+        "WHERE n_matches > 0"
+    )
+
+
+@register("q_stream_pattern_match_rle", oracle=PATTERN_ORACLE)
 def q_stream_pattern_match_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MATCH_RECOGNIZE, scale path: the same time-ordered
     micro-batches and run-boundary state as q_stream_pattern_match,
@@ -549,32 +501,10 @@ def q_stream_pattern_match_rle(spark: SparkSession, sf_dir: str) -> DataFrame:
     process reaps (fresh_run_dir) — execute the result before
     re-invoking; holding two successive lazy results is not supported.
     """
-    from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    staged = staged_time_dir(os.path.join(sf_dir, "events.parquet"))
-    store = fresh_run_dir(os.path.dirname(staged), "pattern_rle")
-    run_pattern_stream_rle(spark, staged, store)
-    return rle_final_matches(spark, store)
+    return _rle_query(spark, sf_dir, "pattern_rle", MATCH)
 
 
-def _pattern_q_stream_oracle() -> str:
-    """The quantified batch oracle, projected to the stream's shape:
-    the stream emits only users with at least one accepted match and
-    carries no rejected-candidate counter (that diagnostic is the
-    batch form's)."""
-    from end_to_end_aws_data_pipeline_spark.operators.sweep import (
-        _PATTERN_Q_ORACLE,
-    )
-
-    return (
-        "SELECT user_id, n_matches, views_matched, longest_view_run, "
-        "first_match_start FROM (" + _PATTERN_Q_ORACLE + ") "
-        "WHERE n_matches > 0"
-    )
-
-
-@register("q_stream_pattern_quantified", oracle=_pattern_q_stream_oracle())
+@register("q_stream_pattern_quantified", oracle=_stream_oracle(PATTERN_Q_ORACLE))
 def q_stream_pattern_quantified(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -592,39 +522,10 @@ def q_stream_pattern_quantified(
     this query in the same process — the next invocation reaps this
     one's store dir (fresh_run_dir contract).
     """
-    from end_to_end_aws_data_pipeline_spark.operators.sweep import (
-        _PQ_HI,
-        _PQ_LO,
-    )
-    from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    staged = staged_time_dir(os.path.join(sf_dir, "events.parquet"))
-    store = fresh_run_dir(os.path.dirname(staged), "pattern_q_rle")
-    run_pattern_stream_rle(
-        spark, staged, store, len_lo=_PQ_LO, len_hi=_PQ_HI
-    )
-    return rle_final_matches(spark, store)
+    return _rle_query(spark, sf_dir, "pattern_q_rle", QUANTIFIED)
 
 
-def _pattern_alt_stream_oracle() -> str:
-    """The alternation batch oracle, projected to the stream's shape:
-    users with at least one accepted match, without the batch form's
-    branch-breakdown and rejected-candidate diagnostics (the state
-    fold tracks exactly the five published counters, so the stream
-    stays schema-identical to the other stream pattern forms)."""
-    from end_to_end_aws_data_pipeline_spark.operators.sweep import (
-        _PATTERN_ALT_ORACLE,
-    )
-
-    return (
-        "SELECT user_id, n_matches, views_matched, longest_view_run, "
-        "first_match_start FROM (" + _PATTERN_ALT_ORACLE + ") "
-        "WHERE n_matches > 0"
-    )
-
-
-@register("q_stream_pattern_alternation", oracle=_pattern_alt_stream_oracle())
+@register("q_stream_pattern_alternation", oracle=_stream_oracle(PATTERN_ALT_ORACLE))
 def q_stream_pattern_alternation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -643,22 +544,4 @@ def q_stream_pattern_alternation(
     this query in the same process — the next invocation reaps this
     one's store dir (fresh_run_dir contract).
     """
-    from end_to_end_aws_data_pipeline_spark.operators.sweep import (
-        _PA_ALTS,
-        _PQ_HI,
-        _PQ_LO,
-    )
-    from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
-
-    ensure_runtime_confs(spark)
-    staged = staged_time_dir(os.path.join(sf_dir, "events.parquet"))
-    store = fresh_run_dir(os.path.dirname(staged), "pattern_a_rle")
-    run_pattern_stream_rle(
-        spark,
-        staged,
-        store,
-        len_lo=_PQ_LO,
-        len_hi=_PQ_HI,
-        terminals=_PA_ALTS,
-    )
-    return rle_final_matches(spark, store)
+    return _rle_query(spark, sf_dir, "pattern_a_rle", ALTERNATION)

@@ -189,3 +189,28 @@ def test_hll_replayable_accuracy(spark):
         assert len(rows) == 3
         for r in rows:
             assert abs(r.hll_parts - r.exact_parts) / r.exact_parts <= 0.15
+
+
+def test_shared_hll_constants_reproduce_both_sketches():
+    """The one replayable-HLL module reproduces, bit for bit, the
+    constants its two former copies injected into Spark and DuckDB:
+    HyperANF's m = 64 sketch (small-m alpha 0.709) and the m = 256
+    distinct/merge/rolling sketches (alpha formula). The ln tables are
+    pinned by the md5 of their repr, the text the oracles embed."""
+    import hashlib
+
+    from end_to_end_aws_data_pipeline_spark.functions import hll
+
+    assert (hll.WBITS, hll.CAP) == (56, 48)
+    assert repr(hll.num(64)) == "8.174213467662545e+17"
+    assert repr(hll.num(256)) == "1.3249790702834051e+19"
+    for m, digest, first, last_nonzero in (
+        (64, "89af22d1082086ac866b7009d2009e93",
+         "4.1588830833596715", "0.015748356968139112"),
+        (256, "f3de8ec4b020d9c5699fef301eef47ae",
+         "5.545177444479562", "0.003913899321136315"),
+    ):
+        tab = hll.lntab(m)
+        assert len(tab) == m and tab[-1] == 0.0
+        assert (repr(tab[0]), repr(tab[-2])) == (first, last_nonzero)
+        assert hashlib.md5(repr(tab).encode()).hexdigest() == digest

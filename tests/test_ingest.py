@@ -69,9 +69,16 @@ def test_infer_header_only_graceful():
 
 def test_read_csv_reference_policy(spark, tmp_path):
     p = _write(tmp_path, "20250101_000000", "t.csv", "Id,Name,Score\n1,amy,9.5\n2,bob,8.0\n")
-    df = read_csv_with_inferred_schema(spark, p, policy="reference")
+    df = read_csv_with_inferred_schema(spark, p)
     assert dict(df.dtypes) == {"Id": "bigint", "Name": "string", "Score": "double"}
     assert df.count() == 2
+
+
+def test_pipeline_rejects_other_schema_policies(spark, tmp_path):
+    """First-row inference is the only policy: any other name is an
+    error, not a silent switch to Spark's all-row inference."""
+    with pytest.raises(ValueError, match="schema_policy 'native'"):
+        IngestPipeline(spark, str(tmp_path), schema_policy="native")
 
 
 # ---------------------------------------------------------------------------

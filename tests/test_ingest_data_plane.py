@@ -51,7 +51,7 @@ def test_csv_head_read_on_driver(spark, tmp_path, name):
     building the DataFrame launches no Spark job."""
     path = tmp_path / name
     path.write_bytes(_HEADS[name])
-    df, n_jobs = _jobs(spark, lambda: read_csv_with_inferred_schema(spark, str(path), "reference"))
+    df, n_jobs = _jobs(spark, lambda: read_csv_with_inferred_schema(spark, str(path)))
     assert n_jobs == 0
     assert df.schema == _text_head_schema(spark, str(path))
     if name == "header_only.csv":
@@ -65,7 +65,7 @@ def test_csv_head_of_a_directory(spark, tmp_path):
     """A directory (not one file) reads its head through the text
     datasource, as before."""
     (tmp_path / "a.csv").write_text("Id,Name\n1,amy\n")
-    df = read_csv_with_inferred_schema(spark, str(tmp_path), "reference")
+    df = read_csv_with_inferred_schema(spark, str(tmp_path))
     assert df.schema == _text_head_schema(spark, str(tmp_path))
     assert [tuple(r) for r in df.collect()] == [(1, "amy")]
 
@@ -175,7 +175,7 @@ def test_audit_payload_matches_standalone_audit(spark, tmp_path, monkeypatch):
     reports = [e.payload for e in events if e.kind == "null_rows"]
     assert len(reports) == 3
     for payload, path in zip(reports, [p for p, (_, bad) in zip(paths, shapes) if bad]):
-        df = read_csv_with_inferred_schema(spark, path, "reference")
+        df = read_csv_with_inferred_schema(spark, path)
         want = null_audit(df)
         assert payload["n_rows"] == want.n_rows
         assert payload["n_bad_rows"] == want.n_bad_rows
@@ -218,6 +218,6 @@ def test_audit_when_no_row_reaches_the_merge(spark, tmp_path, partition_by, onto
         pipe.ingest_file(str(first))
     res = pipe.ingest_file(str(folder / "T.csv"))
     assert (res.status, res.n_rows_written) == ("loaded", int(onto_table))
-    df = read_csv_with_inferred_schema(spark, str(folder / "T.csv"), "reference")
+    df = read_csv_with_inferred_schema(spark, str(folder / "T.csv"))
     assert res.audit == null_audit(df)
     assert res.audit.n_rows == text.count("\n") - 1

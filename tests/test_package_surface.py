@@ -80,8 +80,8 @@ SEAMS = {
         "bytes through the extended protocol with it"
     ),
     "ingest/pipeline.py::IngestPipeline.__init__(schema_policy)": (
-        "perfbench/workloads.py passes it by keyword (as its default); it "
-        "folds when that file next changes"
+        "perfbench/workloads.py passes it by keyword; any value but the "
+        "default raises, and it folds when that file next changes"
     ),
     "operators/dedup.py::connected_components(local_max_edges)": (
         "0 forces the distributed path on a test-sized graph"

@@ -947,7 +947,7 @@ def test_l2hi_worst_case_and_mi_float_agreement(spark):
     """The 64-segment fixed-point log2 stays within 1e-4 bit of float
     log2 across octaves and random inputs, and the MI query agrees
     with the float computation to the same order — the property the
-    coarse _l2fp could NOT deliver for a near-independence MI."""
+    coarse l2fp could NOT deliver for a near-independence MI."""
     import math
     import random
     from collections import defaultdict

@@ -99,31 +99,57 @@ class TestFusedPercentileBucketing:
 
 
 class TestRleRowsFramePin:
+    """A replayed/at-least-once batch can contain duplicate
+    (user_id, us, event_id) rows; the ROWS-pinned running sum of the
+    shared RLE keeps a type change inside a tie group as a run
+    boundary, where a RANGE frame makes the tied rows peers and merges
+    the runs (ADVICE r12). The stream fold and the batch queries run
+    the same RLE, so both paths are pinned on the same two rows."""
+
+    ROWS = [(1, 7, "click"), (1, 7, "view")]  # same us + event_id
+
     def test_duplicate_tie_rows_stay_distinct_runs(self, spark):
-        """A replayed/at-least-once batch can contain duplicate
-        (user_id, us, event_id) rows; the ROWS-pinned running sum keeps
-        a type change inside a tie group as a run boundary, where the
-        default RANGE frame made the tied rows peers and merged the
-        runs (ADVICE r12)."""
         import datetime
 
-        from end_to_end_aws_data_pipeline_spark.streaming.pattern import (
-            _batch_runs,
+        from end_to_end_aws_data_pipeline_spark.operators.rowpattern import (
+            pattern_runs,
         )
 
         ts = datetime.datetime(2024, 1, 1, 0, 0, 0)
         bdf = spark.createDataFrame(
-            [
-                (1, ts, 7, "click"),
-                (1, ts, 7, "view"),  # corrupt-replay tie: same us+eid
-            ],
+            [(u, ts, e, t) for u, e, t in self.ROWS],
             "user_id long, ts timestamp, event_id long, event_type string",
         )
-        runs = _batch_runs(bdf).collect()
+        runs = pattern_runs(bdf).collect()
         assert len(runs) == 2, (
             "tied rows with different types must form two runs "
             f"(RANGE-frame merge regression): {runs}"
         )
+
+    def test_batch_table_ties_stay_distinct_runs(self, spark, tmp_path):
+        """The batch path reads the events table (TIMESTAMP(NANOS)
+        parquet, normalized to µs by ``catalog.table``) and runs the
+        same RLE; at a RANGE frame the two rows came back as one run."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from end_to_end_aws_data_pipeline_spark.catalog import table
+        from end_to_end_aws_data_pipeline_spark.operators.rowpattern import (
+            pattern_runs,
+        )
+
+        ns = 1_704_067_200_000_000_000  # 2024-01-01T00:00:00Z
+        pq.write_table(
+            pa.table({
+                "user_id": pa.array([u for u, _e, _t in self.ROWS], pa.int64()),
+                "ts": pa.array([ns] * len(self.ROWS), pa.timestamp("ns")),
+                "event_id": pa.array([e for _u, e, _t in self.ROWS], pa.int64()),
+                "event_type": [t for _u, _e, t in self.ROWS],
+            }),
+            str(tmp_path / "events.parquet"),
+        )
+        runs = pattern_runs(table(spark, str(tmp_path), "events")).collect()
+        assert sorted(r.etype for r in runs) == ["click", "view"], runs
 
 
 def test_every_query_oracle_backed_except_known_two():

@@ -678,9 +678,10 @@ def test_pattern_quantified_batch_stream_equal_and_nonvacuous(spark):
     ALL length 1, so the {2,4} bound is only non-vacuous in both
     directions (some accepted AND some rejected) at sf0.01 — the SF
     the driver gate verifies at."""
+    from end_to_end_aws_data_pipeline_spark.operators.rowpattern import (
+        QUANTIFIED,
+    )
     from end_to_end_aws_data_pipeline_spark.operators.sweep import (
-        _PQ_HI,
-        _PQ_LO,
         q_events_pattern_quantified,
     )
     from end_to_end_aws_data_pipeline_spark.streaming.pattern import (
@@ -693,7 +694,7 @@ def test_pattern_quantified_batch_stream_equal_and_nonvacuous(spark):
     assert sum(r["n_matches"] for r in rows) > 0
     for r in rows:
         if r["n_matches"] > 0:
-            assert _PQ_LO <= r["longest_view_run"] <= _PQ_HI
+            assert QUANTIFIED.lo <= r["longest_view_run"] <= QUANTIFIED.hi
 
     want = sorted(
         (
