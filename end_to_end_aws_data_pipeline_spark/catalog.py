@@ -137,7 +137,7 @@ def stage(tag: str, inputs: list[str], build: Callable[[str], None]) -> str:
 _SCHEMA_CACHE: dict = {}
 
 
-def _cached_schema(spark: SparkSession, path: str):
+def cached_schema(spark: SparkSession, path: str):
     try:
         mtime = os.path.getmtime(path)
     except OSError:
@@ -167,7 +167,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.schema(_cached_schema(spark, path)).parquet(path)
+    df = spark.read.schema(cached_schema(spark, path)).parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df

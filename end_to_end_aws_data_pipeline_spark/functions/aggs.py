@@ -20,6 +20,8 @@ text for the DuckDB oracle.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -119,3 +121,78 @@ def l2fp(x: str) -> str:
     ``{div}`` for the caller to fill in per engine."""
     e = f"(length(bin({x})) - 1)"
     return f"(16 * {e} + ({x}) * 16 {{div}} (CAST(1 AS BIGINT) << {e}) - 16)"
+
+
+# The HIGH-PRECISION fixed-point log2, L(x) = 65536·log2(x) for x in
+# [1, 2^57): octave e, segment j of 64 linear segments per octave, and
+# the within-segment residual rescaled to ≤20 bits so every product
+# stays far inside int64. Worst case 6.1e-5 bit, swept over 200k random
+# inputs; l2fp's ~0.149 bit would swamp a near-independence MI outright.
+# One Python form and two SQL spellings, all from the same tables.
+L2HI_S = 1 << 16
+L2HI_SEGS = 64
+L2HI_B = [round(L2HI_S * math.log2(1 + j / L2HI_SEGS)) for j in range(L2HI_SEGS)]
+L2HI_D = [
+    round(
+        L2HI_S
+        * (math.log2(1 + (j + 1) / L2HI_SEGS) - math.log2(1 + j / L2HI_SEGS))
+    )
+    for j in range(L2HI_SEGS)
+]
+
+
+def l2hi(x: int) -> int:
+    """L(x) in Python integers, equal to both SQL spellings digit for
+    digit, so costs computed on the driver equal the oracle's."""
+    e = x.bit_length() - 1
+    t = x * L2HI_SEGS
+    q = t // (1 << e)
+    j = q - L2HI_SEGS
+    r = t - q * (1 << e)
+    sh = max(e - 20, 0)
+    return L2HI_S * e + L2HI_B[j] + (r >> sh) * L2HI_D[j] // (1 << (e - sh))
+
+
+def _l2hi_case(j: str, tab: list[int]) -> str:
+    """The segment-table lookup: ``tab[j]`` as a 64-branch CASE."""
+    return (
+        "CASE " + j + " "
+        + " ".join(f"WHEN {i} THEN {v}" for i, v in enumerate(tab))
+        + " END"
+    )
+
+
+def l2hi_steps(x: str, p: str, div: str) -> tuple[list[str], list[str], list[str]]:
+    """L(x) as SELECT items for three chained steps (shared Spark/DuckDB
+    text apart from the integer-division spelling ``div``): geometry,
+    segment, then the table-lookup evaluation ``{p}l``. ``p`` prefixes
+    the intermediates."""
+    geom = [
+        f"(length(bin({x})) - 1) AS {p}e",
+        f"({x}) AS {p}x",
+    ]
+    seg = [
+        f"({p}x * {L2HI_SEGS}) {div} (CAST(1 AS BIGINT) << {p}e) - {L2HI_SEGS} AS {p}j",
+        f"{p}x * {L2HI_SEGS} - (({p}x * {L2HI_SEGS}) {div} (CAST(1 AS BIGINT) << {p}e)) * (CAST(1 AS BIGINT) << {p}e) AS {p}r",
+        f"greatest({p}e - 20, 0) AS {p}sh",
+    ]
+    ev = [
+        f"{L2HI_S} * {p}e + {_l2hi_case(f'{p}j', L2HI_B)} "
+        f"+ ({p}r {div} (CAST(1 AS BIGINT) << {p}sh)) * ({_l2hi_case(f'{p}j', L2HI_D)}) "
+        f"{div} (CAST(1 AS BIGINT) << ({p}e - {p}sh)) AS {p}l"
+    ]
+    return geom, seg, ev
+
+
+def l2hi_sql(x: str) -> str:
+    """L(x) as one inlined DuckDB scalar expression."""
+    e = f"(length(bin({x})) - 1)"
+    q = f"(({x}) * {L2HI_SEGS} // (CAST(1 AS BIGINT) << {e}))"
+    j = f"({q} - {L2HI_SEGS})"
+    r = f"(({x}) * {L2HI_SEGS} - {q} * (CAST(1 AS BIGINT) << {e}))"
+    sh = f"greatest({e} - 20, 0)"
+    return (
+        f"({L2HI_S} * {e} + {_l2hi_case(j, L2HI_B)} + "
+        f"({r} // (CAST(1 AS BIGINT) << {sh})) * ({_l2hi_case(j, L2HI_D)}) "
+        f"// (CAST(1 AS BIGINT) << ({e} - {sh})))"
+    )

@@ -19,7 +19,7 @@ so the sequential cumsum never concentrates on one partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import table
@@ -588,27 +588,58 @@ def q_curation_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2023) over hashed unigram features, in exact fixed-point arithmetic
 # ---------------------------------------------------------------------------
 
-_DSIR_B = 64  # hashed feature buckets
-_DSIR_TARGET = "de"  # target distribution: the minority-language slice
+DSIR_B = 64  # hashed feature buckets
+DSIR_TARGET = "de"  # target distribution: the minority-language slice
 _DSIR_TOP = 25
 
 
-def _dsir_lw(div: str) -> str:
+def dsir_lw(div: str) -> str:
     """The per-bucket log importance weight
     L(ct+1) + L(Nr+B) - L(cr+1) - L(Nt+B)  ~  16*log2 of the smoothed
     target/raw probability ratio."""
     t = l2fp(f"ct + 1")
     r = l2fp(f"cr + 1")
-    nt = l2fp(f"nt + {_DSIR_B}")
-    nr = l2fp(f"nr + {_DSIR_B}")
+    nt = l2fp(f"nt + {DSIR_B}")
+    nr = l2fp(f"nr + {DSIR_B}")
     return f"({t} + {nr} - {r} - {nt})".replace("{div}", div)
+
+
+def dsir_token_weights(docs: DataFrame, words: Column) -> DataFrame:
+    """(b, doc_id, is_t, w) per token of ``docs`` (doc_id, lang): the
+    token's md5 bucket of DSIR_B, whether its document is in the target
+    slice, and the bucket's log importance weight :func:`dsir_lw` from
+    the token histogram of ``docs`` itself. ``words`` is each
+    document's token array."""
+    toks = docs.select(
+        "doc_id",
+        F.explode(words).alias("t"),
+        F.when(F.col("lang") == DSIR_TARGET, 1).otherwise(0).alias("is_t"),
+    ).select(
+        "doc_id",
+        (
+            F.conv(F.substring(F.md5(F.col("t")), 1, 15), 16, 10).cast("long")
+            % DSIR_B
+        ).alias("b"),
+        "is_t",
+    )
+    hist = toks.groupBy("b").agg(
+        F.count(F.lit(1)).cast("long").alias("cr"),
+        F.sum("is_t").cast("long").alias("ct"),
+    )
+    tot = hist.agg(
+        F.sum("cr").cast("long").alias("nr"), F.sum("ct").cast("long").alias("nt")
+    )
+    lw = hist.crossJoin(F.broadcast(tot)).select(
+        "b", F.expr(dsir_lw("div")).cast("long").alias("w")
+    )
+    return toks.join(F.broadcast(lw), "b")
 
 
 _DSIR_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id,
-         ('0x' || substr(md5(t.t), 1, 15))::BIGINT % {_DSIR_B} AS b,
-         CASE WHEN lang = '{_DSIR_TARGET}' THEN 1 ELSE 0 END AS is_t
+         ('0x' || substr(md5(t.t), 1, 15))::BIGINT % {DSIR_B} AS b,
+         CASE WHEN lang = '{DSIR_TARGET}' THEN 1 ELSE 0 END AS is_t
   FROM documents, unnest(string_split(text, ' ')) AS t(t)
 ), hist AS (
   SELECT b, CAST(count(*) AS BIGINT) AS cr,
@@ -618,7 +649,7 @@ WITH toks AS (
   SELECT CAST(sum(cr) AS BIGINT) AS nr, CAST(sum(ct) AS BIGINT) AS nt
   FROM hist
 ), lw AS (
-  SELECT b, {_dsir_lw("//")} AS w FROM hist, tot
+  SELECT b, {dsir_lw("//")} AS w FROM hist, tot
 ), docw AS (
   SELECT doc_id, CAST(sum(w) AS BIGINT) AS weight,
          CAST(count(*) AS BIGINT) AS n_tokens
@@ -668,31 +699,8 @@ def q_curation_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k) — the point here is the exact, replayable plumbing; on a
     real corpus the n-gram distributions differ and the ratio bites.
     """
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.col("text"), " ")).alias("t"),
-        F.when(F.col("lang") == _DSIR_TARGET, 1).otherwise(0).alias("is_t"),
-    ).select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5(F.col("t")), 1, 15), 16, 10).cast("long")
-            % _DSIR_B
-        ).alias("b"),
-        "is_t",
-    )
-    hist = toks.groupBy("b").agg(
-        F.count(F.lit(1)).cast("long").alias("cr"),
-        F.sum("is_t").cast("long").alias("ct"),
-    )
-    tot = hist.agg(
-        F.sum("cr").cast("long").alias("nr"), F.sum("ct").cast("long").alias("nt")
-    )
-    lw = hist.crossJoin(F.broadcast(tot)).select(
-        "b", F.expr(_dsir_lw("div")).cast("long").alias("w")
-    )
     docw = (
-        toks.join(F.broadcast(lw), "b")
+        dsir_token_weights(table(spark, sf_dir, "documents"), F.split("text", " "))
         .groupBy("doc_id")
         .agg(
             F.sum("w").cast("long").alias("weight"),

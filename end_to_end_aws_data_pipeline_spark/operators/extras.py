@@ -11,7 +11,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, table
-from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
+from end_to_end_aws_data_pipeline_spark.functions.aggs import (
+    L2HI_S,
+    l2hi_steps,
+    stable_round,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -1214,74 +1218,15 @@ def q_agg_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# mutual information via a HIGH-PRECISION fixed-point log2 (64 linear
-# segments per octave, 1/65536-bit units — worst case 6.1e-5 bit,
-# swept over 200k random inputs; the 4-fractional-bit l2fp's ~0.149
-# bit would swamp a near-independence MI outright)
+# mutual information via the HIGH-PRECISION fixed-point log2
+# (aggs.l2hi_steps: 64 linear segments per octave, 1/65536-bit units)
 # ---------------------------------------------------------------------------
-
-_L2HI_S = 1 << 16
-_L2HI_SEGS = 64
-
-
-def _l2hi_tables() -> tuple[list[int], list[int]]:
-    import math
-
-    base = [
-        round(_L2HI_S * math.log2(1 + j / _L2HI_SEGS))
-        for j in range(_L2HI_SEGS)
-    ]
-    delta = [
-        round(
-            _L2HI_S
-            * (
-                math.log2(1 + (j + 1) / _L2HI_SEGS)
-                - math.log2(1 + j / _L2HI_SEGS)
-            )
-        )
-        for j in range(_L2HI_SEGS)
-    ]
-    return base, delta
-
-
-_L2HI_B, _L2HI_D = _l2hi_tables()
-
-
-def _l2hi_steps(x: str, p: str, div: str) -> list[str]:
-    """Column-expression strings (shared Spark/DuckDB text apart from
-    the integer-division spelling) computing L(x) = 65536·log2(x) for
-    x in [1, 2^57]: octave e, segment j of 64, within-segment residual
-    rescaled to ≤20 bits so every product stays far inside int64.
-    Returns SELECT items for two chained steps: geometry, then the
-    table-lookup evaluation. ``p`` prefixes the intermediates."""
-    case_b = "CASE " + f"{p}j " + " ".join(
-        f"WHEN {j} THEN {v}" for j, v in enumerate(_L2HI_B)
-    ) + " END"
-    case_d = "CASE " + f"{p}j " + " ".join(
-        f"WHEN {j} THEN {v}" for j, v in enumerate(_L2HI_D)
-    ) + " END"
-    geom = [
-        f"(length(bin({x})) - 1) AS {p}e",
-        f"({x}) AS {p}x",
-    ]
-    seg = [
-        f"({p}x * {_L2HI_SEGS}) {div} (CAST(1 AS BIGINT) << {p}e) - {_L2HI_SEGS} AS {p}j",
-        f"{p}x * {_L2HI_SEGS} - (({p}x * {_L2HI_SEGS}) {div} (CAST(1 AS BIGINT) << {p}e)) * (CAST(1 AS BIGINT) << {p}e) AS {p}r",
-        f"greatest({p}e - 20, 0) AS {p}sh",
-    ]
-    ev = [
-        f"{_L2HI_S} * {p}e + {case_b} "
-        f"+ ({p}r {div} (CAST(1 AS BIGINT) << {p}sh)) * ({case_d}) "
-        f"{div} (CAST(1 AS BIGINT) << ({p}e - {p}sh)) AS {p}l"
-    ]
-    return geom, seg, ev
-
 
 def _mi_sql(div: str) -> str:
     """The full MI pipeline as engine-shared SQL over a view/CTE named
     ``cell_src`` with columns (o, r, c, n)."""
-    ga, sa, ea = _l2hi_steps("n * o", "a_", div)
-    gb, sb, eb = _l2hi_steps("r * c", "b_", div)
+    ga, sa, ea = l2hi_steps("n * o", "a_", div)
+    gb, sb, eb = l2hi_steps("r * c", "b_", div)
     return f"""
 WITH g AS (
   SELECT o, n, {", ".join(ga + gb)} FROM cell_src
@@ -1294,7 +1239,7 @@ WITH g AS (
 )
 SELECT CAST(any_value(n) AS BIGINT) AS n_events,
        CAST(sum(t) AS BIGINT) AS mi_num,
-       floor(CAST(sum(t) AS DOUBLE) / ({_L2HI_S}.0 * any_value(n))
+       floor(CAST(sum(t) AS DOUBLE) / ({L2HI_S}.0 * any_value(n))
              * 1000000 + 0.5) / 1000000 AS mi_bits
 FROM terms
 """
@@ -1337,7 +1282,7 @@ def q_agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — octave from bin(), segment lookup from two 64-branch
     CASE tables generated from the same Python constants the oracle
     embeds, residual rescaled to ≤20 bits so all products stay far
-    inside int64 (valid to N·O ≤ 2^57, i.e. N ≈ 3.7·10⁸ events) —
+    inside int64 (valid to N·O < 2^57, i.e. N ≈ 3.7·10⁸ events) —
     so the cross-cell sum is order-free and the driver hash matches
     bit-for-bit.
 
@@ -1356,8 +1301,8 @@ def q_agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .select("o", "r", "c", "n")
     )
-    ga, sa, ea_ = _l2hi_steps("n * o", "a_", " div ")
-    gb, sb, eb_ = _l2hi_steps("r * c", "b_", " div ")
+    ga, sa, ea_ = l2hi_steps("n * o", "a_", " div ")
+    gb, sb, eb_ = l2hi_steps("r * c", "b_", " div ")
     g = cell_src.selectExpr("o", "n", *(ga + gb))
     sgm = g.selectExpr("o", "n", "a_e", "a_x", "b_e", "b_x", *(sa + sb))
     ev = sgm.selectExpr("o", "n", *(ea_ + eb_))
@@ -1366,7 +1311,7 @@ def q_agg_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n_events"),
         "mi_num",
         stable_round(
-            F.col("mi_num").cast("double") / (float(_L2HI_S) * F.col("n")), 6
+            F.col("mi_num").cast("double") / (float(L2HI_S) * F.col("n")), 6
         ).alias("mi_bits"),
     )
 
@@ -1813,7 +1758,6 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("long").alias("mass")
             )
         )
-    from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
 
     return p.select(
         F.col("s").alias("event_type"),
@@ -1872,8 +1816,6 @@ def q_agg_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     through correctly-rounded IEEE ops + the stabilizer — bit-identical
     cross-engine, no ordering sensitivity anywhere. One combinable
     pass to per-user flags, one to segment counts, then a 1-row pivot."""
-    from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
-
     e = table(spark, sf_dir, "events")
     # conversion = heavy purchaser (>= 14 purchase events): the raw
     # any-purchase flag is degenerate in these fixtures (every user

@@ -15,7 +15,7 @@ of the codec and oracle-checked.
 
 The synthetic-codec queries each run one ``per_doc`` pass: a
 ``mapInArrow`` over the spread doc_ids in which a per-document
-``rows_of`` encodes that document's synthetic input (``_gradient``,
+``rows_of`` encodes that document's synthetic input (``gradient``,
 ``_decoded_image``, ``_decoded_wav``, ``_decoded_gif``), decodes it and
 yields its result rows. Only ``extract_features``, which reads payload
 columns, maps pandas batches.
@@ -510,7 +510,7 @@ _DEC_H = "(4 + (doc_id // 7) % 23)"
 _IMG_FORMATS = ("bmp", "ppm", "png")  # by doc_id % 3
 
 
-def _gradient(doc_id: int):
+def gradient(doc_id: int):
     """The synthetic image of one document: an (h, w) uint8 gradient,
     pixel (x + y + doc_id) mod 256, sized ``_DEC_W`` × ``_DEC_H``."""
     import numpy as np
@@ -527,7 +527,7 @@ def _decoded_image(doc_id: int):
     unfilter path runs) and decoded back by ``decode_image``."""
     import numpy as np
 
-    pix = np.repeat(_gradient(doc_id)[:, :, None], 3, axis=2)
+    pix = np.repeat(gradient(doc_id)[:, :, None], 3, axis=2)
     fmt = _IMG_FORMATS[doc_id % 3]
     if fmt == "bmp":
         payload = encode_bmp(pix)
@@ -1022,7 +1022,7 @@ def _decoded_gif(doc_id: int):
 
     gray = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
     inter = bool(doc_id % 2)
-    return decode_gif(encode_gif(_gradient(doc_id), gray, interlace=inter))
+    return decode_gif(encode_gif(gradient(doc_id), gray, interlace=inter))
 
 
 _DECODE_GIF_ORACLE = f"""

@@ -1514,9 +1514,9 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mergeable rank/quantile sketch (MRL/KLL family, deterministic compaction)
 # ---------------------------------------------------------------------------
 
-_KLL_K = 256  # per-sketch capacity: rank error ~ (groups + max stratum)/N
-_KLL_QS = (250_000, 500_000, 750_000, 950_000)  # q in ppm
-_KLL_QS_SQL = ", ".join(f"({q})" for q in _KLL_QS)
+KLL_K = 256  # per-sketch capacity: rank error ~ (groups + max stratum)/N
+KLL_QS = (250_000, 500_000, 750_000, 950_000)  # q in ppm
+_KLL_QS_SQL = ", ".join(f"({q})" for q in KLL_QS)
 
 
 
@@ -1538,7 +1538,7 @@ WITH v AS MATERIALIZED (
 ), gm AS MATERIALIZED (
   SELECT g, n_g,
          (SELECT min(sp) FROM powers
-          WHERE sp >= (n_g + {_KLL_K - 1}) // {_KLL_K}) AS s
+          WHERE sp >= (n_g + {KLL_K - 1}) // {KLL_K}) AS s
   FROM (SELECT g, CAST(count(*) AS BIGINT) AS n_g FROM v GROUP BY g)
 ), l1 AS MATERIALIZED (
   SELECT gr.g, gr.vc, gr.uniq,
@@ -1548,7 +1548,7 @@ WITH v AS MATERIALIZED (
 ), s2t AS MATERIALIZED (
   SELECT m_items, wsum,
          (SELECT min(sp) FROM powers
-          WHERE sp >= (m_items + {_KLL_K - 1}) // {_KLL_K}) AS s2
+          WHERE sp >= (m_items + {KLL_K - 1}) // {KLL_K}) AS s2
   FROM (SELECT CAST(count(*) AS BIGINT) AS m_items,
                CAST(sum(w) AS BIGINT) AS wsum FROM l1)
 ), items AS MATERIALIZED (
@@ -1615,7 +1615,7 @@ def q_agg_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rajagopalan & Lindsay SIGMOD'98; Agarwal et al. "Mergeable
     Summaries" PODS'12) with DETERMINISTIC compaction, completing the
     sketch suite beside HLL/KMV/CMS: per-calendar-month price sketches
-    of ≤256 (_KLL_K) weighted items are MERGED into one global sketch that
+    of ≤256 (KLL_K) weighted items are MERGED into one global sketch that
     answers any quantile with a PROVEN rank-error bound — the artifact
     that lets a 100 TB percentile dashboard roll daily/monthly sketches
     up into arbitrary date-range quantiles without ever rescanning
@@ -1662,7 +1662,7 @@ def q_agg_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         segmented_group_rank,
     )
 
-    k = _KLL_K
+    k = KLL_K
     li = table(spark, sf_dir, "lineitem")
     v = li.select(
         (F.year("l_shipdate") * 12 + F.month("l_shipdate"))
@@ -1747,7 +1747,7 @@ def q_agg_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spec = local_frame(
         spark,
-        [(q, (q * n_rows + 999_999) // 1_000_000) for q in _KLL_QS],
+        [(q, (q * n_rows + 999_999) // 1_000_000) for q in KLL_QS],
         "q_ppm long, t long",
     )
     est = (
@@ -1808,8 +1808,8 @@ def q_agg_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mergeable heavy-hitters summary (top-K per partition, provable bounds)
 # ---------------------------------------------------------------------------
 
-_HH_K = 64   # per-group summary capacity
-_HH_TOP = 20  # published global heavy hitters
+HH_K = 64   # per-group summary capacity
+HH_TOP = 20  # published global heavy hitters
 
 
 
@@ -1829,14 +1829,14 @@ WITH v AS MATERIALIZED (
   FROM c
 ), tg AS MATERIALIZED (
   SELECT g,
-         CAST(coalesce(max(CASE WHEN rk = {_HH_K} THEN cnt END), 0)
+         CAST(coalesce(max(CASE WHEN rk = {HH_K} THEN cnt END), 0)
               AS BIGINT) AS t
   FROM r GROUP BY g
 ), tt AS MATERIALIZED (
   SELECT CAST(sum(t) AS BIGINT) AS total_t FROM tg
 ), kept AS MATERIALIZED (
   SELECT r.k, r.cnt, tg.t
-  FROM r JOIN tg USING (g) WHERE r.rk <= {_HH_K}
+  FROM r JOIN tg USING (g) WHERE r.rk <= {HH_K}
 ), cand AS MATERIALIZED (
   SELECT k, CAST(sum(cnt) AS BIGINT) AS lo, CAST(sum(t) AS BIGINT) AS tcov,
          CAST(count(*) AS BIGINT) AS groups_present
@@ -1845,7 +1845,7 @@ WITH v AS MATERIALIZED (
   SELECT k, lo, CAST(lo + tt.total_t - tcov AS BIGINT) AS hi,
          groups_present
   FROM cand CROSS JOIN tt
-  ORDER BY lo DESC, k LIMIT {_HH_TOP}
+  ORDER BY lo DESC, k LIMIT {HH_TOP}
 ), ex AS MATERIALIZED (
   SELECT v.k, CAST(count(*) AS BIGINT) AS exact_cnt
   FROM v JOIN top ON top.k = v.k GROUP BY v.k
@@ -1872,14 +1872,14 @@ def q_agg_heavy_hitters_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable HEAVY-HITTERS summaries with provable bounds — the
     frequent-items member of the mergeable-summary family beside the
     HLL register merge (distinct counts) and the KLL compaction merge
-    (ranks): each calendar month keeps only its exact top-64 (_HH_K)
+    (ranks): each calendar month keeps only its exact top-64 (HH_K)
     part counts plus the K-th count t_g, and any rollup of months
     answers "global top parts" from the summaries alone with a
     DETERMINISTIC error interval — an item absent from a month's
     summary occurred at most t_g times there (Misra-Gries/SpaceSaving
     bound, computed offline so the summary of a multiset is canonical
     and order-free), so est in [sum of kept counts, + sum of absent
-    months' t_g]. The published top-20 (_HH_TOP) carry their exact global
+    months' t_g]. The published top-20 (HH_TOP) carry their exact global
     counts next to the interval and `within_bound` is computed
     in-engine, not asserted offline.
 
@@ -1920,13 +1920,13 @@ def q_agg_heavy_hitters_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number()
         .over(W.partitionBy("g").orderBy(F.col("cnt").desc(), "k"))
         .alias("rk"),
-    ).where(F.col("rk") <= _HH_K)
+    ).where(F.col("rk") <= HH_K)
     # kept summaries are months x K rows — persist: the threshold
     # table, candidate rollup and bound total all read them
     kept = persisted(r)
     tg = kept.groupBy("g").agg(
         F.coalesce(
-            F.max(F.when(F.col("rk") == _HH_K, F.col("cnt"))), F.lit(0)
+            F.max(F.when(F.col("rk") == HH_K, F.col("cnt"))), F.lit(0)
         )
         .cast("long")
         .alias("t")
@@ -1952,7 +1952,7 @@ def q_agg_heavy_hitters_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             "groups_present",
         )
         .orderBy(F.col("lo").desc(), "k")
-        .limit(_HH_TOP)
+        .limit(HH_TOP)
     )
     ex = (
         v.join(F.broadcast(top.select("k")), "k")

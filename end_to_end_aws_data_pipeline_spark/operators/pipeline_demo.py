@@ -333,23 +333,23 @@ _V3_TOP = 100
 
 def _v3_oracle() -> str:
     from end_to_end_aws_data_pipeline_spark.operators.curation import (
-        _DSIR_B,
-        _DSIR_TARGET,
-        _dsir_lw,
+        DSIR_B,
+        DSIR_TARGET,
+        dsir_lw,
     )
     from end_to_end_aws_data_pipeline_spark.operators.text import (
-        _CLF_BIAS,
-        _CLF_BUCKET_MOD,
+        CLF_BIAS,
+        CLF_BUCKET_MOD,
     )
 
     return f"""
 WITH scored AS (
   SELECT doc_id, lang, source, text, n_chars,
-         {_CLF_BIAS} + coalesce(list_sum(list_transform(
+         {CLF_BIAS} + coalesce(list_sum(list_transform(
            range(1, len(string_split(text, ' '))),
            i -> CAST(('0x' || substr(md5(string_split(text, ' ')[i] || '_' ||
                       string_split(text, ' ')[i + 1]), 1, 15))::BIGINT
-                     % {_CLF_BUCKET_MOD} - 16 AS BIGINT))), 0) AS score
+                     % {CLF_BUCKET_MOD} - 16 AS BIGINT))), 0) AS score
   FROM documents
 ), kept AS (
   SELECT * FROM scored WHERE score > 0
@@ -364,8 +364,8 @@ WITH scored AS (
   SELECT doc_id, lang, text FROM ranked WHERE rk = 1
 ), toks AS (
   SELECT doc_id,
-         ('0x' || substr(md5(t.t), 1, 15))::BIGINT % {_DSIR_B} AS b,
-         CASE WHEN lang = '{_DSIR_TARGET}' THEN 1 ELSE 0 END AS is_t
+         ('0x' || substr(md5(t.t), 1, 15))::BIGINT % {DSIR_B} AS b,
+         CASE WHEN lang = '{DSIR_TARGET}' THEN 1 ELSE 0 END AS is_t
   FROM deduped, unnest(string_split(text, ' ')) AS t(t)
 ), hist AS (
   SELECT b, CAST(count(*) AS BIGINT) AS cr, CAST(sum(is_t) AS BIGINT) AS ct
@@ -374,7 +374,7 @@ WITH scored AS (
   SELECT CAST(sum(cr) AS BIGINT) AS nr, CAST(sum(ct) AS BIGINT) AS nt
   FROM hist
 ), lw AS (
-  SELECT b, {_dsir_lw("//")} AS w FROM hist, tot
+  SELECT b, {dsir_lw("//")} AS w FROM hist, tot
 ), docw AS (
   SELECT doc_id, CAST(sum(w) AS BIGINT) AS weight
   FROM toks JOIN lw USING (b) GROUP BY doc_id
@@ -418,9 +418,7 @@ def q_pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from end_to_end_aws_data_pipeline_spark.cache import persisted
     from end_to_end_aws_data_pipeline_spark.operators.curation import (
-        _DSIR_B,
-        _DSIR_TARGET,
-        _dsir_lw,
+        dsir_token_weights,
     )
     from end_to_end_aws_data_pipeline_spark.operators.text import clf_score
 
@@ -451,33 +449,10 @@ def q_pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") == 1)
         .select("doc_id", "lang", "w")
     )
-    toks = deduped.select(
-        "doc_id",
-        F.explode("w").alias("t"),
-        F.when(F.col("lang") == _DSIR_TARGET, 1).otherwise(0).alias("is_t"),
-    ).select(
-        "doc_id",
-        (
-            F.conv(F.substring(F.md5(F.col("t")), 1, 15), 16, 10).cast("long")
-            % _DSIR_B
-        ).alias("b"),
-        "is_t",
-    )
-    hist = toks.groupBy("b").agg(
-        F.count(F.lit(1)).cast("long").alias("cr"),
-        F.sum("is_t").cast("long").alias("ct"),
-    )
-    tot = hist.agg(
-        F.sum("cr").cast("long").alias("nr"),
-        F.sum("ct").cast("long").alias("nt"),
-    )
-    lw = hist.crossJoin(F.broadcast(tot)).select(
-        "b", F.expr(_dsir_lw("div")).cast("long").alias("lw")
-    )
     sel = (
-        toks.join(F.broadcast(lw), "b")
+        dsir_token_weights(deduped, F.col("w"))
         .groupBy("doc_id")
-        .agg(F.sum("lw").cast("long").alias("weight"))
+        .agg(F.sum("w").cast("long").alias("weight"))
         .orderBy(F.col("weight").desc(), "doc_id")
         .limit(_V3_TOP)
     )

@@ -35,19 +35,18 @@ from pyspark.sql import functions as F
 from end_to_end_aws_data_pipeline_spark.cache import persisted
 from end_to_end_aws_data_pipeline_spark.catalog import spread
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
-from end_to_end_aws_data_pipeline_spark.registry import register
-from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-    _ASSIGN_DDL,
-    _CENTROIDS_SQL,
-    _MAX_QUERIES,
-    _QUERY_MOD,
-    _QV_SQL,
-    _TOP_K,
-    _quantized,
-    _query_matrix,
-    _query_set,
-    _seeds,
+from end_to_end_aws_data_pipeline_spark.operators.veccorpus import (
+    ASSIGN_DDL,
+    MAX_QUERIES,
+    QUERY_MOD,
+    QV_SQL,
+    TOP_K,
+    assigned_sql,
     n_centroids_for,
+    quantized_vectors,
+    query_matrix,
+    query_set,
+    seeds,
 )
 from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
     SCALE_SQ,
@@ -61,6 +60,7 @@ from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
     topk_rows,
     vector_map,
 )
+from end_to_end_aws_data_pipeline_spark.registry import register
 
 _PQ_DIM = 64  # embeddings table dimensionality (TESTDATA.md)
 _PQ_M = 8  # subspaces
@@ -88,8 +88,8 @@ def _pq_codebooks(v: DataFrame):
     Mirrors the generated oracle chain in _pq_oracle() step for step.
     """
     # code j of subspace m = subvector m of the seed vector vec_id == j
-    seeds = _seeds(v, _PQ_K)[1].reshape(_PQ_K, _PQ_M, _PQ_DS)
-    books = seeds.transpose(1, 0, 2).copy()
+    seed_rows = seeds(v, _PQ_K)[1].reshape(_PQ_K, _PQ_M, _PQ_DS)
+    books = seed_rows.transpose(1, 0, 2).copy()
     for _ in range(_PQ_ITERS):
 
         def _partials(b, m, bks=books):  # binds this round's codebooks
@@ -111,7 +111,7 @@ def _pq_oracle() -> str:
     lookup join → rank. Every comparison is on exact int64 dots; the
     floor-mean update divides in float64 exactly like the Spark side."""
     parts = [
-        f"""WITH v AS ({_QV_SQL}
+        f"""WITH v AS ({QV_SQL}
 ), sub AS (
   SELECT vec_id, m.m, q[(m.m*{_PQ_DS}+1):((m.m+1)*{_PQ_DS})] AS x
   FROM v, (SELECT unnest(range(0, {_PQ_M})) AS m) m
@@ -161,8 +161,8 @@ def _pq_oracle() -> str:
   ) WHERE rn = 1
 ), qs AS (
   SELECT vec_id AS query_id FROM v
-  WHERE vec_id % {_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_MAX_QUERIES}
+  WHERE vec_id % {QUERY_MOD} = 0
+  ORDER BY vec_id LIMIT {MAX_QUERIES}
 ), lut AS (
   SELECT q.query_id, b.m, b.code,
          list_sum(list_transform(range(1, {_PQ_DS}+1),
@@ -184,7 +184,7 @@ def _pq_oracle() -> str:
 )
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
        round(CAST(adc AS DOUBLE) / {SCALE_SQ}.0, 6) AS adc_cosine
-FROM ranked WHERE rank <= {_TOP_K}
+FROM ranked WHERE rank <= {TOP_K}
 """
     )
     return "".join(parts)
@@ -212,12 +212,12 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from end_to_end_aws_data_pipeline_spark.plans.scale import overlap_jobs
 
-    v = persisted(spread(_quantized(spark, sf_dir)))
+    v = persisted(spread(quantized_vectors(spark, sf_dir)))
     # the bounded query-matrix collect is independent of codebook
     # training — overlap the two action chains (guide §2.6)
     books, (q_ids, q_mat) = overlap_jobs(
         lambda: _pq_codebooks(v),
-        lambda: _query_matrix(_query_set(v)),
+        lambda: query_matrix(query_set(v)),
     )
     luts = pq_luts(q_mat, books)
 
@@ -229,7 +229,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # order as the global window — PQ collides scores whenever two
         # vectors share all M codes, so an order-agnostic argpartition
         # could keep the wrong side of a boundary tie
-        j, i = topk_rows(s, ids, ids[:, None] != q_ids, _TOP_K)
+        j, i = topk_rows(s, ids, ids[:, None] != q_ids, TOP_K)
         return q_ids[j], ids[i], s[i, j]
 
     cand = vector_map(v, "query_id long, neighbor_id long, adc long", _score)
@@ -238,7 +238,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "neighbor_id",
@@ -265,14 +265,14 @@ def _residual_assigned(spark: SparkSession, sf_dir: str):
     Residual components are bounded by 2·1e8, so every downstream PQ
     quantity (code norms, ADC partial dots) stays far inside int64.
     """
-    v = _quantized(spark, sf_dir)
-    cent_ids, cent_mat = _seeds(v, n_centroids_for(v.count()))
+    v = quantized_vectors(spark, sf_dir)
+    cent_ids, cent_mat = seeds(v, n_centroids_for(v.count()))
 
     def _assign(b, m):
         best = nearest(m, cent_mat)[0]
         return b.column("vec_id"), cent_ids[best], m - cent_mat[best]
 
-    residuals = persisted(vector_map(spread(v), _ASSIGN_DDL, _assign))
+    residuals = persisted(vector_map(spread(v), ASSIGN_DDL, _assign))
     return residuals, cent_ids, cent_mat
 
 
@@ -282,20 +282,7 @@ def _ivfpq_oracle() -> str:
     encoding → per-query single-bucket ADC scoring (centroid dot +
     code-table sum) → rank."""
     parts = [
-        f"""WITH v AS ({_QV_SQL}
-), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v
-  WHERE vec_id < {_CENTROIDS_SQL}
-), assign AS (
-  SELECT vec_id, cent_id, q FROM (
-    SELECT v.vec_id, c.cent_id, v.q,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c
-  ) WHERE rn = 1
-), res AS (
+        f"""{assigned_sql(('q',))}, res AS (
   SELECT a.vec_id, a.cent_id,
          list_transform(range(1, len(a.q)+1), i -> a.q[i] - c.cq[i]) AS r
   FROM assign a JOIN c USING (cent_id)
@@ -353,8 +340,8 @@ def _ivfpq_oracle() -> str:
   FROM v
   JOIN assign a USING (vec_id)
   JOIN c ON c.cent_id = a.cent_id
-  WHERE v.vec_id % {_QUERY_MOD} = 0
-  ORDER BY v.vec_id LIMIT {_MAX_QUERIES}
+  WHERE v.vec_id % {QUERY_MOD} = 0
+  ORDER BY v.vec_id LIMIT {MAX_QUERIES}
 ), lut AS (
   SELECT q.query_id, s.m, b.code,
          list_sum(list_transform(range(1, {_PQ_DS}+1),
@@ -381,7 +368,7 @@ def _ivfpq_oracle() -> str:
 SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
        CAST(rank AS INT) AS rank,
        round(CAST(adc AS DOUBLE) / {SCALE_SQ}.0, 6) AS adc_cosine
-FROM ranked WHERE rank <= {_TOP_K}
+FROM ranked WHERE rank <= {TOP_K}
 """
     )
     return "".join(parts)
@@ -411,7 +398,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codebook training; overlap the two action chains (guide §2.6)
     books, (q_ids, q_mat) = overlap_jobs(
         lambda: _pq_codebooks(residuals),
-        lambda: _query_matrix(_query_set(_quantized(spark, sf_dir))),
+        lambda: query_matrix(query_set(quantized_vectors(spark, sf_dir))),
     )
     probe, q_qcent = nearest(q_mat, cent_mat)
     q_cents = cent_ids[probe]
@@ -426,7 +413,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         r, c = np.nonzero(keep)
         s = np.zeros(keep.shape, dtype=np.int64)
         s[r, c] = q_qcent[c] + luts[c[:, None], np.arange(_PQ_M), codes[r]].sum(axis=1)
-        j, i = topk_rows(s, ids, keep, _TOP_K)
+        j, i = topk_rows(s, ids, keep, TOP_K)
         return q_ids[j], ids[i], q_cents[j], s[i, j]
 
     cand = vector_map(
@@ -437,7 +424,7 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
+        .filter(F.col("rank") <= TOP_K)
         .select(
             "query_id",
             "neighbor_id",

@@ -26,7 +26,7 @@ Scale posture:
   balanced; the centroid matrix rides to executors in the task closure
   (√N·dim·8 bytes — 16 MB at N=1e9, broadcast-variable territory but
   bounded).
-- the query set is %-sampled then capped at _MAX_QUERIES so its
+- the query set is %-sampled then capped at MAX_QUERIES so its
   footprint is O(1) in corpus size; larger query sets loop in batches.
 """
 
@@ -39,10 +39,28 @@ from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, spread, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import stable_round
+from end_to_end_aws_data_pipeline_spark.operators.veccorpus import (
+    ASSIGN_DDL,
+    CENTROIDS_SQL,
+    KMEANS_ITERS,
+    MAX_QUERIES,
+    QUERY_MOD,
+    QV_SQL,
+    TOP_K,
+    assign_cte,
+    assigned_sql,
+    n_centroids_for,
+    n_super_for,
+    quantized_vectors,
+    query_matrix,
+    query_set,
+    routed_sql,
+    seeds,
+    two_level,
+)
 from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
     Q_SCALE,
     SCALE_SQ,
-    TwoLevel,
     cluster_sums,
     floor_means,
     long_partials,
@@ -54,85 +72,16 @@ from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
 )
 from end_to_end_aws_data_pipeline_spark.registry import register
 
-_TOP_K = 5
-_QUERY_MOD = 100  # vec_id % 100 == 0 → deterministic query set at any SF
-_MAX_QUERIES = 64  # hard cap on the query side: without it the %-sample
-# grows as N/100 and per-task query state eventually stops fitting; with
-# it the footprint is O(1) in corpus size. Larger query sets should loop
-# in _MAX_QUERIES-sized batches (one scan each).
-
-# quantized-vector CTE shared by both oracles — mirrors _quantized()
-# exactly so Spark and DuckDB derive identical integers
-_QV_SQL = f"""
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(round(
-           (CAST(x AS DOUBLE) /
-             sqrt(list_sum(list_transform(embedding,
-                  y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE))))
-           ) * {Q_SCALE}) AS BIGINT)) AS q
-  FROM embeddings
-"""
-
-# ceil(sqrt(N)) centroids — the classic IVF balance point: assignment is
-# N·√N dot products, each probe list averages √N vectors. Expressed as a
-# scalar subquery in the oracle so Spark and DuckDB derive the SAME
-# quantizer from the data at any SF.
-_CENTROIDS_SQL = "(SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM embeddings)"
-
-
-def n_centroids_for(n_rows: int) -> int:
-    """√N coarse-quantizer size (must mirror _CENTROIDS_SQL exactly)."""
-    import math
-
-    return max(1, int(math.ceil(math.sqrt(n_rows))))
-
-
-def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """embeddings as (vec_id, q array<long>): unit-normalized int64
-    quantization (must mirror _QV_SQL exactly)."""
-    return table(spark, sf_dir, "embeddings").select(
-        "vec_id", quantized(F.col("embedding")).alias("q")
-    )
-
-
-def _query_matrix(qdf: DataFrame):
-    """Collect the (bounded) query set to a dense int64 matrix.
-
-    Driver-side by design: the set is capped at _MAX_QUERIES rows, so
-    this is O(1) state shipped to executors in the task closure.
-    """
-    import numpy as np
-
-    rows = qdf.collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    mat = np.array([r["q"] for r in rows], dtype=np.int64)
-    return ids, mat
-
-
-def _seeds(v: DataFrame, n: int):
-    """(ids, matrix) of the first ``n`` vectors by vec_id: the
-    deterministic seed rows of every codebook in the family."""
-    return _query_matrix(v.filter(F.col("vec_id") < n).orderBy("vec_id"))
-
-
-def _query_set(v: DataFrame) -> DataFrame:
-    """The bounded query set: every _QUERY_MOD-th vec_id, first
-    _MAX_QUERIES of them."""
-    return (
-        v.filter(F.col("vec_id") % _QUERY_MOD == 0).orderBy("vec_id").limit(_MAX_QUERIES)
-    )
-
-
 def _cosine_out():
     return stable_round(F.col("dot_q").cast("double") / SCALE_SQ, 6).alias("cosine")
 
 
 _BRUTE_ORACLE = f"""
-WITH v AS ({_QV_SQL}
+WITH v AS ({QV_SQL}
 ), qs AS (
   SELECT vec_id AS query_id, q AS qq FROM v
-  WHERE vec_id % {_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_MAX_QUERIES}
+  WHERE vec_id % {QUERY_MOD} = 0
+  ORDER BY vec_id LIMIT {MAX_QUERIES}
 ), scored AS (
   SELECT qs.query_id, v.vec_id AS neighbor_id,
          list_sum(list_transform(range(1, len(qq)+1), i -> qq[i] * v.q[i]))
@@ -147,7 +96,7 @@ WITH v AS ({_QV_SQL}
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
        floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
          / 1000000 AS cosine
-FROM ranked WHERE rank <= {_TOP_K}
+FROM ranked WHERE rank <= {TOP_K}
 """
 
 
@@ -162,13 +111,13 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     N·|Q|. Integer dots make the batch-local pruning safe: partial
     top-k of an exact total order composes to the global top-k.
     """
-    v = _quantized(spark, sf_dir)
-    q_ids, q_mat = _query_matrix(_query_set(v))
+    v = quantized_vectors(spark, sf_dir)
+    q_ids, q_mat = query_matrix(query_set(v))
 
     def _score(b, m):
         ids = b.column("vec_id").to_numpy()
         s = m @ q_mat.T  # B×|Q| exact int64 dots
-        j, i = topk_rows(s, ids, ids[:, None] != q_ids, _TOP_K)
+        j, i = topk_rows(s, ids, ids[:, None] != q_ids, TOP_K)
         return q_ids[j], ids[i], s[i, j]
 
     # spread ONLY the matmul input: the sf embeddings file scans as one
@@ -180,7 +129,7 @@ def q_ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("query_id").orderBy(F.col("dot_q").desc(), F.col("neighbor_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "neighbor_id", "rank", _cosine_out())
     )
 
@@ -236,9 +185,6 @@ def q_ann_lsh_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASSIGN_DDL = "vec_id long, cent_id long, q array<long>"
-
-
 def _assigned(vs: DataFrame, cent_ids, route) -> DataFrame:
     """(vec_id, cent_id, q): every vector of ``vs`` bucketed by
     ``route`` (:func:`vecbatch.nearest`'s signature) in one Arrow pass,
@@ -246,7 +192,7 @@ def _assigned(vs: DataFrame, cent_ids, route) -> DataFrame:
     join back to the corpus."""
     return vector_map(
         vs,
-        _ASSIGN_DDL,
+        ASSIGN_DDL,
         lambda b, m: (b.column("vec_id"), cent_ids[route(m)[0]], b.column("q")),
     )
 
@@ -258,9 +204,9 @@ def _ivf_assigned(spark: SparkSession, sf_dir: str):
 
     Returns (v, assign, cent_ids, cent_mat).
     """
-    v = _quantized(spark, sf_dir)
+    v = quantized_vectors(spark, sf_dir)
     # parquet-metadata count: cheap
-    cent_ids, cent_mat = _seeds(v, n_centroids_for(v.count()))
+    cent_ids, cent_mat = seeds(v, n_centroids_for(v.count()))
     # spread the assignment matmul across cores (see q_ann_bruteforce);
     # the centroid-collect branch keeps the plain pushdown-friendly scan
     assign = _assigned(spread(v), cent_ids, partial(nearest, mat=cent_mat))
@@ -303,25 +249,13 @@ def _probe_top_k(assign: DataFrame, q_ids, q_mat, q_cents) -> DataFrame:
     )
 
 
-_IVF_ORACLE = f"""
-WITH v AS ({_QV_SQL}
-), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v
-  WHERE vec_id < {_CENTROIDS_SQL}
-), assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT v.vec_id, c.cent_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c
-  ) WHERE rn = 1
-), qs AS (
+# the nprobe=1 probe over any `v` and `assign` (_probe_top_k's replay):
+# each query scores the members of its own bucket, top _IVF_K
+_PROBE_SQL = f""", qs AS (
   SELECT v.vec_id AS query_id, v.q AS qq, a.cent_id
   FROM v JOIN assign a USING (vec_id)
-  WHERE v.vec_id % {_QUERY_MOD} = 0
-  ORDER BY v.vec_id LIMIT {_MAX_QUERIES}
+  WHERE v.vec_id % {QUERY_MOD} = 0
+  ORDER BY v.vec_id LIMIT {MAX_QUERIES}
 ), scored AS (
   SELECT qs.query_id, v.vec_id AS neighbor_id, qs.cent_id,
          list_sum(list_transform(range(1, len(qq)+1), i -> qq[i] * v.q[i]))
@@ -342,6 +276,8 @@ SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
 FROM ranked WHERE rank <= {_IVF_K}
 """
 
+_IVF_ORACLE = "\n" + assigned_sql(()) + _PROBE_SQL
+
 
 @register("q_ann_ivf_topk", oracle=_IVF_ORACLE)
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,7 +297,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assign the (bounded) query set on the driver with the identical
     # int64 argmax — otherwise deriving it from `assign` would run the
     # corpus-wide assignment pass twice (once for 64 rows)
-    q_ids, q_mat = _query_matrix(_query_set(v))
+    q_ids, q_mat = query_matrix(query_set(v))
     return _probe_top_k(assign, q_ids, q_mat, cent_ids[nearest(q_mat, cent_mat)[0]])
 
 
@@ -372,23 +308,10 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IVF_NPROBE = 3  # per-query probed buckets; cost ≈ nprobe·√N rows/query
 
 _IVF_NPROBE_ORACLE = f"""
-WITH v AS ({_QV_SQL}
-), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v
-  WHERE vec_id < {_CENTROIDS_SQL}
-), assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT v.vec_id, c.cent_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c
-  ) WHERE rn = 1
-), qs AS (
+{assigned_sql(())}, qs AS (
   SELECT vec_id AS query_id, q AS qq FROM v
-  WHERE vec_id % {_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_MAX_QUERIES}
+  WHERE vec_id % {QUERY_MOD} = 0
+  ORDER BY vec_id LIMIT {MAX_QUERIES}
 ), probes AS (
   SELECT query_id, cent_id, probe_rank FROM (
     SELECT qs.query_id, c.cent_id,
@@ -439,7 +362,7 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     v, assign, cent_ids, cent_mat = _ivf_assigned(spark, sf_dir)
-    q_ids, q_mat = _query_matrix(_query_set(v))
+    q_ids, q_mat = query_matrix(query_set(v))
     # per-query top-P centroids, driver-side (|Q|×C dots on a bounded
     # query set), ties to the lowest cent_id
     dots = q_mat @ cent_mat.T
@@ -506,12 +429,10 @@ def q_ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF with TRAINED centroids: deterministic Lloyd's k-means
 # ---------------------------------------------------------------------------
 
-_KMEANS_ITERS = 3  # fixed Lloyd rounds; deterministic + oracle-replayable
-
 
 def _kmeans_sql() -> str:
     """Generate the DuckDB CTE chain that REPLAYS the k-means training
-    exactly: seed c0 = first ceil(sqrt(N)) vectors, then _KMEANS_ITERS
+    exactly: seed c0 = first ceil(sqrt(N)) vectors, then KMEANS_ITERS
     rounds of (nearest-centroid assignment -> element-wise floor-mean
     update, empty clusters carrying the previous centroid forward).
 
@@ -523,24 +444,16 @@ def _kmeans_sql() -> str:
     sqrt-N clusters — so the double division is exact enough to floor
     identically in both engines).
     """
-    parts = [f"WITH v AS ({_QV_SQL})"]
+    parts = [f"WITH v AS ({QV_SQL})"]
     parts.append(
         f""", c0 AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {_CENTROIDS_SQL}
+  SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {CENTROIDS_SQL}
 )"""
     )
-    for t in range(1, _KMEANS_ITERS + 1):
+    for t in range(1, KMEANS_ITERS + 1):
+        assign = assign_cte(f"a{t}", ("q",), f"v CROSS JOIN c{t - 1} c")
         parts.append(
-            f""", a{t} AS (
-  SELECT vec_id, cent_id, q FROM (
-    SELECT v.vec_id, c.cent_id, v.q,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c{t - 1} c
-  ) WHERE rn = 1
-), s{t} AS (
+            f""", {assign}, s{t} AS (
   SELECT cent_id, pos,
          CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT) AS m
   FROM (
@@ -557,45 +470,16 @@ def _kmeans_sql() -> str:
   ) n USING (cent_id)
 )"""
         )
-    return "".join(parts), f"c{_KMEANS_ITERS}"
+    return "".join(parts), f"c{KMEANS_ITERS}"
 
 
 _KM_CHAIN, _KM_FINAL = _kmeans_sql()
 
-_IVF_TRAINED_ORACLE = f"""
-{_KM_CHAIN}, assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT v.vec_id, c.cent_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN {_KM_FINAL} c
-  ) WHERE rn = 1
-), qs AS (
-  SELECT v.vec_id AS query_id, v.q AS qq, a.cent_id
-  FROM v JOIN assign a USING (vec_id)
-  WHERE v.vec_id % {_QUERY_MOD} = 0
-  ORDER BY v.vec_id LIMIT {_MAX_QUERIES}
-), scored AS (
-  SELECT qs.query_id, v.vec_id AS neighbor_id, qs.cent_id,
-         list_sum(list_transform(range(1, len(qq)+1), i -> qq[i] * v.q[i]))
-           AS dot_q
-  FROM qs
-  JOIN assign a ON a.cent_id = qs.cent_id
-  JOIN v ON v.vec_id = a.vec_id AND v.vec_id <> qs.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cent_id, dot_q,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY dot_q DESC, neighbor_id) AS rank
-  FROM scored
+_IVF_TRAINED_ORACLE = (
+    f"\n{_KM_CHAIN}, "
+    + assign_cte("assign", (), f"v CROSS JOIN {_KM_FINAL} c")
+    + _PROBE_SQL
 )
-SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
-       CAST(rank AS INT) AS rank,
-       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
-         / 1000000 AS cosine
-FROM ranked WHERE rank <= {_IVF_K}
-"""
 
 
 def _kmeans_centroids(v: DataFrame, n_cent: int):
@@ -615,8 +499,8 @@ def _kmeans_centroids(v: DataFrame, n_cent: int):
     (recall sags when real clusters don't align with the first rows);
     Lloyd rounds move the coarse quantizer to the data's density.
     """
-    cent_ids, cent_mat = _seeds(v, n_cent)
-    for _ in range(_KMEANS_ITERS):
+    cent_ids, cent_mat = seeds(v, n_cent)
+    for _ in range(KMEANS_ITERS):
 
         def _partials(b, m, cm=cent_mat):  # binds this round's centroids
             return long_partials(*cluster_sums(m, nearest(m, cm)[0], len(cm)))
@@ -650,7 +534,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with no further shuffle
     from end_to_end_aws_data_pipeline_spark.plans.scale import overlap_jobs
 
-    v = _quantized(spark, sf_dir)
+    v = quantized_vectors(spark, sf_dir)
     vs = persisted(spread(v))
     n_cent = n_centroids_for(v.count())  # parquet-metadata count: cheap
     # the bounded query-matrix collect is independent of the Lloyd
@@ -658,7 +542,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # training rounds' idle tail instead of serializing after them
     (cent_ids, cent_mat), (q_ids, q_mat) = overlap_jobs(
         lambda: _kmeans_centroids(vs, n_cent),
-        lambda: _query_matrix(_query_set(vs)),
+        lambda: query_matrix(query_set(vs)),
     )
     route = partial(nearest, mat=cent_mat)
     assign = _assigned(vs, cent_ids, route)
@@ -669,156 +553,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two-level coarse quantizer: hierarchical routing cuts assignment flops
 # ---------------------------------------------------------------------------
 
-# super-codebook size: ceil(sqrt(C)) over the C = ceil(sqrt(N)) fine
-# centroids — assignment drops from N·C = N·√N dots to N·(S + C/S) ≈
-# 2·N·N^(1/4) (the hierarchical/vocabulary-tree router of Nistér &
-# Stewénius CVPR'06, the same flop-cutting role the inverted
-# multi-index plays for product codebooks).  Expressed as a scalar
-# subquery so both engines derive the SAME S from the data at any SF.
-_SUPERS_SQL = (
-    "(SELECT CAST(ceil(sqrt(ceil(sqrt(count(*))))) AS BIGINT) "
-    "FROM embeddings)"
-)
-
-
-def n_super_for(n_cent: int) -> int:
-    """ceil(sqrt(C)) super-codebook size (must mirror _SUPERS_SQL)."""
-    import math
-
-    return max(1, int(math.ceil(math.sqrt(n_cent))))
-
-
-def _super_kmeans_sql() -> tuple[str, str]:
-    """CTE chain REPLAYING the super-level Lloyd training over the fine
-    centroid relation ``c``: seed s0 = first ceil(sqrt(C)) centroids,
-    then _KMEANS_ITERS rounds of (nearest-super assignment → element-wise
-    floor-mean, empty supers carrying forward) — the _kmeans_sql recipe
-    applied one level up, over C rows instead of N."""
-    parts = [
-        f""", s0 AS (
-  SELECT cent_id AS sup_id, cq AS sq FROM c WHERE cent_id < {_SUPERS_SQL}
-)"""
-    ]
-    for t in range(1, _KMEANS_ITERS + 1):
-        parts.append(
-            f""", ka{t} AS (
-  SELECT cent_id, sup_id, cq FROM (
-    SELECT c.cent_id, s.sup_id, c.cq,
-           row_number() OVER (
-             PARTITION BY c.cent_id
-             ORDER BY list_sum(list_transform(range(1, len(cq)+1),
-                      i -> cq[i] * sq[i])) DESC, s.sup_id) AS rn
-    FROM c CROSS JOIN s{t - 1} s
-  ) WHERE rn = 1
-), ks{t} AS (
-  SELECT sup_id, pos,
-         CAST(floor(CAST(sum(x) AS DOUBLE) / count(*)) AS BIGINT) AS m
-  FROM (
-    SELECT sup_id,
-           unnest(range(1, len(cq)+1)) AS pos,
-           unnest(cq) AS x
-    FROM ka{t}
-  ) GROUP BY sup_id, pos
-), s{t} AS (
-  SELECT p.sup_id, coalesce(n.sq, p.sq) AS sq
-  FROM s{t - 1} p
-  LEFT JOIN (
-    SELECT sup_id, list(m ORDER BY pos) AS sq FROM ks{t} GROUP BY sup_id
-  ) n USING (sup_id)
-)"""
-        )
-    return "".join(parts), f"s{_KMEANS_ITERS}"
-
-
-_SUP_CHAIN, _SUP_FINAL = _super_kmeans_sql()
-
-# shared two-level routing CTEs (fine codebook `c` + super chain must
-# precede this fragment; consumers append their own `assign` on top):
-# fine→super routing table, live supers (own ≥1 centroid — an empty
-# super must not capture vectors, they would drop from the index),
-# and each vector's super via exact argmax over the live set
-_TWOLEVEL_ROUTING_SQL = f""", route AS (
-  SELECT cent_id, sup_id FROM (
-    SELECT c.cent_id, s.sup_id,
-           row_number() OVER (
-             PARTITION BY c.cent_id
-             ORDER BY list_sum(list_transform(range(1, len(cq)+1),
-                      i -> cq[i] * sq[i])) DESC, s.sup_id) AS rn
-    FROM c CROSS JOIN {_SUP_FINAL} s
-  ) WHERE rn = 1
-), live AS (
-  SELECT s.sup_id, s.sq FROM {_SUP_FINAL} s
-  JOIN (SELECT DISTINCT sup_id FROM route) r USING (sup_id)
-), vsup AS (
-  SELECT vec_id, sup_id FROM (
-    SELECT v.vec_id, s.sup_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * sq[i])) DESC, s.sup_id) AS rn
-    FROM v CROSS JOIN live s
-  ) WHERE rn = 1
-)"""
-
-_IVF_TWOLEVEL_ORACLE = f"""
-WITH v AS ({_QV_SQL}
-), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v
-  WHERE vec_id < {_CENTROIDS_SQL}
-){_SUP_CHAIN}{_TWOLEVEL_ROUTING_SQL}, assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT v.vec_id, c.cent_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v
-    JOIN vsup ON vsup.vec_id = v.vec_id
-    JOIN route r ON r.sup_id = vsup.sup_id
-    JOIN c ON c.cent_id = r.cent_id
-  ) WHERE rn = 1
-), qs AS (
-  SELECT v.vec_id AS query_id, v.q AS qq, a.cent_id
-  FROM v JOIN assign a USING (vec_id)
-  WHERE v.vec_id % {_QUERY_MOD} = 0
-  ORDER BY v.vec_id LIMIT {_MAX_QUERIES}
-), scored AS (
-  SELECT qs.query_id, v.vec_id AS neighbor_id, qs.cent_id,
-         list_sum(list_transform(range(1, len(qq)+1), i -> qq[i] * v.q[i]))
-           AS dot_q
-  FROM qs
-  JOIN assign a ON a.cent_id = qs.cent_id
-  JOIN v ON v.vec_id = a.vec_id AND v.vec_id <> qs.query_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cent_id, dot_q,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY dot_q DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, CAST(cent_id AS BIGINT) AS probed_centroid,
-       CAST(rank AS INT) AS rank,
-       floor(CAST(dot_q AS DOUBLE) / {SCALE_SQ}.0 * 1000000 + 0.5)
-         / 1000000 AS cosine
-FROM ranked WHERE rank <= {_IVF_K}
-"""
-
-
-def two_level(cent_mat, n_sup: int) -> TwoLevel:
-    """The two-level router over the C fine centroid rows: a
-    DRIVER-LOCAL Lloyd over them (they already live on the driver as the
-    codebook matrix — C = √N ≈ 31k rows × dim even at N = 1e9, a few MB)
-    seeded with the first ``n_sup`` rows, then the fine→super routing.
-
-    Mirrors :func:`_super_kmeans_sql` exactly: int64 dot argmax with
-    ties to the lowest sup_id, floor(float64(sum)/count) means
-    (per-super per-dim |sums| ≤ C·1e8 ≈ 3e12 — exactly representable in
-    float64, so the floor is exact), empty supers carrying forward."""
-    sup = cent_mat[:n_sup].copy()
-    for _ in range(_KMEANS_ITERS):
-        sup = floor_means(
-            sup, *cluster_sums(cent_mat, nearest(cent_mat, sup)[0], n_sup)
-        )
-    return TwoLevel(cent_mat, sup, nearest(cent_mat, sup)[0])
+_IVF_TWOLEVEL_ORACLE = "\n" + routed_sql(()) + _PROBE_SQL
 
 
 @register("q_ann_ivf_twolevel", oracle=_IVF_TWOLEVEL_ORACLE)
@@ -850,14 +585,14 @@ def q_ann_ivf_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from end_to_end_aws_data_pipeline_spark.plans.scale import overlap_jobs
 
-    v = _quantized(spark, sf_dir)
+    v = quantized_vectors(spark, sf_dir)
     n_cent = n_centroids_for(v.count())
     # the centroid collect and the query collect are both bounded and
     # mutually independent scans of v — run them as concurrent jobs
     # (guide §2.6) instead of two serialized full normalize passes
     (cent_ids, cent_mat), (q_ids, q_mat) = overlap_jobs(
-        lambda: _seeds(v, n_cent),
-        lambda: _query_matrix(_query_set(v)),
+        lambda: seeds(v, n_cent),
+        lambda: query_matrix(query_set(v)),
     )
     router = two_level(cent_mat, n_super_for(n_cent))
     assign = _assigned(spread(v), cent_ids, router.route)
@@ -878,19 +613,10 @@ _SEMDEDUP_TAU = 0.35
 _SEMDEDUP_DOT = int(_SEMDEDUP_TAU * SCALE_SQ)  # exact: 0.35*1e16 is integral
 
 _SEMDEDUP_ORACLE = f"""
-WITH v AS ({_QV_SQL}
+WITH v AS ({QV_SQL}
 ), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {_CENTROIDS_SQL}
-), assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT v.vec_id, c.cent_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c
-  ) WHERE rn = 1
-), dropped AS (
+  SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {CENTROIDS_SQL}
+), {assign_cte('assign', (), 'v CROSS JOIN c')}, dropped AS (
   SELECT DISTINCT b.vec_id
   FROM assign a
   JOIN assign b ON a.cent_id = b.cent_id AND a.vec_id < b.vec_id
@@ -978,19 +704,10 @@ _SEMCON_TAU = 0.30
 _SEMCON_DOT = int(_SEMCON_TAU * SCALE_SQ)  # 0.30*1e16 is integral
 
 _SEMCON_ORACLE = f"""
-WITH v AS ({_QV_SQL}
+WITH v AS ({QV_SQL}
 ), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {_CENTROIDS_SQL}
-), assign AS (
-  SELECT vec_id, cent_id, q FROM (
-    SELECT v.vec_id, c.cent_id, v.q,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c
-  ) WHERE rn = 1
-), ev AS (
+  SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {CENTROIDS_SQL}
+), {assign_cte('assign', ('q',), 'v CROSS JOIN c')}, ev AS (
   SELECT vec_id AS eval_id, cent_id, q AS qe FROM assign
   WHERE vec_id % {_SEMCON_MOD} = 0
 ), corp AS (
@@ -1067,11 +784,11 @@ def q_contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _RECALL_ORACLE = f"""
-WITH v AS ({_QV_SQL}
+WITH v AS ({QV_SQL}
 ), qs AS (
   SELECT vec_id AS query_id, q AS qq FROM v
-  WHERE vec_id % {_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_MAX_QUERIES}
+  WHERE vec_id % {QUERY_MOD} = 0
+  ORDER BY vec_id LIMIT {MAX_QUERIES}
 ), exact AS (
   SELECT query_id, neighbor_id FROM (
     SELECT qs.query_id, v.vec_id AS neighbor_id,
@@ -1081,17 +798,8 @@ WITH v AS ({_QV_SQL}
     FROM qs JOIN v ON v.vec_id <> qs.query_id
   ) WHERE rank <= {_IVF_K}
 ), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {_CENTROIDS_SQL}
-), assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT v.vec_id, c.cent_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c
-  ) WHERE rn = 1
-), ivf AS (
+  SELECT vec_id AS cent_id, q AS cq FROM v WHERE vec_id < {CENTROIDS_SQL}
+), {assign_cte('assign', (), 'v CROSS JOIN c')}, ivf AS (
   SELECT query_id, neighbor_id FROM (
     SELECT qs.query_id, v.vec_id AS neighbor_id,
            row_number() OVER (PARTITION BY qs.query_id ORDER BY
@@ -1168,7 +876,7 @@ _RHP_BAND_BITS = 8  # 8 bands × 8 bits (see q_ann_rhp_lsh docstring)
 _RHP_TAU_DOT = int(0.35 * SCALE_SQ)  # τ on the exact quantized dot
 
 _RHP_ORACLE = f"""
-WITH v AS ({_QV_SQL}
+WITH v AS ({QV_SQL}
 ), hyp AS (
   SELECT j,
          ('0x' || substr(md5('rhp:' || CAST(j AS VARCHAR)), 1, 15))::BIGINT AS r1,
@@ -1264,7 +972,7 @@ def q_ann_rhp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from end_to_end_aws_data_pipeline_spark.cache import persisted
 
-    v = _quantized(spark, sf_dir)
+    v = quantized_vectors(spark, sf_dir)
 
     def _sig(b, m):
         dots = m @ _rhp_planes(m.shape[1]).T  # B×bits exact int64 (|Σ| ≤ dim·1e8)
@@ -1416,8 +1124,8 @@ WITH v AS (
   FROM embeddings
 ), qs AS (
   SELECT vec_id AS query_id, label AS qlabel, q AS qq FROM v
-  WHERE vec_id % {_QUERY_MOD} = 0
-  ORDER BY vec_id LIMIT {_MAX_QUERIES}
+  WHERE vec_id % {QUERY_MOD} = 0
+  ORDER BY vec_id LIMIT {MAX_QUERIES}
 ), scored AS (
   SELECT qs.query_id, v.vec_id AS neighbor_id, v.label AS neg_label,
          list_sum(list_transform(range(1, len(qq)+1), i -> qq[i] * v.q[i]))
@@ -1460,7 +1168,7 @@ def q_embed_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("long").alias("label"),
         quantized(F.col("embedding")).alias("q"),
     )
-    rows = _query_set(v).collect()
+    rows = query_set(v).collect()
     q_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     q_labels = np.array([r["label"] for r in rows], dtype=np.int64)
     q_mat = np.array([r["q"] for r in rows], dtype=np.int64)
@@ -1663,17 +1371,17 @@ _RRF_PROBE = 0  # semantic query = vec_id 0's embedding (deterministic)
 
 def _rrf_oracle() -> str:
     from end_to_end_aws_data_pipeline_spark.operators.text import (
-        _BM25_SCORED_SQL,
+        BM25_SCORED_SQL,
     )
 
     return f"""
-WITH {_BM25_SCORED_SQL}, lex AS (
+WITH {BM25_SCORED_SQL}, lex AS (
   SELECT doc_id, rank FROM (
     SELECT doc_id,
            row_number() OVER (ORDER BY bm25_micro DESC, doc_id) AS rank
     FROM bm25
   ) WHERE rank <= {_RRF_N}
-), v AS ({_QV_SQL}
+), v AS ({QV_SQL}
 ), probe AS (
   SELECT q AS pq FROM v WHERE vec_id = {_RRF_PROBE}
 ), sem AS (
@@ -1730,7 +1438,7 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(W.orderBy(F.col("bm25_micro").desc(), "doc_id"))
         .alias("lex_rank"),  # bounded window: <= _RRF_N rows
     )
-    v = _quantized(spark, sf_dir)
+    v = quantized_vectors(spark, sf_dir)
     probe = v.filter(F.col("vec_id") == _RRF_PROBE).select(
         F.col("q").alias("pq")
     )
@@ -1774,20 +1482,7 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CQ_ORACLE = f"""
-WITH v AS ({_QV_SQL}
-), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v
-  WHERE vec_id < {_CENTROIDS_SQL}
-), assign AS (
-  SELECT vec_id, cent_id FROM (
-    SELECT v.vec_id, c.cent_id,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c
-  ) WHERE rn = 1
-), mdot AS (
+{assigned_sql(())}, mdot AS (
   SELECT a.cent_id,
          list_sum(list_transform(range(1, len(v.q)+1),
                   i -> v.q[i] * c.cq[i])) AS dot_c
@@ -1918,7 +1613,7 @@ def _kcenter_oracle() -> str:
     )
     parts = [
         f"""
-WITH v AS MATERIALIZED ({_QV_SQL}
+WITH v AS MATERIALIZED ({QV_SQL}
 ), s1 AS MATERIALIZED (
   SELECT vec_id, q FROM v ORDER BY vec_id LIMIT 1
 ), m1 AS MATERIALIZED (
@@ -1980,7 +1675,7 @@ def q_embed_kcenter_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 1e9 rows each pass is embarrassingly parallel and the collected
     per-round state is a single 64-int vector (driver-side by design,
     the IVF-codebook precedent)."""
-    qv = _quantized(spark, sf_dir).localCheckpoint(eager=True)
+    qv = quantized_vectors(spark, sf_dir).localCheckpoint(eager=True)
     first = qv.orderBy("vec_id").limit(1).collect()[0]
     chosen_ids = [first["vec_id"]]
     picks = [(1, first["vec_id"], None)]

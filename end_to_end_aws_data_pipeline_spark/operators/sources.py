@@ -182,14 +182,14 @@ def q_source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from end_to_end_aws_data_pipeline_spark.operators.multimodal import (
-        _gradient,
+        gradient,
         decode_image,
         encode_bmp,
     )
 
     def build(out: str) -> None:
         for doc_id in range(_BINFILE_N):
-            pix = np.repeat(_gradient(doc_id)[:, :, None], 3, axis=2)
+            pix = np.repeat(gradient(doc_id)[:, :, None], 3, axis=2)
             with open(os.path.join(out, f"doc_{doc_id:05d}.bmp"), "wb") as f:
                 f.write(encode_bmp(pix))
 

@@ -14,6 +14,22 @@ PPS sampling). The sf1→sf10 pairings in SCALING.md document the two
 scale bugs this family caught (fixed segment width; multiply-consumed
 lazy rank passes) and their fixes.
 
+The module also holds families that share its tables and exact
+arithmetic but not the segmented scan:
+- Holt and Holt-Winters forecasting, global and per key
+  (q_timeseries_holt*), and the day-of-week STL decomposition;
+- the three batch row-pattern queries over operators/rowpattern.py
+  (q_events_pattern_*);
+- autocorrelation and cross-correlation (q_timeseries_acf,
+  q_timeseries_ccf);
+- retention cohorts, funnel latency, top paths and streaks
+  (q_events_retention_cohorts, q_funnel_latency, q_events_top_paths,
+  q_window_streaks);
+- RFM segmentation (q_agg_rfm_segments);
+- table-maintenance audits: skew profile, z-order stats, Merkle diff
+  and compaction plan (q_etl_skew_profile, q_etl_zorder_stats,
+  q_etl_merkle_diff, q_etl_compaction_plan).
+
 Everything is DataFrame-only, integer-exact, and DuckDB-oracle-backed
 (SURVEY.md §2.B relational surface).
 """

@@ -15,7 +15,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from end_to_end_aws_data_pipeline_spark.catalog import local_frame, spread, table
-from end_to_end_aws_data_pipeline_spark.functions.aggs import l2fp, stable_round
+from end_to_end_aws_data_pipeline_spark.functions.aggs import (
+    l2fp,
+    l2hi,
+    l2hi_sql,
+    stable_round,
+)
 from end_to_end_aws_data_pipeline_spark.registry import register
 
 _STOPWORDS = ("the", "a", "of", "and")
@@ -917,19 +922,19 @@ def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hashed linear (fastText-style) quality classifier
 # ---------------------------------------------------------------------------
 
-_CLF_BUCKET_MOD = 33  # weight domain: md5(bigram) % 33 - 16 ∈ [-16, 16]
-_CLF_BIAS = -3
+CLF_BUCKET_MOD = 33  # weight domain: md5(bigram) % 33 - 16 ∈ [-16, 16]
+CLF_BIAS = -3
 
 _CLF_ORACLE = f"""
 WITH t AS (
   SELECT doc_id, source, string_split(text, ' ') AS w FROM documents
 ), scored AS (
   SELECT doc_id, source,
-         {_CLF_BIAS} + coalesce(list_sum(
+         {CLF_BIAS} + coalesce(list_sum(
            list_transform(
              range(1, len(w)),
              i -> CAST(('0x' || substr(md5(w[i] || '_' || w[i + 1]), 1, 15))
-                       ::BIGINT % {_CLF_BUCKET_MOD} - 16 AS BIGINT)
+                       ::BIGINT % {CLF_BUCKET_MOD} - 16 AS BIGINT)
            )
          ), 0) AS score
   FROM t
@@ -952,14 +957,14 @@ def clf_score() -> Column:
         "transform(sequence(1, size(w) - 1), "
         "i -> concat(element_at(w, i), '_', element_at(w, i + 1)))"
     )
-    return F.lit(_CLF_BIAS) + F.coalesce(
+    return F.lit(CLF_BIAS) + F.coalesce(
         F.aggregate(
             bigrams,
             F.lit(0).cast("long"),
             lambda acc, x: acc
             + (
                 F.conv(F.substring(F.md5(x), 1, 15), 16, 10).cast("long")
-                % _CLF_BUCKET_MOD
+                % CLF_BUCKET_MOD
                 - 16
             ),
         ),
@@ -1200,54 +1205,6 @@ _ULM_ROUNDS = 2  # Viterbi hard-EM rounds
 _ULM_TOP = 15  # published pieces
 
 
-def _ulm_l2(x: int) -> int:
-    """Python replica of extras._l2hi_steps: L(x) = 65536·log2(x) via
-    pure integer ops — identical to the SQL spelling digit for digit,
-    so DP costs computed on the driver equal the oracle's exactly."""
-    from end_to_end_aws_data_pipeline_spark.operators.extras import (
-        _L2HI_B,
-        _L2HI_D,
-        _L2HI_S,
-        _L2HI_SEGS,
-    )
-
-    e = x.bit_length() - 1
-    t = x * _L2HI_SEGS
-    q = t // (1 << e)
-    j = q - _L2HI_SEGS
-    r = t - q * (1 << e)
-    sh = max(e - 20, 0)
-    return _L2HI_S * e + _L2HI_B[j] + (r >> sh) * _L2HI_D[j] // (1 << (e - sh))
-
-
-def _ulm_l2_sql(x: str) -> str:
-    """The same L(x) as one inlined DuckDB scalar expression."""
-    from end_to_end_aws_data_pipeline_spark.operators.extras import (
-        _L2HI_B,
-        _L2HI_D,
-        _L2HI_S,
-        _L2HI_SEGS,
-    )
-
-    def case(col: str, tab: list) -> str:
-        return (
-            "CASE " + col + " "
-            + " ".join(f"WHEN {j} THEN {v}" for j, v in enumerate(tab))
-            + " END"
-        )
-
-    e = f"(length(bin({x})) - 1)"
-    q = f"(({x}) * {_L2HI_SEGS} // (CAST(1 AS BIGINT) << {e}))"
-    j = f"({q} - {_L2HI_SEGS})"
-    r = f"(({x}) * {_L2HI_SEGS} - {q} * (CAST(1 AS BIGINT) << {e}))"
-    sh = f"greatest({e} - 20, 0)"
-    return (
-        f"({_L2HI_S} * {e} + {case(j, _L2HI_B)} + "
-        f"({r} // (CAST(1 AS BIGINT) << {sh})) * ({case(j, _L2HI_D)}) "
-        f"// (CAST(1 AS BIGINT) << ({e} - {sh})))"
-    )
-
-
 def _ulm_viterbi(word: str, cost: dict) -> tuple:
     """Unique best segmentation minimizing (Σcost, n_pieces); at equal
     (cost, n) the LONGER candidate piece wins (lengths tried 4→1 with
@@ -1341,8 +1298,8 @@ def _ulm_train(spark: SparkSession, sf_dir: str) -> dict:
 
     for _ in range(_ULM_ROUNDS):
         total = sum(model.values())
-        l_t = _ulm_l2(total)
-        cost = {p: l_t - _ulm_l2(c) for p, c in model.items()}
+        l_t = l2hi(total)
+        cost = {p: l_t - l2hi(c) for p, c in model.items()}
 
         def _estep(batches, cost=cost):
             for pdf in batches:
@@ -1407,7 +1364,7 @@ WITH toks AS MATERIALIZED (
     for r in range(1, _ULM_ROUNDS + 1):
         parts.append(
             f""", vc{r} AS MATERIALIZED (
-  SELECT piece, ({_ulm_l2_sql("t.tt")} - {_ulm_l2_sql("cnt")}) AS cost
+  SELECT piece, ({l2hi_sql("t.tt")} - {l2hi_sql("cnt")}) AS cost
   FROM v{r}, (SELECT sum(cnt) AS tt FROM v{r}) t
 ), dp{r}_0 AS MATERIALIZED (
   SELECT word, cnt, CAST(0 AS BIGINT) AS cost, 0 AS np,
@@ -1474,8 +1431,8 @@ def q_text_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring of the clean-word table (top 48 by corpus count
     + the full alphabet), then run 2 Viterbi hard-EM
     rounds — E-step segments every distinct word by minimum total
-    -log2 p(piece) (exact int64 fixed-point, extras._l2hi_steps
-    semantics), M-step re-counts pieces from the chosen segmentations.
+    -log2 p(piece) (exact int64 fixed-point, aggs.l2hi), M-step
+    re-counts pieces from the chosen segmentations.
     Published: the final top-15 multi-char pieces.
 
     Determinism: costs are integers, the DP tie-break is total
@@ -1506,7 +1463,7 @@ def _ulm_encode_oracle() -> str:
     return (
         core
         + f""", vcf AS MATERIALIZED (
-  SELECT piece, ({_ulm_l2_sql("t.tt")} - {_ulm_l2_sql("cnt")}) AS cost
+  SELECT piece, ({l2hi_sql("t.tt")} - {l2hi_sql("cnt")}) AS cost
   FROM v{r + 1}, (SELECT sum(cnt) AS tt FROM v{r + 1}) t
 ), dpf_0 AS MATERIALIZED (
   SELECT word, cnt, CAST(0 AS BIGINT) AS cost, 0 AS np,
@@ -1567,8 +1524,8 @@ def q_text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     model = _ulm_train(spark, sf_dir)
     total = sum(model.values())
-    l_t = _ulm_l2(total)
-    cost = {p: l_t - _ulm_l2(c) for p, c in model.items()}
+    l_t = l2hi(total)
+    cost = {p: l_t - l2hi(c) for p, c in model.items()}
 
     def _seg_count(batches, cost=cost):
         for pdf in batches:
@@ -2124,7 +2081,7 @@ _BM25_TOP = 10
 # shared CTE chain (tokenize -> tf/df -> per-(doc,term) micro score ->
 # per-doc sum); the lexical top-10 below and the RRF hybrid oracle in
 # operators/similarity.py both build on `bm25` defined here
-_BM25_SCORED_SQL = """d AS (
+BM25_SCORED_SQL = """d AS (
   SELECT doc_id, string_split(text, ' ') AS ws FROM documents
 ), dl AS (
   SELECT doc_id, len(ws) AS dl FROM d
@@ -2160,7 +2117,7 @@ _BM25_SCORED_SQL = """d AS (
 )"""
 
 _BM25_ORACLE = f"""
-WITH {_BM25_SCORED_SQL}
+WITH {BM25_SCORED_SQL}
 SELECT doc_id, n_terms_hit, bm25_micro
 FROM bm25
 ORDER BY bm25_micro DESC, doc_id

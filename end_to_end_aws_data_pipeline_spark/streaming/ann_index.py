@@ -40,7 +40,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema
+from end_to_end_aws_data_pipeline_spark.catalog import cached_schema
+from end_to_end_aws_data_pipeline_spark.operators.veccorpus import (
+    assigned_sql,
+    n_centroids_for,
+    n_super_for,
+    quantized_vectors,
+    routed_sql,
+    seeds,
+    two_level,
+)
 from end_to_end_aws_data_pipeline_spark.operators.vecbatch import (
     nearest,
     quantized,
@@ -92,17 +101,9 @@ def _frozen_router(spark: SparkSession, sf_dir: str, twolevel: bool):
     router (super level Lloyd-trained driver-local on the C centroid
     rows, dead supers excluded). ``route`` has
     :func:`vecbatch.nearest`'s signature."""
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        _quantized,
-        _seeds,
-        n_centroids_for,
-        n_super_for,
-        two_level,
-    )
-
-    v = _quantized(spark, sf_dir)
+    v = quantized_vectors(spark, sf_dir)
     n_cent = n_centroids_for(v.count())
-    cent_ids, cent_mat = _seeds(v, n_cent)
+    cent_ids, cent_mat = seeds(v, n_cent)
     if twolevel:
         return cent_ids, two_level(cent_mat, n_super_for(n_cent)).route
     return cent_ids, partial(nearest, mat=cent_mat)
@@ -137,7 +138,7 @@ def run_ann_index_stream(
     hierarchical router (same fold, same store discipline — only the
     per-batch routing pass differs)."""
     cent_ids, route = _frozen_router(spark, sf_dir, twolevel)
-    schema = _cached_schema(spark, os.path.join(staged, "chunk_0.parquet"))
+    schema = cached_schema(spark, os.path.join(staged, "chunk_0.parquet"))
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -216,32 +217,13 @@ def final_index(spark: SparkSession, store: str) -> DataFrame:
     )
 
 
-def _ann_index_oracle() -> str:
-    """From-scratch batch construction of the same index: frozen √N
-    centroids, exact-int64 assignment (the _IVF_ORACLE CTE shape),
+def _ann_index_oracle(assigned: str) -> str:
+    """From-scratch batch construction of the same index over the
+    ``assigned`` prefix (the frozen √N centroids and the exact-int64
+    assignment carrying dot_c, direct or behind the two-level router):
     per-bucket counts/checksums and the top-K shortlist."""
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        _CENTROIDS_SQL,
-        _QV_SQL,
-    )
-
     return f"""
-WITH v AS ({_QV_SQL}
-), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v
-  WHERE vec_id < {_CENTROIDS_SQL}
-), assign AS (
-  SELECT vec_id, cent_id, dot_c FROM (
-    SELECT v.vec_id, c.cent_id,
-           CAST(list_sum(list_transform(range(1, len(q)+1),
-                i -> q[i] * cq[i])) AS BIGINT) AS dot_c,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v CROSS JOIN c
-  ) WHERE rn = 1
-), buckets AS (
+{assigned}, buckets AS (
   SELECT cent_id, CAST(count(*) AS BIGINT) AS n_members,
          CAST(sum(vec_id) AS BIGINT) AS id_checksum
   FROM assign GROUP BY cent_id
@@ -258,7 +240,9 @@ WHERE r.rank <= {_AI_TOPK}
 """
 
 
-@register("q_stream_ann_index", oracle=_ann_index_oracle())
+@register(
+    "q_stream_ann_index", oracle=_ann_index_oracle(assigned_sql(("dot_c",)))
+)
 def q_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IVF index maintenance EXECUTED in the gate: the
     embeddings table arrives as micro-batches, each batch is routed to
@@ -280,56 +264,10 @@ def q_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final_index(spark, store)
 
 
-def _ann_index_twolevel_oracle() -> str:
-    """From-scratch batch construction behind the two-level router:
-    the q_ann_ivf_twolevel training + routing CTEs (super Lloyd chain,
-    fine→super route, live supers, per-vector super) with the
-    index-shaped assign (carries dot_c) and the same buckets/shortlist
-    tail as the single-level index oracle."""
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        _CENTROIDS_SQL,
-        _QV_SQL,
-        _SUP_CHAIN,
-        _TWOLEVEL_ROUTING_SQL,
-    )
-
-    return f"""
-WITH v AS ({_QV_SQL}
-), c AS (
-  SELECT vec_id AS cent_id, q AS cq FROM v
-  WHERE vec_id < {_CENTROIDS_SQL}
-){_SUP_CHAIN}{_TWOLEVEL_ROUTING_SQL}, assign AS (
-  SELECT vec_id, cent_id, dot_c FROM (
-    SELECT v.vec_id, c.cent_id,
-           CAST(list_sum(list_transform(range(1, len(q)+1),
-                i -> q[i] * cq[i])) AS BIGINT) AS dot_c,
-           row_number() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_sum(list_transform(range(1, len(q)+1),
-                      i -> q[i] * cq[i])) DESC, c.cent_id) AS rn
-    FROM v
-    JOIN vsup ON vsup.vec_id = v.vec_id
-    JOIN route r ON r.sup_id = vsup.sup_id
-    JOIN c ON c.cent_id = r.cent_id
-  ) WHERE rn = 1
-), buckets AS (
-  SELECT cent_id, CAST(count(*) AS BIGINT) AS n_members,
-         CAST(sum(vec_id) AS BIGINT) AS id_checksum
-  FROM assign GROUP BY cent_id
-), ranked AS (
-  SELECT cent_id, vec_id, dot_c,
-         row_number() OVER (PARTITION BY cent_id
-                            ORDER BY dot_c DESC, vec_id) AS rank
-  FROM assign
+@register(
+    "q_stream_ann_index_twolevel",
+    oracle=_ann_index_oracle(routed_sql(("dot_c",))),
 )
-SELECT b.cent_id, b.n_members, b.id_checksum,
-       CAST(r.rank AS INT) AS rank, r.vec_id AS member_id, r.dot_c
-FROM buckets b JOIN ranked r USING (cent_id)
-WHERE r.rank <= {_AI_TOPK}
-"""
-
-
-@register("q_stream_ann_index_twolevel", oracle=_ann_index_twolevel_oracle())
 def q_stream_ann_index_twolevel(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:

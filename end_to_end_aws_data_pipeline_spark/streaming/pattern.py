@@ -36,7 +36,7 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema
+from end_to_end_aws_data_pipeline_spark.catalog import cached_schema
 from end_to_end_aws_data_pipeline_spark.operators.rowpattern import (
     ALTERNATION,
     MATCH,
@@ -179,7 +179,7 @@ def run_pattern_stream(
     active micro-batch (the measured 5.3 s/batch trap)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    schema = _cached_schema(spark, os.path.join(staged, "chunk_0.parquet"))
+    schema = cached_schema(spark, os.path.join(staged, "chunk_0.parquet"))
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -299,7 +299,7 @@ def run_pattern_stream_rle(
     snapshot; the per-batch read-modify-write here is the
     local-parquet stand-in, exactly like ingest/watermark.py's state
     table."""
-    schema = _cached_schema(spark, os.path.join(staged, "chunk_0.parquet"))
+    schema = cached_schema(spark, os.path.join(staged, "chunk_0.parquet"))
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)

@@ -16,7 +16,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema, normalize_event_ts, stage, table
+from end_to_end_aws_data_pipeline_spark.catalog import cached_schema, normalize_event_ts, stage, table
 from end_to_end_aws_data_pipeline_spark.functions.aggs import (
     dsum_sql,
     stable_round,
@@ -139,7 +139,7 @@ def q_stream_exactly_once_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _cached_schema(spark, path)  # ts arrives as ns-long
+    schema = cached_schema(spark, path)  # ts arrives as ns-long
     name = f"__stream_counts_{next(_counter)}"
     src = spark.readStream.schema(schema).parquet(stream_dir_for(path))
     # (distinct aggregates are unsupported on streams — an integer
@@ -192,7 +192,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _cached_schema(spark, path)
+    schema = cached_schema(spark, path)
     name = f"__stream_join_{next(_counter)}"
 
     def side(event_type: str, prefix: str) -> DataFrame:
@@ -319,7 +319,7 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _cached_schema(spark, path)
+    schema = cached_schema(spark, path)
     name = f"__stream_louter_{next(_counter)}"
     src_dir = _louter_staged_dir(path)
 
@@ -411,7 +411,7 @@ def q_stream_stateful_user_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _cached_schema(spark, path)
+    schema = cached_schema(spark, path)
     name = f"__stream_state_{next(_counter)}"
     src = normalize_event_ts(
         spark.readStream.schema(schema).parquet(stream_dir_for(path))
@@ -482,7 +482,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _cached_schema(spark, path)
+    schema = cached_schema(spark, path)
     name = f"__stream_static_{next(_counter)}"
     src = normalize_event_ts(
         spark.readStream.schema(schema).parquet(stream_dir_for(path))
@@ -605,7 +605,7 @@ def q_stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame
             pass
 
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _cached_schema(spark, path)
+    schema = cached_schema(spark, path)
     name = f"__tws_{next(_counter)}"
     src = normalize_event_ts(
         spark.readStream.schema(schema).parquet(stream_dir_for(path))
@@ -846,7 +846,7 @@ def q_stream_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_runtime_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _cached_schema(spark, path)
+    schema = cached_schema(spark, path)
     name = f"__stream_dedup_{next(_counter)}"
     src = spark.readStream.schema(schema).parquet(stream_dir_for(path))
     src = normalize_event_ts(src)

@@ -31,12 +31,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from end_to_end_aws_data_pipeline_spark.catalog import _cached_schema, local_frame
+from end_to_end_aws_data_pipeline_spark.catalog import cached_schema, local_frame
 from end_to_end_aws_data_pipeline_spark.operators.percentiles import (
-    _HH_K,
-    _HH_TOP,
-    _KLL_K,
-    _KLL_QS,
+    HH_K,
+    HH_TOP,
+    KLL_K,
+    KLL_QS,
     hh_oracle_sql,
     kll_oracle_sql,
 )
@@ -47,8 +47,8 @@ from end_to_end_aws_data_pipeline_spark.streaming.store import (
     stage,
 )
 
-# per-sketch capacity and quantiles are q_agg_kll_quantiles' (_KLL_K,
-# _KLL_QS): the stream maintains the same sketch
+# per-sketch capacity and quantiles are q_agg_kll_quantiles' (KLL_K,
+# KLL_QS): the stream maintains the same sketch
 _SK_BUCKETS = 4   # staged arrival files = micro-batches = sketch groups
 _SK_LOCAL_ROWS = 1 << 18  # single-sorted-partition rank cutoff per batch
 
@@ -69,9 +69,9 @@ _SK_ORACLE = kll_oracle_sql(
 
 
 def _pow2ceil(c: int) -> int:
-    """Smallest power of two s with s * _KLL_K >= c (compaction step)."""
+    """Smallest power of two s with s * KLL_K >= c (compaction step)."""
     s = 1
-    while s * _KLL_K < c:
+    while s * KLL_K < c:
         s *= 2
     return s
 
@@ -126,9 +126,7 @@ def run_sketch_stream(
     from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)
-    schema = _cached_schema(
-        spark, os.path.join(staged, "bucket_0.parquet")
-    )
+    schema = cached_schema(spark, os.path.join(staged, "bucket_0.parquet"))
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -232,7 +230,7 @@ def merge_sketches(spark: SparkSession, acc: str, n_rows: int) -> DataFrame:
         kept.append((items[j][0], cw, w2))
     bound = b1 + max(w2 for _, _, w2 in kept)
     out = []
-    for q in _KLL_QS:
+    for q in KLL_QS:
         t = (q * n_rows + 999_999) // 1_000_000
         est_vc = next(vc for vc, c, _ in kept if c >= t)
         out.append(
@@ -341,12 +339,13 @@ def q_stream_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # Per-batch summary capacity and published top are the batch
-# operator's (_HH_K, _HH_TOP). The oracle replays the identical construction in batch: groups = the
-# deterministic arrival buckets (event_id % B), per-group summary = the
-# exact top-K user counts + the K-th count t_g, merge = candidate
-# rollup with the absent-group t_g interval, audit = one exact count
-# pass over the published keys (the q_agg_heavy_hitters_merge
-# arithmetic with calendar months replaced by arrival buckets).
+# operator's (HH_K, HH_TOP). The oracle replays the identical
+# construction in batch: groups = the deterministic arrival buckets
+# (event_id % B), per-group summary = the exact top-K user counts + the
+# K-th count t_g, merge = candidate rollup with the absent-group t_g
+# interval, audit = one exact count pass over the published keys (the
+# q_agg_heavy_hitters_merge arithmetic with calendar months replaced by
+# arrival buckets).
 _HH_STREAM_ORACLE = hh_oracle_sql(
     f"  SELECT event_id % {_SK_BUCKETS} AS g, user_id AS k FROM events", "user_id"
 )
@@ -368,7 +367,7 @@ def run_hh_stream(
     from end_to_end_aws_data_pipeline_spark.session import ensure_runtime_confs
 
     ensure_runtime_confs(spark)
-    schema = _cached_schema(spark, os.path.join(staged, "bucket_0.parquet"))
+    schema = cached_schema(spark, os.path.join(staged, "bucket_0.parquet"))
     src = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -400,14 +399,14 @@ def run_hh_stream(
         # this shape — a local-relation write inside an active
         # micro-batch pays the full SQL-execution setup, the derived
         # plan reuses the batch's.
-        kept = c.orderBy(F.col("cnt").desc(), "k").limit(_HH_K)
+        kept = c.orderBy(F.col("cnt").desc(), "k").limit(HH_K)
         w = W.partitionBy()
         out = kept.select(
             "g",
             "k",
             "cnt",
             F.when(
-                F.count(F.lit(1)).over(w) == _HH_K, F.min("cnt").over(w)
+                F.count(F.lit(1)).over(w) == HH_K, F.min("cnt").over(w)
             )
             .otherwise(F.lit(0))
             .cast("long")
@@ -465,7 +464,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         e[0] += int(r["cnt"])
         e[1] += t_by_g[int(r["g"])]
         e[2] += 1
-    top = sorted(cand.items(), key=lambda kv: (-kv[1][0], kv[0]))[:_HH_TOP]
+    top = sorted(cand.items(), key=lambda kv: (-kv[1][0], kv[0]))[:HH_TOP]
     top_df = local_frame(
         spark,
         [

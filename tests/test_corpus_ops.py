@@ -403,6 +403,7 @@ def test_unigram_train_matches_python_replay(spark):
 
     import pandas as pd
 
+    from end_to_end_aws_data_pipeline_spark.functions.aggs import l2hi
     from end_to_end_aws_data_pipeline_spark.operators.text import (
         _ULM_MAXLEN,
         _ULM_PLEN,
@@ -410,7 +411,6 @@ def test_unigram_train_matches_python_replay(spark):
         _ULM_SEED,
         _ULM_TOP,
         _bpe_word_filter,
-        _ulm_l2,
         _ulm_viterbi,
         q_text_unigram_train,
     )
@@ -438,8 +438,8 @@ def test_unigram_train_matches_python_replay(spark):
 
     for _ in range(_ULM_ROUNDS):
         total = sum(model.values())
-        l_t = _ulm_l2(total)
-        cost = {p: l_t - _ulm_l2(c) for p, c in model.items()}
+        l_t = l2hi(total)
+        cost = {p: l_t - l2hi(c) for p, c in model.items()}
         counts = Counter()
         for w, c in wc.items():
             for piece in _ulm_viterbi(w, cost):

@@ -185,9 +185,11 @@ def test_ivf_trained_recall_on_fixture(spark):
     from end_to_end_aws_data_pipeline_spark.operators.similarity import (
         _IVF_K,
         _kmeans_centroids,
-        _quantized,
-        n_centroids_for,
         q_ann_ivf_trained,
+    )
+    from end_to_end_aws_data_pipeline_spark.operators.veccorpus import (
+        n_centroids_for,
+        quantized_vectors,
     )
 
     brute = {
@@ -206,7 +208,7 @@ def test_ivf_trained_recall_on_fixture(spark):
     assert len(trained) > 0
     assert len(brute & trained) >= len(brute & untrained)
 
-    v = _quantized(spark, SF_SMOKE)
+    v = quantized_vectors(spark, SF_SMOKE)
     n_cent = n_centroids_for(v.count())
     ids1, m1 = _kmeans_centroids(v, n_cent)
     ids2, m2 = _kmeans_centroids(v, n_cent)
@@ -331,7 +333,7 @@ def test_exact_cosine_guard_refuses_large_input(spark, monkeypatch):
 
 
 def test_ivf_centroids_scale_as_sqrt():
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
+    from end_to_end_aws_data_pipeline_spark.operators.veccorpus import (
         n_centroids_for,
     )
 
@@ -734,9 +736,9 @@ def test_pq_topk_recall_and_training_determinism(spark):
         _pq_codebooks,
         q_ann_pq_topk,
     )
-    from end_to_end_aws_data_pipeline_spark.operators.similarity import (
-        _TOP_K,
-        _quantized,
+    from end_to_end_aws_data_pipeline_spark.operators.veccorpus import (
+        TOP_K,
+        quantized_vectors,
     )
 
     brute = {
@@ -752,9 +754,9 @@ def test_pq_topk_recall_and_training_determinism(spark):
     for r in rows:
         per_query.setdefault(r.query_id, []).append(r.rank)
     for ranks in per_query.values():
-        assert sorted(ranks) == list(range(1, _TOP_K + 1))
+        assert sorted(ranks) == list(range(1, TOP_K + 1))
 
-    v = persisted(spread(_quantized(spark, SF_SMOKE)))
+    v = persisted(spread(quantized_vectors(spark, SF_SMOKE)))
     b1 = _pq_codebooks(v)
     b2 = _pq_codebooks(v)
     assert all(np.array_equal(x, y) for x, y in zip(b1, b2))

@@ -19,11 +19,17 @@ The same holds for parameters: a defaulted parameter of a package
 function or method that no call sets, or that every call sets to its
 default, is a knob nothing turns and fails here. One that only tests
 set fails unless ``SEAMS`` names it with a reason. Calls are read from
-the package, the roots and ``tests/``, and match every def of the
-called name (a class name calls its ``__init__``); a ``*args`` or
-``**kwargs`` splat sets every parameter. A default that binds a local
-of the enclosing function (``_sql=sql_text``) is a closure binding,
-not a knob.
+the package, the roots and ``tests/``. A call matches a def of the
+called name (a class name calls its ``__init__``) only in a file that
+can reach the def: the file defines it, imports its module, or imports
+its top-level function or class (through a package ``__init__`` that
+re-exports it, too). A ``*args`` or ``**kwargs`` splat sets every
+parameter. A default that binds a local of the enclosing function
+(``_sql=sql_text``) is a closure binding, not a knob.
+
+Last, a ``_``-prefixed name is private to its module: no package
+module imports one from another package module, at module level or
+inside a function, unless ``PRIVATE_IMPORTS`` names it with a reason.
 """
 
 from __future__ import annotations
@@ -77,7 +83,8 @@ SEAMS = {
     ),
     "ingest/pgwire.py::_Cursor.execute(params)": (
         "the DB-API execute signature; the binary-parameter test sends "
-        "bytes through the extended protocol with it"
+        "bytes through the extended protocol with it, on a cursor from "
+        "connect(), so no call the scan can match sets it"
     ),
     "ingest/pipeline.py::IngestPipeline.__init__(schema_policy)": (
         "perfbench/workloads.py passes it by keyword; any value but the "
@@ -157,6 +164,10 @@ SEAMS = {
         "kill+resume: stops the first run mid-stream"
     ),
 }
+
+
+# Private names a package module imports from another, each with why.
+PRIVATE_IMPORTS: dict[str, str] = {}
 
 
 def _is_register(dec: ast.expr) -> bool:
@@ -279,10 +290,10 @@ def _walk_defs(node, prefix, outer, in_class):
 
 
 def _defaulted_params():
-    """``{call name: [(key, position or None, keyword, default)]}`` for
-    every defaulted parameter of a package def. A default that binds a
-    local of the enclosing function (``cm=cm``) is a closure binding,
-    not a knob, and is left out."""
+    """``{call name: [(key, (file, top-level name), position or None,
+    keyword, default)]}`` for every defaulted parameter of a package
+    def. A default that binds a local of the enclosing function
+    (``cm=cm``) is a closure binding, not a knob, and is left out."""
     out: dict[str, list] = {}
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
@@ -306,15 +317,80 @@ def _defaulted_params():
             for i, p, d in params:
                 if isinstance(d, ast.Name) and d.id in outer:
                     continue
-                entry.append((f"{rel}::{qual}({p.arg})", i, p.arg, d))
+                home = (rel, qual.partition(".")[0])
+                entry.append((f"{rel}::{qual}({p.arg})", home, i, p.arg, d))
     return out
 
 
-def _calls(roots, aliases):
-    """``(callee name, call)`` for every call under ``roots``;
-    ``partial(f, ...)`` counts as a call of ``f``."""
+def _module_file(dotted: str) -> str | None:
+    """The package file of a dotted module name, or None when it names
+    no package module."""
+    head, _, rest = dotted.partition(".")
+    if head != PKG.name:
+        return None
+    base = PKG.joinpath(*rest.split(".")) if rest else PKG
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path.relative_to(PKG).as_posix()
+    return None
+
+
+def _imports(tree: ast.Module):
+    """``((file, name or None), bound name)`` for each package module
+    (``None``) or package definition a file imports, anywhere in it."""
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                f = _module_file(a.name)
+                if f:
+                    yield (f, None), a.asname or a.name
+        elif isinstance(n, ast.ImportFrom) and n.module and not n.level:
+            src = _module_file(n.module)
+            for a in n.names if src else ():
+                sub = _module_file(f"{n.module}.{a.name}")
+                yield (sub, None) if sub else (src, a.name), a.asname or a.name
+
+
+def _exports() -> dict[tuple, list]:
+    """``{(package file, bound name): [what it imports]}``: a package
+    file's imports, as what each name bound there re-exports."""
+    out: dict[tuple, list] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for target, bound in _imports(_parse(path)):
+            out.setdefault((rel, bound), []).append(target)
+    return out
+
+
+def _reach(tree: ast.Module, rel: str | None, exports) -> set:
+    """``(file, name or None)`` of what one file can reach: itself,
+    each package module it imports, and each package definition it
+    imports, followed through re-exports."""
+    out = {(rel, None)}
+    todo = [target for target, _ in _imports(tree)]
+    while todo:
+        target = todo.pop()
+        if target not in out:
+            out.add(target)
+            todo += exports.get(target, [])
+    return out
+
+
+def _credits(reach: set, home: tuple[str, str]) -> bool:
+    """Whether a file that reaches ``reach`` can call a def whose
+    ``home`` is (its file, its top-level function or class)."""
+    return (home[0], None) in reach or home in reach
+
+
+def _calls(roots, aliases, exports):
+    """``(callee name, call, reach)`` for every call under ``roots``,
+    with what its file can reach; ``partial(f, ...)`` counts as a call
+    of ``f``."""
     for path in _py_files(roots):
-        for n in ast.walk(_parse(path)):
+        tree = _parse(path)
+        rel = path.relative_to(PKG).as_posix() if PKG in path.parents else None
+        reach = _reach(tree, rel, exports)
+        for n in ast.walk(tree):
             if not isinstance(n, ast.Call):
                 continue
             f = n.func
@@ -324,7 +400,7 @@ def _calls(roots, aliases):
                 name = getattr(f, "id", getattr(f, "attr", None))
                 n = ast.Call(func=f, args=n.args[1:], keywords=n.keywords)
             for callee in {name, aliases.get(name)} - {None}:
-                yield callee, n
+                yield callee, n, reach
 
 
 def _passed(call, position, keyword):
@@ -366,15 +442,16 @@ def _param_findings():
         aliases.update(_aliases(_parse(path)))
     calls = {}
     for where, roots in (("run", (PKG.name, *ROOTS)), ("tests", ("tests",))):
-        for name, call in _calls(roots, aliases):
+        for name, call, reach in _calls(roots, aliases, _exports()):
             if name in params:
-                calls.setdefault(name, []).append((where, call))
+                calls.setdefault(name, []).append((where, call, reach))
     knobs, test_only = {}, set()
     for name, entries in params.items():
-        for key, position, keyword, default in entries:
+        for key, (rel, top), position, keyword, default in entries:
             passed = [
                 (where, _passed(call, position, keyword))
-                for where, call in calls.get(name, ())
+                for where, call, reach in calls.get(name, ())
+                if _credits(reach, (rel, top))
             ]
             passed = [(w, node) for w, node in passed if node is not None]
             turned = {w for w, node in passed if not _is_default(node, default)}
@@ -387,6 +464,33 @@ def _param_findings():
     return knobs, test_only
 
 
+def test_a_call_credits_only_defs_its_file_can_reach():
+    """DuckDB's ``con.execute(sql, params)`` does not set pgwire's
+    ``_Cursor.execute(params)``: a file reaches the def only by
+    defining it, importing its module, or importing its class,
+    directly or through a re-export."""
+    cursor = ("ingest/pgwire.py", "_Cursor")
+    stream = ("streaming/ingest_stream.py", "StreamingIngest")
+    exports = _exports()
+
+    def reach(src: str, rel: str | None = None) -> set:
+        return _reach(ast.parse(src), rel, exports)
+
+    duck = reach("import duckdb\nduckdb.connect().execute('SELECT ?', [1])")
+    assert not _credits(duck, cursor)
+    assert _credits(reach("", "ingest/pgwire.py"), cursor)
+    for src in (
+        "from end_to_end_aws_data_pipeline_spark.ingest import pgwire",
+        "import end_to_end_aws_data_pipeline_spark.ingest.pgwire as pg",
+        "from end_to_end_aws_data_pipeline_spark.ingest.pgwire import _Cursor",
+    ):
+        assert _credits(reach(src), cursor), src
+    other = reach("from end_to_end_aws_data_pipeline_spark.ingest.pgwire import factory")
+    assert not _credits(other, cursor)
+    via_init = reach("from end_to_end_aws_data_pipeline_spark.streaming import StreamingIngest")
+    assert _credits(via_init, stream) and not _credits(via_init, cursor)
+
+
 def test_every_defaulted_parameter_is_turned():
     knobs, test_only = _param_findings()
     unturned = {k: why for k, why in knobs.items() if k not in SEAMS}
@@ -397,3 +501,36 @@ def test_every_defaulted_parameter_is_turned():
     )
     stale = set(SEAMS) - test_only - set(knobs)
     assert not stale, f"no longer test-only, drop from SEAMS: {sorted(stale)}"
+
+
+# -- private names -----------------------------------------------------
+
+
+def _private_imports() -> list[tuple[str, str]]:
+    """``(importer::module.name, where)`` for each ``_``-prefixed name
+    a package module imports from another package module, once per
+    import statement."""
+    out = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for n in ast.walk(_parse(path)):
+            if not isinstance(n, ast.ImportFrom) or n.level or not n.module:
+                continue
+            src = _module_file(n.module)
+            out += [
+                (f"{rel}::{src}.{a.name}", f"{rel}:{n.lineno}")
+                for a in n.names
+                if src and a.name.startswith("_") and not a.name.startswith("__")
+            ]
+    return out
+
+
+def test_no_private_name_crosses_a_module():
+    found = _private_imports()
+    crossing = [f"{where} {key}" for key, where in found if key not in PRIVATE_IMPORTS]
+    assert not crossing, (
+        f"{len(crossing)} imports of another module's private name; make "
+        f"each public in its owner: {crossing}"
+    )
+    stale = set(PRIVATE_IMPORTS) - {key for key, _ in found}
+    assert not stale, f"no longer imported, drop from PRIVATE_IMPORTS: {sorted(stale)}"

@@ -947,7 +947,7 @@ def test_global_windows_are_bounded(spark):
         "q_search_hybrid_rrf": similarity._RRF_N,  # list depth per side
         "q_graph_lpa_communities": 20,        # TakeOrdered survivors
         # merge window <= months x k items; audit offsets <= 4096 bands
-        "q_agg_kll_quantiles": 90 * percentiles._KLL_K,
+        "q_agg_kll_quantiles": 90 * percentiles.KLL_K,
     }
     del curation, extras  # imported for parity with the site table
     for name, bound in sites.items():

@@ -313,13 +313,13 @@ def test_ann_recall_bounds_and_ivf_subsetness(spark):
     construction of the join."""
     from end_to_end_aws_data_pipeline_spark.operators.similarity import (
         _IVF_K,
-        _MAX_QUERIES,
         q_ann_recall,
     )
+    from end_to_end_aws_data_pipeline_spark.operators.veccorpus import MAX_QUERIES
     from tests.conftest import SF_SMOKE
 
     rows = q_ann_recall(spark, SF_SMOKE).collect()
-    assert 0 < len(rows) <= _MAX_QUERIES
+    assert 0 < len(rows) <= MAX_QUERIES
     for r in rows:
         assert r.n_exact == _IVF_K
         assert 0 <= r.n_hit <= r.n_exact
@@ -952,31 +952,17 @@ def test_l2hi_worst_case_and_mi_float_agreement(spark):
     import random
     from collections import defaultdict
 
+    from end_to_end_aws_data_pipeline_spark.functions.aggs import L2HI_S, l2hi
     from end_to_end_aws_data_pipeline_spark.operators.extras import (
-        _L2HI_B,
-        _L2HI_D,
-        _L2HI_S,
-        _L2HI_SEGS,
         q_agg_mutual_info,
     )
     from tests.conftest import SF_SMOKE
-
-    def l2hi(x):
-        e = x.bit_length() - 1
-        j = (x * _L2HI_SEGS >> e) - _L2HI_SEGS
-        r = x * _L2HI_SEGS - (_L2HI_SEGS + j) * (1 << e)
-        sh = max(e - 20, 0)
-        return (
-            _L2HI_S * e
-            + _L2HI_B[j]
-            + (r >> sh) * _L2HI_D[j] // (1 << (e - sh))
-        )
 
     rng = random.Random(7)
     for v in [1, 2, 3, 63, 64, 65, 10**6, 2**56 + 9] + [
         rng.randrange(1, 2**57) for _ in range(20000)
     ]:
-        assert abs(l2hi(v) / _L2HI_S - math.log2(v)) < 1e-4, v
+        assert abs(l2hi(v) / L2HI_S - math.log2(v)) < 1e-4, v
 
     r = q_agg_mutual_info(spark, SF_SMOKE).collect()[0]
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").selectExpr(
@@ -1300,8 +1286,10 @@ def test_rrf_hybrid_matches_python_fusion(spark):
         _RRF_N,
         _RRF_PROBE,
         _RRF_TOP,
-        _quantized,
         q_search_hybrid_rrf,
+    )
+    from end_to_end_aws_data_pipeline_spark.operators.veccorpus import (
+        quantized_vectors,
     )
     from end_to_end_aws_data_pipeline_spark.operators.text import bm25_scores
     from tests.conftest import SF_SMOKE
@@ -1312,7 +1300,7 @@ def test_rrf_hybrid_matches_python_fusion(spark):
     lex_sorted = sorted(lex_scores, key=lambda r: (-r.bm25_micro, r.doc_id))
     lex_rank = {r.doc_id: i + 1 for i, r in enumerate(lex_sorted[:_RRF_N])}
 
-    vecs = {r.vec_id: r.q for r in _quantized(spark, SF_SMOKE).collect()}
+    vecs = {r.vec_id: r.q for r in quantized_vectors(spark, SF_SMOKE).collect()}
     pq = vecs[_RRF_PROBE]
     dots = [
         (vid, sum(a * b for a, b in zip(q, pq)))
@@ -1561,32 +1549,58 @@ def test_stable_round_bit_identical_across_engines(spark, xs, scale):
 
 
 def test_ulm_fixed_point_log2_accuracy_and_sql_parity(spark):
-    """_ulm_l2's integer L(x)=65536·log2(x): (a) within the documented
-    6.1e-5-bit worst case of true log2 across magnitudes, (b) equal to
-    the inlined DuckDB SQL spelling integer-for-integer."""
+    """aggs.l2hi's integer L(x)=65536·log2(x): (a) within the documented
+    6.1e-5-bit worst case of true log2 across magnitudes, (b) equal
+    integer-for-integer to the inlined DuckDB spelling and to the
+    chained-step spelling evaluated in DuckDB and in Spark, up to the
+    top of the valid range, 2^57 - 1; (c) 2^57 itself overflows the
+    int64 segment product, which DuckDB refuses."""
     import math
 
     import duckdb
+    import pytest
 
-    from end_to_end_aws_data_pipeline_spark.operators.text import (
-        _ulm_l2,
-        _ulm_l2_sql,
+    from end_to_end_aws_data_pipeline_spark.functions.aggs import (
+        l2hi,
+        l2hi_sql,
+        l2hi_steps,
     )
 
     xs = (
         [1, 2, 3, 5, 7, 63, 64, 65, 1000, 12345, 10**6, 10**9, 2**40]
         + [2**k - 1 for k in range(2, 40, 5)]
         + [2**k + 1 for k in range(2, 40, 5)]
+        + [2**56 + 9, 2**57 - 1]
     )
     con = duckdb.connect()
     for x in xs:
-        py = _ulm_l2(x)
+        py = l2hi(x)
         (sql_v,) = con.execute(
-            f"SELECT {_ulm_l2_sql(f'CAST({x} AS BIGINT)')}"
+            f"SELECT {l2hi_sql(f'CAST({x} AS BIGINT)')}"
         ).fetchone()
         assert py == sql_v, f"x={x}: python {py} != sql {sql_v}"
         err_bits = abs(py / 65536.0 - math.log2(x))
         assert err_bits <= 6.1e-5 * 1.05 + 1.0 / 65536.0, (x, err_bits)
+
+    def stepped(div: str) -> str:
+        geom, seg, ev = l2hi_steps("x", "p_", div)
+        return (
+            f"SELECT x, {', '.join(ev)} FROM ("
+            f"SELECT x, p_e, p_x, {', '.join(seg)} FROM ("
+            f"SELECT x, {', '.join(geom)} FROM l2hi_src))"
+        )
+
+    values = ", ".join(f"(CAST({x} AS BIGINT))" for x in xs)
+    con.execute(f"CREATE VIEW l2hi_src AS SELECT * FROM (VALUES {values}) t(x)")
+    want = {x: l2hi(x) for x in xs}
+    assert dict(con.execute(stepped("//")).fetchall()) == want
+    spark.createDataFrame([(x,) for x in xs], "x long").createOrReplaceTempView(
+        "l2hi_src"
+    )
+    got = {r[0]: r[1] for r in spark.sql(stepped(" div ")).collect()}
+    assert got == want
+    with pytest.raises(duckdb.OutOfRangeException):
+        con.execute(f"SELECT {l2hi_sql(f'CAST({2**57} AS BIGINT)')}").fetchone()
 
 
 # ---------------------------------------------------------------------------

@@ -245,13 +245,15 @@ def test_kcenter_matches_python_greedy(spark):
     (cosine to nearest prior seed) must be non-decreasing."""
     from end_to_end_aws_data_pipeline_spark.operators.similarity import (
         _KC_K,
-        _quantized,
         q_embed_kcenter_seed,
+    )
+    from end_to_end_aws_data_pipeline_spark.operators.veccorpus import (
+        quantized_vectors,
     )
     from end_to_end_aws_data_pipeline_spark.operators.vecbatch import SCALE_SQ
 
     vecs = {
-        r["vec_id"]: r["q"] for r in _quantized(spark, SF).collect()
+        r["vec_id"]: r["q"] for r in quantized_vectors(spark, SF).collect()
     }
     chosen = [min(vecs)]
     maxdot = {
